@@ -258,12 +258,8 @@ object Bench {
     val dimRoots = scala.collection.mutable.Map[String, String]()
     def freshRoot(dimName: String, prefix: String): String = {
       dimRoots.remove(dimName).foreach { old =>
-        try {
-          val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(old))
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-          finally walk.close()
-        } catch { case _: Throwable => () }
+        try graft.core.Fs.deleteTree(java.nio.file.Paths.get(old))
+        catch { case scala.util.control.NonFatal(_) => () }
       }
       val root = java.nio.file.Files.createTempDirectory(prefix).toString
       dimRoots(dimName) = root

@@ -94,11 +94,6 @@ object Verify {
     // half-written/empty one (driver scored those as 0-row FAILs in
     // round 5: median_quantity_per_flag, mm_decode_features — both green
     // on re-run).
-    def deleteRecursively(p: java.nio.file.Path): Unit =
-      if (Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-      }
     val futures = picked.map { case (name, fn) =>
       pool.submit(new Runnable {
         def run(): Unit =
@@ -106,7 +101,7 @@ object Verify {
             val tmp = s"$outDir/.tmp-$name"
             fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(tmp)
             val target = Paths.get(s"$outDir/$name")
-            deleteRecursively(target)
+            graft.core.Fs.deleteTree(target)
             Files.move(Paths.get(tmp), target,
               java.nio.file.StandardCopyOption.ATOMIC_MOVE)
           }

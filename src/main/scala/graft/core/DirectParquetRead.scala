@@ -139,13 +139,13 @@ object DirectParquetRead {
   def partFiles(batchDir: String): Seq[String] = {
     val dir = Paths.get(batchDir)
     if (!Files.isDirectory(dir)) Nil
-    else Files.list(dir).iterator().asScala
+    else Fs.list(dir)
       .filter { p =>
         val n = p.getFileName.toString
         n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
       }
       .map(_.toString)
-      .toSeq.sorted
+      .sorted
   }
 
   private def openMeta(file: String): Option[FileMeta] =

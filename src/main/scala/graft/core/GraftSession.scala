@@ -13,8 +13,8 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  // Session identity for cross-object memo keys (bucketed layouts, the
-  // dedup pair-graph cache): WeakHashMap — SparkSession has identity
+  // Session identity for memo keys ([[Memo]]'s session tier, bucketed
+  // layouts): WeakHashMap — SparkSession has identity
   // equals, so this is an identity map whose entries vanish with the
   // session — plus a monotone counter. Unlike System.identityHashCode,
   // two sessions can never collide, alive or dead.

@@ -1,6 +1,6 @@
 package graft.core
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -93,10 +93,7 @@ final class MaterializedAggView private (
   private def writeState(df: DataFrame, version: Long): Unit = {
     val dir = f"state-v$version%012d"
     df.write.mode("overwrite").parquet(s"$root/$dir")
-    val tmp = Paths.get(root, s".current-${java.util.UUID.randomUUID()}")
-    Files.writeString(tmp, s"$version $dir")
-    Files.move(tmp, Paths.get(root, "CURRENT"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    Fs.replaceAtomically(Paths.get(root, "CURRENT"), s"$version $dir")
   }
 }
 

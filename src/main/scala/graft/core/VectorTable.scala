@@ -101,9 +101,8 @@ object Manifest {
   def load(root: String): Manifest = {
     val dir = metaDir(root)
     if (!Files.isDirectory(dir)) return Manifest(0L, 0L, "dynamic", Vector.empty)
-    val versions = Files.list(dir).iterator().asScala
+    val versions = Fs.list(dir)
       .flatMap(p => FilePattern.findFirstMatchIn(p.getFileName.toString).map(_.group(1).toLong))
-      .toVector
     if (versions.isEmpty) Manifest(0L, 0L, "dynamic", Vector.empty)
     else parse(Files.readString(dir.resolve(fileName(versions.max))))
   }
@@ -113,9 +112,9 @@ object Manifest {
   def listVersions(root: String): Seq[Long] = {
     val dir = metaDir(root)
     if (!Files.isDirectory(dir)) Nil
-    else Files.list(dir).iterator().asScala
+    else Fs.list(dir)
       .flatMap(p => FilePattern.findFirstMatchIn(p.getFileName.toString).map(_.group(1).toLong))
-      .toSeq.sorted
+      .sorted
   }
 
   /** A specific committed version (throws if absent). */
@@ -499,19 +498,13 @@ final class VectorTable(val spark: SparkSession, val root: String) {
       }.toSet
       val dataDir = Paths.get(root, "data")
       if (Files.isDirectory(dataDir)) {
-        Files.list(dataDir).iterator().asScala.toSeq.foreach { p =>
-          if (!keepDirs.contains(s"data/${p.getFileName}")) deleteRecursively(p)
+        Fs.list(dataDir).foreach { p =>
+          if (!keepDirs.contains(s"data/${p.getFileName}")) Fs.deleteTree(p)
         }
       }
       drop.foreach(v => Files.deleteIfExists(Manifest.metaDir(root).resolve(Manifest.fileName(v))))
       openCache.clear() // cached frames may reference deleted files
     }
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.toSeq.foreach(deleteRecursively)
-    Files.delete(p)
   }
 
   /** Time travel: the table as of a committed manifest `version` — every
@@ -617,7 +610,7 @@ final class VectorTable(val spark: SparkSession, val root: String) {
             // nothing newly masked (no key overlap): drop the redundant file
             // and keep the manifest as is — liveScan must not pay an
             // anti-join (or an extra commit) for a plain append
-            deleteRecursively(Paths.get(root, rel))
+            Fs.deleteTree(Paths.get(root, rel))
             None
           } else Some(rel -> cnt)
         }
@@ -691,7 +684,7 @@ final class VectorTable(val spark: SparkSession, val root: String) {
     val cnt = spark.read.parquet(s"$root/$rel").count()
     if (cnt == m.maskCount) {
       // nothing matched: drop the redundant file, commit nothing
-      deleteRecursively(Paths.get(root, rel))
+      Fs.deleteTree(Paths.get(root, rel))
       0L
     } else {
       Manifest.commit(root, m.copy(version = m.version + 1,
@@ -800,12 +793,11 @@ final class VectorTable(val spark: SparkSession, val root: String) {
               .write.option("parquet.enable.dictionary",
                 (m.encoding == "dictionary").toString)
               .parquet(tmp.toString)
-            val tl = Files.list(tmp)
-            try tl.iterator().asScala.toVector.foreach { p =>
+            Fs.list(tmp).foreach { p =>
               if (p.getFileName.toString.endsWith(".parquet"))
                 Files.move(p, dst.resolve(p.getFileName.toString))
-            } finally tl.close()
-            deleteRecursively(tmp)
+            }
+            Fs.deleteTree(tmp)
           }
           unaffected.foreach(f => Fs.linkOrCopy(f, dst.resolve(f.getFileName.toString)))
           newBatches :+= b.copy(relPath = rel)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Tables
+import graft.core.{Memo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -629,7 +629,7 @@ object Dedup {
     * pays the gate aggregate PER INVOCATION, but for the declared faces
     * the gate's input is a write-once fixture — the corpus tables or a
     * machine-memoized stored index — so its verdict is a pure function of
-    * (session, input identity): the docCountCache / deltaCutoff precedent
+    * (session, input identity): the [[documentCount]] / [[deltaCutoff]] precedent
     * applied to the routing aggregate. Keys name the INPUT (corpus dir +
     * derivation, or index root), never the face, so two faces reading the
     * same frame share one verdict, and callers over per-batch / test
@@ -638,16 +638,11 @@ object Dedup {
     * CHOICE, never a row — both branches emit identical pairs by the
     * collapse contracts.
     */
-  private[operators] val preGateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
   private[operators] def lowDupPreGateMemo(gateKey: Option[String],
                                            keyed: DataFrame, key: Column): Boolean =
     gateKey match {
       case None => lowDupPreGate(keyed, key)
-      case Some(k) =>
-        val sid = ensureEvictionListener(keyed.sparkSession)
-        preGateCache.computeIfAbsent(sid + ":" + k,
-          _ => Boolean.box(lowDupPreGate(keyed, key))).booleanValue
+      case Some(k) => Memo.session(keyed.sparkSession, s"pre-gate:$k")(lowDupPreGate(keyed, key))
     }
 
   /** The shared 128-bit collapse-group fingerprint: `f1` = xxhash64 of the
@@ -875,6 +870,23 @@ object Dedup {
     bandedPairsAdaptive(signaturesOf(Tables.documents(s, d)),
       bandsOf, Seq("band", "h1", "h2"), Some(s"bpa:$d:k$numHashes"))
 
+  /** The two-stage delta-index build every delta face prices: the first
+    * doc_id half lands in `dir/table` and `build` indexes it into
+    * `dir/index`, then the second half lands and `refresh` catches the
+    * index up (only the appended span is hashed).
+    */
+  private def twoStage[I](s: SparkSession, d: String, dir: java.nio.file.Path)(
+      build: (graft.core.VectorTable, String) => I)(
+      refresh: (I, graft.core.VectorTable) => I): (graft.core.VectorTable, I) = {
+    val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+    val cutoff = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
+    val t = graft.core.VectorTable.create(s, s"$dir/table")
+    t.append(docs.where(col("doc_id") <= cutoff))
+    val idx = build(t, s"$dir/index")
+    t.append(docs.where(col("doc_id") > cutoff))
+    (t, refresh(idx, t))
+  }
+
   /** Documents ingested into a VectorTable in two stages with an
     * [[LshIndex]] built on the first and INCREMENTALLY refreshed for the
     * second — cached per (machine, sf dir) behind the pointer protocol.
@@ -882,44 +894,13 @@ object Dedup {
     * oracle (which recomputes from raw text) proves incremental
     * maintenance is lossless.
     */
-  /** Best-effort recursive delete for a pointer-protocol race LOSER's
-    * fully-built directory (round-11 ADVICE: the loser adopted the winner's
-    * pointer but left its own table/index/staging/ckpt orphaned in tmpdir).
-    * Failures are swallowed — cleanup is hygiene, never correctness.
-    */
-  private[operators] def deleteRecursively(dir: java.nio.file.Path): Unit =
-    try {
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-      finally walk.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
-
-  private val lshIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, LshIndex]()
   private def documentsLshIndex(s: SparkSession, d: String): LshIndex =
-    lshIndexes.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-rowid-tables")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"docs-lsh-$key.path")
-      if (!Files.exists(pointer)) {
-        val dir = base.resolve(s"docs-lsh-$key-${java.util.UUID.randomUUID()}")
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        val cutoff = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
-        val t = graft.core.VectorTable.create(s, s"$dir/table")
-        t.append(docs.where(col("doc_id") <= cutoff))
-        val idx = LshIndex.build(t, s"$dir/index")
-        t.append(docs.where(col("doc_id") > cutoff))
-        idx.refresh(t)
-        try Files.write(pointer, dir.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          deleteRecursively(dir) } // racer won; adopt theirs, drop our build
+    Memo.session(s, s"docs-lsh:$d") {
+      val root = Memo.machine(s, "graft-rowid-tables", "docs-lsh", d) { dir =>
+        twoStage(s, d, dir)((t, r) => LshIndex.build(t, r))(_.refresh(_))
       }
-      LshIndex.open(s, s"${Files.readString(pointer)}/index")
-    })
+      LshIndex.open(s, s"$root/index")
+    }
 
   def prebuildLshIndex(s: SparkSession, d: String): Unit =
     documentsLshIndex(s, d)
@@ -1050,13 +1031,11 @@ object Dedup {
   private[graft] def bandRowsFor(docs: DataFrame): DataFrame =
     bandsOf(signaturesOf(docs))
 
-  /** [[deltaCandidatesFromBands]] / [[deleteRecursively]] for the pricing
-    * tools outside the operators package.
+  /** [[deltaCandidatesFromBands]] for the pricing tools outside the
+    * operators package.
     */
   private[graft] def deltaCandidatesFromBandsFor(all: DataFrame, cutoff: Long): DataFrame =
     deltaCandidatesFromBands(all, cutoff)
-  private[graft] def deleteRecursivelyFor(dir: java.nio.file.Path): Unit =
-    deleteRecursively(dir)
 
   /** [[connectedComponentsOf]] for callers outside the operators package
     * (the semantic ingest gate decomposes its survivor graph into
@@ -1099,15 +1078,12 @@ object Dedup {
     * each paid this one-row max(doc_id) job per invocation; the cutoff is
     * input METADATA of the fixed corpus dir, not query work, so caching
     * it per (session, corpus) changes no face's measured computation —
-    * exactly the docCountCache precedent. Evicted with the session.
+    * exactly the [[documentCount]] precedent. Evicted with the session.
     */
-  private[operators] val deltaCutoffCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def deltaCutoff(s: SparkSession, d: String): Long = {
-    val sid = ensureEvictionListener(s)
-    deltaCutoffCache.computeIfAbsent(sid + ":" + d,
-      _ => Tables.documents(s, d).agg(max(col("doc_id"))).head.getLong(0) / 2)
-  }
+  private def deltaCutoff(s: SparkSession, d: String): Long =
+    Memo.session(s, s"delta-cutoff:$d") {
+      Tables.documents(s, d).agg(max(col("doc_id"))).head.getLong(0) / 2
+    }
 
   lazy val deltaCandidatePairsSql: String =
     s"""WITH full_pairs AS (${lshCandidatePairsSql.replace("\n", "\n  ")}),
@@ -1130,53 +1106,38 @@ object Dedup {
     * against a from-scratch recompute and ≥ 2 distinct refreshes (else the
     * "incremental" claim was never exercised).
     */
-  private val streamedLshRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def streamedLshIndexRoot(s: SparkSession, d: String): String =
-    streamedLshRoots.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$d#lsh-streamed".getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-rowid-tables")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"docs-lsh-streamed-$key.path")
-      if (!Files.exists(pointer)) {
-        val dir = base.resolve(s"docs-lsh-streamed-$key-${java.util.UUID.randomUUID()}")
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        val cutoff = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
-        val t = graft.core.VectorTable.create(s, s"$dir/table")
-        t.append(docs.where(col("doc_id") <= cutoff))
-        val idx = new java.util.concurrent.atomic.AtomicReference(
-          LshIndex.build(t, s"$dir/index"))
-        val refreshes = new java.util.concurrent.atomic.AtomicInteger(0)
-        docs.where(col("doc_id") > cutoff)
-          .repartition(4).write.parquet(s"$dir/staging")
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
-        val q = graft.streaming.StreamIngest.start(stream, t, s"$dir/ckpt",
-          trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-          onBatch = (tab, _) => {
-            val cur = idx.get()
-            val next = cur.refresh(tab)
-            if (next ne cur) { idx.set(next); refreshes.incrementAndGet(); () }
-          })
-        q.awaitTermination()
-        val expect = bandsOf(signaturesOf(docs))
-        // logical band rows only: the stored layout additionally carries
-        // `_rowid` (physical-row addressing for takedown propagation)
-        val got = idx.get().bands.select("doc_id", "band", "h1", "h2")
-        val missing = expect.exceptAll(got).count()
-        val extra = got.exceptAll(expect).count()
-        if (missing != 0 || extra != 0 || refreshes.get() < 2)
-          throw new IllegalStateException(
-            s"streamed LSH index diverged: $missing missing / $extra extra band rows, " +
-              s"${refreshes.get()} incremental refreshes")
-        try Files.write(pointer, dir.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          deleteRecursively(dir) } // racer won; adopt theirs, drop our build
-      }
-      Files.readString(pointer)
-    })
+    Memo.machine(s, "graft-rowid-tables", "docs-lsh-streamed", d, "#lsh-streamed") { dir =>
+      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+      val cutoff = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
+      val t = graft.core.VectorTable.create(s, s"$dir/table")
+      t.append(docs.where(col("doc_id") <= cutoff))
+      val idx = new java.util.concurrent.atomic.AtomicReference(
+        LshIndex.build(t, s"$dir/index"))
+      val refreshes = new java.util.concurrent.atomic.AtomicInteger(0)
+      docs.where(col("doc_id") > cutoff)
+        .repartition(4).write.parquet(s"$dir/staging")
+      val stream = s.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
+      val q = graft.streaming.StreamIngest.start(stream, t, s"$dir/ckpt",
+        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
+        onBatch = (tab, _) => {
+          val cur = idx.get()
+          val next = cur.refresh(tab)
+          if (next ne cur) { idx.set(next); refreshes.incrementAndGet(); () }
+        })
+      q.awaitTermination()
+      val expect = bandsOf(signaturesOf(docs))
+      // logical band rows only: the stored layout additionally carries
+      // `_rowid` (physical-row addressing for takedown propagation)
+      val got = idx.get().bands.select("doc_id", "band", "h1", "h2")
+      val missing = expect.exceptAll(got).count()
+      val extra = got.exceptAll(expect).count()
+      if (missing != 0 || extra != 0 || refreshes.get() < 2)
+        throw new IllegalStateException(
+          s"streamed LSH index diverged: $missing missing / $extra extra band rows, " +
+            s"${refreshes.get()} incremental refreshes")
+    }
 
   def prebuildStreamedLshIndex(s: SparkSession, d: String): Unit = {
     streamedLshIndexRoot(s, d); ()
@@ -1201,31 +1162,10 @@ object Dedup {
     * [[documentsLshIndex]]), memoized per (machine, sf dir) behind the
     * pointer protocol.
     */
-  private val simhashIndexRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def simhashIndexRoot(s: SparkSession, d: String): String =
-    simhashIndexRoots.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$d#simhash".getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-rowid-tables")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"docs-simhash-$key.path")
-      if (!Files.exists(pointer)) {
-        val dir = base.resolve(s"docs-simhash-$key-${java.util.UUID.randomUUID()}")
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        val cutoff = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
-        val t = graft.core.VectorTable.create(s, s"$dir/table")
-        t.append(docs.where(col("doc_id") <= cutoff))
-        val idx = SimHashIndex.build(t, s"$dir/index")
-        t.append(docs.where(col("doc_id") > cutoff))
-        idx.refresh(t)
-        try Files.write(pointer, dir.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          deleteRecursively(dir) } // racer won; adopt theirs, drop our build
-      }
-      Files.readString(pointer)
-    })
+    Memo.machine(s, "graft-rowid-tables", "docs-simhash", d, "#simhash") { dir =>
+      twoStage(s, d, dir)((t, r) => SimHashIndex.build(t, r))(_.refresh(_))
+    }
 
   def prebuildSimhashIndex(s: SparkSession, d: String): Unit = {
     simhashIndexRoot(s, d); ()
@@ -1318,31 +1258,10 @@ object Dedup {
     * first half builds, second half refreshes (only the appended span is
     * rolling-hashed).
     */
-  private val spanIndexRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def spanIndexRoot(s: SparkSession, d: String): String =
-    spanIndexRoots.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$d#spans".getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-rowid-tables")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"docs-spans-$key.path")
-      if (!Files.exists(pointer)) {
-        val dir = base.resolve(s"docs-spans-$key-${java.util.UUID.randomUUID()}")
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        val cutoff = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
-        val t = graft.core.VectorTable.create(s, s"$dir/table")
-        t.append(docs.where(col("doc_id") <= cutoff))
-        val idx = SpanIndex.build(t, s"$dir/index")
-        t.append(docs.where(col("doc_id") > cutoff))
-        idx.refresh(t)
-        try Files.write(pointer, dir.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          deleteRecursively(dir) } // racer won; adopt theirs, drop our build
-      }
-      Files.readString(pointer)
-    })
+    Memo.machine(s, "graft-rowid-tables", "docs-spans", d, "#spans") { dir =>
+      twoStage(s, d, dir)((t, r) => SpanIndex.build(t, r))(_.refresh(_))
+    }
 
   def prebuildSpanIndex(s: SparkSession, d: String): Unit = {
     spanIndexRoot(s, d); ()
@@ -1355,53 +1274,38 @@ object Dedup {
     * and the build THROWS unless the streamed index's window rows equal
     * the batch recompute exactly with ≥2 incremental refreshes observed.
     */
-  private val streamedSpanRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def streamedSpanIndexRoot(s: SparkSession, d: String): String =
-    streamedSpanRoots.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$d#spans-streamed".getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-rowid-tables")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"docs-spans-streamed-$key.path")
-      if (!Files.exists(pointer)) {
-        val dir = base.resolve(s"docs-spans-streamed-$key-${java.util.UUID.randomUUID()}")
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        val cutoff = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
-        val t = graft.core.VectorTable.create(s, s"$dir/table")
-        t.append(docs.where(col("doc_id") <= cutoff))
-        val idx = new java.util.concurrent.atomic.AtomicReference(
-          SpanIndex.build(t, s"$dir/index"))
-        val refreshes = new java.util.concurrent.atomic.AtomicInteger(0)
-        docs.where(col("doc_id") > cutoff)
-          .repartition(4).write.parquet(s"$dir/staging")
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
-        val q = graft.streaming.StreamIngest.start(stream, t, s"$dir/ckpt",
-          trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-          onBatch = (tab, _) => {
-            val cur = idx.get()
-            val next = cur.refresh(tab)
-            if (next ne cur) { idx.set(next); refreshes.incrementAndGet(); () }
-          })
-        q.awaitTermination()
-        val expect = docs.select(col("doc_id"), explode(graft.functions.TextFunctions
-          .rollingHashes(col("text"), repeatedSpanWindow, repeatedSpanStride)).as("gram_hash"))
-        // logical window rows only (the layout also carries `_rowid`)
-        val got = idx.get().windows.select("doc_id", "gram_hash")
-        val missing = expect.exceptAll(got).count()
-        val extra = got.exceptAll(expect).count()
-        if (missing != 0 || extra != 0 || refreshes.get() < 2)
-          throw new IllegalStateException(
-            s"streamed span index diverged: $missing missing / $extra extra window rows, " +
-              s"${refreshes.get()} incremental refreshes")
-        try Files.write(pointer, dir.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          deleteRecursively(dir) } // racer won; adopt theirs, drop our build
-      }
-      Files.readString(pointer)
-    })
+    Memo.machine(s, "graft-rowid-tables", "docs-spans-streamed", d, "#spans-streamed") { dir =>
+      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+      val cutoff = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
+      val t = graft.core.VectorTable.create(s, s"$dir/table")
+      t.append(docs.where(col("doc_id") <= cutoff))
+      val idx = new java.util.concurrent.atomic.AtomicReference(
+        SpanIndex.build(t, s"$dir/index"))
+      val refreshes = new java.util.concurrent.atomic.AtomicInteger(0)
+      docs.where(col("doc_id") > cutoff)
+        .repartition(4).write.parquet(s"$dir/staging")
+      val stream = s.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
+      val q = graft.streaming.StreamIngest.start(stream, t, s"$dir/ckpt",
+        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
+        onBatch = (tab, _) => {
+          val cur = idx.get()
+          val next = cur.refresh(tab)
+          if (next ne cur) { idx.set(next); refreshes.incrementAndGet(); () }
+        })
+      q.awaitTermination()
+      val expect = docs.select(col("doc_id"), explode(graft.functions.TextFunctions
+        .rollingHashes(col("text"), repeatedSpanWindow, repeatedSpanStride)).as("gram_hash"))
+      // logical window rows only (the layout also carries `_rowid`)
+      val got = idx.get().windows.select("doc_id", "gram_hash")
+      val missing = expect.exceptAll(got).count()
+      val extra = got.exceptAll(expect).count()
+      if (missing != 0 || extra != 0 || refreshes.get() < 2)
+        throw new IllegalStateException(
+          s"streamed span index diverged: $missing missing / $extra extra window rows, " +
+            s"${refreshes.get()} incremental refreshes")
+    }
 
   def prebuildStreamedSpanIndex(s: SparkSession, d: String): Unit = {
     streamedSpanIndexRoot(s, d); ()
@@ -1423,54 +1327,22 @@ object Dedup {
     * windows are ≥ [[spanScrubMaxPermille]]‰ covered by spans of
     * already-landed docs, survivors land and the [[SpanIndex]] refreshes.
     */
-  private val spanIngestRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def spanIngestRoot(s: SparkSession, d: String): String =
-    spanIngestRoots.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$d#span-ingest".getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-rowid-tables")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"docs-span-ingest-$key.path")
-      if (!Files.exists(pointer)) {
-        val dir = base.resolve(s"docs-span-ingest-$key-${java.util.UUID.randomUUID()}")
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
-        Files.createDirectories(dir.resolve("staging"))
-        (0 until 4).foreach { i =>
-          val lo = (maxId + 1) * i / 4
-          val hi = (maxId + 1) * (i + 1) / 4
-          val stage = dir.resolve(s"stage$i")
-          docs.where(col("doc_id") >= lo && col("doc_id") < hi)
-            .coalesce(1).sortWithinPartitions("doc_id")
-            .write.parquet(stage.toString)
-          val listing = Files.list(stage)
-          var moved = false
-          try listing.iterator().forEachRemaining { p =>
-            if (p.getFileName.toString.endsWith(".parquet")) {
-              Files.move(p, dir.resolve("staging").resolve(f"f$i%02d.parquet"))
-              moved = true
-            }
-          } finally listing.close()
-          require(moved, s"stage $i produced no parquet file")
-        }
-        val t = graft.core.VectorTable.create(s, s"$dir/table")
-        val idx = new java.util.concurrent.atomic.AtomicReference(
-          SpanIndex.build(t, s"$dir/index"))
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
-        val q = graft.streaming.SpanScrubIngest.start(stream, t, idx,
-          spanScrubMaxPermille, s"$dir/ckpt",
-          trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        q.awaitTermination()
-        require(t.length > 0, "span ingest landed nothing")
-        try Files.write(pointer, dir.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          deleteRecursively(dir) } // racer won; adopt theirs, drop our build
-      }
-      Files.readString(pointer)
-    })
+    Memo.machine(s, "graft-rowid-tables", "docs-span-ingest", d, "#span-ingest") { dir =>
+      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+      val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
+      graft.streaming.StreamIngest.stageIdSpans(docs, "doc_id", maxId, dir)
+      val t = graft.core.VectorTable.create(s, s"$dir/table")
+      val idx = new java.util.concurrent.atomic.AtomicReference(
+        SpanIndex.build(t, s"$dir/index"))
+      val stream = s.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
+      val q = graft.streaming.SpanScrubIngest.start(stream, t, idx,
+        spanScrubMaxPermille, s"$dir/ckpt",
+        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      q.awaitTermination()
+      require(t.length > 0, "span ingest landed nothing")
+    }
 
   def prebuildSpanIngest(s: SparkSession, d: String): Unit = {
     spanIngestRoot(s, d); ()
@@ -1557,54 +1429,22 @@ object Dedup {
     * near-dups of an already-landed doc; survivors land and the index
     * refreshes (only the appended span is signature-hashed).
     */
-  private val lshIngestRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def lshIngestRoot(s: SparkSession, d: String): String =
-    lshIngestRoots.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$d#lsh-ingest".getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-rowid-tables")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"docs-lsh-ingest-$key.path")
-      if (!Files.exists(pointer)) {
-        val dir = base.resolve(s"docs-lsh-ingest-$key-${java.util.UUID.randomUUID()}")
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
-        Files.createDirectories(dir.resolve("staging"))
-        (0 until 4).foreach { i =>
-          val lo = (maxId + 1) * i / 4
-          val hi = (maxId + 1) * (i + 1) / 4
-          val stage = dir.resolve(s"stage$i")
-          docs.where(col("doc_id") >= lo && col("doc_id") < hi)
-            .coalesce(1).sortWithinPartitions("doc_id")
-            .write.parquet(stage.toString)
-          val listing = Files.list(stage)
-          var moved = false
-          try listing.iterator().forEachRemaining { p =>
-            if (p.getFileName.toString.endsWith(".parquet")) {
-              Files.move(p, dir.resolve("staging").resolve(f"f$i%02d.parquet"))
-              moved = true
-            }
-          } finally listing.close()
-          require(moved, s"stage $i produced no parquet file")
-        }
-        val t = graft.core.VectorTable.create(s, s"$dir/table")
-        val idx = new java.util.concurrent.atomic.AtomicReference(
-          LshIndex.build(t, s"$dir/index"))
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
-        val q = graft.streaming.LshDedupIngest.start(stream, t, idx,
-          s"$dir/ckpt",
-          trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        q.awaitTermination()
-        require(t.length > 0, "lsh ingest landed nothing")
-        try Files.write(pointer, dir.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          deleteRecursively(dir) } // racer won; adopt theirs, drop our build
-      }
-      Files.readString(pointer)
-    })
+    Memo.machine(s, "graft-rowid-tables", "docs-lsh-ingest", d, "#lsh-ingest") { dir =>
+      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+      val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
+      graft.streaming.StreamIngest.stageIdSpans(docs, "doc_id", maxId, dir)
+      val t = graft.core.VectorTable.create(s, s"$dir/table")
+      val idx = new java.util.concurrent.atomic.AtomicReference(
+        LshIndex.build(t, s"$dir/index"))
+      val stream = s.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
+      val q = graft.streaming.LshDedupIngest.start(stream, t, idx,
+        s"$dir/ckpt",
+        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      q.awaitTermination()
+      require(t.length > 0, "lsh ingest landed nothing")
+    }
 
   def prebuildLshIngest(s: SparkSession, d: String): Unit = {
     lshIngestRoot(s, d); ()
@@ -1733,31 +1573,10 @@ object Dedup {
     * argument covers, and exactly what the oracle's order-free all-pairs
     * SQL verifies end-to-end.
     */
-  private val containmentIndexRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def containmentIndexRoot(s: SparkSession, d: String): String =
-    containmentIndexRoots.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$d#containment".getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-rowid-tables")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"docs-contain-$key.path")
-      if (!Files.exists(pointer)) {
-        val dir = base.resolve(s"docs-contain-$key-${java.util.UUID.randomUUID()}")
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        val cutoff = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
-        val t = graft.core.VectorTable.create(s, s"$dir/table")
-        t.append(docs.where(col("doc_id") <= cutoff))
-        val idx = ContainmentIndex.build(t, s"$dir/index")
-        t.append(docs.where(col("doc_id") > cutoff))
-        idx.refresh(t)
-        try Files.write(pointer, dir.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          deleteRecursively(dir) } // racer won; adopt theirs, drop our build
-      }
-      Files.readString(pointer)
-    })
+    Memo.machine(s, "graft-rowid-tables", "docs-contain", d, "#containment") { dir =>
+      twoStage(s, d, dir)((t, r) => ContainmentIndex.build(t, r))(_.refresh(_))
+    }
 
   def prebuildContainmentIndex(s: SparkSession, d: String): Unit = {
     containmentIndexRoot(s, d); ()
@@ -1823,43 +1642,22 @@ object Dedup {
   // face itself would race the plain face reading it on Verify's query
   // thread pool — the old dir is deleted after the pointer flip.
 
-  private val compactedDeltaRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def compactedDeltaIndexRoot[I](
       s: SparkSession, d: String, tag: String,
       build: (graft.core.VectorTable, String) => I,
       refresh: (I, graft.core.VectorTable) => I,
       compactIt: I => Unit): String =
-    compactedDeltaRoots.computeIfAbsent(s"$d#$tag", _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$d#delta-compacted#$tag".getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-rowid-tables")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"docs-compacted-$tag-$key.path")
-      if (!Files.exists(pointer)) {
-        val dir = base.resolve(s"docs-compacted-$tag-$key-${java.util.UUID.randomUUID()}")
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        val cutoff = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
-        val t = graft.core.VectorTable.create(s, s"$dir/table")
-        t.append(docs.where(col("doc_id") <= cutoff))
-        var idx = build(t, s"$dir/index")
-        t.append(docs.where(col("doc_id") > cutoff))
-        idx = refresh(idx, t)
-        val pre = IndexCompaction.liveFileCount(s"$dir/index")
-        require(pre > 1,
-          s"$tag: the two-stage build must fragment the layout before " +
-            "compaction prices anything")
-        compactIt(idx)
-        val post = IndexCompaction.liveFileCount(s"$dir/index")
-        require(post < pre,
-          s"$tag: compaction must shrink the file count ($pre -> $post)")
-        try Files.write(pointer, dir.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          deleteRecursively(dir) } // racer won; adopt theirs, drop our build
-      }
-      Files.readString(pointer)
-    })
+    Memo.machine(s, "graft-rowid-tables", s"docs-compacted-$tag", d, s"#delta-compacted#$tag") { dir =>
+      val (_, idx) = twoStage(s, d, dir)(build)(refresh)
+      val pre = IndexCompaction.liveFileCount(s"$dir/index")
+      require(pre > 1,
+        s"$tag: the two-stage build must fragment the layout before " +
+          "compaction prices anything")
+      compactIt(idx)
+      val post = IndexCompaction.liveFileCount(s"$dir/index")
+      require(post < pre,
+        s"$tag: compaction must shrink the file count ($pre -> $post)")
+    }
 
   /** One-time landing of all four compacted twin indexes, priced as its
     * own bench dim so the compacted query faces report the WARM gate.
@@ -1921,41 +1719,19 @@ object Dedup {
     * one (measured at sf0.01: a plain modulo predicate touches zero
     * pairs). Memoized per (machine, sf dir) behind the pointer protocol.
     */
-  private val takedownLshRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def takedownLshRoot(s: SparkSession, d: String): String =
-    takedownLshRoots.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$d#lsh-takedown".getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-rowid-tables")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"docs-lsh-takedown-$key.path")
-      if (!Files.exists(pointer)) {
-        val dir = base.resolve(s"docs-lsh-takedown-$key-${java.util.UUID.randomUUID()}")
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        val cutoff = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
-        val t = graft.core.VectorTable.create(s, s"$dir/table")
-        t.append(docs.where(col("doc_id") <= cutoff))
-        var idx = LshIndex.build(t, s"$dir/index")
-        t.append(docs.where(col("doc_id") > cutoff))
-        idx = idx.refresh(t)
-        val victims = pairsFromBands(idx.bands)
-          .where(col("doc_a") % 2 === 0)
-          .select(col("doc_a")).distinct()
-          .collect().map(_.getLong(0))
-        require(victims.nonEmpty, "lsh takedown face needs colliding victims")
-        val deleted = t.deleteWhere(col("doc_id").isin(victims: _*))
-        require(deleted == victims.length.toLong,
-          "every victim must be a live doc")
-        idx = idx.refresh(t)
-        require(idx.indexedMask == deleted, "refresh must record the applied mask")
-        try Files.write(pointer, dir.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          deleteRecursively(dir) } // racer won; adopt theirs, drop our build
-      }
-      Files.readString(pointer)
-    })
+    Memo.machine(s, "graft-rowid-tables", "docs-lsh-takedown", d, "#lsh-takedown") { dir =>
+      val (t, built) = twoStage(s, d, dir)((t, r) => LshIndex.build(t, r))(_.refresh(_))
+      val victims = pairsFromBands(built.bands)
+        .where(col("doc_a") % 2 === 0)
+        .select(col("doc_a")).distinct()
+        .collect().map(_.getLong(0))
+      require(victims.nonEmpty, "lsh takedown face needs colliding victims")
+      val deleted = t.deleteWhere(col("doc_id").isin(victims: _*))
+      require(deleted == victims.length.toLong,
+        "every victim must be a live doc")
+      require(built.refresh(t).indexedMask == deleted, "refresh must record the applied mask")
+    }
 
   def prebuildTakedownLsh(s: SparkSession, d: String): Unit = {
     takedownLshRoot(s, d); ()
@@ -1973,10 +1749,10 @@ object Dedup {
     // cutoff is INPUT metadata of the immutable post-takedown fixture
     // (one max over its live view), session-memoized exactly like
     // [[deltaCutoff]] — the per-invocation scan job was pure re-derivation
-    val sid = ensureEvictionListener(s)
-    val cutoff = deltaCutoffCache.computeIfAbsent(sid + ":tdlsh:" + root,
-      _ => graft.core.VectorTable.open(s, s"$root/table")
-        .liveScan().agg(max(col("doc_id"))).head.getLong(0) / 2)
+    val cutoff = Memo.session(s, s"delta-cutoff:tdlsh:$root") {
+      graft.core.VectorTable.open(s, s"$root/table")
+        .liveScan().agg(max(col("doc_id"))).head.getLong(0) / 2
+    }
     deltaCandidatesFromBands(LshIndex.open(s, s"$root/index").bands, cutoff,
       Some(s"dcb:$root"))
   }
@@ -2324,56 +2100,23 @@ object Dedup {
     * consumer plans against the checkpointed RDD. The chain itself is
     * still measured un-cached by the `dedup_*` queries that ARE the
     * chain.
+    *
+    * Returns (candidates, verified): BOTH stages checkpointed from ONE
+    * signature→banding execution (round-18 optimization: `dedup_report`'s
+    * stage-4 count previously re-ran the whole chain that the cached
+    * verified graph had already executed; the candidate frame is
+    * pair-count-sized, so keeping it costs nothing). Session tier, so a
+    * checkpointed frame never outlives its SparkContext.
     */
-  private val verifiedPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
-  // Sessions that already have an eviction listener: ONE listener per
-  // session covers every dataset key (it sweeps the whole sid prefix), so
-  // registering per (session, dataset) would only pile redundant
-  // listeners onto the SparkContext.
-  private val evictionListenerRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  /** Keyed by GraftSession.sessionId (never recycled, unlike
-    * identityHashCode) so a later session can never be handed a
-    * checkpointed frame whose SparkContext has died; the listener evicts
-    * this session's entries (pair graphs AND doc counts) when the context
-    * stops, so the maps don't accumulate dead state across sessions in one
-    * JVM.
-    */
-  private def ensureEvictionListener(s: SparkSession): Long = {
-    val sid = graft.core.GraftSession.sessionId(s)
-    if (evictionListenerRegistered.add(sid.toString)) {
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          verifiedPairsCache.keySet.removeIf(_.startsWith(sid + ":"))
-          docCountCache.keySet.removeIf(_.startsWith(sid + ":"))
-          deltaCutoffCache.keySet.removeIf(_.startsWith(sid + ":"))
-          preGateCache.keySet.removeIf(_.startsWith(sid + ":"))
-          evictionListenerRegistered.remove(sid.toString)
-        }
-      })
-    }
-    sid
-  }
-
-  /** The (candidates, verified) pair of the shared graph build — BOTH
-    * stages checkpointed from ONE signature→banding execution (round-18
-    * optimization: `dedup_report`'s stage-4 count previously re-ran the
-    * whole chain that the cached verified graph had already executed; the
-    * candidate frame is pair-count-sized, so keeping it costs nothing).
-    */
-  private def pairGraphCached(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val sid = ensureEvictionListener(s)
-    verifiedPairsCache.computeIfAbsent(sid + ":" + d, _ => {
+  private def pairGraphCached(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    Memo.session(s, s"pair-graph:$d") {
       val docs = Tables.documents(s, d)
       val cands = bandedPairsAdaptive(signaturesOf(docs),
         bandsOf, Seq("band", "h1", "h2"), Some(s"bpa:$d:k$numHashes")).localCheckpoint()
       val verified = jaccardVerifyCandidates(docs, cands)
         .select("doc_a", "doc_b").localCheckpoint()
       (cands, verified)
-    })
-  }
+    }
 
   private def verifiedPairsCached(s: SparkSession, d: String): DataFrame =
     pairGraphCached(s, d)._2
@@ -3166,38 +2909,23 @@ object Dedup {
     * row-identical to the batch source at build time (throw on any
     * divergence). Built once per machine behind the pointer protocol.
     */
-  private val streamedDocsRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def streamedDocumentsRoot(s: SparkSession, d: String): String =
-    streamedDocsRoots.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$d#streamed".getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-rowid-tables")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"docs-streamed-$key.path")
-      if (!Files.exists(pointer)) {
-        val dir = base.resolve(s"docs-streamed-$key-${java.util.UUID.randomUUID()}")
-        val source = Tables.documents(s, d)
-        source.repartition(5).write.parquet(s"$dir/staging")
-        val t = graft.core.VectorTable.create(s, s"$dir/table")
-        val stream = s.readStream.schema(source.schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
-        val q = graft.streaming.StreamIngest.start(stream, t, s"$dir/ckpt",
-          trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        q.awaitTermination()
-        val landed = t.scan().select(source.columns.map(col): _*)
-        val missing = source.exceptAll(landed).count()
-        val extra = landed.exceptAll(source).count()
-        if (missing != 0 || extra != 0)
-          throw new IllegalStateException(
-            s"streamed ingest diverged from batch source: $missing missing, $extra extra rows")
-        try Files.write(pointer, dir.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          deleteRecursively(dir) } // racer won; adopt theirs, drop our build
-      }
-      Files.readString(pointer)
-    })
+    Memo.machine(s, "graft-rowid-tables", "docs-streamed", d, "#streamed") { dir =>
+      val source = Tables.documents(s, d)
+      source.repartition(5).write.parquet(s"$dir/staging")
+      val t = graft.core.VectorTable.create(s, s"$dir/table")
+      val stream = s.readStream.schema(source.schema)
+        .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
+      val q = graft.streaming.StreamIngest.start(stream, t, s"$dir/ckpt",
+        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      q.awaitTermination()
+      val landed = t.scan().select(source.columns.map(col): _*)
+      val missing = source.exceptAll(landed).count()
+      val extra = landed.exceptAll(source).count()
+      if (missing != 0 || extra != 0)
+        throw new IllegalStateException(
+          s"streamed ingest diverged from batch source: $missing missing, $extra extra rows")
+    }
 
   /** Declared `dedup_report_streamed`: the SAME funnel as [[dedupReport]]
     * over the stream-landed table — the oracle replays [[dedupReportSql]]
@@ -3288,16 +3016,10 @@ object Dedup {
 
   def simhashBitsFor(n: Long): Int = if (n <= simhashWideThreshold) 16 else 64
 
-  // Keyed by (session, dataset dir) and evicted with verifiedPairsCache's
-  // application-end listener — the same lifecycle discipline as the other
-  // per-dataset memos, so a regenerated dataset read by a NEW session can
+  // Session-tier memo, so a regenerated dataset read by a NEW session can
   // never pick up a stale count (and with it a stale signature width).
-  private[operators] val docCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def documentCount(s: SparkSession, d: String): Long = {
-    val sid = ensureEvictionListener(s)
-    docCountCache.computeIfAbsent(sid + ":" + d, _ => Tables.documents(s, d).count())
-  }
+  private def documentCount(s: SparkSession, d: String): Long =
+    Memo.session(s, s"doc-count:$d")(Tables.documents(s, d).count())
 
   /** 64-bit twin of [[simhashSignatures]] — same map-only kernel shape. */
   private[graft] def simhashSignatures64(s: SparkSession, d: String): DataFrame =

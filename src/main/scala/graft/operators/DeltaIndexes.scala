@@ -3,7 +3,7 @@ package graft.operators
 import graft.core.VectorTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 
 /** Persisted 64-bit SimHash index over a documents [[VectorTable]] with
   * INCREMENTAL maintenance — the [[LshIndex]] discipline for the pigeonhole
@@ -59,7 +59,7 @@ final class SimHashIndex private (
         IndexCompaction.deletedKeys(table, key, key, () => signatures.select(key), maskOnly),
         sortWithin = Seq("simhash"))
     }
-    SimHashIndex.writeMeta(root, m.version, m.length, tomb, m.restores)
+    IndexCompaction.writeMeta(root, m.version, m.length, tomb, m.restores)
     new SimHashIndex(spark, root, m.version, m.length, tomb, m.restores)
   }
 
@@ -87,7 +87,7 @@ object SimHashIndex {
       Seq.empty[(Long, Long, Long)].toDF("doc_id", VectorTable.ROWID, "simhash")
         .write.mode("append").parquet(IndexCompaction.dataDir(root).toString)
     }
-    writeMeta(root, m.version, m.length, m.maskCount + m.purged, m.restores)
+    IndexCompaction.writeMeta(root, m.version, m.length, m.maskCount + m.purged, m.restores)
     new SimHashIndex(table.spark, root, m.version, m.length,
       m.maskCount + m.purged, m.restores)
   }
@@ -107,15 +107,6 @@ object SimHashIndex {
         graft.functions.TextFunctions.simhash64(col("text")).as("simhash"))
     (if (withRowid) rows else rows.drop(VectorTable.ROWID))
       .write.mode("append").parquet(IndexCompaction.dataDir(root).toString)
-  }
-
-  private def writeMeta(root: String, version: Long, length: Long,
-                        mask: Long = 0L, restores: Long = 0L): Unit = {
-    val tmp = Paths.get(root, s".meta-${java.util.UUID.randomUUID()}")
-    Files.write(tmp, s"$version,$length,$mask,$restores".getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-    Files.move(tmp, Paths.get(root, "meta.txt"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 }
 
@@ -181,7 +172,7 @@ final class ContainmentIndex private (
         IndexCompaction.deletedKeys(table, key, key, () => entries.select(key), maskOnly),
         sortWithin = Seq("doc_id"))
     }
-    ContainmentIndex.writeMeta(root, m.version, m.length, tomb, m.restores)
+    IndexCompaction.writeMeta(root, m.version, m.length, tomb, m.restores)
     new ContainmentIndex(spark, root, m.version, m.length, tomb, m.restores)
   }
 
@@ -219,7 +210,7 @@ object ContainmentIndex {
       val frozen = table.spark.read.parquet(s"$root/freq")
       writeEntries(sh, frozen, root, withRowid = true)
     }
-    writeMeta(root, m.version, m.length, m.maskCount + m.purged, m.restores)
+    IndexCompaction.writeMeta(root, m.version, m.length, m.maskCount + m.purged, m.restores)
     new ContainmentIndex(table.spark, root, m.version, m.length,
       m.maskCount + m.purged, m.restores)
   }
@@ -260,15 +251,6 @@ object ContainmentIndex {
       .select("doc_id", VectorTable.ROWID, "sg", "sh", "n")
     (if (withRowid) rows else rows.drop(VectorTable.ROWID))
       .write.mode("append").parquet(IndexCompaction.dataDir(root).toString)
-  }
-
-  private def writeMeta(root: String, version: Long, length: Long,
-                        mask: Long = 0L, restores: Long = 0L): Unit = {
-    val tmp = Paths.get(root, s".meta-${java.util.UUID.randomUUID()}")
-    Files.write(tmp, s"$version,$length,$mask,$restores".getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-    Files.move(tmp, Paths.get(root, "meta.txt"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 }
 
@@ -319,7 +301,7 @@ final class SpanIndex private (
         IndexCompaction.deletedKeys(table, key, key, () => windows.select(key), maskOnly),
         sortWithin = Seq("gram_hash"))
     }
-    SpanIndex.writeMeta(root, m.version, m.length, tomb, m.restores)
+    IndexCompaction.writeMeta(root, m.version, m.length, tomb, m.restores)
     new SpanIndex(spark, root, m.version, m.length, tomb, m.restores)
   }
 
@@ -345,7 +327,7 @@ object SpanIndex {
       Seq.empty[(Long, Long, Long)].toDF("doc_id", VectorTable.ROWID, "gram_hash")
         .write.mode("append").parquet(IndexCompaction.dataDir(root).toString)
     }
-    writeMeta(root, m.version, m.length, m.maskCount + m.purged, m.restores)
+    IndexCompaction.writeMeta(root, m.version, m.length, m.maskCount + m.purged, m.restores)
     new SpanIndex(table.spark, root, m.version, m.length,
       m.maskCount + m.purged, m.restores)
   }
@@ -367,14 +349,5 @@ object SpanIndex {
           .as("gram_hash"))
     (if (withRowid) rows else rows.drop(VectorTable.ROWID))
       .write.mode("append").parquet(IndexCompaction.dataDir(root).toString)
-  }
-
-  private def writeMeta(root: String, version: Long, length: Long,
-                        mask: Long = 0L, restores: Long = 0L): Unit = {
-    val tmp = Paths.get(root, s".meta-${java.util.UUID.randomUUID()}")
-    Files.write(tmp, s"$version,$length,$mask,$restores".getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-    Files.move(tmp, Paths.get(root, "meta.txt"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 }

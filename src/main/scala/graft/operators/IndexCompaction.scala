@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 
 /** Shared IN-PLACE compaction over the persisted-index layout every
   * incremental index in the repo uses (`root/<live-dir>` of parquet files,
@@ -159,7 +159,7 @@ object IndexCompaction {
         .write.parquet(fresh.toString)
     }
     publish(root, fresh.getFileName.toString)
-    if (live != fresh) Dedup.deleteRecursively(live)
+    if (live != fresh) dropSuperseded(live)
     true
   }
 
@@ -250,8 +250,7 @@ object IndexCompaction {
     files.filterNot(p => affectedNames.contains(p.getFileName.toString))
       .foreach(f => graft.core.Fs.linkOrCopy(f, fresh.resolve(f.getFileName.toString)))
     publish(root, fresh.getFileName.toString)
-    Dedup.deleteRecursively(tmp)
-    Dedup.deleteRecursively(live)
+    dropSuperseded(tmp, live)
     true
   }
 
@@ -393,7 +392,7 @@ object IndexCompaction {
           graft.core.Fs.linkOrCopy(f, dst)
         }
         publish(root, fresh.getFileName.toString)
-        Dedup.deleteRecursively(live)
+        dropSuperseded(live)
       }
     }
     // rows in (keptHi, cut) absent from the kept files are exactly the
@@ -451,11 +450,22 @@ object IndexCompaction {
     * way.
     */
   private[graft] def publish(root: String, dirName: String): Unit = {
-    val tmp = Paths.get(root, s".current-${java.util.UUID.randomUUID()}")
-    Files.write(tmp, dirName.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-    Files.move(tmp, pointer(root),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    graft.core.Fs.replaceAtomically(pointer(root), dirName)
   }
+
+  /** Publish an index's `meta.txt` — (version, covered table length,
+    * applied mask, restores) — with the same atomic replace.
+    */
+  private[operators] def writeMeta(root: String, version: Long, length: Long,
+                                   mask: Long, restores: Long): Unit =
+    graft.core.Fs.replaceAtomically(Paths.get(root, "meta.txt"), s"$version,$length,$mask,$restores")
+
+  /** Best-effort delete of layouts a published pointer flip superseded:
+    * the flip already made the new layout live, so a failed cleanup must
+    * not fail the operation (a later [[sweepOrphans]] retries it).
+    */
+  private[operators] def dropSuperseded(dirs: java.nio.file.Path*): Unit =
+    dirs.foreach(d => try graft.core.Fs.deleteTree(d) catch { case scala.util.control.NonFatal(_) => () })
 
   /** Delete `data-*` dirs a crashed compaction left behind (anything
     * matching the compaction naming scheme that the pointer does not
@@ -474,7 +484,7 @@ object IndexCompaction {
           || n.getFileName.toString.startsWith(".rewrite-"))
         .filter(_.getFileName.toString != live)
         .toList
-        .foreach(Dedup.deleteRecursively)
+        .foreach(dropSuperseded(_))
     } finally listing.close()
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import graft.core.VectorTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 
 /** Incrementally-maintained IVF index over an embeddings [[VectorTable]]:
   * centroids are fixed at build time (the standard IVF maintenance
@@ -92,7 +92,7 @@ final class IvfTableIndex private (
     if (cu.isDefined || tomb != effMask)
       applyDeletes(table, legacy,
         maskOnly = tomb >= effMask && tomb - effMask <= m.maskCount)
-    IvfTableIndex.writeMeta(root, m.version, m.length, tomb, m.restores)
+    IndexCompaction.writeMeta(root, m.version, m.length, tomb, m.restores)
     new IvfTableIndex(spark, root, m.version, m.length, tomb, m.restores)
   }
 
@@ -174,8 +174,7 @@ final class IvfTableIndex private (
       }
     } finally liveList.close()
     IndexCompaction.publish(root, fresh.getFileName.toString)
-    Dedup.deleteRecursively(tmp)
-    Dedup.deleteRecursively(live)
+    IndexCompaction.dropSuperseded(tmp, live)
   }
 
   /** COMPACTION — the in-place cure for append-only fragmentation: every
@@ -287,7 +286,7 @@ object IvfTableIndex {
     // an EMPTY table fixes centroids only — range(0,0) has no data
     // columns to assign; the first refresh writes the first real span
     if (m.length > 0) writeSpan(table, cs, 0L, m.length, root, withRowid = true)
-    writeMeta(root, m.version, m.length, m.maskCount + m.purged, m.restores)
+    IndexCompaction.writeMeta(root, m.version, m.length, m.maskCount + m.purged, m.restores)
     new IvfTableIndex(spark, root, m.version, m.length,
       m.maskCount + m.purged, m.restores)
   }
@@ -335,14 +334,5 @@ object IvfTableIndex {
       .repartition(col("cell"))
       .write.mode("append").partitionBy("cell")
       .parquet(IndexCompaction.dataDir(root).toString)
-  }
-
-  private def writeMeta(root: String, version: Long, length: Long,
-                        mask: Long = 0L, restores: Long = 0L): Unit = {
-    val tmp = Paths.get(root, s".meta-${java.util.UUID.randomUUID()}")
-    Files.write(tmp, s"$version,$length,$mask,$restores".getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-    Files.move(tmp, Paths.get(root, "meta.txt"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import graft.core.VectorTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 
 /** Persisted MinHash-LSH band index over a documents [[VectorTable]], with
   * INCREMENTAL maintenance: signatures are computed once at ingest time,
@@ -90,7 +90,7 @@ final class LshIndex private (
         IndexCompaction.deletedKeys(table, key, key, () => bands.select(key), maskOnly),
         sortWithin = Seq("band", "h1", "h2"))
     }
-    LshIndex.writeMeta(root, m.version, m.length, tomb, m.restores)
+    IndexCompaction.writeMeta(root, m.version, m.length, tomb, m.restores)
     new LshIndex(spark, root, m.version, m.length, tomb, m.restores)
   }
 
@@ -121,7 +121,7 @@ object LshIndex {
         .toDF("doc_id", VectorTable.ROWID, "band", "h1", "h2")
         .write.mode("append").parquet(IndexCompaction.dataDir(root).toString)
     }
-    writeMeta(root, m.version, m.length, m.maskCount + m.purged, m.restores)
+    IndexCompaction.writeMeta(root, m.version, m.length, m.maskCount + m.purged, m.restores)
     new LshIndex(table.spark, root, m.version, m.length,
       m.maskCount + m.purged, m.restores)
   }
@@ -151,15 +151,5 @@ object LshIndex {
       // partitioned by band
       .sortWithinPartitions("band", "h1", "h2")
       .write.mode("append").parquet(IndexCompaction.dataDir(root).toString)
-  }
-
-  private def writeMeta(root: String, version: Long, length: Long,
-                        mask: Long = 0L, restores: Long = 0L): Unit = {
-    val tmp = Paths.get(root, s".meta-${java.util.UUID.randomUUID()}")
-    Files.write(tmp, s"$version,$length,$mask,$restores".getBytes("UTF-8"),
-      StandardOpenOption.CREATE_NEW)
-    Files.move(tmp, Paths.get(root, "meta.txt"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 }

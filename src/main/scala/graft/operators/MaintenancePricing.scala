@@ -1,9 +1,9 @@
 package graft.operators
 
-import graft.core.{Tables, VectorTable}
+import graft.core.{Memo, Tables, VectorTable}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 
 /** Bench fixtures pricing the AUTOMATIC-maintenance machinery (round-17
   * verdict #6: the round-16 round shipped the machinery but no bench dim
@@ -25,43 +25,28 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
   */
 object MaintenancePricing {
 
-  private val roots = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def fixtureRoot(s: SparkSession, d: String): String =
-    roots.computeIfAbsent(d, _ => {
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$d#maint-pricing#v1".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-maint")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"fixture-$key.path")
-      if (!Files.exists(pointer)) {
-        val dir = base.resolve(s"fixture-$key-${java.util.UUID.randomUUID()}")
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .localCheckpoint()
-        val nb = (Maintenance.fileFactor + 2).toInt
-        // fragmented twin: one small batch + one index span per slice
-        val frag = VectorTable.create(s, s"$dir/frag")
-        var idx = LshIndex.build(frag, s"$dir/fraglsh")
-        (0 until nb).foreach { b =>
-          frag.append(docs.where(col("doc_id") % nb === b))
-          idx = idx.refresh(frag)
-        }
-        // maintained twin: the fragmented state hard-link-cloned, then
-        // exactly the per-batch maintenance the streaming paths run —
-        // content-identical without re-paying the ingest
-        copyTree(dir.resolve("frag"), dir.resolve("maint"))
-        copyTree(dir.resolve("fraglsh"), dir.resolve("maintlsh"))
-        val maint = VectorTable.open(s, s"$dir/maint")
-        val midx = LshIndex.open(s, s"$dir/maintlsh")
-        Maintenance.maintainTable(maint)
-        Maintenance.maintainIndex(s"$dir/maintlsh", () => { midx.compact(); () })
-        try Files.write(pointer, dir.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          Dedup.deleteRecursively(dir) }
+    Memo.machine(s, "graft-maint", "fixture", d, "#maint-pricing#v1") { dir =>
+      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+        .localCheckpoint()
+      val nb = (Maintenance.fileFactor + 2).toInt
+      // fragmented twin: one small batch + one index span per slice
+      val frag = VectorTable.create(s, s"$dir/frag")
+      var idx = LshIndex.build(frag, s"$dir/fraglsh")
+      (0 until nb).foreach { b =>
+        frag.append(docs.where(col("doc_id") % nb === b))
+        idx = idx.refresh(frag)
       }
-      Files.readString(pointer)
-    })
+      // maintained twin: the fragmented state hard-link-cloned, then
+      // exactly the per-batch maintenance the streaming paths run —
+      // content-identical without re-paying the ingest
+      copyTree(dir.resolve("frag"), dir.resolve("maint"))
+      copyTree(dir.resolve("fraglsh"), dir.resolve("maintlsh"))
+      val maint = VectorTable.open(s, s"$dir/maint")
+      val midx = LshIndex.open(s, s"$dir/maintlsh")
+      Maintenance.maintainTable(maint)
+      Maintenance.maintainIndex(s"$dir/maintlsh", () => { midx.compact(); () })
+    }
 
   def prebuild(s: SparkSession, d: String): Unit = { fixtureRoot(s, d); () }
 
@@ -92,7 +77,7 @@ object MaintenancePricing {
     val root = Paths.get(fixtureRoot(s, d))
     val src = root.resolve(which)
     val dst = root.resolve(s"run-$which")
-    if (Files.exists(dst)) Dedup.deleteRecursively(dst)
+    graft.core.Fs.deleteTree(dst)
     copyTree(src, dst.resolve(which))
     dst.resolve(which).toString
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Tables
+import graft.core.{Memo, Tables}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -165,31 +165,17 @@ object Multimodal {
     * per (machine, corpus dir) behind the pointer protocol — the binary
     * column flows through parquet exactly like a production image table.
     */
-  private val pngFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   def pngFixture(s: SparkSession, d: String): DataFrame = {
-    val dir = pngFixtures.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-png-fixtures")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"png-$key.path")
-      if (!Files.exists(pointer)) {
-        val root = base.resolve(s"png-$key-${java.util.UUID.randomUUID()}")
-        val ids = Tables.documents(s, d).select("doc_id")
-        val rows = ids.rdd.mapPartitions(_.map { r =>
-          Row(r.getLong(0), pngEncode(r.getLong(0)))
-        })
-        s.createDataFrame(rows, StructType(Seq(
-            StructField("doc_id", LongType, nullable = false),
-            StructField("payload", BinaryType, nullable = false))))
-          .write.mode("overwrite").parquet(root.toString)
-        try Files.write(pointer, root.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      }
-      Files.readString(pointer)
-    })
+    val dir = Memo.machine(s, "graft-png-fixtures", "png", d) { root =>
+      val ids = Tables.documents(s, d).select("doc_id")
+      val rows = ids.rdd.mapPartitions(_.map { r =>
+        Row(r.getLong(0), pngEncode(r.getLong(0)))
+      })
+      s.createDataFrame(rows, StructType(Seq(
+          StructField("doc_id", LongType, nullable = false),
+          StructField("payload", BinaryType, nullable = false))))
+        .write.mode("overwrite").parquet(root.toString)
+    }
     s.read.parquet(dir)
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Tables
+import graft.core.{Memo, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -224,80 +224,48 @@ object Pipeline {
     * to the tables so the spec can pin streamed totals ≡ the batch
     * oracle's global counts without re-landing.
     */
-  private val refineryRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def refineryRoot(s: SparkSession, d: String): String =
-    refineryRoots.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$d#refinery#stages=6".getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-rowid-tables")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"refinery-$key.path")
-      if (!Files.exists(pointer)) {
-        val dir = base.resolve(s"refinery-$key-${java.util.UUID.randomUUID()}")
-        val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-        val fused = Tables.documents(s, d)
-          .select(col("doc_id").as("vec_id"), col("text"))
-          .join(emb, Seq("vec_id"))
-          .where(col("vec_id") % refineryEvalMod =!= 0)
-          .select(col("vec_id"), col("text"), col("embedding"))
-        val evalRows = emb.where(col("vec_id") % refineryEvalMod === 0)
-          .orderBy("vec_id").collect()
-        val evalIds = evalRows.map(_.getLong(0))
-        val evalVecs = evalRows.map(_.getSeq[Float](1).toArray)
-        val maxId = fused.agg(max(col("vec_id"))).head.getLong(0)
-        Files.createDirectories(dir.resolve("staging"))
-        (0 until 4).foreach { i =>
-          val lo = (maxId + 1) * i / 4
-          val hi = (maxId + 1) * (i + 1) / 4
-          val stage = dir.resolve(s"stage$i")
-          fused.where(col("vec_id") >= lo && col("vec_id") < hi)
-            .coalesce(1).sortWithinPartitions("vec_id")
-            .write.parquet(stage.toString)
-          val listing = Files.list(stage)
-          var moved = false
-          try listing.iterator().forEachRemaining { p =>
-            if (p.getFileName.toString.endsWith(".parquet")) {
-              Files.move(p, dir.resolve("staging").resolve(f"f$i%02d.parquet"))
-              moved = true
-            }
-          } finally listing.close()
-          require(moved, s"stage $i produced no parquet file")
-        }
-        val docsTable = graft.core.VectorTable.create(s, s"$dir/docs")
-        val hashStore = graft.core.VectorTable.create(s, s"$dir/hashes")
-        val spanStore = graft.core.VectorTable.create(s, s"$dir/spans")
-        val lexStore = graft.core.VectorTable.create(s, s"$dir/lex")
-        val embTable = graft.core.VectorTable.create(s, s"$dir/emb")
-        val spanIdx = new java.util.concurrent.atomic.AtomicReference(
-          graft.operators.SpanIndex.build(spanStore, s"$dir/spanindex"))
-        val lexIdx = new java.util.concurrent.atomic.AtomicReference(
-          graft.operators.LshIndex.build(lexStore, s"$dir/lexindex"))
-        val idx = new java.util.concurrent.atomic.AtomicReference(
-          IvfTableIndex.buildWith(embTable, s"$dir/index", Similarity.centroids(s, d)))
-        val acc = new java.util.concurrent.atomic.AtomicReference(
-          graft.streaming.RefineryIngest.Counts.zero)
-        val stream = s.readStream.schema(fused.schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
-        val q = graft.streaming.RefineryIngest.start(stream, docsTable,
-          hashStore, spanStore, lexStore, embTable, spanIdx, lexIdx, idx,
-          evalIds, evalVecs,
-          minQuality,
-          Similarity.nearDupThreshold, s"$dir/ckpt", acc,
-          trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        q.awaitTermination()
-        require(docsTable.length > 0, "refinery landed nothing")
-        val c = acc.get()
-        Files.write(dir.resolve("counts.txt"),
-          s"${c.input},${c.qualityDropped},${c.exactDropped},${c.spanDropped},${c.lexicalDropped},${c.contamDropped},${c.semanticDropped},${c.landed}"
-            .getBytes("UTF-8"))
-        try Files.write(pointer, dir.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          Dedup.deleteRecursively(dir) } // racer won; adopt theirs
-      }
-      Files.readString(pointer)
-    })
+    Memo.machine(s, "graft-rowid-tables", "refinery", d, "#refinery#stages=6") { dir =>
+      val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
+      val fused = Tables.documents(s, d)
+        .select(col("doc_id").as("vec_id"), col("text"))
+        .join(emb, Seq("vec_id"))
+        .where(col("vec_id") % refineryEvalMod =!= 0)
+        .select(col("vec_id"), col("text"), col("embedding"))
+      val evalRows = emb.where(col("vec_id") % refineryEvalMod === 0)
+        .orderBy("vec_id").collect()
+      val evalIds = evalRows.map(_.getLong(0))
+      val evalVecs = evalRows.map(_.getSeq[Float](1).toArray)
+      val maxId = fused.agg(max(col("vec_id"))).head.getLong(0)
+      graft.streaming.StreamIngest.stageIdSpans(fused, "vec_id", maxId, dir)
+      val docsTable = graft.core.VectorTable.create(s, s"$dir/docs")
+      val hashStore = graft.core.VectorTable.create(s, s"$dir/hashes")
+      val spanStore = graft.core.VectorTable.create(s, s"$dir/spans")
+      val lexStore = graft.core.VectorTable.create(s, s"$dir/lex")
+      val embTable = graft.core.VectorTable.create(s, s"$dir/emb")
+      val spanIdx = new java.util.concurrent.atomic.AtomicReference(
+        graft.operators.SpanIndex.build(spanStore, s"$dir/spanindex"))
+      val lexIdx = new java.util.concurrent.atomic.AtomicReference(
+        graft.operators.LshIndex.build(lexStore, s"$dir/lexindex"))
+      val idx = new java.util.concurrent.atomic.AtomicReference(
+        IvfTableIndex.buildWith(embTable, s"$dir/index", Similarity.centroids(s, d)))
+      val acc = new java.util.concurrent.atomic.AtomicReference(
+        graft.streaming.RefineryIngest.Counts.zero)
+      val stream = s.readStream.schema(fused.schema)
+        .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
+      val q = graft.streaming.RefineryIngest.start(stream, docsTable,
+        hashStore, spanStore, lexStore, embTable, spanIdx, lexIdx, idx,
+        evalIds, evalVecs,
+        minQuality,
+        Similarity.nearDupThreshold, s"$dir/ckpt", acc,
+        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      q.awaitTermination()
+      require(docsTable.length > 0, "refinery landed nothing")
+      val c = acc.get()
+      java.nio.file.Files.write(dir.resolve("counts.txt"),
+        s"${c.input},${c.qualityDropped},${c.exactDropped},${c.spanDropped},${c.lexicalDropped},${c.contamDropped},${c.semanticDropped},${c.landed}"
+          .getBytes("UTF-8"))
+    }
 
   /** Declared `pipeline_ingest_gates`: the composed streaming refinery,
     * gated the way each constituent face is gated — the four

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Tables
+import graft.core.{Memo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -345,33 +345,20 @@ object Relational {
     * lands in a unique directory, then a pointer file is published with
     * create-if-absent (losers of the race adopt the winner's table).
     */
-  private val rowidTables =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.core.VectorTable]()
-
   private def lineitemAsVectorTable(s: SparkSession, d: String): graft.core.VectorTable =
-    rowidTables.computeIfAbsent(d, dir => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-rowid-tables")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"lineitem-$key.path")
-      if (!Files.exists(pointer)) {
-        val root = base.resolve(s"lineitem-$key-${java.util.UUID.randomUUID()}")
+    Memo.session(s, s"lineitem-rowid-table:$d") {
+      graft.core.VectorTable.open(s, Memo.machine(s, "graft-rowid-tables", "lineitem", d) { root =>
         val t = graft.core.VectorTable.create(s, root.toString)
         // Input order = the modeled insertion order (orderkey, linenumber):
         // range-repartition + sort gives a global order across partition
         // indices, which append's per-partition offsets turn into dense
         // rowids — no single-task global window.
-        t.append(Tables.lineitem(s, dir)
+        t.append(Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
           .repartitionByRange(col("l_orderkey"), col("l_linenumber"))
           .sortWithinPartitions("l_orderkey", "l_linenumber"))
-        try Files.write(pointer, root.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException => () } // racer won; adopt theirs
-      }
-      graft.core.VectorTable.open(s, Files.readString(pointer))
-    })
+      })
+    }
 
   /** One-time table materialization, callable out-of-band (Bench reports it
     * as its own dimension instead of hiding it in the first query run).
@@ -397,15 +384,8 @@ object Relational {
     * crash-safe pointer protocol as the rowid table.
     */
   private[operators] def ordersZoneTable(s: SparkSession, d: String): graft.core.VectorTable =
-    rowidTables.computeIfAbsent("zm:" + d, _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-rowid-tables")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"orders-zm-$key.path")
-      if (!Files.exists(pointer)) {
-        val root = base.resolve(s"orders-zm-$key-${java.util.UUID.randomUUID()}")
+    Memo.session(s, s"orders-zone-table:$d") {
+      graft.core.VectorTable.open(s, Memo.machine(s, "graft-rowid-tables", "orders-zm", d) { root =>
         val t = graft.core.VectorTable.create(s, root.toString)
         // cache: each per-year append would otherwise rescan orders
         val src = Tables.orders(s, d).select(
@@ -418,11 +398,8 @@ object Relational {
             .collect().map(_.getInt(0)).sorted
           years.foreach(y => t.append(src.where(year(col("odate")) === y)))
         } finally { src.unpersist(blocking = false); () }
-        try Files.write(pointer, root.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      }
-      graft.core.VectorTable.open(s, Files.readString(pointer))
-    })
+      })
+    }
 
   def prebuildZoneTable(s: SparkSession, d: String): Unit =
     ordersZoneTable(s, d)
@@ -431,27 +408,13 @@ object Relational {
     * per (machine, sf dir) behind the same crash-safe pointer protocol as
     * the table itself.
     */
-  private val custkeyIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.core.SecondaryIndex]()
   private def ordersCustkeyIndex(s: SparkSession, d: String): graft.core.SecondaryIndex =
-    // computeIfAbsent serializes in-process first callers (same as the
-    // sibling table builders) so two threads can't both run the build
-    custkeyIndexes.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val t = ordersZoneTable(s, d)
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-rowid-tables")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"orders-ck-idx-$key.path")
-      if (!Files.exists(pointer)) {
-        val root = base.resolve(s"orders-ck-idx-$key-${java.util.UUID.randomUUID()}")
-        graft.core.SecondaryIndex.build(t, "custkey", root.toString)
-        try Files.write(pointer, root.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException => () }
+    Memo.session(s, s"orders-custkey-index:$d") {
+      val root = Memo.machine(s, "graft-rowid-tables", "orders-ck-idx", d) { root =>
+        graft.core.SecondaryIndex.build(ordersZoneTable(s, d), "custkey", root.toString)
       }
-      graft.core.SecondaryIndex.open(s, Files.readString(pointer), "custkey")
-    })
+      graft.core.SecondaryIndex.open(s, root, "custkey")
+    }
 
   def prebuildCustkeyIndex(s: SparkSession, d: String): Unit =
     ordersCustkeyIndex(s, d)
@@ -506,15 +469,8 @@ object Relational {
     * Doubling a DOUBLE is exact (exponent bump), so no float ambiguity.
     */
   private def ordersUpsertTable(s: SparkSession, d: String): graft.core.VectorTable =
-    rowidTables.computeIfAbsent("up:" + d, _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-rowid-tables")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"orders-up-$key.path")
-      if (!Files.exists(pointer)) {
-        val root = base.resolve(s"orders-up-$key-${java.util.UUID.randomUUID()}")
+    Memo.session(s, s"orders-upsert-table:$d") {
+      graft.core.VectorTable.open(s, Memo.machine(s, "graft-rowid-tables", "orders-up", d) { root =>
         val t = graft.core.VectorTable.create(s, root.toString)
         val src = Tables.orders(s, d).select(
           col("o_orderkey").as("orderkey"),
@@ -526,11 +482,8 @@ object Relational {
           src.where(year(col("odate")) === 1998)
             .withColumn("totalprice", col("totalprice") * 2.0d),
           Seq("orderkey"))
-        try Files.write(pointer, root.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      }
-      graft.core.VectorTable.open(s, Files.readString(pointer))
-    })
+      })
+    }
 
   def prebuildUpsertTable(s: SparkSession, d: String): Unit =
     ordersUpsertTable(s, d)
@@ -550,25 +503,12 @@ object Relational {
     * [[graft.sources.ZOrder]]. Built once per (machine, sf dir) behind the
     * same crash-safe pointer protocol as the other derived layouts.
     */
-  private val zorderDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def ordersZOrderDir(s: SparkSession, d: String): String =
-    zorderDirs.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-rowid-tables")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"orders-zo-$key.path")
-      if (!Files.exists(pointer)) {
-        val dir = base.resolve(s"orders-zo-$key-${java.util.UUID.randomUUID()}")
-        graft.sources.ZOrder.write(
-          Tables.orders(s, d).select(col("o_custkey"), col("o_totalprice"), col("o_orderstatus")),
-          Seq("o_custkey", "o_totalprice"), dir.toString, 8)
-        try Files.write(pointer, dir.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      }
-      Files.readString(pointer)
-    })
+    Memo.machine(s, "graft-rowid-tables", "orders-zo", d) { dir =>
+      graft.sources.ZOrder.write(
+        Tables.orders(s, d).select(col("o_custkey"), col("o_totalprice"), col("o_orderstatus")),
+        Seq("o_custkey", "o_totalprice"), dir.toString, 8)
+    }
 
   def prebuildZOrderLayout(s: SparkSession, d: String): Unit =
     ordersZOrderDir(s, d)
@@ -678,12 +618,8 @@ object Relational {
           val n = p.getFileName.toString
           if ((n.startsWith("b_orders_") || n.startsWith("b_lineitem_")) &&
               !n.contains(jvmToken) &&
-              java.nio.file.Files.getLastModifiedTime(p).compareTo(cutoff) < 0) {
-            val walk = java.nio.file.Files.walk(p)
-            try walk.sorted(java.util.Comparator.reverseOrder())
-              .forEach(q => { java.nio.file.Files.deleteIfExists(q); () })
-            finally walk.close()
-          }
+              java.nio.file.Files.getLastModifiedTime(p).compareTo(cutoff) < 0)
+            graft.core.Fs.deleteTree(p)
         } finally listing.close()
       }
     } catch { case scala.util.control.NonFatal(_) => () }
@@ -1501,18 +1437,9 @@ object Relational {
     * scratch over all of lineitem, so a green row proves
     * refresh(build(half), rest) ≡ full rebuild, bit-exact.
     */
-  private val aggViews =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.core.MaterializedAggView]()
   private def pricingSummaryView(s: SparkSession, d: String): graft.core.MaterializedAggView =
-    aggViews.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-rowid-tables")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"li-mv-$key.path")
-      if (!Files.exists(pointer)) {
-        val root = base.resolve(s"li-mv-$key-${java.util.UUID.randomUUID()}")
+    Memo.session(s, s"lineitem-agg-view:$d") {
+      val root = Memo.machine(s, "graft-rowid-tables", "li-mv", d) { root =>
         val t = graft.core.VectorTable.create(s, s"$root/table")
         val src = Tables.lineitem(s, d).select(
           col("l_orderkey"), col("l_returnflag"), col("l_linestatus"),
@@ -1523,13 +1450,10 @@ object Relational {
           Seq("l_returnflag", "l_linestatus"), Seq("l_quantity", "l_extendedprice"))
         t.append(src.where(col("l_orderkey") > cutoff))
         v.refresh()
-        try Files.write(pointer, root.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException => () }
       }
-      val root = Files.readString(pointer)
       graft.core.MaterializedAggView.open(
         graft.core.VectorTable.open(s, s"$root/table"), s"$root/view")
-    })
+    }
 
   def prebuildPricingSummaryView(s: SparkSession, d: String): Unit =
     pricingSummaryView(s, d)

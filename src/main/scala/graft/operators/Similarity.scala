@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Tables
+import graft.core.{Memo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -118,15 +118,13 @@ object Similarity {
     df.withColumn("bucket", bucket)
   }
 
-  /** Corpus size per immutable testdata dir, memoized: the sizing count is
+  /** Corpus size per corpus dir, session-memoized: the sizing count is
     * metadata-cheap on parquet but still a Spark job — serving a second
-    * query from the memo removes it entirely. (Keyed by directory; the
-    * bench/gate corpora are immutable. Mutable corpora should call
+    * query from the memo removes it entirely. (Mutable corpora should call
     * [[lshBucketsOver]] with an explicit plane count.)
     */
-  private val corpusSize = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def embeddingCount(s: SparkSession, d: String): Long =
-    corpusSize.computeIfAbsent(d, _ => Tables.embeddings(s, d).count())
+    Memo.session(s, s"embedding-count:$d")(Tables.embeddings(s, d).count())
 
   /** LSH bucket assignment for the embeddings table, plane count scaled to
     * the corpus ([[planesFor]]). At every oracle scale factor this is
@@ -224,18 +222,17 @@ object Similarity {
     cellsFor(embeddingCount(s, d))
 
   /** Collect centroids (driver-side, small: cells × dim floats ≤ 1 MB at
-    * [[maxCells]]), memoized per immutable corpus dir — every IVF query
+    * [[maxCells]]), session-memoized per corpus dir — every IVF query
     * needs them and the collect is one Spark job each otherwise.
     */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Float]]]()
   private[operators] def centroids(s: SparkSession, d: String): Array[Array[Float]] =
-    centroidCache.computeIfAbsent(d, _ =>
+    Memo.session(s, s"anchor-centroids:$d") {
       Tables.embeddings(s, d)
         .where(col("vec_id") < cellsOf(s, d).toLong)
         .orderBy("vec_id")
         .collect()
-        .map(_.getSeq[Float](1).toArray))
+        .map(_.getSeq[Float](1).toArray)
+    }
 
   /** Argmax-by-similarity cell pick, ties to the lower cell id — written as
     * an explicit CASE chain so the oracle can mirror it exactly.
@@ -582,30 +579,17 @@ object Similarity {
     * rowid table): the declared index-search query pays a pruned read,
     * not a rebuild.
     */
-  private val ivfIndexRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // The cell count is part of the LAYOUT identity: a pointer published
+  // under an older cellsFor regime names an index partitioned by a
+  // different assignment, and probing it with this regime's centroid
+  // ranking would read the wrong (or missing) cell directories.
+  // layout=v2: one-file-per-cell writes (round 13) — part of the layout
+  // identity so an older multi-file-per-cell index is never adopted by
+  // code expecting the consolidated layout.
   def ivfIndexFor(s: SparkSession, d: String): String =
-    ivfIndexRoots.computeIfAbsent(d, dir => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      // the cell count is part of the LAYOUT identity: a pointer published
-      // under an older cellsFor regime names an index partitioned by a
-      // different assignment, and probing it with this regime's centroid
-      // ranking would read the wrong (or missing) cell directories
-      // layout=v2: one-file-per-cell writes (round 13) — part of the
-      // layout identity so an older multi-file-per-cell index is never
-      // adopted by code expecting the consolidated layout
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir#cells=${cellsOf(s, dir)}#layout=v2".getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-ivf-indexes")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"ivf-$key.path")
-      if (!Files.exists(pointer)) {
-        val root = base.resolve(s"ivf-$key-${java.util.UUID.randomUUID()}")
-        buildIvfIndex(s, dir, root.toString)
-        try Files.write(pointer, root.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException => () } // racer won; adopt theirs
-      }
-      Files.readString(pointer)
-    })
+    Memo.machine(s, "graft-ivf-indexes", "ivf", d, s"#cells=${cellsOf(s, d)}#layout=v2") { root =>
+      buildIvfIndex(s, d, root.toString)
+    }
 
   /** Multi-probe top-k through the PERSISTED index (partition-pruned scan);
     * result-identical to [[ivfSearchMultiprobe]] — the oracle runs the same
@@ -624,40 +608,24 @@ object Similarity {
     * always prices the maintenance op against a genuinely fragmented
     * layout rather than a vacuous no-op.
     */
-  private val compactedIvfRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def compactedIvfRoot(s: SparkSession, d: String): String =
-    compactedIvfRoots.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$d#ivf-compacted#cells=${cellsOf(s, d)}".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-ivf-indexes")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"ivf-compacted-$key.path")
-      if (!Files.exists(pointer)) {
-        val dir = base.resolve(s"ivf-compacted-$key-${java.util.UUID.randomUUID()}")
-        val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-        val maxId = emb.agg(max(col("vec_id"))).head.getLong(0)
-        val t = graft.core.VectorTable.create(s, s"$dir/table")
-        var idx = IvfTableIndex.buildWith(t, s"$dir/index", centroids(s, d))
-        (0 until 4).foreach { i =>
-          val lo = (maxId + 1) * i / 4
-          val hi = (maxId + 1) * (i + 1) / 4
-          t.append(emb.where(col("vec_id") >= lo && col("vec_id") < hi))
-          idx = idx.refresh(t)
-        }
-        require(idx.filesPerCell().values.exists(_ > 1),
-          "span appends must fragment the layout before compaction prices anything")
-        idx.compact()
-        require(idx.filesPerCell().values.forall(_ == 1L),
-          "compaction must leave exactly one file per cell")
-        try Files.write(pointer, dir.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          Dedup.deleteRecursively(dir) } // racer won; adopt theirs
+    Memo.machine(s, "graft-ivf-indexes", "ivf-compacted", d, s"#ivf-compacted#cells=${cellsOf(s, d)}") { dir =>
+      val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
+      val maxId = emb.agg(max(col("vec_id"))).head.getLong(0)
+      val t = graft.core.VectorTable.create(s, s"$dir/table")
+      var idx = IvfTableIndex.buildWith(t, s"$dir/index", centroids(s, d))
+      (0 until 4).foreach { i =>
+        val lo = (maxId + 1) * i / 4
+        val hi = (maxId + 1) * (i + 1) / 4
+        t.append(emb.where(col("vec_id") >= lo && col("vec_id") < hi))
+        idx = idx.refresh(t)
       }
-      Files.readString(pointer)
-    })
+      require(idx.filesPerCell().values.exists(_ > 1),
+        "span appends must fragment the layout before compaction prices anything")
+      idx.compact()
+      require(idx.filesPerCell().values.forall(_ == 1L),
+        "compaction must leave exactly one file per cell")
+    }
 
   /** Declared `ann_ivf_compacted_search`: the multiprobe top-k served from
     * the compacted index — result-identical to [[ivfIndexSearch]] (the
@@ -681,34 +649,18 @@ object Similarity {
     */
   val takedownMod = 37L
 
-  private val takedownRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def takedownRoot(s: SparkSession, d: String): String =
-    takedownRoots.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$d#takedown#cells=${cellsOf(s, d)}".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-ivf-indexes")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"takedown-$key.path")
-      if (!Files.exists(pointer)) {
-        val dir = base.resolve(s"takedown-$key-${java.util.UUID.randomUUID()}")
-        val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-        val t = graft.core.VectorTable.create(s, s"$dir/table")
-        t.append(emb)
-        val idx = IvfTableIndex.buildWith(t, s"$dir/index", centroids(s, d))
-        val deleted = t.deleteWhere(col("vec_id") % takedownMod === 0)
-        require(deleted > 0, "takedown face must actually delete rows")
-        val refreshed = idx.refresh(t)
-        require(refreshed.indexedMask == deleted,
-          "refresh must record the applied mask")
-        try Files.write(pointer, dir.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          Dedup.deleteRecursively(dir) } // racer won; adopt theirs
-      }
-      Files.readString(pointer)
-    })
+    Memo.machine(s, "graft-ivf-indexes", "takedown", d, s"#takedown#cells=${cellsOf(s, d)}") { dir =>
+      val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
+      val t = graft.core.VectorTable.create(s, s"$dir/table")
+      t.append(emb)
+      val idx = IvfTableIndex.buildWith(t, s"$dir/index", centroids(s, d))
+      val deleted = t.deleteWhere(col("vec_id") % takedownMod === 0)
+      require(deleted > 0, "takedown face must actually delete rows")
+      val refreshed = idx.refresh(t)
+      require(refreshed.indexedMask == deleted,
+        "refresh must record the applied mask")
+    }
 
   def prebuildTakedown(s: SparkSession, d: String): Unit = {
     takedownRoot(s, d); ()
@@ -788,29 +740,16 @@ object Similarity {
     * exercised end-to-end through the persisted cell-partitioned layout,
     * not just measured in-memory.
     */
-  private val trainedIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfTableIndex]()
   def trainedIvfIndexFor(s: SparkSession, d: String): IvfTableIndex =
-    trainedIdxCache.computeIfAbsent(
-      graft.core.GraftSession.sessionId(s) + ":" + d, _ => {
-        import java.nio.file.{Files, Paths, StandardOpenOption}
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest(s"$d#cells=${cellsOf(s, d)}#trained#layout=v2".getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-ivf-indexes")
-        Files.createDirectories(base)
-        val pointer = base.resolve(s"ivftr-$key.path")
-        if (!Files.exists(pointer)) {
-          val root = base.resolve(s"ivftr-$key-${java.util.UUID.randomUUID()}")
-          val vt = graft.core.VectorTable.create(s, root.resolve("table").toString)
-          vt.append(Tables.embeddings(s, d).select("vec_id", "embedding"))
-          IvfTableIndex.build(vt, root.resolve("index").toString, trained = true)
-          try Files.write(pointer, root.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-          catch { case _: java.nio.file.FileAlreadyExistsException => () } // racer won; adopt theirs
-        }
-        IvfTableIndex.open(s,
-          Paths.get(Files.readString(pointer)).resolve("index").toString)
-      })
+    Memo.session(s, s"ivf-trained-index:$d") {
+      val root = Memo.machine(s, "graft-ivf-indexes", "ivftr", d,
+          s"#cells=${cellsOf(s, d)}#trained#layout=v2") { root =>
+        val vt = graft.core.VectorTable.create(s, root.resolve("table").toString)
+        vt.append(Tables.embeddings(s, d).select("vec_id", "embedding"))
+        IvfTableIndex.build(vt, root.resolve("index").toString, trained = true)
+      }
+      IvfTableIndex.open(s, s"$root/index")
+    }
 
   /** Batched top-k served THROUGH a persisted [[IvfTableIndex]]: probe
     * ranking in-plan against the index's own (trained) centroids, candidate
@@ -1538,51 +1477,36 @@ object Similarity {
     * batch assignment exactly and that ≥ 2 incremental refreshes ran
     * before publishing the pointer.
     */
-  private val streamedIvfRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def streamedIvfIndexRoot(s: SparkSession, d: String): String =
-    streamedIvfRoots.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$d#ivf-streamed#layout=v2".getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-rowid-tables")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"emb-ivf-streamed-$key.path")
-      if (!Files.exists(pointer)) {
-        val dir = base.resolve(s"emb-ivf-streamed-$key-${java.util.UUID.randomUUID()}")
-        val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-        val cutoff = emb.agg(max(col("vec_id"))).head.getLong(0) / 2
-        val t = graft.core.VectorTable.create(s, s"$dir/table")
-        t.append(emb.where(col("vec_id") <= cutoff))
-        val idx = new java.util.concurrent.atomic.AtomicReference(
-          IvfTableIndex.build(t, s"$dir/index", numCells = cellsOf(s, d)))
-        val refreshes = new java.util.concurrent.atomic.AtomicInteger(0)
-        emb.where(col("vec_id") > cutoff)
-          .repartition(4).write.parquet(s"$dir/staging")
-        val stream = s.readStream.schema(emb.schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
-        val q = graft.streaming.StreamIngest.start(stream, t, s"$dir/ckpt",
-          trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-          onBatch = (tab, _) => {
-            val cur = idx.get()
-            val next = cur.refresh(tab)
-            if (next ne cur) { idx.set(next); refreshes.incrementAndGet(); () }
-          })
-        q.awaitTermination()
-        val expect = ivfAssign(s, d).select(col("vec_id"), col("cell"))
-        val got = idx.get().data.select(col("vec_id"), col("cell"))
-        val missing = expect.exceptAll(got).count()
-        val extra = got.exceptAll(expect).count()
-        if (missing != 0 || extra != 0 || refreshes.get() < 2)
-          throw new IllegalStateException(
-            s"streamed IVF index diverged: $missing missing / $extra extra assignments, " +
-              s"${refreshes.get()} incremental refreshes")
-        try Files.write(pointer, dir.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          Dedup.deleteRecursively(dir) } // racer won; adopt theirs, drop our build
-      }
-      Files.readString(pointer)
-    })
+    Memo.machine(s, "graft-rowid-tables", "emb-ivf-streamed", d, "#ivf-streamed#layout=v2") { dir =>
+      val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
+      val cutoff = emb.agg(max(col("vec_id"))).head.getLong(0) / 2
+      val t = graft.core.VectorTable.create(s, s"$dir/table")
+      t.append(emb.where(col("vec_id") <= cutoff))
+      val idx = new java.util.concurrent.atomic.AtomicReference(
+        IvfTableIndex.build(t, s"$dir/index", numCells = cellsOf(s, d)))
+      val refreshes = new java.util.concurrent.atomic.AtomicInteger(0)
+      emb.where(col("vec_id") > cutoff)
+        .repartition(4).write.parquet(s"$dir/staging")
+      val stream = s.readStream.schema(emb.schema)
+        .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
+      val q = graft.streaming.StreamIngest.start(stream, t, s"$dir/ckpt",
+        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
+        onBatch = (tab, _) => {
+          val cur = idx.get()
+          val next = cur.refresh(tab)
+          if (next ne cur) { idx.set(next); refreshes.incrementAndGet(); () }
+        })
+      q.awaitTermination()
+      val expect = ivfAssign(s, d).select(col("vec_id"), col("cell"))
+      val got = idx.get().data.select(col("vec_id"), col("cell"))
+      val missing = expect.exceptAll(got).count()
+      val extra = got.exceptAll(expect).count()
+      if (missing != 0 || extra != 0 || refreshes.get() < 2)
+        throw new IllegalStateException(
+          s"streamed IVF index diverged: $missing missing / $extra extra assignments, " +
+            s"${refreshes.get()} incremental refreshes")
+    }
 
   /** Declared `dedup_semantic_delta_streamed`: the delta face over the
     * STREAM-maintained index — same stored-rows-only plan as the batch
@@ -1656,54 +1580,22 @@ object Similarity {
     * and land every vector through
     * [[graft.streaming.SemanticDedupIngest]] one file per micro-batch.
     */
-  private val semanticIngestRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def semanticIngestRoot(s: SparkSession, d: String): String =
-    semanticIngestRoots.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$d#sem-ingest".getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-rowid-tables")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"emb-sem-ingest-$key.path")
-      if (!Files.exists(pointer)) {
-        val dir = base.resolve(s"emb-sem-ingest-$key-${java.util.UUID.randomUUID()}")
-        val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-        val maxId = emb.agg(max(col("vec_id"))).head.getLong(0)
-        Files.createDirectories(dir.resolve("staging"))
-        (0 until 4).foreach { i =>
-          val lo = (maxId + 1) * i / 4
-          val hi = (maxId + 1) * (i + 1) / 4
-          val stage = dir.resolve(s"stage$i")
-          emb.where(col("vec_id") >= lo && col("vec_id") < hi)
-            .coalesce(1).sortWithinPartitions("vec_id")
-            .write.parquet(stage.toString)
-          val listing = Files.list(stage)
-          var moved = false
-          try listing.iterator().forEachRemaining { p =>
-            if (p.getFileName.toString.endsWith(".parquet")) {
-              Files.move(p, dir.resolve("staging").resolve(f"f$i%02d.parquet"))
-              moved = true
-            }
-          } finally listing.close()
-          require(moved, s"stage $i produced no parquet file")
-        }
-        val t = graft.core.VectorTable.create(s, s"$dir/table")
-        val idx = new java.util.concurrent.atomic.AtomicReference(
-          IvfTableIndex.buildWith(t, s"$dir/index", centroids(s, d)))
-        val stream = s.readStream.schema(emb.schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
-        val q = graft.streaming.SemanticDedupIngest.start(stream, t, idx,
-          nearDupThreshold, s"$dir/ckpt",
-          trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        q.awaitTermination()
-        require(t.length > 0, "semantic ingest landed nothing")
-        try Files.write(pointer, dir.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          Dedup.deleteRecursively(dir) } // racer won; adopt theirs, drop our build
-      }
-      Files.readString(pointer)
-    })
+    Memo.machine(s, "graft-rowid-tables", "emb-sem-ingest", d, "#sem-ingest") { dir =>
+      val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
+      val maxId = emb.agg(max(col("vec_id"))).head.getLong(0)
+      graft.streaming.StreamIngest.stageIdSpans(emb, "vec_id", maxId, dir)
+      val t = graft.core.VectorTable.create(s, s"$dir/table")
+      val idx = new java.util.concurrent.atomic.AtomicReference(
+        IvfTableIndex.buildWith(t, s"$dir/index", centroids(s, d)))
+      val stream = s.readStream.schema(emb.schema)
+        .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
+      val q = graft.streaming.SemanticDedupIngest.start(stream, t, idx,
+        nearDupThreshold, s"$dir/ckpt",
+        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      q.awaitTermination()
+      require(t.length > 0, "semantic ingest landed nothing")
+    }
 
   /** Declared `dedup_semantic_ingest`: the stream-landed corpus checked
     * against the greedy-MIS uniqueness characterization. When vectors
@@ -2028,55 +1920,23 @@ object Similarity {
     * micro-batch — each batch is one map-only kernel pass against the
     * fixed eval matrix.
     */
-  private val contamIngestRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def contaminationIngestRoot(s: SparkSession, d: String): String =
-    contamIngestRoots.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$d#contam-ingest".getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-rowid-tables")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"emb-contam-ingest-$key.path")
-      if (!Files.exists(pointer)) {
-        val dir = base.resolve(s"emb-contam-ingest-$key-${java.util.UUID.randomUUID()}")
-        val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-        val evalRows = emb.where(col("vec_id") % 50 === 0).orderBy("vec_id").collect()
-        val corpus = emb.where(col("vec_id") % 50 =!= 0)
-        val maxId = emb.agg(max(col("vec_id"))).head.getLong(0)
-        Files.createDirectories(dir.resolve("staging"))
-        (0 until 4).foreach { i =>
-          val lo = (maxId + 1) * i / 4
-          val hi = (maxId + 1) * (i + 1) / 4
-          val stage = dir.resolve(s"stage$i")
-          corpus.where(col("vec_id") >= lo && col("vec_id") < hi)
-            .coalesce(1).sortWithinPartitions("vec_id")
-            .write.parquet(stage.toString)
-          val listing = Files.list(stage)
-          var moved = false
-          try listing.iterator().forEachRemaining { p =>
-            if (p.getFileName.toString.endsWith(".parquet")) {
-              Files.move(p, dir.resolve("staging").resolve(f"f$i%02d.parquet"))
-              moved = true
-            }
-          } finally listing.close()
-          require(moved, s"stage $i produced no parquet file")
-        }
-        val t = graft.core.VectorTable.create(s, s"$dir/table")
-        val stream = s.readStream.schema(corpus.schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
-        val q = graft.streaming.ContaminationIngest.start(stream, t,
-          evalRows.map(_.getLong(0)), evalRows.map(_.getSeq[Float](1).toArray),
-          s"$dir/ckpt",
-          trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        q.awaitTermination()
-        require(t.length > 0, "decontamination ingest landed nothing")
-        try Files.write(pointer, dir.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          Dedup.deleteRecursively(dir) } // racer won; adopt theirs, drop our build
-      }
-      Files.readString(pointer)
-    })
+    Memo.machine(s, "graft-rowid-tables", "emb-contam-ingest", d, "#contam-ingest") { dir =>
+      val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
+      val evalRows = emb.where(col("vec_id") % 50 === 0).orderBy("vec_id").collect()
+      val corpus = emb.where(col("vec_id") % 50 =!= 0)
+      val maxId = emb.agg(max(col("vec_id"))).head.getLong(0)
+      graft.streaming.StreamIngest.stageIdSpans(corpus, "vec_id", maxId, dir)
+      val t = graft.core.VectorTable.create(s, s"$dir/table")
+      val stream = s.readStream.schema(corpus.schema)
+        .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
+      val q = graft.streaming.ContaminationIngest.start(stream, t,
+        evalRows.map(_.getLong(0)), evalRows.map(_.getSeq[Float](1).toArray),
+        s"$dir/ckpt",
+        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      q.awaitTermination()
+      require(t.length > 0, "decontamination ingest landed nothing")
+    }
 
   /** Declared `semantic_contamination_ingest`: the stream-landed corpus
     * checked against the batch face — landed count must equal the
@@ -2410,13 +2270,8 @@ object Similarity {
     * oracle-checkable INVARIANTS rather than the centroid values
     * themselves.
     */
-  private val trainedCentroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Float]]]()
   def trainedCentroids(s: SparkSession, d: String): Array[Array[Float]] =
-    trainedCentroidCache.computeIfAbsent(d, _ => {
-      val sample = trainingSample(s, d)
-      trainCentroids(sample, centroids(s, d))
-    })
+    Memo.session(s, s"trained-centroids:$d")(trainCentroids(trainingSample(s, d), centroids(s, d)))
 
   /** Dual-init training: Lloyd from the anchor init AND from
     * [[maxminSeeds]], keeping whichever scores better on the sample's
@@ -3374,10 +3229,8 @@ object Similarity {
     * argmin go to the LOWER code, matching the anchor encoder's
     * array_min-over-struct(dist, code) ordering.
     */
-  private val trainedPqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Seq[Float]]]()
   def trainedPqCodebook(s: SparkSession, d: String): Seq[Seq[Float]] =
-    trainedPqCache.computeIfAbsent(d, _ => {
+    Memo.session(s, s"trained-pq-codebook:$d") {
       val sample = trainingSample(s, d)
       val (cbAnchor, _) = pqCodebook(s, d)
       // books(m)(j): subspace-m center j (pqSub floats), anchor slices at start
@@ -3426,7 +3279,7 @@ object Similarity {
         iter += 1
       }
       (0 until pqK).map(j => (0 until pqM).flatMap(m => books(m)(j).toSeq))
-    })
+    }
 
   /** Per-vector PQ reconstruction error against a codebook: Σ_m (min over
     * the pqK entries of subspace-m squared-L2) — the quantity PQ training

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{Tables, VectorTable}
+import graft.core.{Memo, Tables, VectorTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -101,57 +101,42 @@ object Takedown {
     */
   val takedownEverywhereMod = 37L
 
-  private val roots = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Memoized fixture: a docs store + an embeddings store with a
     * [[LshIndex]] and an [[IvfTableIndex]] over them, a composed takedown
     * of the `% mod == 0` ids through [[everywhere]] (mask → index
     * propagation → physical purge), built once per (machine, sf dir).
     */
   private[graft] def everywhereRoot(s: SparkSession, d: String): String =
-    roots.computeIfAbsent(d, _ => {
-      import java.nio.file.{Files, Paths, StandardOpenOption}
-      val key = java.security.MessageDigest.getInstance("MD5")
-        // v2: + secondary-index surface (round-16 second wave)
-        .digest(s"$d#takedown-everywhere#v2#m=$takedownEverywhereMod".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-takedown")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"everywhere-$key.path")
-      if (!Files.exists(pointer)) {
-        val dir = base.resolve(s"everywhere-$key-${java.util.UUID.randomUUID()}")
-        val docsT = VectorTable.create(s, s"$dir/docs")
-        docsT.append(Tables.documents(s, d).select(col("doc_id"), col("text")))
-        val embT = VectorTable.create(s, s"$dir/emb")
-        embT.append(Tables.embeddings(s, d).select(col("vec_id"), col("embedding")))
-        var lsh = LshIndex.build(docsT, s"$dir/lsh")
-        var ivf = IvfTableIndex.build(embT, s"$dir/ivf")
-        var sec = graft.core.SecondaryIndex.build(docsT, "doc_id", s"$dir/sec")
-        // the victim id set spans BOTH id spaces (doc ids and vec ids can
-        // cover different ranges; the takedown names documents, and each
-        // store drops the ids it holds)
-        val docVictims = Tables.documents(s, d)
-          .where(col("doc_id") % takedownEverywhereMod === 0)
-          .select("doc_id").collect().map(_.getLong(0))
-        val embVictims = Tables.embeddings(s, d)
-          .where(col("vec_id") % takedownEverywhereMod === 0)
-          .select("vec_id").collect().map(_.getLong(0))
-        // each store REGISTERS its dependent indexes — the composition
-        // then owns the refresh-before-purge order per store
-        val counts = everywhere((docVictims ++ embVictims).distinct.toSeq,
-          Seq(
-            Store("docs", docsT, "doc_id", refreshIndexes = Seq(
-              () => { lsh = lsh.refresh(docsT); () },
-              () => { sec = sec.refresh(docsT); () })),
-            Store("emb", embT, "vec_id", refreshIndexes = Seq(
-              () => { ivf = ivf.refresh(embT); () }))))
-        require(counts("docs") > 0, "takedown_everywhere must delete rows")
-        try Files.write(pointer, dir.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          Dedup.deleteRecursively(dir) } // racer won; adopt theirs
-      }
-      Files.readString(pointer)
-    })
+    // v2: + secondary-index surface (round-16 second wave)
+    Memo.machine(s, "graft-takedown", "everywhere", d,
+        s"#takedown-everywhere#v2#m=$takedownEverywhereMod") { dir =>
+      val docsT = VectorTable.create(s, s"$dir/docs")
+      docsT.append(Tables.documents(s, d).select(col("doc_id"), col("text")))
+      val embT = VectorTable.create(s, s"$dir/emb")
+      embT.append(Tables.embeddings(s, d).select(col("vec_id"), col("embedding")))
+      var lsh = LshIndex.build(docsT, s"$dir/lsh")
+      var ivf = IvfTableIndex.build(embT, s"$dir/ivf")
+      var sec = graft.core.SecondaryIndex.build(docsT, "doc_id", s"$dir/sec")
+      // the victim id set spans BOTH id spaces (doc ids and vec ids can
+      // cover different ranges; the takedown names documents, and each
+      // store drops the ids it holds)
+      val docVictims = Tables.documents(s, d)
+        .where(col("doc_id") % takedownEverywhereMod === 0)
+        .select("doc_id").collect().map(_.getLong(0))
+      val embVictims = Tables.embeddings(s, d)
+        .where(col("vec_id") % takedownEverywhereMod === 0)
+        .select("vec_id").collect().map(_.getLong(0))
+      // each store REGISTERS its dependent indexes — the composition
+      // then owns the refresh-before-purge order per store
+      val counts = everywhere((docVictims ++ embVictims).distinct.toSeq,
+        Seq(
+          Store("docs", docsT, "doc_id", refreshIndexes = Seq(
+            () => { lsh = lsh.refresh(docsT); () },
+            () => { sec = sec.refresh(docsT); () })),
+          Store("emb", embT, "vec_id", refreshIndexes = Seq(
+            () => { ivf = ivf.refresh(embT); () }))))
+      require(counts("docs") > 0, "takedown_everywhere must delete rows")
+    }
 
   def prebuildEverywhere(s: SparkSession, d: String): Unit = {
     everywhereRoot(s, d); ()

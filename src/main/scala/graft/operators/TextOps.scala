@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Tables
+import graft.core.{Memo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -174,9 +174,6 @@ object TextOps {
     */
   val corpusVocabSize = 10000
 
-  private val corpusVocabCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[String]]()
-
   /** Corpus-DERIVED subword vocab — the one-shot "training" job of a
     * BPE-ish tokenizer re-expressed declaratively: the corpus's words'
     * character n-grams (n = 2..4) counted once, top [[corpusVocabSize]]
@@ -189,7 +186,7 @@ object TextOps {
     * tokenizer deployment.
     */
   def corpusSubwordVocab(s: SparkSession, d: String): Array[String] =
-    corpusVocabCache.computeIfAbsent(d, _ => {
+    Memo.session(s, s"corpus-subword-vocab:$d") {
       val words = Tables.documents(s, d)
         .select(explode(split(col("text"), " ")).as("w"))
       val grams = (2 to 4).map { n =>
@@ -201,7 +198,7 @@ object TextOps {
         .orderBy(col("cnt").desc, col("g"))
         .limit(corpusVocabSize)
         .select("g").collect().map(_.getString(0))
-    })
+    }
 
   /** Oracle CTEs deriving the SAME vocab table in DuckDB, then walking it:
     * the vocab is a TABLE both engines compute from the corpus, not a
@@ -296,9 +293,6 @@ object TextOps {
   val bpeLevel1 = 192
   val bpeLevel2 = 64
 
-  private val bpeMergesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(String, String)]]()
-
   /** Corpus-DERIVED ranked BPE merges table (round-17 verdict #3) — the
     * merge-ORDER substrate real token budgets run on. True BPE training
     * iteratively re-tokenizes the corpus after every merge, which no
@@ -314,7 +308,7 @@ object TextOps {
     * into the codegen'd kernel ([[graft.functions.BpeMerges]]).
     */
   def corpusBpeMerges(s: SparkSession, d: String): Array[(String, String)] =
-    bpeMergesCache.computeIfAbsent(d, _ => {
+    Memo.session(s, s"corpus-bpe-merges:$d") {
       // BYTE grams (round 18): gram extraction, ordering and the collected
       // pairs all live in UTF-8 byte space — binary slices in the plan,
       // latin-1 byte strings (one char per byte) in the kernel. On the
@@ -343,7 +337,7 @@ object TextOps {
         .select("g").collect().map(_.getAs[Array[Byte]](0))
       m1.map(g => (latin1(g, 0, 1), latin1(g, 1, 2))) ++
         m2.map(g => (latin1(g, 0, 2), latin1(g, 2, 4)))
-    })
+    }
 
   /** Oracle CTEs deriving the SAME ranked merges table in DuckDB and
     * replaying the ENCODE WALK itself recursively: token-list state per
@@ -702,10 +696,7 @@ object TextOps {
     val affected = victims.map(v => (((v % packShards) + packShards) % packShards).toInt)
       .distinct.sorted
     if (affected.isEmpty) return Nil
-    affected.foreach { sh =>
-      val dir = java.nio.file.Paths.get(out, s"shard=$sh")
-      if (java.nio.file.Files.exists(dir)) Dedup.deleteRecursively(dir)
-    }
+    affected.foreach(sh => graft.core.Fs.deleteTree(java.nio.file.Paths.get(out, s"shard=$sh")))
     val survivors = Tables.documents(s, d)
       .where((col("doc_id") % packShards).isInCollection(affected.map(_.toLong)) &&
         !col("doc_id").isInCollection(victims))
@@ -753,9 +744,6 @@ object TextOps {
     */
   val takedownBpeExportMod = 37L
 
-  private val bpeScrubRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Declared `takedown_bpe_export`: the post-scrub export's FILE-derived
     * manifest. Green means the scrubbed-on-disk payload is byte-for-byte
     * the export of the SURVIVOR corpus (the oracle packs survivors from
@@ -765,28 +753,15 @@ object TextOps {
     * all-victims-shard edge).
     */
   def takedownBpeExport(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    val out = bpeScrubRoots.computeIfAbsent(d, _ => {
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$d#takedown-bpe-export#v1#m=$takedownBpeExportMod".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-takedown")
-      Files.createDirectories(base)
-      val pointer = base.resolve(s"bpe-export-$key.path")
-      if (!Files.exists(pointer)) {
-        val dir = base.resolve(s"bpe-export-$key-${java.util.UUID.randomUUID()}")
-        writeBpeTokenShards(s, d, dir.toString)
-        val victims = Tables.documents(s, d)
-          .where(col("doc_id") % takedownBpeExportMod === 0)
-          .select("doc_id").collect().map(_.getLong(0)).toSeq
-        require(victims.nonEmpty, "takedown_bpe_export fixture needs victims")
-        scrubBpeTokenShards(s, d, dir.toString, victims)
-        try Files.write(pointer, dir.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          Dedup.deleteRecursively(dir) } // racer won; adopt theirs
-      }
-      Files.readString(pointer)
-    })
+    val out = Memo.machine(s, "graft-takedown", "bpe-export", d,
+        s"#takedown-bpe-export#v1#m=$takedownBpeExportMod") { dir =>
+      writeBpeTokenShards(s, d, dir.toString)
+      val victims = Tables.documents(s, d)
+        .where(col("doc_id") % takedownBpeExportMod === 0)
+        .select("doc_id").collect().map(_.getLong(0)).toSeq
+      require(victims.nonEmpty, "takedown_bpe_export fixture needs victims")
+      scrubBpeTokenShards(s, d, dir.toString, victims)
+    }
     readBpeShardManifest(s, out)
   }
 
@@ -1065,18 +1040,16 @@ object TextOps {
     */
   val shardTokenBudget = 4096L
 
-  private val shardCounts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
   /** ceil(Σ n_tokens / [[shardTokenBudget]]), ≥ 1 — integer ceil, exact in
-    * both engines, memoized per immutable corpus dir.
+    * both engines, session-memoized per corpus dir.
     */
   def shardCountFor(s: SparkSession, d: String): Int =
-    shardCounts.computeIfAbsent(d, _ => {
+    Memo.session(s, s"shard-count:$d") {
       val t = Tables.documents(s, d)
         .agg(coalesce(sum(size(tokens("text")).cast("long")), lit(0L)))
         .head().getLong(0)
       math.max(1L, (t + shardTokenBudget - 1) / shardTokenBudget).toInt
-    })
+    }
 
   /** One-row SQL twin of [[shardCountFor]] (CTE body, column `n`). */
   private lazy val shardCountSql =

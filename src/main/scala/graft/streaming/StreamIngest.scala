@@ -1,7 +1,9 @@
 package graft.streaming
 
-import graft.core.VectorTable
+import graft.core.{Fs, VectorTable}
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured Streaming ingestion into a [[VectorTable]] — the reference's
@@ -79,4 +81,26 @@ object StreamIngest {
         onBatch(table, batchId)
       }
       .start()
+
+  /** Stage `df` for a one-file-per-micro-batch replay: ids [0, `maxId`]
+    * of `idCol` are cut into four sequential ranges, each written as ONE
+    * id-sorted parquet file `dir/staging/fNN.parquet` — read back with
+    * `maxFilesPerTrigger = 1`, the ranges arrive as four batches in id
+    * order.
+    */
+  def stageIdSpans(df: DataFrame, idCol: String, maxId: Long, dir: Path): Unit = {
+    val staging = dir.resolve("staging")
+    Files.createDirectories(staging)
+    (0 until 4).foreach { i =>
+      val lo = (maxId + 1) * i / 4
+      val hi = (maxId + 1) * (i + 1) / 4
+      val stage = dir.resolve(s"stage$i")
+      df.where(col(idCol) >= lo && col(idCol) < hi)
+        .coalesce(1).sortWithinPartitions(idCol)
+        .write.parquet(stage.toString)
+      val part = Fs.list(stage).find(_.getFileName.toString.endsWith(".parquet"))
+        .getOrElse(throw new IllegalArgumentException(s"stage $i produced no parquet file"))
+      Files.move(part, staging.resolve(f"f$i%02d.parquet"))
+    }
+  }
 }

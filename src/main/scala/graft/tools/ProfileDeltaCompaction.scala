@@ -98,7 +98,7 @@ object ProfileDeltaCompaction {
         },
         () => { idx = idx.compact() })
     }
-    Dedup.deleteRecursivelyFor(java.nio.file.Paths.get(dir))
+    graft.core.Fs.deleteTree(java.nio.file.Paths.get(dir))
     spark.stop()
   }
 }

@@ -71,7 +71,7 @@ object ProfileSelfHeal {
       require(idx.bands.where(col("doc_id") < 20).count() == 0L,
         "self-heal must scrub the purged victims")
 
-      graft.operators.Dedup.deleteRecursivelyFor(java.nio.file.Paths.get(dir))
+      graft.core.Fs.deleteTree(java.nio.file.Paths.get(dir))
       if (!warmup)
         println(s"""{"scale":$reps,"index_rows":$rows,"index_files":$files,""" +
           s""""steady_refresh_s":${steadyS.formatted("%.3f")},""" +

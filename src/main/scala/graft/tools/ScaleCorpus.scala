@@ -1,6 +1,5 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,20 +34,10 @@ object ScaleCorpus {
     df.agg(max(col(c))).head().getLong(0) + 1L
 
   /** Build (or adopt) the replicated corpus dir for `src`; returns its path. */
-  def build(spark: SparkSession, src: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$src#k=$replicas".getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-scale-corpus")
-    Files.createDirectories(base)
-    val pointer = base.resolve(s"sf1-$key.path")
-    if (!Files.exists(pointer)) {
-      val out = base.resolve(s"sf1-$key-${java.util.UUID.randomUUID()}")
+  def build(spark: SparkSession, src: String): String =
+    graft.core.Memo.machine(spark, "graft-scale-corpus", "sf1", src, s"#k=$replicas") { out =>
       writeAll(spark, src, out.toString)
-      try Files.write(pointer, out.toString.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
-      catch { case _: java.nio.file.FileAlreadyExistsException => () } // racer won
     }
-    Files.readString(pointer)
-  }
 
   private def writeAll(spark: SparkSession, src: String, out: String): Unit = {
     import graft.core.Tables

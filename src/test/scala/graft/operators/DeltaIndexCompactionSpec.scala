@@ -128,7 +128,7 @@ class DeltaIndexCompactionSpec extends SparkSpec {
     val cs = emb.orderBy("vec_id").limit(4).collect().map(_.getSeq[Float](1).toArray)
     val idx = IvfTableIndex.buildWith(t, s"$dir/index", cs)
     assert(idx.data.count() == 64L)
-    Dedup.deleteRecursively(IndexCompaction.dataDir(s"$dir/index"))
+    graft.core.Fs.deleteTree(IndexCompaction.dataDir(s"$dir/index"))
     val e = intercept[IllegalStateException](idx.data.count())
     assert(e.getMessage.contains("index data lost"))
   }
