@@ -51,13 +51,20 @@ final class BufferedVectorStore[T: Encoder](
     * buffer-clear and base commit could see an index transiently vanish
     * (len shrink / get → None for a valid index). `base` is append-only, so
     * a row observed committed here stays readable outside the lock.
+    * Reads of one element or of the sizes take the same two locks without
+    * copying the buffer.
     */
   private def mergedSnapshot(): (Long, Vector[T]) = this.synchronized {
     (base.len, buf.synchronized(buf.toVector))
   }
 
+  /** (committed, buffered) lengths under the flush lock. */
+  private def lengths(): (Long, Int) = this.synchronized {
+    (base.len, buf.synchronized(buf.size))
+  }
+
   /** Merged length: committed + buffered (writable_cache.rs:210-212). */
-  def len: Long = { val (b, s) = mergedSnapshot(); b + s.size }
+  def len: Long = { val (b, n) = lengths(); b + n }
   def isEmpty: Boolean = len == 0L
 
   /** Merged point read (writable_cache.rs:222-246). */
@@ -66,10 +73,19 @@ final class BufferedVectorStore[T: Encoder](
       throw new IndexOutOfBoundsException(s"pull($index) on merged length $len"))
 
   def get(index: Long): Option[T] = {
-    val (baseLen, snapshot) = mergedSnapshot()
-    if (index < 0 || index >= baseLen + snapshot.size) None
-    else if (index < baseLen) base.get(index)
-    else Some(snapshot((index - baseLen).toInt))
+    // the committed snapshot and the buffered element are taken together
+    // under the flush lock; the committed read runs outside it on that
+    // snapshot (Left), a buffered hit returns directly (Right)
+    val routed: Either[VectorTable.Snapshot, Option[T]] = this.synchronized {
+      val s = base.table.snapshot
+      val baseLen = s.manifest.length
+      buf.synchronized {
+        if (index < 0 || index >= baseLen + buf.size) Right(None)
+        else if (index < baseLen) Left(s)
+        else Right(Some(buf((index - baseLen).toInt)))
+      }
+    }
+    routed.fold(base.get(_, index), identity)
   }
 
   /** Merged range read with straddle routing (writable_cache.rs:248-298). */
@@ -108,8 +124,8 @@ final class BufferedVectorStore[T: Encoder](
     * reference `get_each_len` (writable_cache.rs:140-145).
     */
   def eachLen: (Long, Long, Long) = {
-    val (b, s) = mergedSnapshot()
-    (s.size.toLong, b, b + s.size)
+    val (b, n) = lengths()
+    (n.toLong, b, b + n)
   }
 
   /** Total buffer read, panicking OOB — reference `getting_obj_from_cache`

@@ -23,13 +23,17 @@ import scala.jdk.CollectionConverters._
   * needs — dense sorted `_rowid` per file, tight row-group stats, offset
   * indexes.
   *
-  * Read path per key: pick the batch from the manifest (O(batches)), pick
-  * the part file by its cached footer's `_rowid` min/max, locate the row
-  * group by cumulative row counts, locate the page via the column offset
-  * index, decompress just that page (`readFilteredRowGroup` with a
-  * single-page RowRanges), and skip-decode to the row ordinal. Footers and
-  * open readers are cached per file — the reference likewise keeps its file
-  * handles open (src/services/file_access_service.rs).
+  * Read path per key: pick the batch from the table's cached, revalidated
+  * head snapshot (two stats and one small read, no listing, no parse — see
+  * [[VectorTable.snapshot]]), pick the part file from the snapshot's
+  * per-batch span table (the batch directory is listed and its footers'
+  * `_rowid` min/max read once per snapshot), locate the row group by
+  * cumulative row counts, locate the page via the column offset index,
+  * decompress just that page (`readFilteredRowGroup` with a single-page
+  * RowRanges), and skip-decode to the row ordinal. Footers and open readers
+  * are cached per file — the reference likewise keeps its file handles open
+  * (src/services/file_access_service.rs) — until [[VectorTable.vacuum]]
+  * deletes the file's directory ([[evictUnder]]).
   *
   * Falls back (returns None) on anything it can't prove: non-dense rowids,
   * missing stats, unsupported physical types. Callers treat None as "use the
@@ -47,6 +51,15 @@ object DirectParquetRead {
     // offset indexes are immutable footer metadata — read once per row group
     val offsetIndexes =
       new java.util.concurrent.ConcurrentHashMap[Integer, Option[org.apache.parquet.internal.column.columnindex.OffsetIndex]]()
+    // set under this entry's lock by close(); reads check it under the same
+    // lock, so none runs on a closed reader
+    private var closed = false
+    def read(ordinal: Long): Option[Map[String, Any]] =
+      synchronized(if (closed) None else readOrdinal(this, ordinal))
+    def close(): Unit = synchronized {
+      closed = true
+      try reader.close() catch { case _: Throwable => () }
+    }
   }
 
   private val metaCache = new java.util.concurrent.ConcurrentHashMap[String, Option[FileMeta]]()
@@ -55,19 +68,37 @@ object DirectParquetRead {
   /** Values for one row keyed by column name (JVM-typed; null for SQL NULL),
     * or None when this file can't serve the read directly.
     */
-  def readByRowid(file: String, rowid: Long): Option[Map[String, Any]] = {
-    val metaOpt = metaCache.computeIfAbsent(file, openMeta)
-    metaOpt.flatMap { m =>
+  def readByRowid(file: String, rowid: Long): Option[Map[String, Any]] =
+    meta(file).flatMap { m =>
       if (rowid < m.rowidMin || rowid > m.rowidMax) None
-      else m.synchronized(readOrdinal(m, rowid - m.rowidMin))
+      else m.read(rowid - m.rowidMin)
     }
-  }
 
   /** The file's [_rowid min, max] from cached footer stats, if provably
     * dense (rowCount == max-min+1).
     */
   def rowidSpan(file: String): Option[(Long, Long)] =
-    metaCache.computeIfAbsent(file, openMeta).map(m => (m.rowidMin, m.rowidMax))
+    meta(file).map(m => (m.rowidMin, m.rowidMax))
+
+  private def meta(file: String): Option[FileMeta] = {
+    val hit = metaCache.get(file)
+    if (hit != null) { StoreCounters.footerHits.increment(); hit }
+    else metaCache.computeIfAbsent(file, f => { StoreCounters.footerMisses.increment(); openMeta(f) })
+  }
+
+  /** Close and drop the cached readers of every file under `dir`, before
+    * the directory is deleted: an open descriptor keeps a deleted file's
+    * bytes on disk. A read racing the eviction finds its reader closed and
+    * returns None (the caller's Spark path).
+    */
+  def evictUnder(dir: java.nio.file.Path): Unit = {
+    val d = dir.toAbsolutePath.normalize
+    metaCache.entrySet().asScala.toVector.foreach { e =>
+      if (Paths.get(e.getKey).toAbsolutePath.normalize.startsWith(d) &&
+          metaCache.remove(e.getKey, e.getValue))
+        e.getValue.foreach(_.close())
+    }
+  }
 
   /** Access-ordered LRU, bounded: every applyDeletesFiles rewrite publishes
     * fresh UUID-named files whose spans get cached, so an UNBOUNDED map
@@ -135,17 +166,20 @@ object DirectParquetRead {
       } finally reader.close()
     } catch { case _: Throwable => None }
 
-  /** Part files of a batch directory, each with a provably-dense rowid span. */
+  /** Part files of a batch directory, by name: one directory listing. */
   def partFiles(batchDir: String): Seq[String] = {
     val dir = Paths.get(batchDir)
     if (!Files.isDirectory(dir)) Nil
-    else Fs.list(dir)
-      .filter { p =>
-        val n = p.getFileName.toString
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }
-      .map(_.toString)
-      .sorted
+    else {
+      StoreCounters.partsListings.increment()
+      Fs.list(dir)
+        .filter { p =>
+          val n = p.getFileName.toString
+          n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+        }
+        .map(_.toString)
+        .sorted
+    }
   }
 
   private def openMeta(file: String): Option[FileMeta] =
@@ -265,7 +299,7 @@ object DirectParquetRead {
 
   /** Drop cached readers (tests; long-lived servers keep them open). */
   def invalidate(): Unit = {
-    metaCache.values().asScala.foreach(_.foreach(m => try m.reader.close() catch { case _: Throwable => () }))
+    metaCache.values().asScala.foreach(_.foreach(_.close()))
     metaCache.clear()
   }
 }

@@ -99,13 +99,16 @@ final class VectorStore[T: Encoder](val table: VectorTable) {
     * schema and layout allow, matching the reference's serving-read class
     * (readable_cache.rs:68-80); otherwise falls back to a pruned Spark read.
     */
-  def get(index: Long): Option[T] =
-    if (index < 0 || index >= len) None
-    else directGet(index).orElse(decode(table.point(index)).headOption)
+  def get(index: Long): Option[T] = get(table.snapshot, index)
 
-  private def directGet(index: Long): Option[T] =
+  /** [[get]] with the bound check and the read on one snapshot `s`. */
+  private[core] def get(s: VectorTable.Snapshot, index: Long): Option[T] =
+    if (index < 0 || index >= s.manifest.length) None
+    else directGet(s, index).orElse(decode(table.rangeOf(s.manifest, index, 1L)).headOption)
+
+  private def directGet(s: VectorTable.Snapshot, index: Long): Option[T] =
     directDecoder.flatMap { dec =>
-      try table.pointLocal(index).map(dec)
+      try table.pointLocal(s, index).map(dec)
       catch { case scala.util.control.NonFatal(_) => None }
     }
 
@@ -158,9 +161,11 @@ final class VectorStore[T: Encoder](val table: VectorTable) {
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Bounds-checked range read — reference `getx` (src/vector_engine.rs:40-46). */
-  def getx(index: Long, count: Long): Option[Seq[T]] =
-    if (index < 0 || count < 0 || index + count > len) None
-    else Some(decode(table.range(index, count)))
+  def getx(index: Long, count: Long): Option[Seq[T]] = {
+    val m = table.manifest
+    if (index < 0 || count < 0 || index + count > m.length) None
+    else Some(decode(table.rangeOf(m, index, count)))
+  }
 
   /** Batched point reads — amortizes lookup cost across a batch;
     * out-of-range ids are simply absent from the result (total, like
@@ -172,23 +177,23 @@ final class VectorStore[T: Encoder](val table: VectorTable) {
     */
   def getMany(indices: Seq[Long]): Map[Long, T] = {
     if (indices.isEmpty) return Map.empty
+    val s = table.snapshot
     if (indices.size <= VectorStore.directBatchLimit) {
       directDecoder match {
         case Some(dec) =>
-          val hits = indices.distinct.flatMap { i =>
-            if (i < 0 || i >= len) None
-            else try table.pointLocal(i).map(v => i -> dec(v))
+          val inRange = indices.distinct.filter(i => i >= 0 && i < s.manifest.length)
+          val hits = inRange.flatMap { i =>
+            try table.pointLocal(s, i).map(v => i -> dec(v))
             catch { case scala.util.control.NonFatal(_) => None }
           }
           // all-or-fallback: a partial direct result can't distinguish
           // "absent" from "file not directly servable", so any miss on an
           // in-range key routes the whole batch through the Spark path
-          if (hits.size == indices.distinct.count(i => i >= 0 && i < len))
-            return hits.toMap
+          if (hits.size == inRange.size) return hits.toMap
         case None => ()
       }
     }
-    val df = table.points(indices)
+    val df = table.pointsOf(s.manifest, indices)
     val payload = df.columns.filterNot(_ == VectorTable.ROWID).map(col)
     df.select(col(VectorTable.ROWID), struct(payload: _*).as("v"))
       .as[(Long, T)](org.apache.spark.sql.Encoders.tuple(

@@ -3,7 +3,9 @@ package graft.core
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
@@ -56,6 +58,7 @@ object Manifest {
   def metaDir(root: String): Path = Paths.get(root, "_graft")
 
   def parse(text: String): Manifest = {
+    StoreCounters.manifestParses.increment()
     val kv = text.linesIterator.filter(_.nonEmpty).toVector
     def field(k: String): String =
       kv.collectFirst { case l if l.startsWith(k + "=") => l.drop(k.length + 1) }
@@ -97,24 +100,28 @@ object Manifest {
       restores, purged)
   }
 
-  /** Latest committed manifest, or the empty v0 manifest for a new table. */
-  def load(root: String): Manifest = {
-    val dir = metaDir(root)
-    if (!Files.isDirectory(dir)) return Manifest(0L, 0L, "dynamic", Vector.empty)
-    val versions = Fs.list(dir)
-      .flatMap(p => FilePattern.findFirstMatchIn(p.getFileName.toString).map(_.group(1).toLong))
-    if (versions.isEmpty) Manifest(0L, 0L, "dynamic", Vector.empty)
-    else parse(Files.readString(dir.resolve(fileName(versions.max))))
-  }
+  /** The manifest of a table with no committed version. */
+  val empty: Manifest = Manifest(0L, 0L, "dynamic", Vector.empty)
+
+  /** Latest committed manifest, or [[empty]] for a new table: one listing,
+    * one read, one parse. Readers go through [[VectorTable.manifest]],
+    * which reuses its revalidated head instead.
+    */
+  def load(root: String): Manifest =
+    listVersions(root).lastOption.fold(empty)(loadVersion(root, _))
 
   def fileName(version: Long): String = f"manifest-v$version%012d.txt"
 
+  /** All committed versions, ascending: one `_graft/` listing. */
   def listVersions(root: String): Seq[Long] = {
     val dir = metaDir(root)
     if (!Files.isDirectory(dir)) Nil
-    else Fs.list(dir)
-      .flatMap(p => FilePattern.findFirstMatchIn(p.getFileName.toString).map(_.group(1).toLong))
-      .sorted
+    else {
+      StoreCounters.manifestListings.increment()
+      Fs.list(dir)
+        .flatMap(p => FilePattern.findFirstMatchIn(p.getFileName.toString).map(_.group(1).toLong))
+        .sorted
+    }
   }
 
   /** A specific committed version (throws if absent). */
@@ -122,14 +129,14 @@ object Manifest {
     parse(Files.readString(metaDir(root).resolve(fileName(version))))
 
   /** Commit `m` as the next version; create-if-absent gives atomicity. */
-  def commit(root: String, m: Manifest): Unit = {
+  def commit(root: String, m: Manifest): Unit = { write(root, m.version, m.serialize); () }
+
+  /** Create-if-absent write of version `version`'s `text`; returns the file. */
+  private[core] def write(root: String, version: Long, text: String): Path = {
     val dir = metaDir(root)
     Files.createDirectories(dir)
-    Files.write(
-      dir.resolve(fileName(m.version)),
-      m.serialize.getBytes("UTF-8"),
-      StandardOpenOption.CREATE_NEW
-    )
+    Files.write(dir.resolve(fileName(version)), text.getBytes(UTF_8),
+      StandardOpenOption.CREATE_NEW)
   }
 }
 
@@ -156,7 +163,43 @@ object Manifest {
 final class VectorTable(val spark: SparkSession, val root: String) {
   import VectorTable.ROWID
 
-  def manifest: Manifest = Manifest.load(root)
+  /** The newest head this instance has read or committed; null until the
+    * first read. Every use revalidates it ([[VectorTable.Snapshot.isHead]]).
+    */
+  @volatile private var head: VectorTable.Snapshot = null
+
+  /** The committed head as one immutable snapshot. The cached head is
+    * reused while it provably still is the head: no `manifest-v(version+1)`
+    * exists (every commit path creates exactly head + 1, create-if-absent,
+    * and vacuum only deletes older versions) and the head file is the same
+    * file with the same bytes (a root deleted and recreated at the same
+    * version count has a new head file, even where its bytes match).
+    * Otherwise the versions are listed and the newest is read and parsed
+    * again. A warm read thus costs two stats and one small file read,
+    * never a listing or a parse.
+    */
+  private[core] def snapshot: VectorTable.Snapshot = {
+    val h = head
+    if (h != null && h.isHead) { StoreCounters.manifestReused.increment(); h }
+    else {
+      StoreCounters.manifestReloaded.increment()
+      val fresh = Manifest.listVersions(root).lastOption.fold(VectorTable.Snapshot.empty)(v =>
+        VectorTable.Snapshot.read(Manifest.metaDir(root).resolve(Manifest.fileName(v))))
+      head = fresh
+      fresh
+    }
+  }
+
+  def manifest: Manifest = snapshot.manifest
+
+  /** Commit `m` as the next version (create-if-absent) and install it as
+    * this instance's head. Callers hold `commitLock`.
+    */
+  private def commit(m: Manifest): Unit = {
+    val file = Manifest.write(root, m.version, m.serialize)
+    // the commit stands even if reading it back fails: the next read reloads
+    head = try VectorTable.Snapshot.read(file) catch { case NonFatal(_) => null }
+  }
 
   /** Opened-DataFrame cache keyed by the exact batch-path set: repeated
     * point/range reads against an unchanged manifest reuse the relation
@@ -166,12 +209,16 @@ final class VectorTable(val spark: SparkSession, val root: String) {
     * produces a new key.
     */
   private val openCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private def open(paths: Seq[String], mergeSchema: Boolean = false): DataFrame =
-    openCache.computeIfAbsent((if (mergeSchema) "M" else "P") + paths.mkString("\u0000"),
-      _ => {
-        val r = spark.read
-        (if (mergeSchema) r.option("mergeSchema", "true") else r).parquet(paths: _*)
-      })
+  private def open(paths: Seq[String], mergeSchema: Boolean = false): DataFrame = {
+    val key = (if (mergeSchema) "M" else "P") + paths.mkString("\u0000")
+    val hit = openCache.get(key)
+    if (hit != null) { StoreCounters.openHits.increment(); hit }
+    else openCache.computeIfAbsent(key, _ => {
+      StoreCounters.openMisses.increment()
+      val r = spark.read
+      (if (mergeSchema) r.option("mergeSchema", "true") else r).parquet(paths: _*)
+    })
+  }
 
   /** O(1) record count — reference `len()` (src/vector_engine.rs:29). */
   def length: Long = manifest.length
@@ -367,7 +414,7 @@ final class VectorTable(val spark: SparkSession, val root: String) {
     val zs = ZoneMaps.collect(s"$root/$rel")
     val zstats = if (zs.isEmpty) m.zstats else m.zstats.updated(batchId, zs)
 
-    try Manifest.commit(root, Manifest(batchId, start + n, layout,
+    try commit(Manifest(batchId, start + n, layout,
       m.batches :+ BatchInfo(batchId, start, start + n, rel),
       streamBatchId.getOrElse(m.streamBatch), encoding, widened.json, mixed, zstats,
       m.maskPath, m.maskCount, m.restores, m.purged))
@@ -408,7 +455,7 @@ final class VectorTable(val spark: SparkSession, val root: String) {
       // the compacted batch carries the unified (widest) schema, so the
       // merged-read flag resets; zone maps are re-lifted from the new files
       val zs = ZoneMaps.collect(s"$root/$rel")
-      Manifest.commit(root, Manifest(batchId, n, m.layout,
+      commit(Manifest(batchId, n, m.layout,
         Vector(BatchInfo(batchId, 0L, n, rel)), m.streamBatch, m.encoding,
         m.schemaJson, mixedSchema = false,
         if (zs.isEmpty) Map.empty else Map(batchId -> zs),
@@ -472,7 +519,7 @@ final class VectorTable(val spark: SparkSession, val root: String) {
       val zs = ZoneMaps.collect(s"$root/$rel")
       val zstats = (m.zstats -- tail.map(_.id)) ++
         (if (zs.isEmpty) Map.empty else Map(batchId -> zs))
-      Manifest.commit(root, Manifest(batchId, m.length, m.layout,
+      commit(Manifest(batchId, m.length, m.layout,
         prefix :+ BatchInfo(batchId, lo, hi, rel), m.streamBatch, m.encoding,
         m.schemaJson, m.mixedSchema, zstats,
         m.maskPath, m.maskCount, m.restores, m.purged))
@@ -499,7 +546,12 @@ final class VectorTable(val spark: SparkSession, val root: String) {
       val dataDir = Paths.get(root, "data")
       if (Files.isDirectory(dataDir)) {
         Fs.list(dataDir).foreach { p =>
-          if (!keepDirs.contains(s"data/${p.getFileName}")) Fs.deleteTree(p)
+          if (!keepDirs.contains(s"data/${p.getFileName}")) {
+            // close point-read readers first: an open descriptor keeps the
+            // deleted rows' bytes on disk until the JVM exits
+            DirectParquetRead.evictUnder(p)
+            Fs.deleteTree(p)
+          }
         }
       }
       drop.foreach(v => Files.deleteIfExists(Manifest.metaDir(root).resolve(Manifest.fileName(v))))
@@ -536,14 +588,13 @@ final class VectorTable(val spark: SparkSession, val root: String) {
     * "I rolled the data back").
     */
   def restore(version: Long): Unit = VectorTable.commitLock.synchronized {
-    val head = manifest
-    require(version <= head.version,
-      s"restore($version): head is ${head.version}")
+    val cur = manifest
+    require(version <= cur.version,
+      s"restore($version): head is ${cur.version}")
     val target = Manifest.loadVersion(root, version)
     // bump the restore epoch: rowids dropped here may be REUSED by later
     // appends with different content, which derived views must detect
-    Manifest.commit(root, target.copy(version = head.version + 1,
-      restores = head.restores + 1))
+    commit(target.copy(version = cur.version + 1, restores = cur.restores + 1))
   }
 
   /** Change feed: the rows appended between committed versions
@@ -617,8 +668,7 @@ final class VectorTable(val spark: SparkSession, val root: String) {
       val start = append(df)
       newHits.foreach { case (rel, cnt) =>
         val m2 = manifest
-        Manifest.commit(root, m2.copy(version = m2.version + 1,
-          maskPath = rel, maskCount = cnt))
+        commit(m2.copy(version = m2.version + 1, maskPath = rel, maskCount = cnt))
       }
       start
     }
@@ -687,8 +737,7 @@ final class VectorTable(val spark: SparkSession, val root: String) {
       Fs.deleteTree(Paths.get(root, rel))
       0L
     } else {
-      Manifest.commit(root, m.copy(version = m.version + 1,
-        maskPath = rel, maskCount = cnt))
+      commit(m.copy(version = m.version + 1, maskPath = rel, maskCount = cnt))
       cnt - m.maskCount
     }
   }
@@ -806,7 +855,7 @@ final class VectorTable(val spark: SparkSession, val root: String) {
         }
       }
     }
-    Manifest.commit(root, Manifest(m.version + 1, m.length, m.layout, newBatches,
+    commit(Manifest(m.version + 1, m.length, m.layout, newBatches,
       m.streamBatch, m.encoding, m.schemaJson, m.mixedSchema, zstats,
       maskPath = "", maskCount = 0L, m.restores, m.purged + m.maskCount))
     openCache.clear() // cached frames reference the replaced directories
@@ -861,8 +910,9 @@ final class VectorTable(val spark: SparkSession, val root: String) {
     * (src/vector_engine.rs:28,40-46). Driver-side manifest pruning selects
     * only overlapping batches; the rowid predicate then prunes row groups.
     */
-  def range(index: Long, count: Long): DataFrame = {
-    val m = manifest
+  def range(index: Long, count: Long): DataFrame = rangeOf(manifest, index, count)
+
+  private[core] def rangeOf(m: Manifest, index: Long, count: Long): DataFrame = {
     val lo = index
     val hi = index + count
     val hit = m.batches.filter(b => b.end > lo && b.start < hi)
@@ -909,27 +959,26 @@ final class VectorTable(val spark: SparkSession, val root: String) {
     * serve directly" (remote filesystem, nested schema, foreign file) and
     * the caller should use the Spark path — never a correctness signal.
     */
-  def pointLocal(index: Long): Option[Map[String, Any]] = {
-    val m = manifest
-    m.batches.find(b => index >= b.start && index < b.end).flatMap { b =>
-      DirectParquetRead.partFiles(s"$root/${b.relPath}")
-        .collectFirst(Function.unlift { f =>
-          DirectParquetRead.rowidSpan(f) match {
-            case Some((lo, hi)) if index >= lo && index <= hi =>
-              DirectParquetRead.readByRowid(f, index)
-            case _ => None
-          }
-        })
+  def pointLocal(index: Long): Option[Map[String, Any]] = pointLocal(snapshot, index)
+
+  /** [[pointLocal]] against snapshot `s`: the batch from its manifest, the
+    * part file from its per-batch span table.
+    */
+  private[core] def pointLocal(s: VectorTable.Snapshot, index: Long): Option[Map[String, Any]] =
+    s.manifest.batches.find(b => index >= b.start && index < b.end).flatMap { b =>
+      s.parts(s"$root/${b.relPath}")
+        .collectFirst { case (f, lo, hi) if index >= lo && index <= hi => f }
+        .flatMap(DirectParquetRead.readByRowid(_, index))
     }
-  }
 
   /** Batched point reads: one Spark job for all `indices` (manifest-pruned
     * to the touched batches, IN-filter pushed to the scan) — the serving
     * pattern that amortizes per-job latency over a whole lookup batch
     * instead of paying it per key.
     */
-  def points(indices: Seq[Long]): DataFrame = {
-    val m = manifest
+  def points(indices: Seq[Long]): DataFrame = pointsOf(manifest, indices)
+
+  private[core] def pointsOf(m: Manifest, indices: Seq[Long]): DataFrame = {
     if (m.batches.isEmpty || indices.isEmpty) return emptyLike()
     val wanted = indices.distinct
     val hit = m.batches.filter(b => wanted.exists(i => i >= b.start && i < b.end))
@@ -951,6 +1000,55 @@ final class VectorTable(val spark: SparkSession, val root: String) {
 object VectorTable {
   val ROWID = "_rowid"
   private[core] val commitLock = new Object
+
+  /** One committed head as read: the parsed manifest, the file it came
+    * from (null for the empty v0 table), that file's identity and bytes,
+    * and per batch the part files with their dense rowid spans, listed at
+    * most once per snapshot (batch directories are write-once: a rewrite
+    * always commits a fresh `relPath` under a new version).
+    */
+  private[core] final class Snapshot private (val manifest: Manifest, file: Path,
+                                               stamp: (AnyRef, AnyRef), bytes: Array[Byte]) {
+    private val spans =
+      new java.util.concurrent.ConcurrentHashMap[String, Vector[(String, Long, Long)]]()
+
+    /** Still the head: no next version exists and the head file is the
+      * same file with the same bytes. The empty table never is: without a
+      * head file, a missing next version proves nothing once a vacuum may
+      * have removed the versions in between.
+      */
+    def isHead: Boolean =
+      file != null &&
+        !Files.exists(file.resolveSibling(Manifest.fileName(manifest.version + 1))) &&
+        (try Snapshot.stampOf(file) == stamp && java.util.Arrays.equals(Files.readAllBytes(file), bytes)
+         catch { case _: java.io.IOException => false })
+
+    /** The part files of batch directory `batchDir` that carry a provably
+      * dense rowid span, with that span.
+      */
+    def parts(batchDir: String): Vector[(String, Long, Long)] =
+      spans.computeIfAbsent(batchDir, _ =>
+        DirectParquetRead.partFiles(batchDir).toVector.flatMap(f =>
+          DirectParquetRead.rowidSpan(f).map { case (lo, hi) => (f, lo, hi) }))
+  }
+
+  private[core] object Snapshot {
+    val empty = new Snapshot(Manifest.empty, null, null, null)
+
+    private def stampOf(file: Path): (AnyRef, AnyRef) = {
+      val a = Files.readAttributes(file, classOf[BasicFileAttributes])
+      (a.fileKey, a.lastModifiedTime)
+    }
+
+    /** The snapshot of manifest file `file`, stamped before it is read so
+      * that a file replaced during the read fails the next revalidation.
+      */
+    def read(file: Path): Snapshot = {
+      val stamp = stampOf(file)
+      val bytes = Files.readAllBytes(file)
+      new Snapshot(Manifest.parse(new String(bytes, UTF_8)), file, stamp, bytes)
+    }
+  }
 
   def create(spark: SparkSession, root: String): VectorTable = {
     Files.createDirectories(Paths.get(root))
