@@ -1,5 +1,6 @@
 package graft
 
+import graft.bench.DimRunner
 import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark harness: every declared query (cold, one-shot,
@@ -63,12 +64,6 @@ object Bench {
 
     val spark = graft.core.GraftSession.local("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
-
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime()
-      f
-      (System.nanoTime() - t0) / 1e9
-    }
 
     // Per-dim reference timings from the PREVIOUS record of this detail
     // file (read before the first overwrite — at round start that is the
@@ -143,96 +138,49 @@ object Bench {
     // Store dims get 25% of the wall clock; everything else (index builds
     // + the query corpus, the headline metric) gets the full budget.
     val storeBudgetS = budgetS * sys.env.getOrElse("GRAFT_BENCH_STORE_FRAC", "0.25").toDouble
-    // Per-dimension watchdog: round 5's 14.8 MB/s disk made ONE dim
-    // (store_bulk_append_1m, 852 s) eat a third of the whole budget. A dim
-    // that exceeds the cap has its Spark jobs cancelled (job group,
-    // interruptOnCancel) and records -1.0; the run moves on.
-    val dimCapS = sys.env.getOrElse("GRAFT_BENCH_DIM_CAP_S", "300").toDouble
+    val runner = new DimRunner(spark)
 
     /** Run one dimension under the wall-clock budget: skip (never launch)
-      * once the applicable budget is spent, cancel+move-on once the per-dim
-      * cap is hit, never let one failure kill the harness, and persist the
-      * detail file after every dimension.
+      * once the applicable budget is spent, never let one failure kill the
+      * harness, and persist the detail file after every dimension.
       */
     def dim(name: String, store: Boolean = false)(f: => Unit): Unit = {
       if (store) storeDims += name
       val cap = if (store) storeBudgetS else budgetS
-      def runOnce(): Double = {
-        @volatile var res = -1.0
-        val worker = new Thread(() => {
-          spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
-          try res = timed(f)
-          catch { case e: Throwable =>
-            // Log the cause (round 6: all 18 events dims recorded a bare
-            // -1.0 after a testdata schema change — the error was the
-            // whole diagnosis and it went nowhere).
-            System.err.println(s"[bench] $name failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
-            res = -1.0
-          }
-          finally spark.sparkContext.clearJobGroup()
-        }, s"bench-$name")
-        worker.setDaemon(true)
-        worker.start()
-        worker.join((dimCapS * 1000).toLong)
-        if (worker.isAlive) {
-          System.err.println(s"[bench] $name exceeded ${dimCapS}s cap: cancelling")
-          try spark.sparkContext.cancelJobGroup(name) catch { case _: Throwable => () }
-          worker.interrupt()
-          worker.join(15000) // grace; if it still won't die, abandon (daemon)
-          -1.0
-        } else res
-      }
       results(name) =
         if (elapsedS > cap) -2.0
         else {
-          val first = runOnce()
-          // one-time build dims never remeasure: their machine-wide memo
-          // makes any second run a pointer-lookup no-op, which would
-          // record ~0 and erase the build's real cost from the artifact
-          val isBuild = name.endsWith("_build")
-          if (samplesWanted > 1 && !isBuild && first >= 0 && elapsedS <= cap) {
-            // committed-record mode: unconditional second sample, official
-            // value = MIN (the consistent policy — a warm second sample is
-            // never silently promoted only for spiked dims; every dim gets
-            // the same treatment and both numbers are in the artifact)
-            val second = runOnce()
-            samples(name) = (first, second)
-            if (second >= 0) math.min(first, second) else first
-          } else {
-            // Spike telemetry (single-sample mode): a dim >3x its reference
-            // record (and above half a second — sub-100ms dims flap on
-            // noise) gets ONE immediate isolated remeasure; both samples
-            // land in the artifact and the official value is their MIN —
-            // same min-of-samples policy as GRAFT_BENCH_SAMPLES=2, so
-            // retried dims are no longer systematically warmer than their
-            // committed reference (round-10 ADVICE).
-            val ref = if (isBuild) -1.0 else refQueries.getOrElse(name, -1.0)
-            if (ref > 0 && first > 3 * ref && first > 0.5 && elapsedS <= cap) {
-              val retry = runOnce()
-              retried(name) = (first, retry)
-              System.err.println(
-                f"[bench] $name spiked (${first}%.2fs vs ref ${ref}%.2fs): isolated retry ${retry}%.2fs")
-              if (retry >= 0) math.min(first, retry) else first
-            } else first
+          // committed-record mode (GRAFT_BENCH_SAMPLES=2): unconditional
+          // second sample, official value = MIN (a warm second sample is
+          // never silently promoted only for spiked dims; both numbers are
+          // in the artifact)
+          val s = runner.sample(name, samplesWanted > 1 && elapsedS <= cap)(f)
+          s.second match {
+            case Some(second) =>
+              samples(name) = (s.first, second)
+              s.min
+            case None =>
+              // Spike telemetry (single-sample mode): a dim >3x its
+              // reference record (and above half a second — sub-100ms dims
+              // flap on noise) gets ONE immediate isolated remeasure; both
+              // samples land in the artifact and the official value is
+              // their MIN, so retried dims are no longer systematically
+              // warmer than their committed reference (round-10 ADVICE).
+              val first = s.first
+              val ref = if (DimRunner.isBuild(name)) -1.0 else refQueries.getOrElse(name, -1.0)
+              if (ref > 0 && first > 3 * ref && first > 0.5 && elapsedS <= cap) {
+                val retry = runner.runOnce(name)(f)
+                retried(name) = (first, retry)
+                System.err.println(
+                  f"[bench] $name spiked (${first}%.2fs vs ref ${ref}%.2fs): isolated retry ${retry}%.2fs")
+                DimRunner.Sample(first, Some(retry)).min
+              } else first
           }
         }
       writeDetail()
     }
 
-    // Session/JIT warmup — no INPUT table is touched, so scan dimensions
-    // stay honest, but the parquet read/write stack, codegen, and window
-    // machinery are exercised on a scratch table; without this the
-    // alphabetically-first query absorbs >1 s of cold-start that belongs
-    // to the session, not the operator.
-    spark.range(1000000).selectExpr("sum(id)").head()
-    val warmDir = java.nio.file.Files.createTempDirectory("graft-bench-warm").toString + "/t"
-    spark.range(10000).selectExpr("id", "CAST(id AS STRING) AS s", "id * 1.5 AS v")
-      .write.parquet(warmDir)
-    val warm = spark.read.parquet(warmDir)
-    warm.where(org.apache.spark.sql.functions.col("id") > 100)
-      .groupBy("s").agg(org.apache.spark.sql.functions.sum("v")).count()
-    warm.withColumn("rn", org.apache.spark.sql.functions.row_number().over(
-      org.apache.spark.sql.expressions.Window.partitionBy("s").orderBy("id"))).count()
+    DimRunner.warmup(spark)
 
     // --- host self-adjudication block (HostProbe primitives, same JVM) ---
     // Runs after warmup, before any graded dimension: if the host is
@@ -493,9 +441,7 @@ object Bench {
     // a curated headline subset at millisecond precision, padded with the
     // remaining dimensions while the 1850-char budget allows (the sbt
     // "[success] Total time ..." epilogue costs ~75 chars of the window).
-    def fmt(v: Double): String =
-      if (v < 0) v.toInt.toString
-      else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).bigDecimal.toPlainString
+    import DimRunner.fmt
     // cap the failed list: under mass failure an unbounded array would
     // itself overflow the tail window; n_failed carries the true count
     // (failures AND budget-skips both count — a skip is a missing number).

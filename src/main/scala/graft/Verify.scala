@@ -18,6 +18,10 @@ import java.nio.file.{Files, Paths}
   * ones): queries NEVER recorded green in any committed
   * CORRECTNESS_r*.json run first, so truncation eats the already-proven
   * tail, not the new surface.
+  *
+  * The run fails closed: it prints one JSON line (`n_declared`,
+  * `n_written`, `n_failed`, the `failed` names, `wall_s`) and exits 1 when
+  * any picked query failed, a misspelled filter name included.
   */
 object Verify {
   /** Query names ever recorded HASH-green by a past driver round — read
@@ -43,24 +47,45 @@ object Verify {
     }.toSet
   }
 
+  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+  // — a tab or CR in an oracle SQL string would otherwise make the
+  // oracle_sql.json load fail and silently zero the correctness record.
+  private def q(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** One Verify run: `n_declared` queries declared, `n_written` result
+    * dirs written, and the picked queries that failed (a name in `only`
+    * that is not declared counts as failed).
+    */
+  final case class Summary(nDeclared: Int, nWritten: Int, failed: Seq[String], wallS: Double) {
+    def json: String =
+      s"""{"n_declared":$nDeclared,"n_written":$nWritten,"n_failed":${failed.size},""" +
+        s""""failed":${failed.map(q).mkString("[", ",", "]")},""" +
+        s""""wall_s":${graft.bench.DimRunner.fmt(wallS)}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet // optional query-name filter for iteration
     val spark = graft.core.GraftSession.local("graft-verify")
-    spark.sparkContext.setLogLevel("WARN")
+    val summary = try run(spark, sfDir, outDir, only) finally spark.stop()
+    println(summary.json)
+    if (summary.failed.nonEmpty) sys.exit(1)
+  }
+
+  /** Writes each picked query's result (all declared ones when `only` is
+    * empty) to `outDir/<name>` and `oracle_sql.json`; never stops `spark`.
+    */
+  def run(spark: SparkSession, sfDir: String, outDir: String, only: Set[String]): Summary = {
+    val t0 = System.nanoTime()
     new java.io.File(outDir).mkdirs()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
@@ -84,6 +109,8 @@ object Verify {
     }
 
     val green = previouslyGreen()
+    val undeclared = only.filterNot(SparkEntry.queries.contains).toSeq.sorted
+    undeclared.foreach(n => System.err.println(s"[verify] $n failed: not a declared query"))
     val picked = SparkEntry.queries.filter { case (n, _) => only.isEmpty || only(n) }.toSeq
       .sortBy { case (n, _) => (green(n), n) } // never-green first, then by name
     val threads = math.max(1, sys.env.getOrElse("GRAFT_VERIFY_THREADS", "6").toInt)
@@ -95,8 +122,8 @@ object Verify {
     // round 5: median_quantity_per_flag, mm_decode_features — both green
     // on re-run).
     val futures = picked.map { case (name, fn) =>
-      pool.submit(new Runnable {
-        def run(): Unit =
+      name -> pool.submit(new java.util.concurrent.Callable[Boolean] {
+        def call(): Boolean =
           try {
             val tmp = s"$outDir/.tmp-$name"
             fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -104,14 +131,17 @@ object Verify {
             graft.core.Fs.deleteTree(target)
             Files.move(Paths.get(tmp), target,
               java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+            true
           }
           catch { case e: Throwable =>
             System.err.println(s"[verify] $name failed: ${e.getMessage}")
+            false
           }
       })
     }
-    futures.foreach(_.get())
+    val failed = futures.collect { case (name, f) if !f.get() => name }
     pool.shutdown()
-    spark.stop()
+    Summary(SparkEntry.queries.size, picked.size - failed.size,
+      undeclared ++ failed.sorted, (System.nanoTime() - t0) / 1e9)
   }
 }

@@ -1031,12 +1031,6 @@ object Dedup {
   private[graft] def bandRowsFor(docs: DataFrame): DataFrame =
     bandsOf(signaturesOf(docs))
 
-  /** [[deltaCandidatesFromBands]] for the pricing tools outside the
-    * operators package.
-    */
-  private[graft] def deltaCandidatesFromBandsFor(all: DataFrame, cutoff: Long): DataFrame =
-    deltaCandidatesFromBands(all, cutoff)
-
   /** [[connectedComponentsOf]] for callers outside the operators package
     * (the semantic ingest gate decomposes its survivor graph into
     * components before sweeping). Input (doc_a, doc_b) pairs; output

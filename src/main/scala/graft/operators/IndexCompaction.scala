@@ -12,8 +12,8 @@ import java.nio.file.{Files, Path, Paths}
   * Why it exists: every `refresh` appends one parquet file (or one per
   * touched partition) per span, so a continuously-fed index accumulates
   * N-span small files and EVERY query pays N file opens forever —
-  * ProfileCompaction measured ~20% probe tax at just 8 files/cell on the
-  * IVF layout. Compaction rewrites the live rows into a file-count sized
+  * a round-14 pricing run (PLANS.md "Compaction pricing") measured ~20%
+  * probe tax at just 8 files/cell on the IVF layout. Compaction rewrites the live rows into a file-count sized
   * by bytes (128 MiB target per file — 1 file at test scale, proportional
   * at 100 TB), touching no source table and re-deriving nothing: rows,
   * (version, length) meta, and therefore every query result are identical

@@ -25,8 +25,8 @@ import graft.core.VectorTable
   * Scale shape: the CHECK is O(file count) metadata per batch; the fired
   * work is the existing byte-sized compaction, amortized O(n log n) over
   * the table's life. Factor 8 keeps probe tax bounded (~20% was measured
-  * at 8 files/cell on the IVF layout, ProfileCompaction) while letting
-  * micro-batches accumulate enough to be worth one rewrite.
+  * at 8 files/cell on the IVF layout, PLANS.md "Compaction pricing")
+  * while letting micro-batches accumulate enough to be worth one rewrite.
   *
   * DELIBERATELY NOT automated here: [[VectorTable.purge]]. Purge resets
   * the delete-vector, and the mask is the signal every dependent index's

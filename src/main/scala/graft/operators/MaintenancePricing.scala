@@ -135,9 +135,9 @@ object MaintenancePricing {
   }
 
   /** One mask + PHYSICAL PURGE over a clone of the maintained table — the
-    * erasure path as a per-round priced dim (ProfilePurge remains the
-    * offline deep-dive; this keeps the price in every committed record
-    * and the sf1 sweep).
+    * erasure path as a per-round priced dim (PLANS.md "Purge pricing"
+    * holds the offline deep-dive; this keeps the price in every committed
+    * record and the sf1 sweep).
     */
   def maskAndPurge(s: SparkSession, d: String): Unit = {
     val t = VectorTable.open(s, clone(s, d, "maint"))

@@ -530,10 +530,10 @@ object Relational {
     * co-location layout that makes the dominant recurring fact join
     * SHUFFLE-FREE (SURVEY.md "Partitioning & shuffle": pay one write-side
     * sort, then every orderkey equi-join is a zip of pre-sorted buckets).
-    * The catalog is session-scoped, so each JVM (re)writes the bucketed
-    * tables once; the bench reports that as `bucketed_table_build`.
+    * The catalog is session-scoped, so each session (re)writes the
+    * bucketed tables once (memoized in [[Memo.session]], dropped when the
+    * session ends); the bench reports that as `bucketed_table_build`.
     */
-  private val bucketedBuilt = new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   private def sessionId(s: SparkSession): Long = graft.core.GraftSession.sessionId(s)
   // Per-JVM token in the table NAMES: two JVMs (or two sessions in one)
   // sharing a warehouse dir each write their own uniquely-named tables, so
@@ -631,7 +631,7 @@ object Relational {
   }
 
   private def bucketedBuiltTables(s: SparkSession, d: String): (String, String) =
-    bucketedBuilt.computeIfAbsent(sessionId(s) + ":" + d, _ => {
+    Memo.session(s, s"bucketed:$d") {
       sweepStaleBucketedDirs(s)
       val key = java.security.MessageDigest.getInstance("MD5")
         .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
@@ -650,7 +650,7 @@ object Relational {
             col("l_extendedprice"), col("l_discount")),
           lt, "orderkey", 16)))
       (ot, lt)
-    })
+    }
 
   def prebuildBucketedTables(s: SparkSession, d: String): Unit =
     bucketedOrderkeyTables(s, d)

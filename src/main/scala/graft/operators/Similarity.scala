@@ -1161,52 +1161,6 @@ object Similarity {
       semanticRecallThresholds)
   }
 
-  /** Probe hooks: the truth candidate stream and the scored stream of the
-    * recall face, for component timing (tools/ProfileRecall).
-    */
-  private[graft] def semanticRecallTruthCandProbe(s: SparkSession, d: String): DataFrame = {
-    val p = recallSamplePermille(embeddingCount(s, d))
-    val assign = ivfAssign(s, d).select(col("vec_id"), col("cell")).where(recallSamplePred(p))
-    Dedup.pairsFromBucketedRowsRaw(
-      assign.select(lit(0).as("k"), col("vec_id").as("doc_id")),
-      Seq("k"), Dedup.bucketExpandCap)
-  }
-
-  private[graft] def semanticRecallScoredProbe(s: SparkSession, d: String): DataFrame = {
-    val p = recallSamplePermille(embeddingCount(s, d))
-    val pred = recallSamplePred(p)
-    val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding")).where(pred)
-    semanticRecallTruthCandProbe(s, d)
-      .join(broadcast(emb.select(col("vec_id").as("doc_a"), col("embedding").as("ea"))), Seq("doc_a"))
-      .join(broadcast(emb.select(col("vec_id").as("doc_b"), col("embedding").as("eb"))), Seq("doc_b"))
-      .withColumn("sim", graft.functions.VectorFunctions.cosineF(col("ea"), col("eb")))
-      .where(!isnan(col("sim")))
-      .select("doc_a", "doc_b", "sim")
-  }
-
-  /** The FUSED scored stream of the recall face (panel kernel in-stage) —
-    * the shape [[semanticRecallOf]] executes since the panel rewrite; the
-    * broadcast-join probe above is kept as the before-comparison.
-    */
-  private[graft] def semanticRecallScoredFusedProbe(s: SparkSession, d: String): DataFrame = {
-    val p = recallSamplePermille(embeddingCount(s, d))
-    val pred = recallSamplePred(p)
-    val assign = ivfAssign(s, d).select(col("vec_id"), col("cell")).where(pred)
-    val top2 = assignTop2Of(Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding")).where(pred), centroids(s, d))
-    val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding")).where(pred)
-    val panel = graft.functions.RecallPanel.fromRows(
-      assign.join(top2, Seq("vec_id")).join(emb, Seq("vec_id"))
-        .select(col("vec_id"), col("cell").cast("int"),
-          col("c1").cast("int"), col("c2").cast("int"), col("embedding"))
-        .collect())
-    panelPairs(s, panel)
-      .withColumn("r", graft.functions.VectorFunctions
-        .recallPanelScoreF(col("doc_a"), col("doc_b"), panel))
-      .where(!isnan(col("r.sim")))
-      .select(col("doc_a"), col("doc_b"), col("r.sim").as("sim"))
-  }
-
   /** All unordered pairs over the panel's id universe, distributed: the
     * blocked kernel's slicing rule — ns = ⌈n/cap⌉ deterministic hash
     * slices; id x (slice sa) replicates to every sb in [sa, ns) on the

@@ -19,21 +19,13 @@ object CalibrateHost {
     val reps = if (args.length > 1) args(1).toInt else 5
     val spark = graft.core.GraftSession.local("graft-calibrate")
     spark.sparkContext.setLogLevel("WARN")
-    // Bench's warmup, verbatim shape: the calibrated numbers must measure
-    // the same post-JIT state the embedded host block measures. Bench's
+    // Bench's warmup: the calibrated numbers must measure the same
+    // post-JIT state the embedded host block measures. Bench's
     // host_s is the block's FIRST same-JVM run after this warmup, so the
     // gate must be calibrated on run 1 of a FRESH JVM (run this tool N
     // times); runs 2+ document the steady-state floor (page cache + full
     // JIT), useful to separate disk speed from first-run listing/codegen.
-    spark.range(1000000).selectExpr("sum(id)").head()
-    val warmDir = java.nio.file.Files.createTempDirectory("graft-cal-warm").toString + "/t"
-    spark.range(10000).selectExpr("id", "CAST(id AS STRING) AS s", "id * 1.5 AS v")
-      .write.parquet(warmDir)
-    val warm = spark.read.parquet(warmDir)
-    warm.where(org.apache.spark.sql.functions.col("id") > 100)
-      .groupBy("s").agg(org.apache.spark.sql.functions.sum("v")).count()
-    warm.withColumn("rn", org.apache.spark.sql.functions.row_number().over(
-      org.apache.spark.sql.expressions.Window.partitionBy("s").orderBy("id"))).count()
+    graft.bench.DimRunner.warmup(spark)
     val load0 = java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
 
     val runs = (1 to reps).map { r =>

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * lists a batch directory only through [[VectorTable.snapshot]], which
   * does each once per committed version. Any other call site under
   * `src/main/scala` is a per-read listing unless the allow-list below names
-  * it as write, maintenance or tooling code.
+  * it as write or maintenance code.
   */
 class ReadPathGuardSpec extends AnyFunSuite {
 
@@ -23,9 +23,7 @@ class ReadPathGuardSpec extends AnyFunSuite {
     // the definition
     ("DirectParquetRead.scala", "partFiles(") -> 1,
     // zone maps of a batch just written
-    ("ZoneMaps.scala", "partFiles(") -> 1,
-    // profiling tool
-    ("ProfilePurge.scala", "partFiles(") -> 1)
+    ("ZoneMaps.scala", "partFiles(") -> 1)
 
   test("manifest loads and directory listings stay behind the head snapshot") {
     val dir = Paths.get("src/main/scala")
