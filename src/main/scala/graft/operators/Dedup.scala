@@ -1111,16 +1111,13 @@ object Dedup {
       val refreshes = new java.util.concurrent.atomic.AtomicInteger(0)
       docs.where(col("doc_id") > cutoff)
         .repartition(4).write.parquet(s"$dir/staging")
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
-      val q = graft.streaming.StreamIngest.start(stream, t, s"$dir/ckpt",
-        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-        onBatch = (tab, _) => {
-          val cur = idx.get()
-          val next = cur.refresh(tab)
-          if (next ne cur) { idx.set(next); refreshes.incrementAndGet(); () }
-        })
-      q.awaitTermination()
+      graft.streaming.StreamIngest.replayStaged(s, docs.schema, dir)((stream, trigger) =>
+        graft.streaming.StreamIngest.start(stream, t, s"$dir/ckpt", trigger,
+          onBatch = (tab, _) => {
+            val cur = idx.get()
+            val next = cur.refresh(tab)
+            if (next ne cur) { idx.set(next); refreshes.incrementAndGet(); () }
+          }))
       val expect = bandsOf(signaturesOf(docs))
       // logical band rows only: the stored layout additionally carries
       // `_rowid` (physical-row addressing for takedown propagation)
@@ -1279,16 +1276,13 @@ object Dedup {
       val refreshes = new java.util.concurrent.atomic.AtomicInteger(0)
       docs.where(col("doc_id") > cutoff)
         .repartition(4).write.parquet(s"$dir/staging")
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
-      val q = graft.streaming.StreamIngest.start(stream, t, s"$dir/ckpt",
-        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-        onBatch = (tab, _) => {
-          val cur = idx.get()
-          val next = cur.refresh(tab)
-          if (next ne cur) { idx.set(next); refreshes.incrementAndGet(); () }
-        })
-      q.awaitTermination()
+      graft.streaming.StreamIngest.replayStaged(s, docs.schema, dir)((stream, trigger) =>
+        graft.streaming.StreamIngest.start(stream, t, s"$dir/ckpt", trigger,
+          onBatch = (tab, _) => {
+            val cur = idx.get()
+            val next = cur.refresh(tab)
+            if (next ne cur) { idx.set(next); refreshes.incrementAndGet(); () }
+          }))
       val expect = docs.select(col("doc_id"), explode(graft.functions.TextFunctions
         .rollingHashes(col("text"), repeatedSpanWindow, repeatedSpanStride)).as("gram_hash"))
       // logical window rows only (the layout also carries `_rowid`)
@@ -1329,12 +1323,9 @@ object Dedup {
       val t = graft.core.VectorTable.create(s, s"$dir/table")
       val idx = new java.util.concurrent.atomic.AtomicReference(
         SpanIndex.build(t, s"$dir/index"))
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
-      val q = graft.streaming.SpanScrubIngest.start(stream, t, idx,
-        spanScrubMaxPermille, s"$dir/ckpt",
-        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      q.awaitTermination()
+      graft.streaming.StreamIngest.replayStaged(s, docs.schema, dir)((stream, trigger) =>
+        graft.streaming.SpanScrubIngest.start(stream, t, idx,
+          spanScrubMaxPermille, s"$dir/ckpt", trigger))
       require(t.length > 0, "span ingest landed nothing")
     }
 
@@ -1431,12 +1422,8 @@ object Dedup {
       val t = graft.core.VectorTable.create(s, s"$dir/table")
       val idx = new java.util.concurrent.atomic.AtomicReference(
         LshIndex.build(t, s"$dir/index"))
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
-      val q = graft.streaming.LshDedupIngest.start(stream, t, idx,
-        s"$dir/ckpt",
-        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      q.awaitTermination()
+      graft.streaming.StreamIngest.replayStaged(s, docs.schema, dir)((stream, trigger) =>
+        graft.streaming.LshDedupIngest.start(stream, t, idx, s"$dir/ckpt", trigger))
       require(t.length > 0, "lsh ingest landed nothing")
     }
 
@@ -2908,11 +2895,8 @@ object Dedup {
       val source = Tables.documents(s, d)
       source.repartition(5).write.parquet(s"$dir/staging")
       val t = graft.core.VectorTable.create(s, s"$dir/table")
-      val stream = s.readStream.schema(source.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
-      val q = graft.streaming.StreamIngest.start(stream, t, s"$dir/ckpt",
-        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      q.awaitTermination()
+      graft.streaming.StreamIngest.replayStaged(s, source.schema, dir)((stream, trigger) =>
+        graft.streaming.StreamIngest.start(stream, t, s"$dir/ckpt", trigger))
       val landed = t.scan().select(source.columns.map(col): _*)
       val missing = source.exceptAll(landed).count()
       val extra = landed.exceptAll(source).count()

@@ -25,18 +25,8 @@ object Pipeline {
   def cleanCorpus(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
 
-    // 1. quality gate (same arithmetic as TextOps.qualityScores)
-    val scored = docs
-      .withColumn("toks", split(col("text"), " "))
-      .withColumn("n_tokens", size(col("toks")))
-      .withColumn("ttr",
-        size(array_distinct(col("toks"))).cast("double") / col("n_tokens").cast("double"))
-      .withColumn("mean_token_len",
-        (col("n_chars").cast("double") - (col("n_tokens").cast("double") - 1.0)) / col("n_tokens").cast("double"))
-      .withColumn("stop_ratio",
-        expr("CAST(size(filter(toks, t -> t IN ('the','a','of','and'))) AS DOUBLE)") / col("n_tokens").cast("double"))
-      .withColumn("quality_score",
-        col("ttr") * lit(2.0) + col("mean_token_len") * lit(0.1) - col("stop_ratio"))
+    // 1. quality gate (TextOps.qualityScores' arithmetic)
+    val scored = TextOps.withQualityColumns(docs.withColumn("toks", TextOps.tokens("text")))
       .where(col("quality_score") >= minQuality)
       .select("doc_id", "text", "n_tokens")
 
@@ -251,15 +241,11 @@ object Pipeline {
         IvfTableIndex.buildWith(embTable, s"$dir/index", Similarity.centroids(s, d)))
       val acc = new java.util.concurrent.atomic.AtomicReference(
         graft.streaming.RefineryIngest.Counts.zero)
-      val stream = s.readStream.schema(fused.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
-      val q = graft.streaming.RefineryIngest.start(stream, docsTable,
-        hashStore, spanStore, lexStore, embTable, spanIdx, lexIdx, idx,
-        evalIds, evalVecs,
-        minQuality,
-        Similarity.nearDupThreshold, s"$dir/ckpt", acc,
-        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      q.awaitTermination()
+      graft.streaming.StreamIngest.replayStaged(s, fused.schema, dir)((stream, trigger) =>
+        graft.streaming.RefineryIngest.start(stream, docsTable,
+          hashStore, spanStore, lexStore, embTable, spanIdx, lexIdx, idx,
+          evalIds, evalVecs, minQuality,
+          Similarity.nearDupThreshold, s"$dir/ckpt", acc, trigger = trigger))
       require(docsTable.length > 0, "refinery landed nothing")
       val c = acc.get()
       java.nio.file.Files.write(dir.resolve("counts.txt"),
@@ -306,17 +292,7 @@ object Pipeline {
       () => T1(nInput = nonEval.count()),
       () => {
         // stage 1-2 (batch replay of the stream's set-level semantics)
-        val gated = nonEval
-          .withColumn("toks", split(col("text"), " "))
-          .withColumn("n_tokens", size(col("toks")))
-          .withColumn("ttr",
-            size(array_distinct(col("toks"))).cast("double") / col("n_tokens").cast("double"))
-          .withColumn("mean_token_len",
-            (col("n_chars").cast("double") - (col("n_tokens").cast("double") - 1.0)) / col("n_tokens").cast("double"))
-          .withColumn("stop_ratio",
-            expr("CAST(size(filter(toks, t -> t IN ('the','a','of','and'))) AS DOUBLE)") / col("n_tokens").cast("double"))
-          .withColumn("quality_score",
-            col("ttr") * lit(2.0) + col("mean_token_len") * lit(0.1) - col("stop_ratio"))
+        val gated = TextOps.withQualityColumns(nonEval.withColumn("toks", TextOps.tokens("text")))
           .where(col("quality_score") >= minQuality)
           .select(col("doc_id"), col("text"))
           .localCheckpoint()

@@ -1442,16 +1442,13 @@ object Similarity {
       val refreshes = new java.util.concurrent.atomic.AtomicInteger(0)
       emb.where(col("vec_id") > cutoff)
         .repartition(4).write.parquet(s"$dir/staging")
-      val stream = s.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
-      val q = graft.streaming.StreamIngest.start(stream, t, s"$dir/ckpt",
-        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-        onBatch = (tab, _) => {
-          val cur = idx.get()
-          val next = cur.refresh(tab)
-          if (next ne cur) { idx.set(next); refreshes.incrementAndGet(); () }
-        })
-      q.awaitTermination()
+      graft.streaming.StreamIngest.replayStaged(s, emb.schema, dir)((stream, trigger) =>
+        graft.streaming.StreamIngest.start(stream, t, s"$dir/ckpt", trigger,
+          onBatch = (tab, _) => {
+            val cur = idx.get()
+            val next = cur.refresh(tab)
+            if (next ne cur) { idx.set(next); refreshes.incrementAndGet(); () }
+          }))
       val expect = ivfAssign(s, d).select(col("vec_id"), col("cell"))
       val got = idx.get().data.select(col("vec_id"), col("cell"))
       val missing = expect.exceptAll(got).count()
@@ -1542,12 +1539,9 @@ object Similarity {
       val t = graft.core.VectorTable.create(s, s"$dir/table")
       val idx = new java.util.concurrent.atomic.AtomicReference(
         IvfTableIndex.buildWith(t, s"$dir/index", centroids(s, d)))
-      val stream = s.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
-      val q = graft.streaming.SemanticDedupIngest.start(stream, t, idx,
-        nearDupThreshold, s"$dir/ckpt",
-        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      q.awaitTermination()
+      graft.streaming.StreamIngest.replayStaged(s, emb.schema, dir)((stream, trigger) =>
+        graft.streaming.SemanticDedupIngest.start(stream, t, idx,
+          nearDupThreshold, s"$dir/ckpt", trigger))
       require(t.length > 0, "semantic ingest landed nothing")
     }
 
@@ -1882,13 +1876,10 @@ object Similarity {
       val maxId = emb.agg(max(col("vec_id"))).head.getLong(0)
       graft.streaming.StreamIngest.stageIdSpans(corpus, "vec_id", maxId, dir)
       val t = graft.core.VectorTable.create(s, s"$dir/table")
-      val stream = s.readStream.schema(corpus.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/staging")
-      val q = graft.streaming.ContaminationIngest.start(stream, t,
-        evalRows.map(_.getLong(0)), evalRows.map(_.getSeq[Float](1).toArray),
-        s"$dir/ckpt",
-        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      q.awaitTermination()
+      graft.streaming.StreamIngest.replayStaged(s, corpus.schema, dir)((stream, trigger) =>
+        graft.streaming.ContaminationIngest.start(stream, t,
+          evalRows.map(_.getLong(0)), evalRows.map(_.getSeq[Float](1).toArray),
+          s"$dir/ckpt", trigger))
       require(t.length > 0, "decontamination ingest landed nothing")
     }
 

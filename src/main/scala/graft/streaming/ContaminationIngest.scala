@@ -21,6 +21,17 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object ContaminationIngest {
 
+  /** The contamination gate's kernel: `batch` (vec_id, embedding, …)
+    * minus the rows within the near-dup threshold of an eval vector — one
+    * map-only pass of the fused kernel, then an anti-join on `vec_id`.
+    */
+  def cleanRows(batch: DataFrame, evalIds: Array[Long],
+                evalVecs: Array[Array[Float]]): DataFrame = {
+    val contaminated = Similarity.semanticContaminationOf(
+      batch.select(col("vec_id"), col("embedding")), evalIds, evalVecs)
+    batch.join(contaminated.select(col("vec_id")), Seq("vec_id"), "left_anti")
+  }
+
   /** One decontaminated batch append; returns (kept, dropped). */
   def appendClean(table: VectorTable, batch: DataFrame,
                   evalIds: Array[Long], evalVecs: Array[Array[Float]],
@@ -28,10 +39,7 @@ object ContaminationIngest {
     if (streamBatchId.exists(_ <= table.manifest.streamBatch)) return (0L, 0L)
     val total = batch.count()
     if (total == 0) return (0L, 0L)
-    val contaminated = Similarity.semanticContaminationOf(
-      batch.select(col("vec_id"), col("embedding")), evalIds, evalVecs)
-    val kept = batch.select(col("vec_id"), col("embedding"))
-      .join(contaminated.select(col("vec_id")), Seq("vec_id"), "left_anti")
+    val kept = cleanRows(batch.select(col("vec_id"), col("embedding")), evalIds, evalVecs)
       .localCheckpoint()
     val nKept = kept.count()
     if (nKept > 0) table.append(kept, streamBatchId = streamBatchId)
@@ -43,12 +51,7 @@ object ContaminationIngest {
             evalIds: Array[Long], evalVecs: Array[Array[Float]],
             checkpointDir: String,
             trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendClean(table, batch, evalIds, evalVecs, streamBatchId = Some(batchId)); ()
-      }
-      .start()
+    StreamIngest.foreachBatch(stream, checkpointDir, trigger) { (batch, batchId) =>
+      appendClean(table, batch, evalIds, evalVecs, streamBatchId = Some(batchId)); ()
+    }
 }

@@ -83,12 +83,7 @@ object DedupIngest {
   def start(stream: DataFrame, table: VectorTable, keyCols: Seq[String],
             checkpointDir: String,
             trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendDeduped(table, batch, keyCols, streamBatchId = Some(batchId)); ()
-      }
-      .start()
+    StreamIngest.foreachBatch(stream, checkpointDir, trigger) { (batch, batchId) =>
+      appendDeduped(table, batch, keyCols, streamBatchId = Some(batchId)); ()
+    }
 }

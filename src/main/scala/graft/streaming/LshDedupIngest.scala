@@ -44,51 +44,37 @@ object LshDedupIngest {
     */
   val tau: Double = 0.5
 
-  /** One lexically-gated batch append; returns (kept, dropped). */
-  def appendGated(table: VectorTable,
-                  idx: java.util.concurrent.atomic.AtomicReference[LshIndex],
-                  batch: DataFrame,
-                  streamBatchId: Option[Long] = None): (Long, Long) = {
-    if (streamBatchId.exists(_ <= table.manifest.streamBatch)) return (0L, 0L)
-    val stats = batch.agg(count(lit(1)), min(col("doc_id"))).head()
-    val total = stats.getLong(0)
-    if (total == 0) return (0L, 0L)
-    val minBatchId = stats.getLong(1)
-    // ordered arrival keeps the committed doc on every pair's smaller-id
-    // side — what lets the oracle replay the recurrence with one
-    // direction-free join (and what every other gate already enforces)
-    if (table.length > 0L) {
-      val committedMax = table.scan()
-        .agg(coalesce(max(col("doc_id")), lit(-1L))).head().getLong(0)
-      require(minBatchId > committedMax,
-        s"lsh ingest requires id-ordered arrival: batch min doc_id " +
-          s"$minBatchId <= committed max $committedMax")
-    }
-    val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
-    val batchBands = Dedup.bandRowsFor(b)
-    val committedBands = idx.get().bands
-    // bipartite banding: committed bands × batch bands only, blocked per
-    // bucket (a boilerplate batch cannot quadratically expand a hot
-    // bucket); least/greatest canonicalization + id order ⇒ doc_a is
-    // always the committed doc, doc_b the batch doc
+  /** The lexical gate's kernel: the `doc_id`s of `batch` (doc_id, text)
+    * that band against `committedBands` — the caller's committed view of
+    * the [[LshIndex]] band rows — and Jaccard-verify ≥ [[tau]] against
+    * that committed doc's text in `committed`.
+    *
+    * Bipartite banding: committed bands × batch bands only, blocked per
+    * bucket (a boilerplate batch cannot quadratically expand a hot
+    * bucket); least/greatest canonicalization + id order ⇒ doc_a is
+    * always the committed doc, doc_b the batch doc. Only docs in some
+    * candidate pair get their shingle sets computed.
+    */
+  def droppedIds(batch: DataFrame, committedBands: DataFrame,
+                 committed: VectorTable): DataFrame = {
     val cand = Dedup.deltaPairsBlockedFor(
       committedBands.select(col("band"), col("h1"), col("h2"), col("doc_id")),
-      batchBands.select(col("band"), col("h1"), col("h2"), col("doc_id")),
+      Dedup.bandRowsFor(batch).select(col("band"), col("h1"), col("h2"), col("doc_id")),
       Seq("band", "h1", "h2")).localCheckpoint()
-    val shB = b
+    val shB = batch
       .join(cand.select(col("doc_b").as("doc_id")).distinct(), Seq("doc_id"), "left_semi")
       .select(col("doc_id"),
         graft.functions.TextFunctions.shingleHashes(col("text")).as("sh"))
     // an EMPTY landed table carries no data columns yet (batch 0) — the
     // committed side is then the typed empty frame, same as its band rows
     val committedDocs =
-      if (table.length == 0L) b.limit(0)
-      else table.scan().select(col("doc_id"), col("text"))
+      if (committed.length == 0L) batch.limit(0)
+      else committed.scan().select(col("doc_id"), col("text"))
     val shA = committedDocs
       .join(cand.select(col("doc_a").as("doc_id")).distinct(), Seq("doc_id"), "left_semi")
       .select(col("doc_id"),
         graft.functions.TextFunctions.shingleHashes(col("text")).as("sh"))
-    val dropped = cand
+    cand
       .join(shA.select(col("doc_id").as("doc_a"), col("sh").as("sa")), Seq("doc_a"))
       .join(shB.select(col("doc_id").as("doc_b"), col("sh").as("sb")), Seq("doc_b"))
       .withColumn("inter", graft.functions.TextFunctions
@@ -98,8 +84,25 @@ object LshDedupIngest {
       // is no evidence of duplication, same stance as jaccardVerifiedPairs
       .where(col("inter").cast("double") / col("uni").cast("double") >= tau)
       .select(col("doc_b").as("doc_id")).distinct()
+  }
+
+  /** One lexically-gated batch append; returns (kept, dropped). */
+  def appendGated(table: VectorTable,
+                  idx: java.util.concurrent.atomic.AtomicReference[LshIndex],
+                  batch: DataFrame,
+                  streamBatchId: Option[Long] = None): (Long, Long) = {
+    if (streamBatchId.exists(_ <= table.manifest.streamBatch)) return (0L, 0L)
+    val stats = batch.agg(count(lit(1)), min(col("doc_id"))).head()
+    val total = stats.getLong(0)
+    if (total == 0) return (0L, 0L)
+    // ordered arrival keeps the committed doc on every pair's smaller-id
+    // side — what lets the oracle replay the recurrence with one
+    // direction-free join
+    if (table.length > 0L)
+      StreamIngest.requireOrderedArrival("lsh", table.scan(), "doc_id", stats.getLong(1))
+    val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
     val keptRows = batch
-      .join(dropped, Seq("doc_id"), "left_anti")
+      .join(droppedIds(b, idx.get().bands, table), Seq("doc_id"), "left_anti")
       .localCheckpoint()
     val nKept = keptRows.count()
     if (nKept > 0) {
@@ -120,12 +123,7 @@ object LshDedupIngest {
             idx: java.util.concurrent.atomic.AtomicReference[LshIndex],
             checkpointDir: String,
             trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendGated(table, idx, batch, streamBatchId = Some(batchId)); ()
-      }
-      .start()
+    StreamIngest.foreachBatch(stream, checkpointDir, trigger) { (batch, batchId) =>
+      appendGated(table, idx, batch, streamBatchId = Some(batchId)); ()
+    }
 }

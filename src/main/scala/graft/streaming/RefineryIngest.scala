@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.core.VectorTable
-import graft.operators.{Dedup, IvfTableIndex, LshIndex, Maintenance, Similarity, SpanIndex}
+import graft.operators.{Dedup, IvfTableIndex, LshIndex, Maintenance, SpanIndex}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -24,23 +24,23 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *      not just landed rows — so a doc dropped downstream still
   *      suppresses its later exact copies (the sequential min-id-per-hash
   *      semantics the batch oracle replays);
-  *   3. SPAN COVERAGE (rolling-hash state, round 15): a doc whose windows
-  *      are ≥ [[graft.operators.Dedup.spanScrubMaxPermille]]‰ covered by
-  *      spans already seen at this gate is boilerplate recombination and
-  *      drops — one map-only rolling-hash pass + one hash-keyed semi-join,
-  *      which is why it sits right after the exact hash join. The span
-  *      store records every SPAN-STAGE SURVIVOR (the hash store's stance):
-  *      boilerplate seen once gates every later recombination even if the
-  *      doc itself later dies downstream, and the stage stays a pure
-  *      function of (batch, survivors-so-far) the oracle can replay;
-  *   4. LEXICAL NEAR-DUP (MinHash-LSH state, round 15): a doc that bands
-  *      against the committed lexical index AND Jaccard-verifies ≥ 1/2
-  *      against an already-seen doc drops — [[LshDedupIngest]]'s gate
-  *      inside the composed path. The lexical store records every
-  *      LEXICAL-STAGE SURVIVOR (same stance as the hash and span
-  *      stores), keeping the stage a pure recurrence the oracle replays;
-  *   5. DECONTAMINATION (stateless, map-only): the fixed eval matrix
-  *      rides through the fused kernel, one codegen pass, no join;
+  *   3. SPAN COVERAGE (rolling-hash state): [[SpanScrubIngest.keptIds]]
+  *      at [[graft.operators.Dedup.spanScrubMaxPermille]]‰ against the
+  *      span index's windows of docs below the batch — one map-only
+  *      rolling-hash pass + one hash-keyed semi-join, which is why it sits
+  *      right after the exact hash join. The span store records every
+  *      SPAN-STAGE SURVIVOR (the hash store's stance): boilerplate seen
+  *      once gates every later recombination even if the doc itself later
+  *      dies downstream, and the stage stays a pure function of (batch,
+  *      survivors-so-far) the oracle can replay;
+  *   4. LEXICAL NEAR-DUP (MinHash-LSH state): [[LshDedupIngest.droppedIds]]
+  *      against the lexical index's band rows of docs below the batch and
+  *      the lexical store's text. The lexical store records every
+  *      LEXICAL-STAGE SURVIVOR (same stance as the hash and span stores),
+  *      keeping the stage a pure recurrence the oracle replays;
+  *   5. DECONTAMINATION (stateless, map-only):
+  *      [[ContaminationIngest.cleanRows]] against the fixed eval matrix —
+  *      one fused-kernel pass and an anti-join on vec_id;
   *   6. SEMANTIC DEDUP (committed-corpus state): the thinned batch lands
   *      through [[SemanticDedupIngest.appendDeduped]] unchanged — in-plan
   *      committed coverage, gated driver sweep, distributed MIS fallback;
@@ -127,13 +127,8 @@ object RefineryIngest {
     // then legitimately holds THIS batch's ids, and the invariant was
     // checked when the batch first executed.
     if (hashStore.length > 0L &&
-        !streamBatchId.exists(_ <= hashStore.manifest.streamBatch)) {
-      val hashMax = hashStore.scan()
-        .agg(coalesce(max(col("vec_id")), lit(-1L))).head().getLong(0)
-      require(minBatchId > hashMax,
-        s"refinery ingest requires id-ordered arrival: batch min vec_id " +
-          s"$minBatchId <= hash-store max $hashMax")
-    }
+        !streamBatchId.exists(_ <= hashStore.manifest.streamBatch))
+      StreamIngest.requireOrderedArrival("refinery", hashStore.scan(), "vec_id", minBatchId)
 
     // 1. quality — stateless projection + filter
     val scored = withQuality(batch)
@@ -166,26 +161,14 @@ object RefineryIngest {
     val newHashes = reps.select(col("vec_id"), col("content_hash"))
     if (nScored > 0) hashStore.append(newHashes, streamBatchId = streamBatchId)
 
-    // 3. span coverage — one rolling-hash pass over the exact survivors,
-    //    one semi-join against spans seen at this gate BEFORE this batch
-    val wins = novel.select(col("vec_id"),
-      explode_outer(graft.functions.TextFunctions.rollingHashes(
-        col("text"), Dedup.repeatedSpanWindow, Dedup.repeatedSpanStride)).as("gram_hash"))
-    val committedSpans = spanIdx.get().windows
-      .where(col("doc_id") < minBatchId)
-      .select("gram_hash").distinct()
-    val coveredWins = wins.where(col("gram_hash").isNotNull)
-      .join(committedSpans, Seq("gram_hash"), "left_semi")
-      .groupBy("vec_id").agg(count(lit(1)).as("n_dup"))
-    val spanVerdicts = wins
-      .groupBy("vec_id")
-      .agg(sum(when(col("gram_hash").isNotNull, 1L).otherwise(0L)).as("n_windows"))
-      .join(coveredWins, Seq("vec_id"), "left")
-      .withColumn("n_dup", coalesce(col("n_dup"), lit(0L)))
-      .withColumn("keep", col("n_windows") === 0L ||
-        expr(s"1000 * n_dup DIV n_windows") < Dedup.spanScrubMaxPermille)
+    // 3. span coverage — the span kernel over the exact survivors, against
+    //    spans seen at this gate BEFORE this batch
     val spanKept = novel
-      .join(spanVerdicts.where(col("keep")).select("vec_id"), Seq("vec_id"), "left_semi")
+      .join(SpanScrubIngest.keptIds(
+          novel.select(col("vec_id").as("doc_id"), col("text")),
+          spanIdx.get().windows.where(col("doc_id") < minBatchId),
+          Dedup.spanScrubMaxPermille).select(col("doc_id").as("vec_id")),
+        Seq("vec_id"), "left_semi")
       .localCheckpoint()
     val nSpanKept = spanKept.count()
     // record every span-stage survivor's windows (self-guarded append +
@@ -196,37 +179,15 @@ object RefineryIngest {
       spanIdx.set(spanIdx.get().refresh(spanStore))
     }
 
-    // 4. lexical near-dup — batch bands × the committed lexical index
-    //    (rows below minBatchId only: the before-this-batch view), Jaccard
-    //    verification sized to the candidates; survivors are recorded in
-    //    the lexical store whatever later stages decide
-    val batchBands = Dedup.bandRowsFor(
-      spanKept.select(col("vec_id").as("doc_id"), col("text")))
-    val committedBands = lexIdx.get().bands.where(col("doc_id") < minBatchId)
-    val lexCand = Dedup.deltaPairsBlockedFor(
-      committedBands.select(col("band"), col("h1"), col("h2"), col("doc_id")),
-      batchBands.select(col("band"), col("h1"), col("h2"), col("doc_id")),
-      Seq("band", "h1", "h2")).localCheckpoint()
-    val shB = spanKept
-      .join(lexCand.select(col("doc_b").as("vec_id")).distinct(), Seq("vec_id"), "left_semi")
-      .select(col("vec_id").as("doc_id"),
-        graft.functions.TextFunctions.shingleHashes(col("text")).as("sh"))
-    val shA =
-      (if (lexStore.length == 0L)
-         spanKept.select(col("vec_id").as("doc_id"), col("text")).limit(0)
-       else lexStore.scan().select(col("doc_id"), col("text")))
-        .join(lexCand.select(col("doc_a").as("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-        .select(col("doc_id"),
-          graft.functions.TextFunctions.shingleHashes(col("text")).as("sh"))
-    val lexDropped = lexCand
-      .join(shA.select(col("doc_id").as("doc_a"), col("sh").as("sa")), Seq("doc_a"))
-      .join(shB.select(col("doc_id").as("doc_b"), col("sh").as("sb")), Seq("doc_b"))
-      .withColumn("inter", graft.functions.TextFunctions
-        .sortedIntersectCount(col("sa"), col("sb")))
-      .withColumn("uni", expr("size(sa) + size(sb) - inter"))
-      .where(col("inter").cast("double") / col("uni").cast("double") >= LshDedupIngest.tau)
-      .select(col("doc_b").as("vec_id")).distinct()
-    val lexKept = spanKept.join(lexDropped, Seq("vec_id"), "left_anti")
+    // 4. lexical near-dup — the lexical kernel against the committed band
+    //    rows below minBatchId (the before-this-batch view); survivors are
+    //    recorded in the lexical store whatever later stages decide
+    val lexKept = spanKept
+      .join(LshDedupIngest.droppedIds(
+          spanKept.select(col("vec_id").as("doc_id"), col("text")),
+          lexIdx.get().bands.where(col("doc_id") < minBatchId),
+          lexStore).select(col("doc_id").as("vec_id")),
+        Seq("vec_id"), "left_anti")
       .localCheckpoint()
     val nLexKept = lexKept.count()
     if (nLexKept > 0) {
@@ -235,11 +196,9 @@ object RefineryIngest {
       lexIdx.set(lexIdx.get().refresh(lexStore))
     }
 
-    // 5. decontamination — map-only pass against the fixed eval matrix
-    val contaminated = Similarity.semanticContaminationOf(
-      lexKept.select(col("vec_id"), col("embedding")), evalIds, evalVecs)
-      .select(col("vec_id"))
-    val clean = lexKept.join(contaminated, Seq("vec_id"), "left_anti")
+    // 5. decontamination — the contamination kernel against the fixed
+    //    eval matrix
+    val clean = ContaminationIngest.cleanRows(lexKept, evalIds, evalVecs)
       .select(col("vec_id"), col("text"), col("embedding"))
       .localCheckpoint()
     val nClean = clean.count()
@@ -339,20 +298,15 @@ object RefineryIngest {
     // appends self-guard) — adding the replayed Counts again would
     // double-count them in `acc`. One add per batch id.
     val lastAccumulated = new java.util.concurrent.atomic.AtomicLong(-1L)
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val c = appendRefined(docsTable, hashStore, spanStore, lexStore,
-          embTable, spanIdx, lexIdx, idx, batch, evalIds, evalVecs,
-          minQuality, threshold, streamBatchId = Some(batchId))
-        if (batchId > lastAccumulated.get()) {
-          acc.updateAndGet(_ + c)
-          lastAccumulated.set(batchId)
-        }
-        ()
+    StreamIngest.foreachBatch(stream, checkpointDir, trigger) { (batch, batchId) =>
+      val c = appendRefined(docsTable, hashStore, spanStore, lexStore,
+        embTable, spanIdx, lexIdx, idx, batch, evalIds, evalVecs,
+        minQuality, threshold, streamBatchId = Some(batchId))
+      if (batchId > lastAccumulated.get()) {
+        acc.updateAndGet(_ + c)
+        lastAccumulated.set(batchId)
       }
-      .start()
+      ()
+    }
   }
 }

@@ -100,15 +100,11 @@ object SemanticDedupIngest {
     val stats = batch.agg(count(lit(1)), min(col("vec_id"))).head()
     val total = stats.getLong(0)
     if (total == 0) return (0L, 0L)
-    val minBatchId = stats.getLong(1)
     val cur = idx.get()
-    // The greedy-MIS contract (scaladoc above) needs committed ids below
-    // batch ids; parquet column stats make this max a footer-cheap agg.
-    val committedMax = cur.data.agg(coalesce(max(col("vec_id")), lit(-1L)))
-      .head().getLong(0)
-    require(minBatchId > committedMax,
-      s"semantic ingest requires id-ordered arrival: batch min vec_id " +
-        s"$minBatchId <= committed max $committedMax")
+    // the greedy-MIS contract (scaladoc above) needs committed ids below
+    // batch ids
+    val committedMax = StreamIngest.requireOrderedArrival("semantic", cur.data,
+      "vec_id", stats.getLong(1))
     val sims = Similarity.centroidSimsColumn(cur.centroids)
     val assignedAll = batch.select(col("vec_id"), col("embedding"))
       .withColumn("sims", sims)
@@ -349,12 +345,7 @@ object SemanticDedupIngest {
             idx: java.util.concurrent.atomic.AtomicReference[IvfTableIndex],
             threshold: Double, checkpointDir: String,
             trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendDeduped(table, idx, batch, threshold, streamBatchId = Some(batchId)); ()
-      }
-      .start()
+    StreamIngest.foreachBatch(stream, checkpointDir, trigger) { (batch, batchId) =>
+      appendDeduped(table, idx, batch, threshold, streamBatchId = Some(batchId)); ()
+    }
 }

@@ -31,6 +31,27 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object SpanScrubIngest {
 
+  /** The span gate's kernel: the `doc_id`s of `batch` (doc_id, text)
+    * whose rolling-hash windows are under `maxPermille`‰ covered by the
+    * `gram_hash` rows of `committed` — the caller's committed view. A doc
+    * with no window is kept.
+    */
+  def keptIds(batch: DataFrame, committed: DataFrame, maxPermille: Long): DataFrame = {
+    val wins = batch.select(col("doc_id"),
+      explode_outer(graft.functions.TextFunctions.rollingHashes(
+        col("text"), Dedup.repeatedSpanWindow, Dedup.repeatedSpanStride)).as("gram_hash"))
+    val covered = wins.where(col("gram_hash").isNotNull)
+      .join(committed.select("gram_hash").distinct(), Seq("gram_hash"), "left_semi")
+      .groupBy("doc_id").agg(count(lit(1)).as("n_dup"))
+    wins
+      .groupBy("doc_id")
+      .agg(sum(when(col("gram_hash").isNotNull, 1L).otherwise(0L)).as("n_windows"))
+      .join(covered, Seq("doc_id"), "left")
+      .withColumn("n_dup", coalesce(col("n_dup"), lit(0L)))
+      .where(col("n_windows") === 0L || expr("1000 * n_dup DIV n_windows") < maxPermille)
+      .select("doc_id")
+  }
+
   /** One span-gated batch append; returns (kept, dropped). */
   def appendScrubbed(table: VectorTable,
                      idx: java.util.concurrent.atomic.AtomicReference[SpanIndex],
@@ -39,22 +60,8 @@ object SpanScrubIngest {
     if (streamBatchId.exists(_ <= table.manifest.streamBatch)) return (0L, 0L)
     val total = batch.count()
     if (total == 0) return (0L, 0L)
-    val wins = batch.select(col("doc_id"),
-      explode_outer(graft.functions.TextFunctions.rollingHashes(
-        col("text"), Dedup.repeatedSpanWindow, Dedup.repeatedSpanStride)).as("gram_hash"))
-    val committed = idx.get().windows.select("gram_hash").distinct()
-    val covered = wins.where(col("gram_hash").isNotNull)
-      .join(committed, Seq("gram_hash"), "left_semi")
-      .groupBy("doc_id").agg(count(lit(1)).as("n_dup"))
-    val verdicts = wins
-      .groupBy("doc_id")
-      .agg(sum(when(col("gram_hash").isNotNull, 1L).otherwise(0L)).as("n_windows"))
-      .join(covered, Seq("doc_id"), "left")
-      .withColumn("n_dup", coalesce(col("n_dup"), lit(0L)))
-      .withColumn("keep", col("n_windows") === 0L ||
-        expr("1000 * n_dup DIV n_windows") < maxPermille)
     val keptRows = batch
-      .join(verdicts.where(col("keep")).select("doc_id"), Seq("doc_id"), "left_semi")
+      .join(keptIds(batch, idx.get().windows, maxPermille), Seq("doc_id"), "left_semi")
       .localCheckpoint()
     val nKept = keptRows.count()
     if (nKept > 0) {
@@ -75,12 +82,7 @@ object SpanScrubIngest {
             idx: java.util.concurrent.atomic.AtomicReference[SpanIndex],
             maxPermille: Long, checkpointDir: String,
             trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendScrubbed(table, idx, batch, maxPermille, streamBatchId = Some(batchId)); ()
-      }
-      .start()
+    StreamIngest.foreachBatch(stream, checkpointDir, trigger) { (batch, batchId) =>
+      appendScrubbed(table, idx, batch, maxPermille, streamBatchId = Some(batchId)); ()
+    }
 }

@@ -2,9 +2,10 @@ package graft.streaming
 
 import graft.core.{Fs, VectorTable}
 import java.nio.file.{Files, Path}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, lit, max}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming ingestion into a [[VectorTable]] — the reference's
   * write-behind pipeline (unbounded producer → bounded buffer → threshold/
@@ -41,8 +42,8 @@ object StreamIngest {
     * auto-optimize behavior a production ingest pipeline needs.
     * Compaction commits don't advance the recorded stream batch id, so
     * replay idempotency is unaffected.
-    */
-  /** `onBatch` runs at the END of every micro-batch, after the append,
+    *
+    * `onBatch` runs at the END of every micro-batch, after the append,
     * optional compaction and view refreshes — the hook for maintaining
     * derived state that lives OUTSIDE the table (e.g. an incremental
     * [[graft.operators.LshIndex]] brought up to the new head per batch).
@@ -59,28 +60,54 @@ object StreamIngest {
       maintainViews: Seq[graft.core.MaterializedAggView] = Nil,
       onBatch: (VectorTable, Long) => Unit = (_, _) => ()
   ): StreamingQuery =
+    foreachBatch(stream, checkpointDir, trigger) { (batch, batchId) =>
+      if (!batch.isEmpty) { table.append(batch, streamBatchId = Some(batchId)); () }
+      if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0 &&
+        table.manifest.batches.size > 1) { table.compact(); () }
+      // automatic threshold maintenance (round 16): merge the
+      // small-batch tail when it exceeds policy — O(tail), never the
+      // O(table) full rewrite, so it is safe to leave ON for every
+      // long-running ingest (graft.operators.Maintenance)
+      graft.operators.Maintenance.maintainTable(table)
+      // Streaming IVM: bring maintained rollups up to the new head inside
+      // the micro-batch loop. refresh() is a basis-version no-op for
+      // replayed batches (idempotent append → unchanged head), so the
+      // views inherit the ingest's effective exactly-once semantics;
+      // each refresh costs O(batch + |view|), never a base rescan.
+      maintainViews.foreach(_.refresh())
+      onBatch(table, batchId)
+    }
+
+  /** The one micro-batch driver every ingest gate starts: an append-mode
+    * query on `trigger`, checkpointed under `checkpointDir`, that hands
+    * each micro-batch and its stream batch id to `body`.
+    */
+  def foreachBatch(stream: DataFrame, checkpointDir: String, trigger: Trigger)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
     stream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) { table.append(batch, streamBatchId = Some(batchId)); () }
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0 &&
-          table.manifest.batches.size > 1) { table.compact(); () }
-        // automatic threshold maintenance (round 16): merge the
-        // small-batch tail when it exceeds policy — O(tail), never the
-        // O(table) full rewrite, so it is safe to leave ON for every
-        // long-running ingest (graft.operators.Maintenance)
-        graft.operators.Maintenance.maintainTable(table)
-        // Streaming IVM: bring maintained rollups up to the new head inside
-        // the micro-batch loop. refresh() is a basis-version no-op for
-        // replayed batches (idempotent append → unchanged head), so the
-        // views inherit the ingest's effective exactly-once semantics;
-        // each refresh costs O(batch + |view|), never a base rescan.
-        maintainViews.foreach(_.refresh())
-        onBatch(table, batchId)
-      }
+      .foreachBatch(body)
       .start()
+
+  /** The ordered-arrival check of the gates whose verdicts read a
+    * committed-before-this-batch view: the batch's smallest `idCol` must
+    * exceed every committed one (committed rows are never dropped
+    * retroactively, so an earlier id arriving late would break the
+    * smaller-id-side invariant the gate's replay relies on). Returns the
+    * committed max, -1 when `committed` is empty; parquet column stats
+    * make it a footer-cheap agg.
+    */
+  def requireOrderedArrival(gate: String, committed: DataFrame, idCol: String,
+                            batchMin: Long): Long = {
+    val committedMax = committed.agg(coalesce(max(col(idCol)), lit(-1L)))
+      .head().getLong(0)
+    require(batchMin > committedMax,
+      s"$gate ingest requires id-ordered arrival: batch min $idCol " +
+        s"$batchMin <= committed max $committedMax")
+    committedMax
+  }
 
   /** Stage `df` for a one-file-per-micro-batch replay: ids [0, `maxId`]
     * of `idCol` are cut into four sequential ranges, each written as ONE
@@ -103,4 +130,13 @@ object StreamIngest {
       Files.move(part, staging.resolve(f"f$i%02d.parquet"))
     }
   }
+
+  /** Replay `dir/staging` one parquet file per micro-batch through the
+    * query `start` builds on the stream, and wait until every staged file
+    * has landed.
+    */
+  def replayStaged(s: SparkSession, schema: StructType, dir: Path)(
+      start: (DataFrame, Trigger) => StreamingQuery): Unit =
+    start(s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+      .parquet(s"$dir/staging"), Trigger.AvailableNow()).awaitTermination()
 }

@@ -12,6 +12,8 @@ import org.apache.spark.sql.functions._
   *     vector) lands nothing, with the drop charged to the right stage;
   *   - an all-low-quality batch lands nothing at the quality stage;
   *   - a replayed streamBatchId is a complete no-op;
+  *   - a batch whose min id is at or below the hash store's max throws
+  *     before any store grows;
   *   - cross-batch exact dedup suppresses a later copy of a doc the
   *     SEMANTIC stage dropped earlier (the hash store records quality
   *     survivors, not landed rows).
@@ -186,6 +188,27 @@ class RefineryStressSpec extends SparkSpec {
     // the lexical store records survivors only
     val lexDocs = lex.scan().select("doc_id").collect().map(_.getLong(0)).toSet
     assert(lexDocs == Set(0L))
+  }
+
+  test("out-of-order arrival throws before any store grows") {
+    val (docs, hashes, spans, lex, emb, spanIdx, lexIdx, idx) = freshStores("order")
+    RefineryIngest.appendRefined(docs, hashes, spans, lex, emb, spanIdx, lexIdx, idx,
+      fused(Seq((10L, goodText("a"), Array(1f, 0f, 0f)))),
+      evalIds, evalVecs, graft.operators.Pipeline.minQuality,
+      0.35, streamBatchId = Some(0L))
+    val stores = Seq(docs, hashes, spans, lex, emb)
+    val before = stores.map(_.length)
+    assert(before == Seq(1L, 1L, 1L, 1L, 1L))
+    // batch 2's min vec_id (5) is at or below the hash store's max (10)
+    val e = intercept[IllegalArgumentException] {
+      RefineryIngest.appendRefined(docs, hashes, spans, lex, emb, spanIdx, lexIdx, idx,
+        fused(Seq((5L, goodText("b"), Array(0f, 1f, 0f)),
+          (12L, goodText("c"), Array(0f, 1f, 0f)))),
+        evalIds, evalVecs, graft.operators.Pipeline.minQuality,
+        0.35, streamBatchId = Some(1L))
+    }
+    assert(e.getMessage.contains("id-ordered arrival"), e.getMessage)
+    assert(stores.map(_.length) == before, "no store may grow")
   }
 
   test("exact dedup suppresses a copy of a doc the semantic stage dropped") {
