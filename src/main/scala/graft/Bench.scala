@@ -52,8 +52,26 @@ object Bench {
     * to produce the per-round second scale point (BENCH_DETAIL_sf1.json
     * over a 10×-replica corpus) with the SAME dim machinery and names as
     * the official sf0.1 run.
+    *
+    * Machine-tier [[graft.core.Memo]] builds land in a fresh directory of
+    * this run's own, deleted at exit: every `*_build` dim pays its build in
+    * every run, so the `value` total no longer depends on what earlier
+    * runs left under `java.io.tmpdir` (two back-to-back runs used to
+    * report 323 s, then 113 s).
     */
   def main(args: Array[String]): Unit = {
+    val memoRoot = java.nio.file.Files.createTempDirectory("graft-bench-memo")
+    val priorMemoRoot = graft.core.Memo.machineRoot
+    graft.core.Memo.machineRoot = memoRoot
+    try run(args)
+    finally {
+      graft.core.Memo.machineRoot = priorMemoRoot
+      try graft.core.Fs.deleteTree(memoRoot)
+      catch { case scala.util.control.NonFatal(_) => () }
+    }
+  }
+
+  private def run(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val detailFile = if (args.length > 1) args(1) else "BENCH_DETAIL.json"

@@ -10,6 +10,18 @@ import org.apache.spark.sql.SparkSession
   * runs). On a 1000-executor cluster the same code runs with a higher
   * initial partition count and AQE coalesces down — nothing here assumes
   * single-node execution.
+  *
+  * Generated code: `spark.sql.codegen.cache.maxEntries` is 1024, sized to
+  * the engine's measured working set (~600-700 classes for one
+  * llm_pipeline run) with headroom, so a class compiles once per JVM
+  * instead of once per pass (traced llm_pipeline: Janino 10.1 s -> 1.4 s).
+  * The cache is JVM-wide and sized by the first session that generates
+  * code; later sessions share it. Its heap is funded by keeping 50 jobs,
+  * stages and SQL executions in the status store instead of 1000: on
+  * llm_pipeline the bigger cache alone retained ~11 MiB more heap (+12 %),
+  * the smaller status store frees ~8.8 MiB, and the two together retain
+  * ~2 MiB (+2 %) more than the 100-entry default. `GRAFT_SPARK_CONF`
+  * overrides both, like every default here.
   */
 object GraftSession {
 
@@ -66,6 +78,14 @@ object GraftSession {
     .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    // Generated classes compile once per JVM: the default cache of 100
+    // held less than one llm_pipeline pass (sizing in the scaladoc above).
+    .config("spark.sql.codegen.cache.maxEntries", "1024")
+    // Pays for that cache's heap: nothing in the engine reads the live
+    // status store (the UI is off; telemetry comes from listeners).
+    .config("spark.ui.retainedJobs", "50")
+    .config("spark.ui.retainedStages", "50")
+    .config("spark.sql.ui.retainedExecutions", "50")
     // The driver's events table stores parquet TIMESTAMP(NANOS), which Spark
     // has no native type for — read it as nanos-since-epoch LONG and let
     // Tables.events convert to TimestampType at microsecond precision.

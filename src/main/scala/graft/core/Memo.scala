@@ -18,7 +18,7 @@ import org.apache.spark.sql.SparkSession
   *    is recomputed.
   *  - MACHINE tier ([[machine]]): a directory built once per machine and
   *    reused across JVMs. It holds only paths: the build lands in a fresh
-  *    UUID dir under `java.io.tmpdir/<namespace>`, then a pointer file
+  *    UUID dir under [[machineRoot]]`/<namespace>`, then a pointer file
   *    named by the MD5 of (input, recipe) is published create-if-absent.
   *    The race loser adopts the winner's pointer and deletes its own build.
   *    Objects opened over the path belong in the session tier.
@@ -54,16 +54,23 @@ object Memo {
     catch { case e: Throwable => cells.remove(k, cell); throw e }
   }
 
+  /** Where machine-tier entries live: `java.io.tmpdir` unless a caller
+    * that must not reuse another JVM's builds (a benchmark run that times
+    * them) points it at a directory of its own first.
+    */
+  @volatile var machineRoot: Path = Paths.get(System.getProperty("java.io.tmpdir"))
+
   /** The directory `build` writes, built at most once per machine for
-    * (`input`, `recipe`) and published under `java.io.tmpdir/namespace`
-    * as `kind-<md5>.path`. `build` receives a fresh, not yet created
+    * (`input`, `recipe`) and published under `machineRoot/namespace` as
+    * `kind-<md5>.path`. `build` receives a fresh, not yet created
     * directory. Returns the published directory.
     */
   def machine(s: SparkSession, namespace: String, kind: String, input: String,
               recipe: String = "")(build: Path => Unit): String = {
     val key = md5Hex(input + recipe)
-    session(s, s"machine:$namespace/$kind-$key") {
-      val base = Paths.get(System.getProperty("java.io.tmpdir"), namespace)
+    val root = machineRoot
+    session(s, s"machine:$root/$namespace/$kind-$key") {
+      val base = root.resolve(namespace)
       Files.createDirectories(base)
       val pointer = base.resolve(s"$kind-$key.path")
       if (!Files.exists(pointer)) {

@@ -120,7 +120,7 @@ object MultiIndex {
 
   private def writeSpan(table: VectorTable, keyCols: Seq[String], start: Long,
                         count: Long, root: String, append: Boolean): Unit =
-    writeRows(table.range(start, count), table.spark, keyCols, count, root, append)
+    writeRows(table.span(start, count), table.spark, keyCols, count, root, append)
 
   private def writeRows(rows: org.apache.spark.sql.DataFrame,
                         spark: SparkSession, keyCols: Seq[String],

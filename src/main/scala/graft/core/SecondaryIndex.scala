@@ -68,7 +68,7 @@ final class SecondaryIndex private (
     if (cu.isEmpty && m.length <= effLen && tomb == effMask) return this
     import org.apache.spark.sql.functions.col
     if (m.length > effLen)
-      table.range(effLen, m.length - effLen)
+      table.span(effLen, m.length - effLen)
         .select(col(keyCol).as("k"), col(VectorTable.ROWID).as("r"))
         .sortWithinPartitions("k")
         .write.mode("append")

@@ -1,7 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.BatchParam
 import org.apache.spark.sql.types._
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
@@ -912,13 +913,23 @@ final class VectorTable(val spark: SparkSession, val root: String) {
     */
   def range(index: Long, count: Long): DataFrame = rangeOf(manifest, index, count)
 
-  private[core] def rangeOf(m: Manifest, index: Long, count: Long): DataFrame = {
+  /** [[range]] for a span whose bounds move on every call, such as the rows
+    * an index refresh has not indexed yet: the manifest still prunes whole
+    * batches on the driver, and the bounds are [[BatchParam]]s, so every
+    * span shares one generated class. They are not pushed down to parquet,
+    * so use it for spans of whole appended batches, not short reads inside
+    * a large batch.
+    */
+  def span(index: Long, count: Long): DataFrame = rangeOf(manifest, index, count, BatchParam(_))
+
+  private[core] def rangeOf(m: Manifest, index: Long, count: Long,
+                            bound: Long => Column = lit(_)): DataFrame = {
     val lo = index
     val hi = index + count
     val hit = m.batches.filter(b => b.end > lo && b.start < hi)
     if (hit.isEmpty) emptyLike()
     else open(hit.map(b => s"$root/${b.relPath}"), m.mixedSchema)
-      .where(col(ROWID) >= lo && col(ROWID) < hi)
+      .where(col(ROWID) >= bound(lo) && col(ROWID) < bound(hi))
   }
 
   /** Point read — reference `pull`/`get` (src/vector_engine.rs:27,33-39). */
@@ -931,16 +942,25 @@ final class VectorTable(val spark: SparkSession, val root: String) {
     * refines row-level. Exactly `scan().where(...)` semantically; the
     * zone maps only remove work.
     */
-  def scanWhere(preds: (String, Option[Any], Option[Any])*): DataFrame = {
-    val base = {
-      val hit = batchesOverlapping(preds)
-      if (hit.isEmpty) emptyLike().where(lit(false))
-      else open(hit.map(b => s"$root/${b.relPath}"), manifest.mixedSchema)
-    }
-    preds.foldLeft(base) { case (df, (c, lo, hi)) =>
+  def scanWhere(preds: (String, Option[Any], Option[Any])*): DataFrame =
+    preds.foldLeft(zonePruned(preds)) { case (df, (c, lo, hi)) =>
       val withLo = lo.map(v => df.where(col(c) >= lit(v))).getOrElse(df)
       hi.map(v => withLo.where(col(c) <= lit(v))).getOrElse(withLo)
     }
+
+  /** Rows with `c >= lo`: [[scanWhere]]'s zone-map pruning on the driver,
+    * with the bound read through a [[BatchParam]], so a stream's per-batch
+    * bound reuses one generated class. The bound is not pushed down to
+    * parquet, so the driver-side pruning is the only file pruning this
+    * scan gets.
+    */
+  def scanFrom(c: String, lo: Long): DataFrame =
+    zonePruned(Seq((c, Some(lo), None))).where(col(c) >= BatchParam(lo))
+
+  private def zonePruned(preds: Seq[(String, Option[Any], Option[Any])]): DataFrame = {
+    val hit = batchesOverlapping(preds)
+    if (hit.isEmpty) emptyLike().where(lit(false))
+    else open(hit.map(b => s"$root/${b.relPath}"), manifest.mixedSchema)
   }
 
   /** The batches a zone-map-pruned scan would read (exposed for specs and

@@ -102,7 +102,7 @@ object SimHashIndex {
 
   private def writeSpan(table: VectorTable, start: Long, count: Long, root: String,
                         withRowid: Boolean): Unit = {
-    val rows = table.range(start, count)
+    val rows = table.span(start, count)
       .select(col("doc_id"), col(VectorTable.ROWID),
         graft.functions.TextFunctions.simhash64(col("text")).as("simhash"))
     (if (withRowid) rows else rows.drop(VectorTable.ROWID))
@@ -224,7 +224,7 @@ object ContainmentIndex {
   }
 
   private def shOf(table: VectorTable, start: Long, count: Long): DataFrame =
-    table.range(start, count)
+    table.span(start, count)
       .select(col("doc_id"), col(VectorTable.ROWID),
         graft.functions.TextFunctions.shingleHashes(col("text")).as("sh"))
       .where(size(col("sh")) > 0)
@@ -342,7 +342,7 @@ object SpanIndex {
 
   private def writeSpan(table: VectorTable, start: Long, count: Long, root: String,
                         withRowid: Boolean): Unit = {
-    val rows = table.range(start, count)
+    val rows = table.span(start, count)
       .select(col("doc_id"), col(VectorTable.ROWID),
         explode(graft.functions.TextFunctions
           .rollingHashes(col("text"), Dedup.repeatedSpanWindow, Dedup.repeatedSpanStride))

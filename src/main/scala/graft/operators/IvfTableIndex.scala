@@ -317,7 +317,7 @@ object IvfTableIndex {
     // kernel-or-inline per Similarity.inlineCellCap: constant-size codegen
     // at high (cellsFor-scaled) cell counts, bit-identical either way
     val sims = Similarity.centroidSimsColumn(cs)
-    val rows = table.range(start, count)
+    val rows = table.span(start, count)
       .select(col("vec_id"), col(VectorTable.ROWID), col("embedding"))
       .withColumn("sims", sims)
       .withColumn("centroid_sim", array_max(col("sims")))

@@ -142,7 +142,7 @@ object LshIndex {
     // addresses its physical source row (takedown deletes by rowid);
     // spans appended into a pre-round-16 layout DROP it so the layout
     // stays schema-homogeneous (see refresh's legacy probe)
-    val slice = table.range(start, count)
+    val slice = table.span(start, count)
       .select(col(VectorTable.ROWID), col("doc_id"), col("text"))
     val rows = Dedup.bandsOf(Dedup.signaturesOf(slice))
     (if (withRowid) rows else rows.drop(VectorTable.ROWID))

@@ -4,6 +4,7 @@ import graft.core.VectorTable
 import graft.operators.{Dedup, IvfTableIndex, LshIndex, Maintenance, SpanIndex}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.BatchParam
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The COMPOSED refinery write path: every micro-batch of fused
@@ -102,8 +103,11 @@ object RefineryIngest {
     *     only index rows with `doc_id < min(batch vec_id)` — the same
     *     before-this-batch view;
     *   - the kept-id set for the docs append derives from embTable
-    *     MEMBERSHIP at `vec_id >= min(batch vec_id)` (footer-prunable),
-    *     not from "the last appended span", which a replay would misread.
+    *     MEMBERSHIP at `vec_id >= min(batch vec_id)` (zone-map-pruned on
+    *     the driver), not from "the last appended span", which a replay
+    *     would misread.
+    * Every per-batch bound enters the plans as a [[BatchParam]], so from
+    * the second batch on the stages reuse the classes the first compiled.
     */
   def appendRefined(docsTable: VectorTable, hashStore: VectorTable,
                     spanStore: VectorTable, lexStore: VectorTable,
@@ -149,7 +153,7 @@ object RefineryIngest {
     val novel =
       (if (hashStore.length == 0L) reps
        else reps.join(
-         hashStore.scan().where(col("vec_id") < minBatchId)
+         hashStore.scan().where(col("vec_id") < BatchParam(minBatchId))
            .select("content_hash"),
          Seq("content_hash"), "left_anti"))
         .select(col("vec_id"), col("text"), col("embedding"))
@@ -166,7 +170,7 @@ object RefineryIngest {
     val spanKept = novel
       .join(SpanScrubIngest.keptIds(
           novel.select(col("vec_id").as("doc_id"), col("text")),
-          spanIdx.get().windows.where(col("doc_id") < minBatchId),
+          spanIdx.get().windows.where(col("doc_id") < BatchParam(minBatchId)),
           Dedup.spanScrubMaxPermille).select(col("doc_id").as("vec_id")),
         Seq("vec_id"), "left_semi")
       .localCheckpoint()
@@ -185,7 +189,7 @@ object RefineryIngest {
     val lexKept = spanKept
       .join(LshDedupIngest.droppedIds(
           spanKept.select(col("vec_id").as("doc_id"), col("text")),
-          lexIdx.get().bands.where(col("doc_id") < minBatchId),
+          lexIdx.get().bands.where(col("doc_id") < BatchParam(minBatchId)),
           lexStore).select(col("doc_id").as("vec_id")),
         Seq("vec_id"), "left_anti")
       .localCheckpoint()
@@ -218,7 +222,7 @@ object RefineryIngest {
     val keptIds =
       (if (embTable.length == 0L) clean.select(col("vec_id")).limit(0)
        else clean.select(col("vec_id")).join(
-         embTable.scan().where(col("vec_id") >= minBatchId).select(col("vec_id")),
+         embTable.scanFrom("vec_id", minBatchId).select(col("vec_id")),
          Seq("vec_id"), "left_semi"))
         .localCheckpoint()
     val kept = keptIds.count()

@@ -4,6 +4,7 @@ import graft.core.VectorTable
 import graft.operators.{IvfTableIndex, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.BatchParam
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** SEMANTIC dedup-at-ingest: streaming append that drops a vector when a
@@ -164,7 +165,7 @@ object SemanticDedupIngest {
     // distributed filter + distinct, bounded by the BATCH even when a
     // dense cell matches each batch vector against thousands of
     // committed rows.
-    val covered = edges.where(col("doc_a") <= committedMax)
+    val covered = edges.where(col("doc_a") <= BatchParam(committedMax))
       .select(col("doc_b").as("vec_id")).distinct()
       .localCheckpoint()
 
@@ -173,7 +174,7 @@ object SemanticDedupIngest {
     // driver fast path is the common case; the gate + distributed
     // fallback keep a pathological batch from becoming the repo's one
     // ungated driver collect.
-    val inBatchEdges = edges.where(col("doc_a") > committedMax)
+    val inBatchEdges = edges.where(col("doc_a") > BatchParam(committedMax))
       .join(covered.select(col("vec_id").as("doc_a")), Seq("doc_a"), "left_anti")
       .join(covered.select(col("vec_id").as("doc_b")), Seq("doc_b"), "left_anti")
       .select(col("doc_a"), col("doc_b")) // joins move key columns first
@@ -279,7 +280,7 @@ object SemanticDedupIngest {
       val groupDf = groupOf.toSeq.toDF("cluster_id", "grp")
       val withGroup = labeled.join(groupDf, Seq("cluster_id")).localCheckpoint()
       (0 to group).foreach { g =>
-        val pairs = withGroup.where(col("grp") === g)
+        val pairs = withGroup.where(col("grp") === BatchParam(g))
           .select(col("doc_a"), col("doc_b"))
           .collect().map(r => (r.getLong(0), r.getLong(1)))
         droppedParts += greedySweepDropped(pairs).toDF("vec_id")
@@ -291,7 +292,7 @@ object SemanticDedupIngest {
     recordOversized(telemetryRoot, oversized.length.toLong)
     oversized.foreach { case (lbl, n) =>
       droppedParts += roundLoopDropped(
-        labeled.where(col("cluster_id") === lbl).select(col("doc_a"), col("doc_b")),
+        labeled.where(col("cluster_id") === BatchParam(lbl)).select(col("doc_a"), col("doc_b")),
         componentLabel = lbl, componentEdges = n)
     }
 

@@ -14,26 +14,29 @@ import org.apache.spark.sql.graft.Bridge
   * machinery: after [[DimRunner.warmup]] each dim runs twice through
   * [[DimRunner.sample]] (the official value is the min), a listener keyed
   * on the job group counts the Spark jobs and stages of the first (cold)
-  * run, and `--plans <dir>` writes each dim's formatted plan to
+  * run, the codegen cache's misses count the classes each run compiled,
+  * and `--plans <dir>` writes each dim's formatted plan to
   * `<dir>/<dim>.txt`. Prints one JSON line
-  * `{"sf":…,"dims":{name:{"s":[a,b],"min":…,"jobs":…,"stages":…}}}` and
-  * exits 1 when any dim failed; an undeclared name fails before anything
-  * runs.
+  * `{"sf":…,"dims":{name:{"s":[a,b],"min":…,"jobs":…,"stages":…,"compiles":…}}}`
+  * (jobs, stages and compiles of the first run) and exits 1 when any dim
+  * failed; an undeclared name fails before anything runs.
   *
   * sbt "runMain graft.tools.Profile <sfDir> [--plans <dir>] <dim>..."
   */
 object Profile {
 
-  /** Samples in seconds (-1.0 = failed), their min, and the first run's
-    * job and stage counts.
+  /** Samples in seconds (-1.0 = failed), their min, the first run's job
+    * and stage counts, and the classes each sample compiled.
     */
-  final case class Dim(samples: Seq[Double], min: Double, jobs: Int, stages: Int)
+  final case class Dim(samples: Seq[Double], min: Double, jobs: Int, stages: Int,
+                       compiles: Seq[Long])
 
   final case class Result(sf: String, dims: Seq[(String, Dim)]) {
     def failed: Boolean = dims.exists(_._2.min < 0)
     def json: String = dims.map { case (name, d) =>
       s""""$name":{"s":${d.samples.map(DimRunner.fmt).mkString("[", ",", "]")},""" +
-        s""""min":${DimRunner.fmt(d.min)},"jobs":${d.jobs},"stages":${d.stages}}"""
+        s""""min":${DimRunner.fmt(d.min)},"jobs":${d.jobs},"stages":${d.stages},""" +
+        s""""compiles":${d.compiles.headOption.getOrElse(0L)}}"""
     }.mkString(s"""{"sf":"$sf","dims":{""", ",", "}}")
   }
 
@@ -47,13 +50,19 @@ object Profile {
       plans.foreach(Files.createDirectories(_))
       val dims = names.distinct.map { name =>
         val query = graft.SparkEntry.queries(name)
-        val s = runner.sample(name, again = true)(query(spark, sfDir).count())
+        val compiles = Seq.newBuilder[Long]
+        val s = runner.sample(name, again = true) {
+          val c0 = Bridge.compiledClasses
+          query(spark, sfDir).count()
+          compiles += Bridge.compiledClasses - c0
+        }
         if (s.first >= 0) plans.foreach { dir =>
           Files.writeString(dir.resolve(s"$name.txt"),
             query(spark, sfDir).queryExecution.explainString(FormattedMode))
         }
         Bridge.drainListeners(spark)
-        name -> Dim(s.first +: s.second.toSeq, s.min, counts.jobs(name), counts.stages(name))
+        name -> Dim(s.first +: s.second.toSeq, s.min, counts.jobs(name), counts.stages(name),
+          compiles.result())
       }
       Result(sfDir, dims)
     } finally spark.sparkContext.removeSparkListener(counts)

@@ -36,4 +36,11 @@ object Bridge {
     */
   def drainListeners(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Classes Janino has compiled in this JVM so far: one per miss of
+    * Spark's JVM-wide codegen cache. The delta over a run is the run's
+    * compile count.
+    */
+  def compiledClasses: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }

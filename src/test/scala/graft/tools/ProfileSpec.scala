@@ -8,8 +8,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.graft.Bridge
 
 /** [[Profile]] on Bench's dim runner: two samples per dim with their min,
-  * the first run's jobs counted, formatted plans written, and an
-  * undeclared dim rejected before any Spark job runs.
+  * the first run's jobs counted, a second sample that compiles nothing,
+  * formatted plans written, and an undeclared dim rejected before any
+  * Spark job runs.
   */
 class ProfileSpec extends SparkSpec {
 
@@ -24,11 +25,14 @@ class ProfileSpec extends SparkSpec {
       assert(d.samples.size == 2 && d.samples.forall(_ >= 0), s"$name: ${d.samples}")
       assert(d.min == d.samples.min, name)
       assert(d.jobs >= 1 && d.stages >= 1, s"$name: ${d.jobs} jobs, ${d.stages} stages")
+      assert(d.compiles.size == 2 && d.compiles(1) == 0,
+        s"$name: the second sample must reuse the first's classes: ${d.compiles}")
       val plan = plans.resolve(s"$name.txt")
       assert(Files.isRegularFile(plan), name)
       assert(Files.readString(plan).contains("== Physical Plan =="), name)
     }
     assert(r.json.startsWith(s"""{"sf":"${sf()}","dims":{"q1_pricing_summary":{"s":["""))
+    assert(r.json.contains(s""""compiles":${r.dims.head._2.compiles.head}}"""))
   }
 
   test("an undeclared dim fails before anything runs") {
