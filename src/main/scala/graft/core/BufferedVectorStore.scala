@@ -12,12 +12,24 @@ import scala.collection.mutable.ArrayBuffer
   *    writable_cache.rs:94) and drains the whole buffer to the backing
   *    store once it holds ≥ `maxItems` (default 500 000, env-tunable there
   *    via MAX_WRCACHE_ITEMS — writable_cache.rs:20,60-70);
-  *  - reads serve the merged committed ⋃ buffered view with rowid
-  *    continuity: the reference's 3-way pull routing
-  *    (writable_cache.rs:222-298) reduces here to "index < base.len →
-  *    backing store, else buffer[index - base.len]";
-  *  - `close()` drains the remaining buffer — flush-on-drop
-  *    (writable_cache.rs:162-185).
+  *  - a flush never makes a read wait on the append, as the reference's
+  *    swap-then-append: it swaps the buffer out as an immutable in-flight
+  *    segment under the read lock, appends that segment holding only the
+  *    flush lock (which keeps flushes, and so rowids, in push order), and
+  *    publishes by dropping the segment under the read lock again;
+  *  - reads serve the merged view with rowid continuity, the reference's
+  *    3-way pull routing (writable_cache.rs:222-298): every read takes one
+  *    consistent triple under the read lock — committed rows
+  *    `[0, committed)`, then the in-flight segment, then the buffer. While
+  *    a flush runs, `committed` is the length when its segment was swapped
+  *    out (`inflightStart`), even after the append commits, so the segment's
+  *    rows count as buffered until the flush publishes;
+  *  - a failed append loses nothing: the segment goes back to the front of
+  *    the buffer, the daemon keeps polling (and retries), and `close()`,
+  *    which drains the remaining buffer — flush-on-drop
+  *    (writable_cache.rs:162-185) — throws the failure.
+  *
+  * Rowids stay dense only while this buffer is the table's one writer.
   *
   * This is the micro-batch ingestion pattern; the Structured Streaming
   * equivalent (file/rate source → `foreachBatch` append) lives in
@@ -29,39 +41,58 @@ final class BufferedVectorStore[T: Encoder](
     pollMs: Long = 10L
 ) extends AutoCloseable {
 
+  // Guarded by `this`, the read lock: rows pushed since the last swap, the
+  // segment a flush is appending (empty when none is) and the committed
+  // length at its swap.
   private val buf = new ArrayBuffer[T]()
+  private var inflight = Vector.empty[T]
+  private var inflightStart = 0L
+
+  /** Held through a whole flush; never taken by a read. */
+  private val flushLock = new Object
   @volatile private var running = true
 
   private val flusher = new Thread(() => {
     while (running) {
-      if (bufferedCount >= maxItems) flush()
+      // a failed flush has put its rows back; the next poll retries
+      if (synchronized(buf.size) >= maxItems)
+        try flush() catch { case scala.util.control.NonFatal(_) => () }
       Thread.sleep(pollMs)
     }
   }, s"graft-flusher-${System.identityHashCode(this)}")
   flusher.setDaemon(true)
   flusher.start()
 
-  def push(obj: T): Unit = buf.synchronized { buf += obj }
-  def pushx(objs: Seq[T]): Unit = buf.synchronized { buf ++= objs }
+  def push(obj: T): Unit = synchronized { buf += obj }
+  def pushx(objs: Seq[T]): Unit = synchronized { buf ++= objs }
 
-  def bufferedCount: Int = buf.synchronized(buf.size)
+  // --- the routing triple; callers hold the read lock ---
 
-  /** Consistent (committed length, buffered snapshot) pair, taken under the
-    * flush lock: without it, a reader racing the daemon flusher between
-    * buffer-clear and base commit could see an index transiently vanish
-    * (len shrink / get → None for a valid index). `base` is append-only, so
-    * a row observed committed here stays readable outside the lock.
-    * Reads of one element or of the sizes take the same two locks without
-    * copying the buffer.
+  /** Rows not yet published: the in-flight segment, then the buffer. */
+  private def pendingSize: Int = inflight.size + buf.size
+
+  private def pendingAt(i: Int): T =
+    if (i < inflight.size) inflight(i) else buf(i - inflight.size)
+
+  private def pendingSlice(from: Long, until: Long): Vector[T] = {
+    val n = inflight.size
+    inflight.slice(from.toInt, until.toInt) ++
+      buf.view.slice(math.max(0L, from - n).toInt, math.max(0L, until - n).toInt)
+  }
+
+  /** `f` of the committed head and the committed length, under the read
+    * lock. Rows `[0, committed)` stay readable from the head after the lock
+    * is released: `base` is append-only.
     */
-  private def mergedSnapshot(): (Long, Vector[T]) = this.synchronized {
-    (base.len, buf.synchronized(buf.toVector))
+  private def routed[A](f: (VectorTable.Snapshot, Long) => A): A = synchronized {
+    val s = base.table.snapshot
+    f(s, if (inflight.nonEmpty) inflightStart else s.manifest.length)
   }
 
-  /** (committed, buffered) lengths under the flush lock. */
-  private def lengths(): (Long, Int) = this.synchronized {
-    (base.len, buf.synchronized(buf.size))
-  }
+  /** (committed, pending) lengths of one triple. */
+  private def lengths(): (Long, Int) = routed((_, committed) => (committed, pendingSize))
+
+  def bufferedCount: Int = synchronized(pendingSize)
 
   /** Merged length: committed + buffered (writable_cache.rs:210-212). */
   def len: Long = { val (b, n) = lengths(); b + n }
@@ -73,19 +104,14 @@ final class BufferedVectorStore[T: Encoder](
       throw new IndexOutOfBoundsException(s"pull($index) on merged length $len"))
 
   def get(index: Long): Option[T] = {
-    // the committed snapshot and the buffered element are taken together
-    // under the flush lock; the committed read runs outside it on that
-    // snapshot (Left), a buffered hit returns directly (Right)
-    val routed: Either[VectorTable.Snapshot, Option[T]] = this.synchronized {
-      val s = base.table.snapshot
-      val baseLen = s.manifest.length
-      buf.synchronized {
-        if (index < 0 || index >= baseLen + buf.size) Right(None)
-        else if (index < baseLen) Left(s)
-        else Right(Some(buf((index - baseLen).toInt)))
-      }
+    // a committed row is read outside the lock on the head taken with the
+    // triple (Left); an in-flight or buffered row returns directly (Right)
+    val route: Either[VectorTable.Snapshot, Option[T]] = routed { (s, committed) =>
+      if (index < 0 || index >= committed + pendingSize) Right(None)
+      else if (index < committed) Left(s)
+      else Right(Some(pendingAt((index - committed).toInt)))
     }
-    routed.fold(base.get(_, index), identity)
+    route.fold(base.get(_, index), identity)
   }
 
   /** Merged range read with straddle routing (writable_cache.rs:248-298). */
@@ -94,16 +120,16 @@ final class BufferedVectorStore[T: Encoder](
       throw new IndexOutOfBoundsException(s"pullx($index,$count) on merged length $len"))
 
   def getx(index: Long, count: Long): Option[Seq[T]] = {
-    val (baseLen, snapshot) = mergedSnapshot()
-    val total = baseLen + snapshot.size
-    if (index < 0 || count < 0 || index + count > total) None
-    else {
+    val route = routed { (s, committed) =>
+      if (index < 0 || count < 0 || index + count > committed + pendingSize) None
+      else Some((s, committed,
+        pendingSlice(math.max(0L, index - committed), math.max(0L, index + count - committed))))
+    }
+    route.map { case (s, committed, pending) =>
       val dbPart =
-        if (index >= baseLen) Vector.empty[T]
-        else base.getx(index, math.min(count, baseLen - index)).get.toVector
-      val bufLo = math.max(0L, index - baseLen).toInt
-      val bufHi = math.max(0L, index + count - baseLen).toInt
-      Some(dbPart ++ snapshot.slice(bufLo, bufHi))
+        if (index >= committed) Vector.empty[T]
+        else base.getx(s, index, math.min(count, committed - index)).get
+      dbPart ++ pending
     }
   }
 
@@ -111,13 +137,13 @@ final class BufferedVectorStore[T: Encoder](
     if (isEmpty) None else getx(0, len)
 
   // --- buffer introspection (reference writable_cache.rs:119-159) ---
-  // Indices here are BUFFER-relative (position among not-yet-flushed rows),
-  // exactly as in the reference — not global rowids.
+  // Indices here are BUFFER-relative (position among not-yet-published
+  // rows, in-flight first), exactly as in the reference — not global rowids.
 
   /** Committed length — reference `get_base_len` (writable_cache.rs:119). */
-  def baseLen: Long = base.len
+  def baseLen: Long = lengths()._1
 
-  /** Buffered (unflushed) count — reference `get_cache_len` (:123). */
+  /** Buffered (unpublished) count — reference `get_cache_len` (:123). */
   def cacheLen: Int = bufferedCount
 
   /** (buffered, committed, total) under one consistent snapshot —
@@ -136,38 +162,54 @@ final class BufferedVectorStore[T: Encoder](
       throw new IndexOutOfBoundsException(s"buffer index $index of $cacheLen"))
 
   /** Partial buffer read — reference `get_obj_from_cache` (:147). */
-  def getObjFromCache(index: Long): Option[T] = buf.synchronized {
-    if (index < 0 || index >= buf.size) None else Some(buf(index.toInt))
+  def getObjFromCache(index: Long): Option[T] = synchronized {
+    if (index < 0 || index >= pendingSize) None else Some(pendingAt(index.toInt))
   }
 
   /** Partial buffer range read — reference `get_objs_from_cache` (:151). */
-  def getObjsFromCache(index: Long, count: Long): Option[Seq[T]] = buf.synchronized {
-    if (index < 0 || count < 0 || index + count > buf.size) None
-    else Some(buf.slice(index.toInt, (index + count).toInt).toVector)
+  def getObjsFromCache(index: Long, count: Long): Option[Seq[T]] = synchronized {
+    if (index < 0 || count < 0 || index + count > pendingSize) None
+    else Some(pendingSlice(index, index + count))
   }
 
-  /** Committed ⋃ in-flight as one Dataset (SURVEY.md §2.4 merged view). */
-  def mergedView(): Dataset[T] = this.synchronized {
-    // Both sides pinned under the flush lock: base.toDS() resolves the
-    // manifest eagerly, so a concurrent flush can neither drop buffered rows
-    // nor surface them twice (once from the snapshot, once from the scan).
+  /** Committed ⋃ unpublished rows as one Dataset (SURVEY.md §2.4 merged
+    * view). The committed side is pinned to `[0, committed)` of the triple:
+    * scanning the whole table instead would show an in-flight segment twice
+    * once its append commits, and pinning it to a later length would show
+    * rows another flush published after the triple was taken.
+    */
+  def mergedView(): Dataset[T] = {
+    val (committed, pending) = routed((_, c) => (c, pendingSlice(0L, pendingSize.toLong)))
     val spark = base.table.spark
-    val committed = base.toDS()
-    val snapshot = buf.synchronized(buf.toVector)
-    committed.unionAll(spark.createDataset(snapshot))
+    val committedDS =
+      if (committed == 0L) spark.emptyDataset[T]
+      else base.table.span(0L, committed).drop(VectorTable.ROWID).as[T]
+    committedDS.unionAll(spark.createDataset(pending))
   }
 
   /** Drain the whole buffer to the backing store (writable_cache.rs:87-89:
-    * flush is all-or-nothing). Synchronized against concurrent flushes so
-    * rowid order matches buffer order.
+    * flush is all-or-nothing). Flushes are serialized, so rowid order
+    * matches buffer order; reads go on beside the append. If the append
+    * throws, its rows go back to the front of the buffer and the exception
+    * propagates.
     */
-  def flush(): Unit = this.synchronized {
-    val drained = buf.synchronized {
-      val d = buf.toVector
-      buf.clear()
-      d
+  def flush(): Unit = flushLock.synchronized {
+    val segment = synchronized {
+      if (buf.nonEmpty) {
+        inflightStart = base.len
+        inflight = buf.toVector
+        buf.clear()
+      }
+      inflight
     }
-    if (drained.nonEmpty) base.pushx(drained)
+    if (segment.nonEmpty) {
+      var appended = false
+      try { base.pushx(segment); appended = true }
+      finally synchronized {
+        if (!appended) buf.prependAll(segment)
+        inflight = Vector.empty
+      }
+    }
   }
 
   override def close(): Unit = {

@@ -2,13 +2,15 @@ package graft.core
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.column.ColumnDescriptor
-import org.apache.parquet.column.impl.ColumnReadStoreImpl
+import org.apache.parquet.{HadoopReadOptions, VersionParser}
+import org.apache.parquet.column.{ColumnDescriptor, ColumnReader}
+import org.apache.parquet.column.impl.ColumnReaderImpl
+import org.apache.parquet.column.page.{PageReadStore, PageReader}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.internal.filter2.columnindex.RowRanges
-import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter}
+import org.apache.parquet.io.api.PrimitiveConverter
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -35,6 +37,12 @@ import scala.jdk.CollectionConverters._
   * (src/services/file_access_service.rs) — until [[VectorTable.vacuum]]
   * deletes the file's directory ([[evictUnder]]).
   *
+  * Every footer this engine reads driver-side opens through [[openFile]],
+  * against one loaded Hadoop `Configuration`: `ParquetFileReader.open` on a
+  * bare `InputFile` builds a fresh one per call and loads its XML defaults,
+  * most of the cost of a first read of a file. A file's `created_by` is
+  * parsed once, when its footer is cached, not once per read.
+  *
   * Falls back (returns None) on anything it can't prove: non-dense rowids,
   * missing stats, unsupported physical types. Callers treat None as "use the
   * Spark path", so this is a pure fast path, never a correctness risk.
@@ -48,6 +56,11 @@ object DirectParquetRead {
       rowidMax: Long,
       totalRows: Long,
       blockFirstRow: Array[Long]) {
+    // the writer version every column reader of this file is given; the
+    // parse is a regex match, so it runs once per file, not once per read
+    val writerVersion: VersionParser.ParsedVersion =
+      try VersionParser.parse(footer.getFileMetaData.getCreatedBy)
+      catch { case _: RuntimeException | _: VersionParser.VersionParseException => null }
     // offset indexes are immutable footer metadata — read once per row group
     val offsetIndexes =
       new java.util.concurrent.ConcurrentHashMap[Integer, Option[org.apache.parquet.internal.column.columnindex.OffsetIndex]]()
@@ -65,6 +78,15 @@ object DirectParquetRead {
   private val metaCache = new java.util.concurrent.ConcurrentHashMap[String, Option[FileMeta]]()
   private val conf = new Configuration()
 
+  /** Open `file`'s parquet reader (footer read) against this object's one
+    * loaded `conf`. The read options are built per reader from that conf,
+    * never shared: each holds the reader's `CodecFactory`, which the
+    * reader's `close()` releases. Callers close the reader.
+    */
+  def openFile(file: String): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(file), conf),
+      HadoopReadOptions.builder(conf).build())
+
   /** Values for one row keyed by column name (JVM-typed; null for SQL NULL),
     * or None when this file can't serve the read directly.
     */
@@ -73,6 +95,12 @@ object DirectParquetRead {
       if (rowid < m.rowidMin || rowid > m.rowidMax) None
       else m.read(rowid - m.rowidMin)
     }
+
+  /** The writer version parsed from the cached footer's `created_by`
+    * (null when unparsable), which every column reader of the file gets.
+    */
+  private[core] def writerVersion(file: String): Option[VersionParser.ParsedVersion] =
+    meta(file).map(_.writerVersion)
 
   /** The file's [_rowid min, max] from cached footer stats, if provably
     * dense (rowCount == max-min+1).
@@ -139,7 +167,7 @@ object DirectParquetRead {
 
   private def readLongColSpan(file: String, colName: String): Option[(Long, Long)] =
     try {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(file), conf))
+      val reader = openFile(file)
       try {
         val blocks = reader.getFooter.getBlocks.asScala
         if (blocks.isEmpty) None
@@ -184,7 +212,7 @@ object DirectParquetRead {
 
   private def openMeta(file: String): Option[FileMeta] =
     try {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(file), conf))
+      val reader = openFile(file)
       val footer = reader.getFooter
       val blocks = footer.getBlocks.asScala
       if (blocks.isEmpty) { reader.close(); return None }
@@ -210,11 +238,29 @@ object DirectParquetRead {
       else Some(FileMeta(reader, footer, min, max, rows, firstRows))
     } catch { case _: Throwable => None }
 
-  private object NopGroupConverter extends GroupConverter {
-    private val prim = new PrimitiveConverter {}
-    override def getConverter(fieldIndex: Int): Converter = prim
-    override def start(): Unit = ()
-    override def end(): Unit = ()
+  private val nopConverter = new PrimitiveConverter {}
+
+  /** The reader `ColumnReadStoreImpl.getColumnReader` builds, given the
+    * file's already parsed writer version instead of a `created_by` string
+    * to parse again: over a row-index-filtered page store, the row-aligning
+    * `SynchronizingColumnReader` (package-private, hence the constructor
+    * handle); otherwise a plain `ColumnReaderImpl`.
+    */
+  private def columnReader(m: FileMeta, store: PageReadStore, cd: ColumnDescriptor): ColumnReader = {
+    val pages = store.getPageReader(cd)
+    val rows = store.getRowIndexes
+    if (rows.isPresent) syncReader.newInstance(cd, pages, nopConverter, m.writerVersion, rows.get)
+    else new ColumnReaderImpl(cd, pages, nopConverter, m.writerVersion)
+  }
+
+  private lazy val syncReader: java.lang.reflect.Constructor[_ <: ColumnReader] = {
+    val c = Class.forName("org.apache.parquet.column.impl.SynchronizingColumnReader")
+      .asSubclass(classOf[ColumnReader])
+      .getDeclaredConstructor(classOf[ColumnDescriptor], classOf[PageReader],
+        classOf[PrimitiveConverter], classOf[VersionParser.ParsedVersion],
+        classOf[java.util.PrimitiveIterator.OfLong])
+    c.setAccessible(true)
+    c
   }
 
   private def readOrdinal(m: FileMeta, ordinal: Long): Option[Map[String, Any]] = {
@@ -240,7 +286,7 @@ object DirectParquetRead {
       }
 
     // upcast: the concrete ColumnChunkPageReadStore is package-private
-    val store: org.apache.parquet.column.page.PageReadStore =
+    val store: PageReadStore =
       m.reader.readFilteredRowGroup(bi, ranges)
     if (store == null) return None
     try {
@@ -260,12 +306,10 @@ object DirectParquetRead {
       if (!found) return None
 
       val schema = m.footer.getFileMetaData.getSchema
-      val crs = new ColumnReadStoreImpl(store, NopGroupConverter, schema,
-        m.footer.getFileMetaData.getCreatedBy)
       val out = Map.newBuilder[String, Any]
       for (cd <- schema.getColumns.asScala) {
         if (cd.getMaxRepetitionLevel > 0) return None // nested → Spark path
-        val cr = crs.getColumnReader(cd)
+        val cr = columnReader(m, store, cd)
         var k = skip
         while (k > 0) {
           if (cr.getCurrentDefinitionLevel == cd.getMaxDefinitionLevel) cr.skip()

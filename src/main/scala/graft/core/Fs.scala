@@ -18,6 +18,21 @@ object Fs {
     Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 
+  /** Create `target` holding `bytes`, failing with
+    * `FileAlreadyExistsException` if it exists, such that no reader sees
+    * it partial: the bytes go to a fresh hidden sibling first (a `.tmp-`
+    * name, which no versioned-file pattern matches), which is then
+    * hard-linked as `target` — a create-if-absent of complete content —
+    * and removed. Where links are refused, [[linkOrCopy]]'s byte copy is
+    * the fallback (still create-if-absent, no longer atomic).
+    */
+  def createComplete(target: Path, bytes: Array[Byte]): Unit = {
+    val tmp = target.resolveSibling(s".tmp-${java.util.UUID.randomUUID()}")
+    Files.write(tmp, bytes, StandardOpenOption.CREATE_NEW)
+    try linkOrCopy(tmp, target)
+    finally { Files.deleteIfExists(tmp); () }
+  }
+
   /** The entries of `dir`, listed with the directory handle closed
     * before returning (an unclosed `Files.list` stream leaks a file
     * descriptor per call).

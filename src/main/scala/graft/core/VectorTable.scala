@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.BatchParam
 import org.apache.spark.sql.types._
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
@@ -132,12 +132,18 @@ object Manifest {
   /** Commit `m` as the next version; create-if-absent gives atomicity. */
   def commit(root: String, m: Manifest): Unit = { write(root, m.version, m.serialize); () }
 
-  /** Create-if-absent write of version `version`'s `text`; returns the file. */
+  /** Create-if-absent publish of version `version`'s `text`; returns the
+    * file. It is never seen partial: reads overlap commits, and a reader
+    * that found the version file created but not yet written would parse
+    * an empty manifest, or a truncated one whose header claims rows its
+    * batch lines do not cover (see [[Fs.createComplete]]).
+    */
   private[core] def write(root: String, version: Long, text: String): Path = {
     val dir = metaDir(root)
     Files.createDirectories(dir)
-    Files.write(dir.resolve(fileName(version)), text.getBytes(UTF_8),
-      StandardOpenOption.CREATE_NEW)
+    val file = dir.resolve(fileName(version))
+    Fs.createComplete(file, text.getBytes(UTF_8))
+    file
   }
 }
 

@@ -1,9 +1,5 @@
 package graft.core
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
@@ -41,8 +37,6 @@ object ZoneMaps {
     */
   final case class ColStats(col: String, kind: String, min: String, max: String)
 
-  private val conf = new Configuration()
-
   /** Maximum recorded string-stat length: longer values are dropped (never
     * truncated — see class doc).
     */
@@ -58,7 +52,7 @@ object ZoneMaps {
     var acc = Map.empty[String, Option[(String, Any, Any)]]
     for (f <- files) {
       try {
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(f), conf))
+        val reader = DirectParquetRead.openFile(f)
         try {
           for (b <- reader.getFooter.getBlocks.asScala; c <- b.getColumns.asScala) {
             val name = c.getPath.toDotString

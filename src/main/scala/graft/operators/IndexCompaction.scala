@@ -407,9 +407,7 @@ object IndexCompaction {
     */
   private def parquetRowCount(f: Path): Long =
     try {
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.toString), new org.apache.hadoop.conf.Configuration()))
+      val reader = graft.core.DirectParquetRead.openFile(f.toString)
       try reader.getRecordCount finally reader.close()
     } catch { case _: Throwable => -1L }
 

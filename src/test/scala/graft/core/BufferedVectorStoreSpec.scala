@@ -1,6 +1,11 @@
 package graft.core
 
 import graft.SparkSpec
+import java.nio.file.{Files, Paths}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 /** WritableCache semantics (reference: src/cache/writable_cache.rs):
   * acknowledge-before-durability, merged read view with straddle routing,
@@ -48,9 +53,11 @@ class BufferedVectorStoreSpec extends SparkSpec {
   test("background flusher drains at threshold (writable_cache.rs:78-95)") {
     val (base, buf) = fresh(maxItems = 100)
     buf.pushx((0 until 150).map(i => BRec(i.toLong)))
-    // poll for the daemon flush instead of a fixed sleep
+    // poll for the daemon flush instead of a fixed sleep; its rows count
+    // as buffered until the flush publishes, just after the commit
     val deadline = System.currentTimeMillis() + 30000
-    while (base.len < 150L && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    while ((base.len < 150L || buf.bufferedCount > 0) && System.currentTimeMillis() < deadline)
+      Thread.sleep(50)
     assert(base.len == 150L)
     assert(buf.bufferedCount == 0)
     buf.close()
@@ -89,5 +96,81 @@ class BufferedVectorStoreSpec extends SparkSpec {
     assert(buf.eachLen == ((0L, 7L, 7L)))
     assert(buf.getObjFromCache(0L).isEmpty)
     buf.close()
+  }
+
+  private def rows(from: Int, until: Int): Seq[BRec] = (from until until).map(i => BRec(i.toLong))
+
+  /** Waits until `buf`'s flusher thread blocks inside a table append. */
+  private def awaitFlusherBlocked(buf: BufferedVectorStore[BRec]): Unit = {
+    val name = s"graft-flusher-${System.identityHashCode(buf)}"
+    val deadline = System.currentTimeMillis() + 30000
+    def blocked = Thread.getAllStackTraces.asScala.exists { case (t, frames) =>
+      t.getName == name && t.getState == Thread.State.BLOCKED &&
+        frames.exists(_.getClassName == classOf[VectorTable].getName)
+    }
+    while (!blocked && System.currentTimeMillis() < deadline) Thread.sleep(10)
+    assert(blocked, "the flusher never blocked on the commit lock")
+  }
+
+  test("reads go on beside a flush whose append waits on the commit lock") {
+    import spark.implicits._
+    val root = tmpDir("bufstore-beside")
+    val base = VectorStore.create[BRec](spark, root)
+    base.pushx(rows(0, 10))
+    val buf = new BufferedVectorStore[BRec](base, maxItems = 20)
+    // committed [0, 10), in flight [10, 30), buffered [30, 35)
+    val reads = VectorTable.commitLock.synchronized {
+      buf.pushx(rows(10, 30))
+      awaitFlusherBlocked(buf)
+      buf.pushx(rows(30, 35))
+      Try(Await.result(Future {
+        (buf.get(5L), buf.get(15L), buf.get(32L), buf.get(35L), buf.len, buf.eachLen,
+          buf.getx(8L, 24L), buf.getx(9L, 3L), buf.getx(28L, 4L),
+          buf.getObjFromCache(0L), buf.mergedView().collect().map(_.v).sorted.toSeq)
+      }(ExecutionContext.global), 60.seconds))
+    }
+    assert(reads.isSuccess, s"reads waited on the flush: $reads")
+    val (g5, g15, g32, g35, len, each, straddle, lowSeam, highSeam, pending0, merged) = reads.get
+    assert(g5.contains(BRec(5L)) && g15.contains(BRec(15L)) && g32.contains(BRec(32L)) && g35.isEmpty)
+    assert(len == 35L && each == ((25L, 10L, 35L)))
+    assert(straddle.contains(rows(8, 32)))
+    assert(lowSeam.contains(rows(9, 12)) && highSeam.contains(rows(28, 32)))
+    assert(pending0.contains(BRec(10L)))
+    assert(merged == (0L until 35L))
+    buf.close()
+    val reopened = VectorStore.open[BRec](spark, root)
+    assert(reopened.getall().contains(rows(0, 35)))
+  }
+
+  test("a failed flush keeps its rows and the flusher retries") {
+    import spark.implicits._
+    val root = tmpDir("bufstore-fail")
+    val base = VectorStore.create[BRec](spark, root)
+    base.pushx(rows(0, 10)) // version 1
+    // another writer already holds the directory the next append (batch 2) writes
+    def takeBatchDir(id: Int) = Files.createDirectories(Paths.get(root, "data", f"batch-$id%08d"))
+    val taken = takeBatchDir(2)
+    val buf = new BufferedVectorStore[BRec](base, maxItems = 5)
+    buf.pushx(rows(10, 15)) // at the threshold: the daemon's flushes fail too
+    intercept[Exception](buf.flush())
+    assert(base.len == 10L)
+    assert(buf.eachLen == ((5L, 10L, 15L)))
+    assert(buf.get(12L).contains(BRec(12L)) && buf.getx(8L, 4L).contains(rows(8, 12)))
+    Thread.sleep(200) // several daemon polls, each failing
+    Fs.deleteTree(taken)
+    val deadline = System.currentTimeMillis() + 30000
+    while ((base.len < 15L || buf.bufferedCount > 0) && System.currentTimeMillis() < deadline)
+      Thread.sleep(20)
+    assert(base.len == 15L && buf.bufferedCount == 0, "the flusher stopped after a failed flush")
+    assert(base.getall().contains(rows(0, 15)))
+
+    // close() drains what is left and throws the failure
+    val taken3 = takeBatchDir(3)
+    buf.pushx(rows(15, 17))
+    intercept[Exception](buf.close())
+    assert(buf.len == 17L && buf.get(16L).contains(BRec(16L)))
+    Fs.deleteTree(taken3)
+    buf.flush()
+    assert(base.getall().contains(rows(0, 17)))
   }
 }

@@ -1,6 +1,9 @@
 package graft.core
 
 import graft.SparkSpec
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graft.Bridge
 
 case class DRec(name: String, n: Long, score: Double, tag: String)
 case class DNull(name: String, opt: Option[Long])
@@ -86,5 +89,58 @@ class DirectReadSpec extends SparkSpec {
     val jobSec = (System.nanoTime() - t1) / 1e9
     assert(sec * 3 < jobSec,
       f"direct reads ($sec%.3f s / 50) not decisively faster than job path ($jobSec%.3f s / 50)")
+  }
+
+  /** `f`'s result and the Spark jobs it started, counted by job group. */
+  private def withJobCount[A](f: => A): (A, Int) = {
+    val group = s"direct-read-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "direct read")
+      val out = try f finally spark.sparkContext.clearJobGroup()
+      Bridge.drainListeners(spark)
+      (out, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a short getx across a batch boundary starts no Spark job and agrees with the Spark path") {
+    val store = VectorStore.create[DRec](spark, tmpDir("direct-range"))
+    def rec(i: Int) = DRec(s"name-$i", i.toLong, i * 0.5, s"t$i")
+    store.pushx((0 until 300).map(rec))
+    store.pushx((300 until 600).map(rec))
+    val n = VectorStore.directBatchLimit
+    store.getx(0L, 1L) // warm the footers and the decoder
+    val (direct, jobs) = withJobCount(store.getx(290L, n.toLong))
+    assert(jobs == 0, s"a $n-row range started $jobs Spark jobs")
+    val viaSpark = store.table.range(290L, n.toLong).orderBy("_rowid").drop("_rowid").as[DRec].collect().toSeq
+    assert(direct.contains(viaSpark) && viaSpark == (290 until 290 + n).map(rec))
+    // one row longer: the Spark path, same rows
+    val (longer, longerJobs) = withJobCount(store.getx(290L, n + 1L))
+    assert(longerJobs > 0 && longer.contains((290 until 291 + n).map(rec)))
+    assert(store.getx(590L, n.toLong).isEmpty) // past the end, either way
+
+    // a nested schema can't be read directly: the whole range falls back
+    val nested = VectorStore.create[DNested](spark, tmpDir("direct-range-nested"))
+    nested.pushx(Seq(DNested("a", Seq(1L)), DNested("b", Seq(2L, 3L))))
+    nested.pushx(Seq(DNested("c", Nil)))
+    val (fallback, fallbackJobs) = withJobCount(nested.getx(1L, 2L))
+    assert(fallbackJobs > 0 && fallback.contains(Seq(DNested("b", Seq(2L, 3L)), DNested("c", Nil))))
+  }
+
+  test("a cached footer holds the writer version parsed from its created_by") {
+    val root = tmpDir("direct-version")
+    val store = VectorStore.create[DRec](spark, root)
+    store.pushx((0 until 10).map(i => DRec(s"name-$i", i.toLong, i * 0.5, s"t$i")))
+    val file = DirectParquetRead.partFiles(s"$root/${store.table.manifest.batches.head.relPath}").head
+    val reader = DirectParquetRead.openFile(file)
+    val createdBy = try reader.getFooter.getFileMetaData.getCreatedBy finally reader.close()
+    val version = DirectParquetRead.writerVersion(file)
+    assert(version.exists(_ != null) && version.get.toString == org.apache.parquet.VersionParser.parse(createdBy).toString)
+    assert(store.get(7L).contains(DRec("name-7", 7L, 3.5, "t7")))
   }
 }

@@ -94,4 +94,41 @@ class ManifestSnapshotSpec extends SparkSpec {
       assert(store.len == 311L && store.get(310L).contains(SnapRec("buf310", 310L)))
     } finally buffered.close()
   }
+
+  test("a reader polling beside 200 commits never sees a partial manifest") {
+    val root = tmpDir("snap-publish")
+    val writer = VectorStore.create[SnapRec](spark, root)
+    writer.pushx(rows("p", 0, 200))
+    val head = writer.table.manifest
+    // versions 2..201 each publish the first k rows of the one batch, as k
+    // one-row batch lines: a manifest cut short covers fewer rows than its
+    // header's length, and the later versions take several writes
+    def version(k: Int): Manifest = head.copy(version = head.version + k, length = k.toLong,
+      batches = Vector.tabulate(k)(j => head.batches.head.copy(id = j + 1L, start = j.toLong, end = j + 1L)))
+    val reader = VectorStore.open[SnapRec](spark, root)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val polls = new java.util.concurrent.atomic.AtomicInteger()
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val poller = new Thread(() =>
+      while (!done.get) {
+        try {
+          val s = reader.table.snapshot
+          val m = s.manifest
+          val covered = m.batches.map(_.end).maxOption.getOrElse(0L)
+          if (covered < m.length) failures.add(s"v${m.version}: length ${m.length}, batches cover $covered")
+          // a get costs a page decode: one every 8 polls keeps the head checks dense
+          else if (polls.incrementAndGet() % 8 == 0 && m.length > 0L &&
+                   !reader.get(s, m.length - 1L).contains(SnapRec(s"p${m.length - 1L}", m.length - 1L)))
+            failures.add(s"v${m.version}: get(${m.length - 1L}) wrong")
+          reader.len
+        } catch { case scala.util.control.NonFatal(e) => failures.add(e.toString) }
+      })
+    poller.start()
+    try (1 to 200).foreach(k => Manifest.commit(root, version(k)))
+    finally { done.set(true); poller.join() }
+    assert(failures.isEmpty, failures.toArray.take(3).mkString("; "))
+    assert(polls.get > 0 && reader.len == 200L)
+    assert(Fs.list(Manifest.metaDir(root)).forall(!_.getFileName.toString.startsWith(".")),
+      "a publish left its temp file")
+  }
 }

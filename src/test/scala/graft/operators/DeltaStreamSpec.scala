@@ -36,7 +36,7 @@ class DeltaStreamSpec extends SparkSpec {
 
   test("per-micro-batch refresh is incremental and lossless on a crafted corpus") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("delta-stream-spec").toString
+    val dir = tmpDir("delta-stream-spec")
     // 24 base + 12 delta docs; repeated token blocks give real shingle overlap
     val mk = (i: Long) => (i, (0 until 8).map(j => s"tok${(i / 3 + j) % 10}").mkString(" "))
     val base = (0L until 24L).map(mk)
