@@ -25,9 +25,10 @@ import scala.collection.mutable.ArrayBuffer
   *    out (`inflightStart`), even after the append commits, so the segment's
   *    rows count as buffered until the flush publishes;
   *  - a failed append loses nothing: the segment goes back to the front of
-  *    the buffer, the daemon keeps polling (and retries), and `close()`,
-  *    which drains the remaining buffer — flush-on-drop
-  *    (writable_cache.rs:162-185) — throws the failure.
+  *    the buffer, the daemon retries at a doubling interval (capped at 1 s,
+  *    back to `pollMs` after a success), and `close()`, which drains the
+  *    remaining buffer — flush-on-drop (writable_cache.rs:162-185) — throws
+  *    the failure.
   *
   * Rowids stay dense only while this buffer is the table's one writer.
   *
@@ -52,12 +53,22 @@ final class BufferedVectorStore[T: Encoder](
   private val flushLock = new Object
   @volatile private var running = true
 
+  /** Flushes the daemon attempted that failed. */
+  @volatile private[core] var daemonFailures = 0L
+
   private val flusher = new Thread(() => {
+    val maxDelayMs = math.max(pollMs, 1000L)
+    var delayMs = pollMs
     while (running) {
-      // a failed flush has put its rows back; the next poll retries
-      if (synchronized(buf.size) >= maxItems)
-        try flush() catch { case scala.util.control.NonFatal(_) => () }
-      Thread.sleep(pollMs)
+      // a failed flush has put its rows back; the retry waits twice as
+      // long as the last one
+      delayMs =
+        if (synchronized(buf.size) < maxItems) pollMs
+        else try { flush(); pollMs } catch { case scala.util.control.NonFatal(_) =>
+          daemonFailures += 1
+          math.min(delayMs * 2, maxDelayMs)
+        }
+      Thread.sleep(delayMs)
     }
   }, s"graft-flusher-${System.identityHashCode(this)}")
   flusher.setDaemon(true)

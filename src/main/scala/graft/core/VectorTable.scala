@@ -692,7 +692,7 @@ final class VectorTable(val spark: SparkSession, val root: String) {
     * physical erasure at the retention boundary. The commit bumps
     * `version` and `maskCount`, which is the signal the incremental
     * indexes' refresh checks to rewrite ONLY the affected cells/spans
-    * (see [[graft.operators.IvfTableIndex.refresh]]). Returns the number
+    * (see [[graft.operators.IndexMaintenance.refresh]]). Returns the number
     * of newly deleted rows.
     */
   def deleteWhere(cond: org.apache.spark.sql.Column): Long =

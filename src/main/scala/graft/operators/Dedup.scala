@@ -294,7 +294,7 @@ object Dedup {
     // evaluation per array element); semantics and oracle SQL unchanged.
     // A `_rowid` column, when present, rides through so the persisted
     // index's rows stay addressable by PHYSICAL row (takedown propagation
-    // anti-joins on rowid, never on a reusable key — see LshIndex.refresh).
+    // anti-joins on rowid, never on a reusable key — see IndexMaintenance.refresh).
     val keep = col("doc_id") +:
       (if (docs.columns.contains(graft.core.VectorTable.ROWID))
          Seq(col(graft.core.VectorTable.ROWID)) else Nil)
@@ -661,19 +661,10 @@ object Dedup {
     * (long + 8-byte binary), so the exchange-payload win the fingerprint
     * exists for (round-11 wrong #1) is unchanged.
     */
-  private[operators] def fpKeyed(df: DataFrame, canon: Column): DataFrame =
+  private[graft] def fpKeyed(df: DataFrame, canon: Column): DataFrame =
     df.select(xxhash64(canon).as("f1"),
       unhex(substring(md5(to_json(canon)), 17, 16)).as("f2"),
       col("doc_id"))
-
-  /** [[fpKeyed]] for callers outside the operators package (the streaming
-    * ingest gates' batch-level collapse grouping uses the SAME two-family
-    * key as every other collapse site — round-13 ADVICE: an md5-only batch
-    * fingerprint would make a false collision silently DROP a distinct
-    * vector, not merely degrade a plan choice).
-    */
-  private[graft] def fpKeyedFor(df: DataFrame, canon: Column): DataFrame =
-    fpKeyed(df, canon)
 
   /** One (gid = min doc_id, gsize) row per distinct group key — the
     * row-shaped group metadata every collapse body shares (no row ever
@@ -878,14 +869,61 @@ object Dedup {
   private def twoStage[I](s: SparkSession, d: String, dir: java.nio.file.Path)(
       build: (graft.core.VectorTable, String) => I)(
       refresh: (I, graft.core.VectorTable) => I): (graft.core.VectorTable, I) = {
-    val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    val cutoff = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
-    val t = graft.core.VectorTable.create(s, s"$dir/table")
-    t.append(docs.where(col("doc_id") <= cutoff))
-    val idx = build(t, s"$dir/index")
-    t.append(docs.where(col("doc_id") > cutoff))
+    val (t, idx, rest) =
+      firstStage(Tables.documents(s, d).select(col("doc_id"), col("text")), "doc_id", dir)(build)
+    t.append(rest)
     (t, refresh(idx, t))
   }
+
+  /** Land the first `idCol` half of `src` in `dir/table` and index it into
+    * `dir/index`; returns the table, the index and the second half.
+    */
+  private def firstStage[I](src: DataFrame, idCol: String, dir: java.nio.file.Path)(
+      build: (graft.core.VectorTable, String) => I): (graft.core.VectorTable, I, DataFrame) = {
+    val cutoff = src.agg(max(col(idCol))).head.getLong(0) / 2
+    val t = graft.core.VectorTable.create(src.sparkSession, s"$dir/table")
+    t.append(src.where(col(idCol) <= cutoff))
+    (t, build(t, s"$dir/index"), src.where(col(idCol) > cutoff))
+  }
+
+  /** [[twoStage]] with the second half arriving as a STREAM — the live
+    * production loop (corpus drop lands, index catches up, delta
+    * candidates serve from stored rows): it lands through
+    * [[graft.streaming.StreamIngest]] one staged file per micro-batch, and
+    * `refresh` runs INSIDE the loop (`onBatch`), so the index is current
+    * to the new head after every batch. The build THROWS unless `got` of
+    * the final index equals `expect` row for row (the from-scratch
+    * recompute) and ≥ 2 distinct refreshes ran (else the "incremental"
+    * claim was never exercised).
+    */
+  private[graft] def streamedTwoStage[I <: AnyRef](src: DataFrame, idCol: String,
+                                                   dir: java.nio.file.Path, what: String)(
+      build: (graft.core.VectorTable, String) => I)(
+      refresh: (I, graft.core.VectorTable) => I)(
+      expect: => DataFrame, got: I => DataFrame): Unit = {
+    val (t, first, rest) = firstStage(src, idCol, dir)(build)
+    val idx = new java.util.concurrent.atomic.AtomicReference(first)
+    val refreshes = new java.util.concurrent.atomic.AtomicInteger(0)
+    rest.repartition(4).write.parquet(s"$dir/staging")
+    graft.streaming.StreamIngest.replayStaged(src.sparkSession, src.schema, dir)((stream, trigger) =>
+      graft.streaming.StreamIngest.start(stream, t, s"$dir/ckpt", trigger,
+        onBatch = (tab, _) => {
+          val cur = idx.get()
+          val next = refresh(cur, tab)
+          if (next ne cur) { idx.set(next); refreshes.incrementAndGet(); () }
+        }))
+    val (missing, extra) = rowDiff(expect, got(idx.get()))
+    if (missing != 0 || extra != 0 || refreshes.get() < 2)
+      throw new IllegalStateException(
+        s"streamed $what diverged: $missing missing / $extra extra rows, " +
+          s"${refreshes.get()} incremental refreshes")
+  }
+
+  /** (rows of `expect` missing from `got`, rows of `got` not in `expect`),
+    * counted as multisets.
+    */
+  private def rowDiff(expect: DataFrame, got: DataFrame): (Long, Long) =
+    (expect.exceptAll(got).count(), got.exceptAll(expect).count())
 
   /** Documents ingested into a VectorTable in two stages with an
     * [[LshIndex]] built on the first and INCREMENTALLY refreshed for the
@@ -1014,34 +1052,12 @@ object Dedup {
   private def deltaBandsBlocked(all: DataFrame, delta: DataFrame): DataFrame =
     deltaPairsBlocked(all, delta, Seq("band", "h1", "h2"))
 
-  /** Generalized over the bucket key — the SimHash delta face runs the
-    * same join on (pc, pv) pigeonhole buckets.
+  /** [[deltaBandsBlocked]] generalized over the bucket key — the SimHash
+    * delta face runs the same join on (pc, pv) pigeonhole buckets, and the
+    * streaming ingest gates on their batch's bucket rows.
     */
-  /** [[deltaPairsBlocked]] for callers outside the operators package
-    * (the streaming ingest gates).
-    */
-  private[graft] def deltaPairsBlockedFor(all: DataFrame, delta: DataFrame,
-                                          key: Seq[String]): DataFrame =
-    deltaPairsBlocked(all, delta, key)
-
-  /** The production signature→banding chain over a (doc_id, text) frame,
-    * for callers outside the operators package (the LSH ingest gate bands
-    * each micro-batch with exactly the rows [[LshIndex]] stores).
-    */
-  private[graft] def bandRowsFor(docs: DataFrame): DataFrame =
-    bandsOf(signaturesOf(docs))
-
-  /** [[connectedComponentsOf]] for callers outside the operators package
-    * (the semantic ingest gate decomposes its survivor graph into
-    * components before sweeping). Input (doc_a, doc_b) pairs; output
-    * (id, cluster_id) labels.
-    */
-  private[graft] def connectedComponentsFor(pairs: DataFrame,
-                                            smallGraphLimit: Long): DataFrame =
-    connectedComponentsOf(pairs, smallGraphLimit)
-
-  private[operators] def deltaPairsBlocked(all: DataFrame, delta: DataFrame,
-                                           key: Seq[String]): DataFrame = {
+  private[graft] def deltaPairsBlocked(all: DataFrame, delta: DataFrame,
+                                       key: Seq[String]): DataFrame = {
     val kc = key.map(col)
     val slices = all.groupBy(kc: _*).agg(count(lit(1)).as("ca"))
       .join(delta.groupBy(kc: _*).agg(count(lit(1)).as("cd")), key)
@@ -1067,8 +1083,7 @@ object Dedup {
 
   /** The two-stage build's append boundary (max doc_id / 2 — the same rule
     * [[documentsLshIndex]] splits on): docs above it are the "new batch".
-    */
-  /** Session-memoized like [[documentCount]] (round-18): ~12 delta faces
+    * Session-memoized like [[documentCount]] (round-18): ~12 delta faces
     * each paid this one-row max(doc_id) job per invocation; the cutoff is
     * input METADATA of the fixed corpus dir, not query work, so caching
     * it per (session, corpus) changes no face's measured computation —
@@ -1085,49 +1100,22 @@ object Dedup {
        |SELECT doc_a, doc_b FROM full_pairs
        |WHERE doc_a > (SELECT c FROM cut) OR doc_b > (SELECT c FROM cut)""".stripMargin
 
-  /** CONTINUOUS-INGEST near-dup maintenance, composed end-to-end: the delta
-    * span arrives as a STREAM (staged files, one micro-batch per file,
-    * [[graft.streaming.StreamIngest]] exactly-once append), and the
-    * [[LshIndex]] is refreshed INSIDE the micro-batch loop (`onBatch`
-    * hook) — after every batch the index is current to the new head, which
-    * is the live production loop: corpus drop lands → index catches up →
-    * delta candidates are served from stored rows. The declared query
-    * reads the per-batch-maintained index; the oracle is the same full
-    * recompute filtered to delta-touching pairs as the batch face
-    * ([[deltaCandidatePairs]]) — a green row proves N incremental
-    * micro-batch refreshes lose nothing against re-hashing everything.
-    * Build-time verification additionally requires band-row set equality
-    * against a from-scratch recompute and ≥ 2 distinct refreshes (else the
-    * "incremental" claim was never exercised).
+  /** CONTINUOUS-INGEST near-dup maintenance, composed end-to-end: the
+    * [[LshIndex]] is maintained by [[streamedTwoStage]], refreshed inside
+    * the micro-batch loop. The declared query reads the per-batch-maintained
+    * index; the oracle is the same full recompute filtered to
+    * delta-touching pairs as the batch face ([[deltaCandidatePairs]]) — a
+    * green row proves N incremental micro-batch refreshes lose nothing
+    * against re-hashing everything. The build checks band-row set equality
+    * against a from-scratch recompute.
     */
   private[graft] def streamedLshIndexRoot(s: SparkSession, d: String): String =
     Memo.machine(s, "graft-rowid-tables", "docs-lsh-streamed", d, "#lsh-streamed") { dir =>
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val cutoff = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
-      val t = graft.core.VectorTable.create(s, s"$dir/table")
-      t.append(docs.where(col("doc_id") <= cutoff))
-      val idx = new java.util.concurrent.atomic.AtomicReference(
-        LshIndex.build(t, s"$dir/index"))
-      val refreshes = new java.util.concurrent.atomic.AtomicInteger(0)
-      docs.where(col("doc_id") > cutoff)
-        .repartition(4).write.parquet(s"$dir/staging")
-      graft.streaming.StreamIngest.replayStaged(s, docs.schema, dir)((stream, trigger) =>
-        graft.streaming.StreamIngest.start(stream, t, s"$dir/ckpt", trigger,
-          onBatch = (tab, _) => {
-            val cur = idx.get()
-            val next = cur.refresh(tab)
-            if (next ne cur) { idx.set(next); refreshes.incrementAndGet(); () }
-          }))
-      val expect = bandsOf(signaturesOf(docs))
       // logical band rows only: the stored layout additionally carries
       // `_rowid` (physical-row addressing for takedown propagation)
-      val got = idx.get().bands.select("doc_id", "band", "h1", "h2")
-      val missing = expect.exceptAll(got).count()
-      val extra = got.exceptAll(expect).count()
-      if (missing != 0 || extra != 0 || refreshes.get() < 2)
-        throw new IllegalStateException(
-          s"streamed LSH index diverged: $missing missing / $extra extra band rows, " +
-            s"${refreshes.get()} incremental refreshes")
+      streamedTwoStage(docs, "doc_id", dir, "LSH index")(LshIndex.build)(_.refresh(_))(
+        bandsOf(signaturesOf(docs)), _.bands.select("doc_id", "band", "h1", "h2"))
     }
 
   def prebuildStreamedLshIndex(s: SparkSession, d: String): Unit = {
@@ -1259,40 +1247,18 @@ object Dedup {
   }
 
   /** STREAM-MAINTAINED [[SpanIndex]] (the `dedup_delta_candidates_streamed`
-    * discipline for the span modality): the second half lands through
-    * [[graft.streaming.StreamIngest]] one file per micro-batch, the index
-    * refreshes inside the loop (only each appended span is rolling-hashed),
-    * and the build THROWS unless the streamed index's window rows equal
-    * the batch recompute exactly with ≥2 incremental refreshes observed.
+    * discipline for the span modality, [[streamedTwoStage]]): only each
+    * appended span is rolling-hashed, and the build throws unless the
+    * streamed index's window rows equal the batch recompute exactly.
     */
   private[graft] def streamedSpanIndexRoot(s: SparkSession, d: String): String =
     Memo.machine(s, "graft-rowid-tables", "docs-spans-streamed", d, "#spans-streamed") { dir =>
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val cutoff = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
-      val t = graft.core.VectorTable.create(s, s"$dir/table")
-      t.append(docs.where(col("doc_id") <= cutoff))
-      val idx = new java.util.concurrent.atomic.AtomicReference(
-        SpanIndex.build(t, s"$dir/index"))
-      val refreshes = new java.util.concurrent.atomic.AtomicInteger(0)
-      docs.where(col("doc_id") > cutoff)
-        .repartition(4).write.parquet(s"$dir/staging")
-      graft.streaming.StreamIngest.replayStaged(s, docs.schema, dir)((stream, trigger) =>
-        graft.streaming.StreamIngest.start(stream, t, s"$dir/ckpt", trigger,
-          onBatch = (tab, _) => {
-            val cur = idx.get()
-            val next = cur.refresh(tab)
-            if (next ne cur) { idx.set(next); refreshes.incrementAndGet(); () }
-          }))
-      val expect = docs.select(col("doc_id"), explode(graft.functions.TextFunctions
-        .rollingHashes(col("text"), repeatedSpanWindow, repeatedSpanStride)).as("gram_hash"))
       // logical window rows only (the layout also carries `_rowid`)
-      val got = idx.get().windows.select("doc_id", "gram_hash")
-      val missing = expect.exceptAll(got).count()
-      val extra = got.exceptAll(expect).count()
-      if (missing != 0 || extra != 0 || refreshes.get() < 2)
-        throw new IllegalStateException(
-          s"streamed span index diverged: $missing missing / $extra extra window rows, " +
-            s"${refreshes.get()} incremental refreshes")
+      streamedTwoStage(docs, "doc_id", dir, "span index")(SpanIndex.build)(_.refresh(_))(
+        docs.select(col("doc_id"), explode(graft.functions.TextFunctions
+          .rollingHashes(col("text"), repeatedSpanWindow, repeatedSpanStride)).as("gram_hash")),
+        _.windows.select("doc_id", "gram_hash"))
     }
 
   def prebuildStreamedSpanIndex(s: SparkSession, d: String): Unit = {
@@ -1693,7 +1659,7 @@ object Dedup {
     * full-corpus LSH candidate pair with an even id — is deleted
     * ([[graft.core.VectorTable.deleteWhere]]) and ONE refresh propagates
     * the mask into the [[LshIndex]] via the file-granular
-    * [[IndexCompaction.applyDeletesFiles]] (only files containing masked
+    * [[IndexMaintenance.applyDeletesFiles]] (only files containing masked
     * ids are rewritten; the rest hard-link). The victims are chosen FROM
     * the pair set deliberately: deleting ids that never collide would
     * leave the face unable to distinguish a stale index from a scrubbed
@@ -2124,8 +2090,8 @@ object Dedup {
     * path is testable on crafted graphs (long chains, forests) without a
     * corpus behind them.
     */
-  private[operators] def connectedComponentsOf(pairsIn: DataFrame,
-                                               smallGraphLimit: Long): DataFrame =
+  private[graft] def connectedComponentsOf(pairsIn: DataFrame,
+                                           smallGraphLimit: Long): DataFrame =
     connectedComponentsWithRounds(pairsIn, smallGraphLimit)._1
 
   /** Labels plus the number of hook+compress rounds the distributed path
@@ -2897,9 +2863,7 @@ object Dedup {
       val t = graft.core.VectorTable.create(s, s"$dir/table")
       graft.streaming.StreamIngest.replayStaged(s, source.schema, dir)((stream, trigger) =>
         graft.streaming.StreamIngest.start(stream, t, s"$dir/ckpt", trigger))
-      val landed = t.scan().select(source.columns.map(col): _*)
-      val missing = source.exceptAll(landed).count()
-      val extra = landed.exceptAll(source).count()
+      val (missing, extra) = rowDiff(source, t.scan().select(source.columns.map(col): _*))
       if (missing != 0 || extra != 0)
         throw new IllegalStateException(
           s"streamed ingest diverged from batch source: $missing missing, $extra extra rows")

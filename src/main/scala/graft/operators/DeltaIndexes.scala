@@ -3,7 +3,6 @@ package graft.operators
 import graft.core.VectorTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
 
 /** Persisted 64-bit SimHash index over a documents [[VectorTable]] with
   * INCREMENTAL maintenance — the [[LshIndex]] discipline for the pigeonhole
@@ -23,45 +22,17 @@ import java.nio.file.{Files, Paths}
 final class SimHashIndex private (
     val spark: SparkSession,
     val root: String,
-    val builtFromVersion: Long,
-    val indexedLength: Long,
-    val indexedMask: Long = 0L,
-    val indexedRestores: Long = 0L) {
+    private[graft] val meta: IndexMeta) extends DerivedIndex {
 
   /** The stored (doc_id, simhash) signature rows. */
   def signatures: DataFrame =
     spark.read.parquet(IndexCompaction.dataDir(root).toString)
 
-  def isStale(table: VectorTable): Boolean =
-    table.manifest.version > builtFromVersion
-
-  /** Takedown propagation anti-joins on `_rowid`, the staleness gate is
-    * the monotonic tombstone total, and the layout is probed BEFORE the
-    * span append — see [[LshIndex.refresh]] for the full rationale.
-    */
-  def refresh(table: VectorTable): SimHashIndex = {
-    val m = table.manifest
-    val cu = IndexCompaction.restoreCatchUp(spark, root, table, m,
-      builtFromVersion, indexedLength, indexedMask, indexedRestores)
-    val effLen = cu.map(_.newLength).getOrElse(indexedLength)
-    val effMask = cu.map(_.maskFloor).getOrElse(indexedMask)
-    val tomb = m.maskCount + m.purged
-    if (cu.isEmpty && m.length <= effLen && tomb == effMask) return this
-    val legacy = IndexCompaction.hasParquet(IndexCompaction.dataDir(root)) &&
-      !IndexCompaction.liveHasColumn(spark, root, VectorTable.ROWID)
-    if (m.length > effLen)
-      SimHashIndex.writeSpan(table, effLen, m.length - effLen, root,
-        withRowid = !legacy)
-    if (cu.isDefined || tomb != effMask) {
-      val maskOnly = tomb >= effMask && tomb - effMask <= m.maskCount
-      val key = if (legacy) "doc_id" else VectorTable.ROWID
-      IndexCompaction.applyDeletesFiles(spark, root, key,
-        IndexCompaction.deletedKeys(table, key, key, () => signatures.select(key), maskOnly),
-        sortWithin = Seq("simhash"))
-    }
-    IndexCompaction.writeMeta(root, m.version, m.length, tomb, m.restores)
-    new SimHashIndex(spark, root, m.version, m.length, tomb, m.restores)
-  }
+  /** See [[IndexMaintenance.refresh]]. */
+  def refresh(table: VectorTable): SimHashIndex =
+    IndexMaintenance.refresh(table, root, meta, () => signatures, legacyKey = Some("doc_id"))(
+      SimHashIndex.writeSpan(table, _, _, root, _), _.rewriteFiles(Seq("simhash")))
+      .fold(this)(new SimHashIndex(spark, root, _))
 
   /** In-place [[IndexCompaction]] over the accumulated refresh files —
     * rows, meta and every delta-face result identical by construction.
@@ -74,40 +45,28 @@ final class SimHashIndex private (
 
 object SimHashIndex {
 
-  def build(table: VectorTable, root: String): SimHashIndex = {
-    val m = table.manifest
-    Files.createDirectories(Paths.get(root))
-    if (m.length > 0) writeSpan(table, 0L, m.length, root, withRowid = true)
-    else {
-      // an EMPTY index must still be readable (round-12 ADVICE): write the
-      // (doc_id, simhash) schema frame so `signatures` never throws
-      // path-not-found before the first refresh — same contract as
-      // ContainmentIndex.build, whose freq/entry frames always exist
-      import table.spark.implicits._
-      Seq.empty[(Long, Long, Long)].toDF("doc_id", VectorTable.ROWID, "simhash")
-        .write.mode("append").parquet(IndexCompaction.dataDir(root).toString)
-    }
-    IndexCompaction.writeMeta(root, m.version, m.length, m.maskCount + m.purged, m.restores)
-    new SimHashIndex(table.spark, root, m.version, m.length,
-      m.maskCount + m.purged, m.restores)
-  }
+  def build(table: VectorTable, root: String): SimHashIndex =
+    new SimHashIndex(table.spark, root, IndexMaintenance.build(table, root) { len =>
+      if (len > 0) writeSpan(table, 0L, len, root, withRowid = true)
+      else {
+        // an EMPTY index must still be readable (round-12 ADVICE): write the
+        // (doc_id, simhash) schema frame so `signatures` never throws
+        // path-not-found before the first refresh — same contract as
+        // ContainmentIndex.build, whose freq/entry frames always exist
+        import table.spark.implicits._
+        IndexMaintenance.appendRows(Seq.empty[(Long, Long, Long)]
+          .toDF("doc_id", VectorTable.ROWID, "simhash"), root, withRowid = true)
+      }
+    })
 
-  def open(spark: SparkSession, root: String): SimHashIndex = {
-    // meta is "version,length" (pre-round-15) or "version,length,mask"
-    val parts = Files.readString(Paths.get(root, "meta.txt")).trim.split(",")
-    val mask = if (parts.length > 2) parts(2).toLong else 0L
-    val restores = if (parts.length > 3) parts(3).toLong else 0L
-    new SimHashIndex(spark, root, parts(0).toLong, parts(1).toLong, mask, restores)
-  }
+  def open(spark: SparkSession, root: String): SimHashIndex =
+    new SimHashIndex(spark, root, IndexMaintenance.readMeta(root))
 
   private def writeSpan(table: VectorTable, start: Long, count: Long, root: String,
-                        withRowid: Boolean): Unit = {
-    val rows = table.span(start, count)
+                        withRowid: Boolean): Unit =
+    IndexMaintenance.appendRows(table.span(start, count)
       .select(col("doc_id"), col(VectorTable.ROWID),
-        graft.functions.TextFunctions.simhash64(col("text")).as("simhash"))
-    (if (withRowid) rows else rows.drop(VectorTable.ROWID))
-      .write.mode("append").parquet(IndexCompaction.dataDir(root).toString)
-  }
+        graft.functions.TextFunctions.simhash64(col("text")).as("simhash")), root, withRowid)
 }
 
 /** Persisted containment-prefix index over a documents [[VectorTable]]:
@@ -132,10 +91,7 @@ object SimHashIndex {
 final class ContainmentIndex private (
     val spark: SparkSession,
     val root: String,
-    val builtFromVersion: Long,
-    val indexedLength: Long,
-    val indexedMask: Long = 0L,
-    val indexedRestores: Long = 0L) {
+    private[graft] val meta: IndexMeta) extends DerivedIndex {
 
   /** Stored (doc_id, sg frozen-rarity-order, sh ASC, n) rows. */
   def entries: DataFrame =
@@ -144,37 +100,17 @@ final class ContainmentIndex private (
   /** The frozen build-time (g, cnt) frequency table. */
   def freq: DataFrame = spark.read.parquet(s"$root/freq")
 
-  def isStale(table: VectorTable): Boolean =
-    table.manifest.version > builtFromVersion
-
-  def refresh(table: VectorTable): ContainmentIndex = {
-    val m = table.manifest
-    val cu = IndexCompaction.restoreCatchUp(spark, root, table, m,
-      builtFromVersion, indexedLength, indexedMask, indexedRestores)
-    val effLen = cu.map(_.newLength).getOrElse(indexedLength)
-    val effMask = cu.map(_.maskFloor).getOrElse(indexedMask)
-    val tomb = m.maskCount + m.purged
-    if (cu.isEmpty && m.length <= effLen && tomb == effMask) return this
-    // layout probe BEFORE the span append; tombstone-total gate — see
-    // LshIndex.refresh for the rationale
-    val legacy = IndexCompaction.hasParquet(IndexCompaction.dataDir(root)) &&
-      !IndexCompaction.liveHasColumn(spark, root, VectorTable.ROWID)
-    if (m.length > effLen)
-      ContainmentIndex.writeSpan(table, effLen, m.length - effLen, root,
-        freq, withRowid = !legacy)
-    // takedown: the frozen freq table keeps the deleted docs' counts —
-    // frequency drift only degrades prefix SELECTIVITY, never correctness
-    // (losslessness holds under ANY shared total order; see class doc)
-    if (cu.isDefined || tomb != effMask) {
-      val maskOnly = tomb >= effMask && tomb - effMask <= m.maskCount
-      val key = if (legacy) "doc_id" else VectorTable.ROWID
-      IndexCompaction.applyDeletesFiles(spark, root, key,
-        IndexCompaction.deletedKeys(table, key, key, () => entries.select(key), maskOnly),
-        sortWithin = Seq("doc_id"))
-    }
-    IndexCompaction.writeMeta(root, m.version, m.length, tomb, m.restores)
-    new ContainmentIndex(spark, root, m.version, m.length, tomb, m.restores)
-  }
+  /** See [[IndexMaintenance.refresh]]. A takedown leaves the frozen freq
+    * table's counts: frequency drift only degrades prefix SELECTIVITY,
+    * never correctness (losslessness holds under ANY shared total order;
+    * see class doc).
+    */
+  def refresh(table: VectorTable): ContainmentIndex =
+    IndexMaintenance.refresh(table, root, meta, () => entries, legacyKey = Some("doc_id"))(
+      (start, count, withRowid) =>
+        ContainmentIndex.writeEntries(ContainmentIndex.shOf(table, start, count), freq, root, withRowid),
+      _.rewriteFiles(Seq("doc_id")))
+      .fold(this)(new ContainmentIndex(spark, root, _))
 
   /** In-place [[IndexCompaction]] over the accumulated refresh files —
     * rows, meta, the frozen freq table and every delta-face result
@@ -188,50 +124,36 @@ final class ContainmentIndex private (
 
 object ContainmentIndex {
 
-  def build(table: VectorTable, root: String): ContainmentIndex = {
-    val m = table.manifest
-    Files.createDirectories(Paths.get(root))
-    if (m.length == 0) {
-      // empty index stays readable before the first refresh (round-12
-      // ADVICE contract, same as SimHashIndex.build); the frozen freq
-      // table is empty, so a later refresh orders every element by
-      // (0, g) — rarest-first, deterministic, still a valid total order
-      import table.spark.implicits._
-      Seq.empty[(Long, Long)].toDF("g", "cnt")
-        .write.mode("overwrite").parquet(s"$root/freq")
-      Seq.empty[(Long, Long, Seq[Long], Seq[Long], Int)]
-        .toDF("doc_id", VectorTable.ROWID, "sg", "sh", "n")
-        .write.mode("append").parquet(IndexCompaction.dataDir(root).toString)
-    } else {
-      val sh = shOf(table, 0L, m.length)
-      val freq = sh.select(explode(col("sh")).as("g"))
-        .groupBy("g").agg(count(lit(1)).as("cnt"))
-      freq.write.mode("overwrite").parquet(s"$root/freq")
-      val frozen = table.spark.read.parquet(s"$root/freq")
-      writeEntries(sh, frozen, root, withRowid = true)
-    }
-    IndexCompaction.writeMeta(root, m.version, m.length, m.maskCount + m.purged, m.restores)
-    new ContainmentIndex(table.spark, root, m.version, m.length,
-      m.maskCount + m.purged, m.restores)
-  }
+  def build(table: VectorTable, root: String): ContainmentIndex =
+    new ContainmentIndex(table.spark, root, IndexMaintenance.build(table, root) { len =>
+      if (len == 0) {
+        // empty index stays readable before the first refresh (round-12
+        // ADVICE contract, same as SimHashIndex.build); the frozen freq
+        // table is empty, so a later refresh orders every element by
+        // (0, g) — rarest-first, deterministic, still a valid total order
+        import table.spark.implicits._
+        Seq.empty[(Long, Long)].toDF("g", "cnt")
+          .write.mode("overwrite").parquet(s"$root/freq")
+        IndexMaintenance.appendRows(Seq.empty[(Long, Long, Seq[Long], Seq[Long], Int)]
+          .toDF("doc_id", VectorTable.ROWID, "sg", "sh", "n"), root, withRowid = true)
+      } else {
+        val sh = shOf(table, 0L, len)
+        val freq = sh.select(explode(col("sh")).as("g"))
+          .groupBy("g").agg(count(lit(1)).as("cnt"))
+        freq.write.mode("overwrite").parquet(s"$root/freq")
+        val frozen = table.spark.read.parquet(s"$root/freq")
+        writeEntries(sh, frozen, root, withRowid = true)
+      }
+    })
 
-  def open(spark: SparkSession, root: String): ContainmentIndex = {
-    // meta is "version,length" (pre-round-15) or "version,length,mask"
-    val parts = Files.readString(Paths.get(root, "meta.txt")).trim.split(",")
-    val mask = if (parts.length > 2) parts(2).toLong else 0L
-    val restores = if (parts.length > 3) parts(3).toLong else 0L
-    new ContainmentIndex(spark, root, parts(0).toLong, parts(1).toLong, mask, restores)
-  }
+  def open(spark: SparkSession, root: String): ContainmentIndex =
+    new ContainmentIndex(spark, root, IndexMaintenance.readMeta(root))
 
   private def shOf(table: VectorTable, start: Long, count: Long): DataFrame =
     table.span(start, count)
       .select(col("doc_id"), col(VectorTable.ROWID),
         graft.functions.TextFunctions.shingleHashes(col("text")).as("sh"))
       .where(size(col("sh")) > 0)
-
-  private def writeSpan(table: VectorTable, start: Long, count: Long,
-                        root: String, frozenFreq: DataFrame, withRowid: Boolean): Unit =
-    writeEntries(shOf(table, start, count), frozenFreq, root, withRowid)
 
   /** Sort each doc's elements by the (frozen) frequency order — unseen
     * elements coalesce to cnt 0 — and append (doc_id, sg, sh, n) rows.
@@ -246,11 +168,9 @@ object ContainmentIndex {
       .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
       .groupBy("doc_id")
       .agg(expr("transform(array_sort(collect_list(struct(cnt, g))), x -> x.g)").as("sg"))
-    val rows = sg.join(sh, Seq("doc_id"))
+    IndexMaintenance.appendRows(sg.join(sh, Seq("doc_id"))
       .withColumn("n", size(col("sg")))
-      .select("doc_id", VectorTable.ROWID, "sg", "sh", "n")
-    (if (withRowid) rows else rows.drop(VectorTable.ROWID))
-      .write.mode("append").parquet(IndexCompaction.dataDir(root).toString)
+      .select("doc_id", VectorTable.ROWID, "sg", "sh", "n"), root, withRowid)
   }
 }
 
@@ -267,43 +187,17 @@ object ContainmentIndex {
 final class SpanIndex private (
     val spark: SparkSession,
     val root: String,
-    val builtFromVersion: Long,
-    val indexedLength: Long,
-    val indexedMask: Long = 0L,
-    val indexedRestores: Long = 0L) {
+    private[graft] val meta: IndexMeta) extends DerivedIndex {
 
   /** The stored (doc_id, gram_hash) window rows. */
   def windows: DataFrame =
     spark.read.parquet(IndexCompaction.dataDir(root).toString)
 
-  def isStale(table: VectorTable): Boolean =
-    table.manifest.version > builtFromVersion
-
-  def refresh(table: VectorTable): SpanIndex = {
-    val m = table.manifest
-    val cu = IndexCompaction.restoreCatchUp(spark, root, table, m,
-      builtFromVersion, indexedLength, indexedMask, indexedRestores)
-    val effLen = cu.map(_.newLength).getOrElse(indexedLength)
-    val effMask = cu.map(_.maskFloor).getOrElse(indexedMask)
-    val tomb = m.maskCount + m.purged
-    if (cu.isEmpty && m.length <= effLen && tomb == effMask) return this
-    // layout probe BEFORE the span append; tombstone-total gate — see
-    // LshIndex.refresh for the rationale
-    val legacy = IndexCompaction.hasParquet(IndexCompaction.dataDir(root)) &&
-      !IndexCompaction.liveHasColumn(spark, root, VectorTable.ROWID)
-    if (m.length > effLen)
-      SpanIndex.writeSpan(table, effLen, m.length - effLen, root,
-        withRowid = !legacy)
-    if (cu.isDefined || tomb != effMask) {
-      val maskOnly = tomb >= effMask && tomb - effMask <= m.maskCount
-      val key = if (legacy) "doc_id" else VectorTable.ROWID
-      IndexCompaction.applyDeletesFiles(spark, root, key,
-        IndexCompaction.deletedKeys(table, key, key, () => windows.select(key), maskOnly),
-        sortWithin = Seq("gram_hash"))
-    }
-    IndexCompaction.writeMeta(root, m.version, m.length, tomb, m.restores)
-    new SpanIndex(spark, root, m.version, m.length, tomb, m.restores)
-  }
+  /** See [[IndexMaintenance.refresh]]. */
+  def refresh(table: VectorTable): SpanIndex =
+    IndexMaintenance.refresh(table, root, meta, () => windows, legacyKey = Some("doc_id"))(
+      SpanIndex.writeSpan(table, _, _, root, _), _.rewriteFiles(Seq("gram_hash")))
+      .fold(this)(new SpanIndex(spark, root, _))
 
   /** In-place [[IndexCompaction]] over the accumulated refresh files —
     * rows, meta and every delta-face result identical by construction.
@@ -316,38 +210,26 @@ final class SpanIndex private (
 
 object SpanIndex {
 
-  def build(table: VectorTable, root: String): SpanIndex = {
-    val m = table.manifest
-    Files.createDirectories(Paths.get(root))
-    if (m.length > 0) writeSpan(table, 0L, m.length, root, withRowid = true)
-    else {
-      // empty index stays readable before the first refresh (round-12
-      // ADVICE contract, same as SimHashIndex.build)
-      import table.spark.implicits._
-      Seq.empty[(Long, Long, Long)].toDF("doc_id", VectorTable.ROWID, "gram_hash")
-        .write.mode("append").parquet(IndexCompaction.dataDir(root).toString)
-    }
-    IndexCompaction.writeMeta(root, m.version, m.length, m.maskCount + m.purged, m.restores)
-    new SpanIndex(table.spark, root, m.version, m.length,
-      m.maskCount + m.purged, m.restores)
-  }
+  def build(table: VectorTable, root: String): SpanIndex =
+    new SpanIndex(table.spark, root, IndexMaintenance.build(table, root) { len =>
+      if (len > 0) writeSpan(table, 0L, len, root, withRowid = true)
+      else {
+        // empty index stays readable before the first refresh (round-12
+        // ADVICE contract, same as SimHashIndex.build)
+        import table.spark.implicits._
+        IndexMaintenance.appendRows(Seq.empty[(Long, Long, Long)]
+          .toDF("doc_id", VectorTable.ROWID, "gram_hash"), root, withRowid = true)
+      }
+    })
 
-  def open(spark: SparkSession, root: String): SpanIndex = {
-    // meta is "version,length" (pre-round-15) or "version,length,mask"
-    val parts = Files.readString(Paths.get(root, "meta.txt")).trim.split(",")
-    val mask = if (parts.length > 2) parts(2).toLong else 0L
-    val restores = if (parts.length > 3) parts(3).toLong else 0L
-    new SpanIndex(spark, root, parts(0).toLong, parts(1).toLong, mask, restores)
-  }
+  def open(spark: SparkSession, root: String): SpanIndex =
+    new SpanIndex(spark, root, IndexMaintenance.readMeta(root))
 
   private def writeSpan(table: VectorTable, start: Long, count: Long, root: String,
-                        withRowid: Boolean): Unit = {
-    val rows = table.span(start, count)
+                        withRowid: Boolean): Unit =
+    IndexMaintenance.appendRows(table.span(start, count)
       .select(col("doc_id"), col(VectorTable.ROWID),
         explode(graft.functions.TextFunctions
           .rollingHashes(col("text"), Dedup.repeatedSpanWindow, Dedup.repeatedSpanStride))
-          .as("gram_hash"))
-    (if (withRowid) rows else rows.drop(VectorTable.ROWID))
-      .write.mode("append").parquet(IndexCompaction.dataDir(root).toString)
-  }
+          .as("gram_hash")), root, withRowid)
 }

@@ -14,16 +14,13 @@ import java.nio.file.{Files, Paths}
   * Scale shape: the assignment pass is map-only (k cosine kernels + argmax
   * per new vector), the index directory stays hive-partitioned by `cell`
   * so a search lists only the probed cells' files, and a continuously-fed
-  * corpus never pays a full re-index. Same (version, length) staleness
-  * protocol as [[LshIndex]] and [[graft.core.SecondaryIndex]].
+  * corpus never pays a full re-index. Maintained like every derived
+  * index ([[IndexMaintenance]]), with its own per-cell delete pass.
   */
 final class IvfTableIndex private (
     val spark: SparkSession,
     val root: String,
-    val builtFromVersion: Long,
-    val indexedLength: Long,
-    val indexedMask: Long = 0L,
-    val indexedRestores: Long = 0L) {
+    private[graft] val meta: IndexMeta) extends DerivedIndex {
 
   /** Fixed cell centroids, persisted at build time. */
   lazy val centroids: Array[Array[Float]] =
@@ -60,41 +57,14 @@ final class IvfTableIndex private (
     }
   }
 
-  def isStale(table: VectorTable): Boolean =
-    table.manifest.version > builtFromVersion
-
-  /** Assign only the appended span to the FIXED centroids; apply any
-    * takedown deletes the table committed since the last refresh (the
-    * manifest's MONOTONIC tombstone total maskCount + purged is the
-    * signal — [[VectorTable.deleteWhere]] bumps maskCount, [[VectorTable.purge]]
-    * moves it into purged without changing the sum, so gating on the raw
-    * count would be unsound post-purge, round-16 ADVICE); no-op → `this`.
-    * Order matters twice: the layout is probed BEFORE the span append
-    * (appending `_rowid`-carrying files into a legacy layout would leave
-    * a mixed schema whose old rows dodge the anti-join), and the appended
-    * span lands before [[applyDeletes]] so rows appended-then-deleted
-    * between refreshes are scrubbed too.
+  /** Assign only the appended span to the FIXED centroids and apply the
+    * deletes committed since ([[IndexMaintenance.refresh]], with the
+    * per-cell [[applyDeletes]]); a no-op returns `this`.
     */
-  def refresh(table: VectorTable): IvfTableIndex = {
-    val m = table.manifest
-    val cu = IndexCompaction.restoreCatchUp(spark, root, table, m,
-      builtFromVersion, indexedLength, indexedMask, indexedRestores)
-    val effLen = cu.map(_.newLength).getOrElse(indexedLength)
-    val effMask = cu.map(_.maskFloor).getOrElse(indexedMask)
-    val tomb = m.maskCount + m.purged
-    if (cu.isEmpty && m.length <= effLen && tomb == effMask) return this
-    val legacy = IndexCompaction.hasParquet(IndexCompaction.dataDir(root)) &&
-      !IndexCompaction.liveHasColumn(spark, root, VectorTable.ROWID)
-    if (m.length > effLen)
-      IvfTableIndex.writeSpan(table, centroids, effLen, m.length - effLen,
-        root, withRowid = !legacy)
-    // a catch-up FORCES the delete pass (re-spanned masked rows scrub here)
-    if (cu.isDefined || tomb != effMask)
-      applyDeletes(table, legacy,
-        maskOnly = tomb >= effMask && tomb - effMask <= m.maskCount)
-    IndexCompaction.writeMeta(root, m.version, m.length, tomb, m.restores)
-    new IvfTableIndex(spark, root, m.version, m.length, tomb, m.restores)
-  }
+  def refresh(table: VectorTable): IvfTableIndex =
+    IndexMaintenance.refresh(table, root, meta, () => data, legacyKey = Some("vec_id"))(
+      IvfTableIndex.writeSpan(table, centroids, _, _, root, _), applyDeletes(table, _))
+      .fold(this)(new IvfTableIndex(spark, root, _))
 
   /** TAKEDOWN propagation — rewrite ONLY the cells that contain masked
     * ids (a takedown touches a handful of documents; re-assigning the
@@ -109,19 +79,12 @@ final class IvfTableIndex private (
     * affected. A cell whose every member is deleted disappears from the
     * layout entirely.
     */
-  private def applyDeletes(table: VectorTable, legacy: Boolean, maskOnly: Boolean): Unit = {
+  private def applyDeletes(table: VectorTable, d: IndexMaintenance.Deletes): Unit = {
     val live = IndexCompaction.dataDir(root)
     if (!IndexCompaction.hasParquet(live)) return
-    // anti-join on `_rowid` (round-16 ADVICE): the mask also holds rows
-    // `upsertBy` superseded, whose LIVE replacement shares vec_id — a
-    // vec_id anti-join would delete the replacement's just-written index
-    // entry too. Physical-row addressing deletes exactly the masked rows;
-    // a pre-round-16 layout without the column falls back to vec_id (and
-    // must not be refreshed over an upserted table).
-    val key = if (legacy) "vec_id" else VectorTable.ROWID
-    val deleted = IndexCompaction
-      .deletedKeys(table, key, key, () => data.select(key), maskOnly)
-      .localCheckpoint()
+    // anti-join on `_rowid`, or `vec_id` for a pre-`_rowid` layout
+    val key = d.key
+    val deleted = d.ids.localCheckpoint()
     // affected-CELL discovery is O(mask), not O(index) (round-17 verdict
     // #1): the masked rows still carry their embeddings, and the cell an
     // index row lives in is the DETERMINISTIC argmax of those embeddings
@@ -134,7 +97,7 @@ final class IvfTableIndex private (
     // embeddings left to assign (the rows are physically gone) and falls
     // back to the index-side semi-join, the documented recovery cost.
     val affected: Set[Int] =
-      if (maskOnly) {
+      if (d.maskOnly) {
         val sims = Similarity.centroidSimsColumn(centroids)
         table.maskedScan()
           .withColumn("sims", sims)
@@ -277,27 +240,19 @@ object IvfTableIndex {
     */
   def buildWith(table: VectorTable, root: String,
                 cs: Array[Array[Float]]): IvfTableIndex = {
-    val m = table.manifest
-    Files.createDirectories(Paths.get(root))
     val spark = table.spark
     import spark.implicits._
-    cs.zipWithIndex.map { case (e, i) => (i, e.toSeq) }.toSeq.toDF("cell", "embedding")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/centroids")
-    // an EMPTY table fixes centroids only — range(0,0) has no data
-    // columns to assign; the first refresh writes the first real span
-    if (m.length > 0) writeSpan(table, cs, 0L, m.length, root, withRowid = true)
-    IndexCompaction.writeMeta(root, m.version, m.length, m.maskCount + m.purged, m.restores)
-    new IvfTableIndex(spark, root, m.version, m.length,
-      m.maskCount + m.purged, m.restores)
+    new IvfTableIndex(spark, root, IndexMaintenance.build(table, root) { len =>
+      cs.zipWithIndex.map { case (e, i) => (i, e.toSeq) }.toSeq.toDF("cell", "embedding")
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/centroids")
+      // an EMPTY table fixes centroids only — range(0,0) has no data
+      // columns to assign; the first refresh writes the first real span
+      if (len > 0) writeSpan(table, cs, 0L, len, root, withRowid = true)
+    })
   }
 
-  def open(spark: SparkSession, root: String): IvfTableIndex = {
-    // meta is "version,length" (pre-round-15) or "version,length,mask"
-    val parts = Files.readString(Paths.get(root, "meta.txt")).trim.split(",")
-    val mask = if (parts.length > 2) parts(2).toLong else 0L
-    val restores = if (parts.length > 3) parts(3).toLong else 0L
-    new IvfTableIndex(spark, root, parts(0).toLong, parts(1).toLong, mask, restores)
-  }
+  def open(spark: SparkSession, root: String): IvfTableIndex =
+    new IvfTableIndex(spark, root, IndexMaintenance.readMeta(root))
 
   /** Cells ranked by cosine(q, centroid) desc, ties to the lower id —
     * driver-side over numCells rows.

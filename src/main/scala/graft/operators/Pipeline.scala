@@ -352,7 +352,7 @@ object Pipeline {
         kept.select(col("cell"), col("vec_id").as("doc_id")),
         Seq("cell"), Dedup.bucketExpandCap)).count(),
       () => {
-        val coveredDropped = scored(Dedup.deltaPairsBlockedFor(
+        val coveredDropped = scored(Dedup.deltaPairsBlocked(
             kept.select(col("cell"), col("vec_id").as("doc_id")),
             dropped.select(col("cell"), col("vec_id").as("doc_id")), Seq("cell")))
           .select(explode(array(col("doc_a"), col("doc_b"))).as("vec_id"))

@@ -410,7 +410,7 @@ object Relational {
     */
   private def ordersCustkeyIndex(s: SparkSession, d: String): graft.core.SecondaryIndex =
     Memo.session(s, s"orders-custkey-index:$d") {
-      val root = Memo.machine(s, "graft-rowid-tables", "orders-ck-idx", d) { root =>
+      val root = Memo.machine(s, "graft-rowid-tables", "orders-ck-idx", d, "#meta-txt") { root =>
         graft.core.SecondaryIndex.build(ordersZoneTable(s, d), "custkey", root.toString)
       }
       graft.core.SecondaryIndex.open(s, root, "custkey")

@@ -1420,43 +1420,20 @@ object Similarity {
   }
 
   /** Two-stage STREAM-maintained IVF index over an embeddings
-    * [[graft.core.VectorTable]], memoized per (machine, sf dir) behind the
-    * shared pointer protocol: build on the first vec_id half (with the
-    * CORPUS-scaled cell count pinned explicitly, so the streamed layout
-    * matches what [[ivfAssign]]'s oracle bakes), then land the second half
-    * through [[graft.streaming.StreamIngest]] one file per micro-batch
-    * with an `onBatch` hook refreshing the index — each refresh assigns
-    * ONLY the appended span against the fixed build-time centroids. The
-    * builder verifies the streamed index's (vec_id, cell) rows equal the
-    * batch assignment exactly and that ≥ 2 incremental refreshes ran
-    * before publishing the pointer.
+    * [[graft.core.VectorTable]] ([[Dedup.streamedTwoStage]]), memoized per
+    * (machine, sf dir) behind the shared pointer protocol: built on the
+    * first vec_id half with the CORPUS-scaled cell count pinned explicitly,
+    * so the streamed layout matches what [[ivfAssign]]'s oracle bakes; each
+    * refresh assigns ONLY the appended span against the fixed build-time
+    * centroids. The builder verifies the streamed index's (vec_id, cell)
+    * rows equal the batch assignment exactly.
     */
   private[graft] def streamedIvfIndexRoot(s: SparkSession, d: String): String =
     Memo.machine(s, "graft-rowid-tables", "emb-ivf-streamed", d, "#ivf-streamed#layout=v2") { dir =>
-      val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      val cutoff = emb.agg(max(col("vec_id"))).head.getLong(0) / 2
-      val t = graft.core.VectorTable.create(s, s"$dir/table")
-      t.append(emb.where(col("vec_id") <= cutoff))
-      val idx = new java.util.concurrent.atomic.AtomicReference(
-        IvfTableIndex.build(t, s"$dir/index", numCells = cellsOf(s, d)))
-      val refreshes = new java.util.concurrent.atomic.AtomicInteger(0)
-      emb.where(col("vec_id") > cutoff)
-        .repartition(4).write.parquet(s"$dir/staging")
-      graft.streaming.StreamIngest.replayStaged(s, emb.schema, dir)((stream, trigger) =>
-        graft.streaming.StreamIngest.start(stream, t, s"$dir/ckpt", trigger,
-          onBatch = (tab, _) => {
-            val cur = idx.get()
-            val next = cur.refresh(tab)
-            if (next ne cur) { idx.set(next); refreshes.incrementAndGet(); () }
-          }))
-      val expect = ivfAssign(s, d).select(col("vec_id"), col("cell"))
-      val got = idx.get().data.select(col("vec_id"), col("cell"))
-      val missing = expect.exceptAll(got).count()
-      val extra = got.exceptAll(expect).count()
-      if (missing != 0 || extra != 0 || refreshes.get() < 2)
-        throw new IllegalStateException(
-          s"streamed IVF index diverged: $missing missing / $extra extra assignments, " +
-            s"${refreshes.get()} incremental refreshes")
+      Dedup.streamedTwoStage(Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
+        "vec_id", dir, "IVF index")(
+        (t, r) => IvfTableIndex.build(t, r, numCells = cellsOf(s, d)))(_.refresh(_))(
+        ivfAssign(s, d).select(col("vec_id"), col("cell")), _.data.select(col("vec_id"), col("cell")))
     }
 
   /** Declared `dedup_semantic_delta_streamed`: the delta face over the
@@ -1594,7 +1571,7 @@ object Similarity {
       // sides, so the pairs are exactly the cross edges); a dropped row is
       // covered when it appears on EITHER side of a scored pair.
       () => {
-        val coveredDropped = scored(Dedup.deltaPairsBlockedFor(
+        val coveredDropped = scored(Dedup.deltaPairsBlocked(
             kept.select(col("cell"), col("vec_id").as("doc_id")),
             dropped.select(col("cell"), col("vec_id").as("doc_id")), Seq("cell")))
           .select(explode(array(col("doc_a"), col("doc_b"))).as("vec_id"))

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *   2. PROPAGATE: every registered index hook runs (a hook refreshes its
   *      index, consuming the stores' masks to rewrite exactly the
   *      affected cells/files — rowid-addressed, see
-  *      [[IvfTableIndex.refresh]]). Propagation MUST precede erasure:
+  *      [[IndexMaintenance.refresh]]). Propagation MUST precede erasure:
   *      [[VectorTable.purge]] resets the mask, after which a refresh has
   *      nothing to consume;
   *   3. ERASE (optional): `purge()` each store — the masked rows' bytes
@@ -44,7 +44,7 @@ object Takedown {
     * store (round-16 ADVICE). An index omitted from BOTH `refreshIndexes`
     * and `propagate` self-heals on its next refresh (the tombstone-total
     * gate detects the missed purge and reconciles against physical
-    * existence, [[IndexCompaction.deletedKeys]]) — but that recovery pays
+    * existence, [[IndexMaintenance.deletedKeys]]) — but that recovery pays
     * an index-sized pass, so registration is the contract, reconciliation
     * the safety net.
     */

@@ -30,7 +30,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Scale shape per batch: one map-only signature pass over the batch, one
   * hot-bucket-capped bipartite banding join against stored band rows
   * (never committed × committed — the blocked
-  * [[graft.operators.Dedup.deltaPairsBlockedFor]] kernel), and Jaccard
+  * [[graft.operators.Dedup.deltaPairsBlocked]] kernel), and Jaccard
   * verification sized to the CANDIDATES: only docs appearing in some
   * candidate pair get their shingle sets computed, with the committed
   * side's text pruned by a semi-join before the shingle kernel runs.
@@ -57,9 +57,9 @@ object LshDedupIngest {
     */
   def droppedIds(batch: DataFrame, committedBands: DataFrame,
                  committed: VectorTable): DataFrame = {
-    val cand = Dedup.deltaPairsBlockedFor(
+    val cand = Dedup.deltaPairsBlocked(
       committedBands.select(col("band"), col("h1"), col("h2"), col("doc_id")),
-      Dedup.bandRowsFor(batch).select(col("band"), col("h1"), col("h2"), col("doc_id")),
+      Dedup.bandRowsOf(batch).select(col("band"), col("h1"), col("h2"), col("doc_id")),
       Seq("band", "h1", "h2")).localCheckpoint()
     val shB = batch
       .join(cand.select(col("doc_b").as("doc_id")).distinct(), Seq("doc_id"), "left_semi")

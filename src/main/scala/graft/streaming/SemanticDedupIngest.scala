@@ -134,7 +134,7 @@ object SemanticDedupIngest {
       .exceptAll(nz.select(col("vec_id")))
     val assigned = nz
       .join(
-        graft.operators.Dedup.fpKeyedFor(
+        graft.operators.Dedup.fpKeyed(
             nz.select(col("vec_id").as("doc_id"), col("embedding")), col("embedding"))
           .withColumn("rep", min(col("doc_id")).over(
             org.apache.spark.sql.expressions.Window.partitionBy(col("f1"), col("f2"))))
@@ -147,7 +147,7 @@ object SemanticDedupIngest {
     // one blocked bipartite pass: (committed ∪ batch) × batch, per cell
     val committed = cur.data.select(col("vec_id"), col("embedding"), col("cell"))
     val pool = committed.unionByName(assigned)
-    val cand = graft.operators.Dedup.deltaPairsBlockedFor(
+    val cand = graft.operators.Dedup.deltaPairsBlocked(
       pool.select(col("cell"), col("vec_id").as("doc_id")),
       assigned.select(col("cell"), col("vec_id").as("doc_id")), Seq("cell"))
     val emb = pool.select(col("vec_id"), col("embedding"))
@@ -259,7 +259,7 @@ object SemanticDedupIngest {
     // semantics, and a positional rename after an upstream join (which
     // moves key columns first) would silently invert the graph
     val edges = edgesIn.select(col("doc_a"), col("doc_b")).localCheckpoint()
-    val labels = graft.operators.Dedup.connectedComponentsFor(edges, smallEdgeLimit)
+    val labels = graft.operators.Dedup.connectedComponentsOf(edges, smallEdgeLimit)
     val labeled = edges
       .join(labels.select(col("id").as("doc_a"), col("cluster_id")), Seq("doc_a"))
       .localCheckpoint()

@@ -156,7 +156,12 @@ class BufferedVectorStoreSpec extends SparkSpec {
     assert(base.len == 10L)
     assert(buf.eachLen == ((5L, 10L, 15L)))
     assert(buf.get(12L).contains(BRec(12L)) && buf.getx(8L, 4L).contains(rows(8, 12)))
-    Thread.sleep(200) // several daemon polls, each failing
+    // the daemon keeps failing; each retry waits twice as long as the last
+    val failedBefore = buf.daemonFailures
+    Thread.sleep(1000)
+    val attempts = buf.daemonFailures - failedBefore
+    assert(attempts >= 1 && attempts <= 10,
+      s"$attempts failed flushes in 1 s: retries must back off, not poll every 10 ms")
     Fs.deleteTree(taken)
     val deadline = System.currentTimeMillis() + 30000
     while ((base.len < 15L || buf.bufferedCount > 0) && System.currentTimeMillis() < deadline)

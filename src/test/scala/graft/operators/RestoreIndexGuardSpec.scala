@@ -154,4 +154,45 @@ class RestoreIndexGuardSpec extends SparkSpec {
       "rolled-back vectors must be gone")
     assert(idx.data.where(col("vec_id") >= 40 && col("vec_id") < 50).count() == 10L)
   }
+
+  IndexKinds.all.foreach { kind =>
+    import IndexKinds.{ids, live, rows}
+
+    test(s"${kind.name}: restore catch-up re-derives the reused rowid range and scrubs masked rows in it") {
+      val dir = tmpDir("restore-kind")
+      val t = VectorTable.create(spark, s"$dir/t")
+      t.append(rows(spark, 0 until 20))
+      val v1 = t.manifest.version
+      var idx = kind.build(t, s"$dir/idx")
+      t.append(rows(spark, 20 until 30))
+      idx = idx.refresh(t)
+      t.restore(v1)
+      t.append(rows(spark, 100 until 110, tag = "x"))
+      t.deleteWhere(col("doc_id") === 105L) // masked INSIDE the re-span range
+      idx = idx.refresh(t)
+      assert(idx.indexedRestores == 1L && idx.indexedLength == t.manifest.length)
+      assert(ids(spark, kind, idx) == live(t),
+        "rolled-back rows must be gone, the reused range must serve the new rows")
+      val reopened = kind.open(spark, idx.root)
+      assert(reopened.meta == idx.meta, "the published meta must reopen")
+      t.append(rows(spark, 200 until 205, tag = "y"))
+      idx = reopened.refresh(t)
+      assert(ids(spark, kind, idx) == live(t), "incremental refresh must resume")
+    }
+
+    test(s"${kind.name}: a restore that rewinds consumed mask state re-derives the resurrected rows") {
+      val dir = tmpDir("restore-kind-mask")
+      val t = VectorTable.create(spark, s"$dir/t")
+      t.append(rows(spark, 0 until 20))
+      val v1 = t.manifest.version
+      var idx = kind.build(t, s"$dir/idx")
+      t.deleteWhere(col("doc_id") < 3)
+      idx = idx.refresh(t)
+      assert(ids(spark, kind, idx) == live(t))
+      t.restore(v1) // docs 0-2 are live again
+      idx = idx.refresh(t)
+      assert(idx.indexedRestores == 1L)
+      assert(ids(spark, kind, idx) == (0L until 20L).toSet)
+    }
+  }
 }

@@ -87,4 +87,62 @@ class TombstoneGateSpec extends SparkSpec {
     assert(sec.lookup(7L).isEmpty, "missed purge must reconcile the key index")
     assert(sec.refresh(t) eq sec)
   }
+
+  IndexKinds.all.foreach { kind =>
+    import IndexKinds.{ids, live, rows}
+
+    test(s"${kind.name}: a consumed-then-purged mask stays quiet; a missed purge self-heals") {
+      val dir = tmpDir("tomb-kind")
+      val t = VectorTable.create(spark, s"$dir/t")
+      t.append(rows(spark, 0 until 40))
+      var idx = kind.build(t, s"$dir/idx")
+      t.deleteWhere(col("doc_id") < 5)
+      idx = idx.refresh(t)
+      assert(ids(spark, kind, idx) == live(t))
+      t.purge()
+      assert(idx.refresh(t) eq idx, "a purge of a consumed mask must not re-fire propagation")
+      // masked AND purged without the index refreshing, then maskCount
+      // grows back: only reconciling against the table finds the first set
+      t.deleteWhere(col("doc_id") >= 5 && col("doc_id") < 9)
+      t.purge()
+      t.deleteWhere(col("doc_id") >= 9 && col("doc_id") < 13)
+      val healed = idx.refresh(t)
+      assert(ids(spark, kind, healed) == live(t) && live(t) == (13L until 40L).toSet)
+      assert(healed.refresh(t) eq healed)
+    }
+  }
+
+  test("indexes open from every meta form the earlier layout wrote") {
+    import IndexKinds.{ids, live, rows}
+    def write(root: String, file: String, text: String): Unit =
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(root, file), text)
+    val dir = tmpDir("tomb-legacy-meta")
+    val t = VectorTable.create(spark, s"$dir/t")
+    t.append(rows(spark, 0 until 20))
+    val m = t.manifest
+    val lsh = LshIndex.build(t, s"$dir/lsh")
+    // "version,length": no mask, no restore epoch
+    write(lsh.root, "meta.txt", s"${m.version},${m.length}")
+    val lshOld = LshIndex.open(spark, lsh.root)
+    assert(lshOld.meta == IndexMeta(m.version, m.length, 0L, 0L))
+    val sec = graft.core.SecondaryIndex.build(t, "doc_id", s"$dir/sec")
+    java.nio.file.Files.delete(java.nio.file.Paths.get(sec.root, "meta.txt"))
+    write(sec.root, "version.txt", s"${m.version}\n${m.length}\n0\n0")
+    assert(graft.core.SecondaryIndex.open(spark, sec.root, "doc_id").meta ==
+      IndexMeta(m.version, m.length, 0L, 0L))
+    write(sec.root, "version.txt", s"${m.version}\n${m.length}")
+    val secOld = graft.core.SecondaryIndex.open(spark, sec.root, "doc_id")
+    assert(secOld.meta == IndexMeta(m.version, m.length, 0L, 0L))
+    val multi = graft.core.MultiIndex.build(t, Seq("doc_id", "vec_id"), s"$dir/multi")
+    write(multi.root, "meta.txt", s"${m.version},${m.length},0,0\ndoc_id\nvec_id")
+    assert(graft.core.MultiIndex.open(spark, multi.root).keyCols == Seq("doc_id", "vec_id"))
+    // the old forms refresh like the new: deletes apply, the meta republishes
+    t.deleteWhere(col("doc_id") < 4)
+    val lshNew = lshOld.refresh(t)
+    val secNew = secOld.refresh(t)
+    assert(ids(spark, IndexKinds.all.head, lshNew) == live(t))
+    assert(secNew.lookup(2L).isEmpty && secNew.lookup(5L).nonEmpty)
+    assert(LshIndex.open(spark, lsh.root).meta == lshNew.meta)
+    assert(graft.core.SecondaryIndex.open(spark, sec.root, "doc_id").meta == secNew.meta)
+  }
 }
