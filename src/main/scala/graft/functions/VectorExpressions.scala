@@ -613,10 +613,11 @@ case class LogM(child: Expression) extends org.apache.spark.sql.catalyst.express
 /** Bounded driver-side scoring panel for the semantic-recall truth face:
   * the sampled (vec_id, cell, c1, c2, embedding) universe as flat primitive
   * arrays, shipped into [[RecallPanelScore]] as a codegen reference object
-  * (the [[graft.functions.BpeMerges]] shape). The panel is bounded BY
-  * CONSTRUCTION by the face's sample cap (`Similarity.recallSampleTarget`
-  * ≈ 5000 rows × dim floats ≈ 1.3 MB), never by the corpus — the same
-  * class as the centroid panels.
+  * (the [[graft.functions.BpeMerges]] shape). The panel is bounded by the
+  * face's sample cap (`Similarity.recallSampleTarget` ≈ 5000 rows × dim
+  * floats ≈ 1.3 MB, at most twice that: the face refuses corpora above
+  * `Similarity.recallCorpusCeiling`) — the same class as the centroid
+  * panels.
   *
   * Numeric contract: [[score]]'s cosine is the identical three-accumulator
   * left fold over the identical stored floats as [[CosineSimilarityF]]

@@ -275,7 +275,7 @@ object Dedup {
   /** Signature stage over any (doc_id, text) frame — shared by the
     * query-time pipeline and the persisted [[LshIndex]].
     */
-  private[operators] def signaturesOf(docs: DataFrame): DataFrame =
+  private[graft] def signaturesOf(docs: DataFrame): DataFrame =
     signaturesOfK(docs, numHashes)
 
   /** Signatures at an ARBITRARY k — the MinHash family is parameterized
@@ -489,7 +489,7 @@ object Dedup {
     * A `_rowid` column on the signature frame rides through (see
     * [[signaturesOfK]]).
     */
-  private[operators] def bandsOf(sig: DataFrame): DataFrame = {
+  private[graft] def bandsOf(sig: DataFrame): DataFrame = {
     val keep = col("doc_id") +:
       (if (sig.columns.contains(graft.core.VectorTable.ROWID))
          Seq(col(graft.core.VectorTable.ROWID)) else Nil)
@@ -521,8 +521,8 @@ object Dedup {
     * occupancy branches read materialized rows instead of re-running the
     * chain per branch.
     */
-  private[operators] def pairsFromBucketedRows(rows: DataFrame, keyCols: Seq[String],
-                                               cap: Int): DataFrame =
+  private[graft] def pairsFromBucketedRows(rows: DataFrame, keyCols: Seq[String],
+                                           cap: Int): DataFrame =
     pairDistinct(pairsFromBucketedRowsRaw(rows, keyCols, cap))
 
   /** The expansion WITHOUT the cross-bucket dedup — for callers whose
@@ -599,51 +599,8 @@ object Dedup {
   private[operators] def pairsFromBands(bands: DataFrame): DataFrame =
     pairsFromBands(bands, bucketExpandCap)
 
-  private[operators] def pairsFromBands(bands: DataFrame, cap: Int): DataFrame =
+  private[graft] def pairsFromBands(bands: DataFrame, cap: Int): DataFrame =
     pairsFromBucketedRows(bands, Seq("band", "h1", "h2"), cap)
-
-  // ----- EXACT-SET COLLAPSE, generalized (round-12) --------------------
-  /** Cheap duplication PRE-GATE: ONE aggregate pass over the collapse
-    * group key — map-side HLL++ (deterministic) + a count, exchanged as
-    * sketches, never rows. est_distinct/n at or above 95% means duplicate
-    * mass sits below the gate's resolution, so the adaptive entries skip
-    * the exact group-stats exchange entirely and stay flat. The gate picks
-    * a PLAN, never a row — both branches emit identical pairs.
-    *
-    * Documented limitation: a clique that is a vanishing fraction of a
-    * huge corpus hides below HLL resolution and keeps the flat plan. That
-    * is the regime where the clique's blocked-slice work is noise against
-    * corpus-linear cost anyway — the collapse's 29× win (PLANS.md
-    * round-11) needs duplication MASS, which is exactly what HLL sees.
-    */
-  private val lowDupGatePermille = 950L
-
-  private[operators] def lowDupPreGate(keyed: DataFrame, key: Column): Boolean = {
-    val r = keyed.agg(count(lit(1)).as("n"),
-      approx_count_distinct(key, 0.02).as("nd")).head()
-    val n = r.getLong(0)
-    n == 0L || 1000L * r.getLong(1) >= lowDupGatePermille * n
-  }
-
-  /** Session-memoized [[lowDupPreGate]] (round-19): every adaptive face
-    * pays the gate aggregate PER INVOCATION, but for the declared faces
-    * the gate's input is a write-once fixture — the corpus tables or a
-    * machine-memoized stored index — so its verdict is a pure function of
-    * (session, input identity): the [[documentCount]] / [[deltaCutoff]] precedent
-    * applied to the routing aggregate. Keys name the INPUT (corpus dir +
-    * derivation, or index root), never the face, so two faces reading the
-    * same frame share one verdict, and callers over per-batch / test
-    * frames pass None and keep the per-invocation gate (the streaming
-    * ingest gates' batches are NOT immutable). This memoizes a PLAN
-    * CHOICE, never a row — both branches emit identical pairs by the
-    * collapse contracts.
-    */
-  private[operators] def lowDupPreGateMemo(gateKey: Option[String],
-                                           keyed: DataFrame, key: Column): Boolean =
-    gateKey match {
-      case None => lowDupPreGate(keyed, key)
-      case Some(k) => Memo.session(keyed.sparkSession, s"pre-gate:$k")(lowDupPreGate(keyed, key))
-    }
 
   /** The shared 128-bit collapse-group fingerprint: `f1` = xxhash64 of the
     * canonical value, `f2` = the LOW 64 bits of its md5, taken over the
@@ -666,46 +623,6 @@ object Dedup {
       unhex(substring(md5(to_json(canon)), 17, 16)).as("f2"),
       col("doc_id"))
 
-  /** One (gid = min doc_id, gsize) row per distinct group key — the
-    * row-shaped group metadata every collapse body shares (no row ever
-    * holds a member list).
-    */
-  private[operators] def groupFrame(keyed: DataFrame, keyCols: Seq[String]): DataFrame =
-    keyed.groupBy(keyCols.map(col): _*)
-      .agg(min(col("doc_id")).as("gid"), count(lit(1)).as("gsize"))
-
-  /** (n, maxGroup, intraPairs) for [[shouldCollapse]] — coalesced so an
-    * empty frame decides "flat" instead of throwing.
-    */
-  private[operators] def groupShapeStats(groups: DataFrame): (Long, Long, Long) = {
-    val r = groups.agg(
-      coalesce(sum(col("gsize")), lit(0L)),
-      coalesce(max(col("gsize")), lit(0L)),
-      coalesce(sum(col("gsize") * (col("gsize") - lit(1L))), lit(0L))).head()
-    (r.getLong(0), r.getLong(1), r.getLong(2) / 2L)
-  }
-
-  /** Doc-level candidate pairs from rep-level pairs + intra-group cliques
-    * — the shared collapse expansion for candidate faces (no payload
-    * columns): intra pairs stream through the blocked kernel keyed on the
-    * group id (each pair lives in exactly ONE group — unique by
-    * construction, no dedup exchange), cross pairs through two streaming
-    * membership joins (never an |A|·|B| array in one row). The two
-    * streams are disjoint (same-group vs cross-group), so the union needs
-    * no reduction.
-    */
-  private def expandCandidateRepPairs(repPairs: DataFrame, membership: DataFrame): DataFrame = {
-    val intra = pairsFromBucketedRowsRaw(
-      membership.where(col("gsize") > 1).select(col("gid"), col("doc_id")),
-      Seq("gid"), bucketExpandCap)
-    val cross = repPairs
-      .join(membership.select(col("gid").as("doc_a"), col("doc_id").as("da")), Seq("doc_a"))
-      .join(membership.select(col("gid").as("doc_b"), col("doc_id").as("db")), Seq("doc_b"))
-      .select(least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"))
-    intra.unionAll(cross)
-  }
-
   /** ADAPTIVE EXACT-SET COLLAPSE for the MinHash banding family — the
     * round-11 exact-Jaccard collapse extended to candidate generation
     * (round-11 verdict #1): identical documents have identical signatures,
@@ -721,53 +638,26 @@ object Dedup {
     * 128-bit two-family key ([[fpKeyed]]) so the group/membership
     * exchanges carry 16-byte keys regardless of k. Candidate-ness is a function of the signature alone,
     * so collapsed ≡ flat PAIR-FOR-PAIR (CollapseEquivalenceSpec pins it);
-    * the branch is a pure plan choice — [[lowDupPreGate]] (one cheap agg)
-    * then [[shouldCollapse]] on the same shape stats as the exact join.
+    * the branch is [[ExactSetCollapse.run]]'s plan choice.
     *
     * The signature frame is localCheckpoint'd first: the gate, stats,
     * banding and membership consumers all read the slim materialized
     * (doc_id, mh*) rows — the shingle/md5 kernel executes exactly once no
     * matter the branch.
     */
-  private[operators] def bandedPairsAdaptive(sigIn: DataFrame,
-                                             toBuckets: DataFrame => DataFrame,
-                                             keyCols: Seq[String],
-                                             gateKey: Option[String] = None): DataFrame = {
+  private[graft] def bandedPairsAdaptive(sigIn: DataFrame,
+                                         toBuckets: DataFrame => DataFrame,
+                                         keyCols: Seq[String],
+                                         gateKey: Option[String] = None,
+                                         mode: ExactSetCollapse.Mode = ExactSetCollapse.Adaptive): DataFrame = {
     val sig = sigIn.localCheckpoint()
     val mh = sig.columns.filter(_ != "doc_id")
-    val fp1 = xxhash64(mh.map(col): _*)
-    def flat = pairsFromBucketedRows(toBuckets(sig), keyCols, bucketExpandCap)
-    if (lowDupPreGateMemo(gateKey, sig, fp1)) flat
-    else {
-      val keyed = fpKeyed(sig, array(mh.map(col): _*))
-      val groups = groupFrame(keyed, Seq("f1", "f2"))
-      val (n, maxg, intra) = groupShapeStats(groups)
-      if (!shouldCollapse(n, maxg, intra)) flat
-      else bandedPairsCollapsedBody(sig, keyed, toBuckets, keyCols)
+    ExactSetCollapse.run(mode, gateKey, sig, xxhash64(mh.map(col): _*),
+      fpKeyed(sig, array(mh.map(col): _*)), Seq("f1", "f2"))(
+      pairsFromBucketedRows(toBuckets(sig), keyCols, bucketExpandCap)) { g =>
+      val reps = sig.join(g.reps, Seq("doc_id"), "left_semi")
+      g.expand(pairsFromBucketedRows(toBuckets(reps), keyCols, bucketExpandCap), Nil)
     }
-  }
-
-  /** The forced collapse body (split out so the equivalence spec can pin
-    * it against the flat kernel on fixtures below the adaptive threshold).
-    */
-  private[operators] def bandedPairsCollapsedBody(sigIn: DataFrame,
-                                                  toBuckets: DataFrame => DataFrame,
-                                                  keyCols: Seq[String]): DataFrame = {
-    val sig = sigIn.localCheckpoint()
-    val mh = sig.columns.filter(_ != "doc_id")
-    val keyed = fpKeyed(sig, array(mh.map(col): _*))
-    bandedPairsCollapsedBody(sig, keyed, toBuckets, keyCols)
-  }
-
-  private def bandedPairsCollapsedBody(sig: DataFrame, keyed: DataFrame,
-                                       toBuckets: DataFrame => DataFrame,
-                                       keyCols: Seq[String]): DataFrame = {
-    val g = groupFrame(keyed, Seq("f1", "f2")).localCheckpoint()
-    val membership = keyed.join(g, Seq("f1", "f2"))
-      .select(col("gid"), col("doc_id"), col("gsize")).localCheckpoint()
-    val reps = sig.join(g.select(col("gid").as("doc_id")), Seq("doc_id"), "left_semi")
-    val repPairs = pairsFromBucketedRows(toBuckets(reps), keyCols, bucketExpandCap)
-    expandCandidateRepPairs(repPairs, membership)
   }
 
   private def minhashSignaturesSqlK(k: Int): String = {
@@ -987,63 +877,30 @@ object Dedup {
     * (bucket, sa, sd) — per-task output bounded at ~cap², no replication
     * at all for buckets at or below cap occupancy.
     */
-  private[operators] def deltaCandidatesFromBands(all: DataFrame, cutoff: Long,
-                                                  gateKey: Option[String] = None): DataFrame = {
+  private[graft] def deltaCandidatesFromBands(all: DataFrame, cutoff: Long,
+                                              gateKey: Option[String] = None,
+                                              mode: ExactSetCollapse.Mode = ExactSetCollapse.Adaptive): DataFrame =
     // Pre-gate ON STORED ROWS ONLY: HLL duplication of the band-0 bucket
     // key. A boilerplate clique puts every copy in the same band-0 bucket,
     // dropping the distinct/total ratio below the gate; genuinely-near-dup
     // collisions can also trip it, which only costs the (cheap) exact
-    // stats pass — the conservative direction.
-    val b0 = all.where(col("band") === 0)
-    if (lowDupPreGateMemo(gateKey, b0, xxhash64(col("h1"), col("h2"))))
-      deltaCandidatesFromBandsFlat(all, cutoff)
-    else {
-      // group docs by their FULL stored band-row set (≡ the signature:
-      // identical content ⇒ identical rows) — assembled per doc from
-      // stored rows (k/2 structs per row, bounded), fingerprinted to the
-      // shared 128-bit keys. The plan still touches ONLY index parquet.
-      val keyed = fpKeyed(
+    // stats pass — the conservative direction. Groups are docs with the
+    // same FULL stored band-row set (≡ the signature: identical content ⇒
+    // identical rows), assembled per doc from stored rows (k/2 structs per
+    // row, bounded) and fingerprinted — the plan touches ONLY index parquet.
+    ExactSetCollapse.run(mode, gateKey, all.where(col("band") === 0), xxhash64(col("h1"), col("h2")),
+      fpKeyed(
         all.groupBy(col("doc_id"))
           .agg(sort_array(collect_list(struct(col("band"), col("h1"), col("h2")))).as("sig")),
-        col("sig"))
-        .localCheckpoint()
-      val groups = groupFrame(keyed, Seq("f1", "f2"))
-      val (n, maxg, intra) = groupShapeStats(groups)
-      if (!shouldCollapse(n, maxg, intra)) deltaCandidatesFromBandsFlat(all, cutoff)
-      else {
-        val g = groups.localCheckpoint()
-        val membership = keyed.join(g, Seq("f1", "f2"))
-          .select(col("gid"), col("doc_id"), col("gsize")).localCheckpoint()
-        // only groups holding >= 1 delta member can source delta-touching
-        // pairs; banding runs delta-group reps x all reps, blocked
-        val deltaG = membership.where(col("doc_id") > cutoff)
-          .select(col("gid")).distinct().localCheckpoint()
-        val repBands = all.join(g.select(col("gid").as("doc_id")), Seq("doc_id"), "left_semi")
-          .localCheckpoint()
-        val deltaRepBands = repBands.join(deltaG.withColumnRenamed("gid", "doc_id"),
-          Seq("doc_id"), "left_semi")
-        val repPairs = deltaBandsBlocked(repBands, deltaRepBands)
-        // doc-level reconstruction, filtered to pairs touching the delta
-        // (the flat path's contract): intra streams dedup-free from
-        // delta-touching groups; cross lifts rep pairs through membership
-        val intraPairs = pairsFromBucketedRowsRaw(
-          membership.join(deltaG, Seq("gid"), "left_semi")
-            .where(col("gsize") > 1).select(col("gid"), col("doc_id")),
-          Seq("gid"), bucketExpandCap)
-          .where(col("doc_a") > cutoff || col("doc_b") > cutoff)
-        val crossPairs = repPairs
-          .join(membership.select(col("gid").as("doc_a"), col("doc_id").as("da")), Seq("doc_a"))
-          .join(membership.select(col("gid").as("doc_b"), col("doc_id").as("db")), Seq("doc_b"))
-          .where(col("da") > cutoff || col("db") > cutoff)
-          .select(least(col("da"), col("db")).as("doc_a"),
-            greatest(col("da"), col("db")).as("doc_b"))
-        intraPairs.unionAll(crossPairs)
-      }
+        col("sig")).localCheckpoint(), Seq("f1", "f2"))(
+      deltaBandsBlocked(all, all.where(col("doc_id") > cutoff))) { g =>
+      // only groups holding >= 1 delta member can source delta-touching
+      // pairs; banding runs delta-group reps x all reps, blocked
+      val t = g.touching(cutoff)
+      val repBands = all.join(g.reps, Seq("doc_id"), "left_semi").localCheckpoint()
+      g.expand(deltaBandsBlocked(repBands, repBands.join(t.reps, Seq("doc_id"), "left_semi")),
+        Nil, touching = Some(t))
     }
-  }
-
-  private[operators] def deltaCandidatesFromBandsFlat(all: DataFrame, cutoff: Long): DataFrame =
-    deltaBandsBlocked(all, all.where(col("doc_id") > cutoff))
 
   /** The blocked bipartite delta×all banding join over explicit frames —
     * shared by the flat path (delta = the appended doc_id span) and the
@@ -1158,39 +1015,18 @@ object Dedup {
     * relationships, so reps stand in and membership joins reconstruct,
     * filtered to delta-touching pairs — the flat path's exact contract).
     */
-  private[operators] def deltaSimhashCandidates(sig: DataFrame, cutoff: Long,
-                                                gateKey: Option[String] = None): DataFrame = {
-    def flat = deltaPairsBlocked(simhashPieces(sig, 64),
-      simhashPieces(sig.where(col("doc_id") > cutoff), 64), Seq("pc", "pv"))
-    if (lowDupPreGateMemo(gateKey, sig, col("simhash"))) flat
-    else {
-      val groups = groupFrame(sig.select(col("simhash"), col("doc_id")), Seq("simhash"))
-      val (n, maxg, intra) = groupShapeStats(groups)
-      if (!shouldCollapse(n, maxg, intra)) flat
-      else {
-        val g = groups.localCheckpoint()
-        val membership = sig.join(g, Seq("simhash"))
-          .select(col("gid"), col("doc_id"), col("gsize")).localCheckpoint()
-        val deltaG = membership.where(col("doc_id") > cutoff)
-          .select(col("gid")).distinct().localCheckpoint()
-        val repSig = g.select(col("gid").as("doc_id"), col("simhash"))
-        val repDelta = repSig.join(deltaG.withColumnRenamed("gid", "doc_id"),
-          Seq("doc_id"), "left_semi")
-        val repPairs = deltaPairsBlocked(simhashPieces(repSig, 64),
-          simhashPieces(repDelta, 64), Seq("pc", "pv"))
-        val intraP = pairsFromBucketedRowsRaw(
-          membership.join(deltaG, Seq("gid"), "left_semi")
-            .where(col("gsize") > 1).select(col("gid"), col("doc_id")),
-          Seq("gid"), bucketExpandCap)
-          .where(col("doc_a") > cutoff || col("doc_b") > cutoff)
-        val cross = repPairs
-          .join(membership.select(col("gid").as("doc_a"), col("doc_id").as("da")), Seq("doc_a"))
-          .join(membership.select(col("gid").as("doc_b"), col("doc_id").as("db")), Seq("doc_b"))
-          .where(col("da") > cutoff || col("db") > cutoff)
-          .select(least(col("da"), col("db")).as("doc_a"),
-            greatest(col("da"), col("db")).as("doc_b"))
-        intraP.unionAll(cross)
-      }
+  private[graft] def deltaSimhashCandidates(sig: DataFrame, cutoff: Long,
+                                            gateKey: Option[String] = None,
+                                            mode: ExactSetCollapse.Mode = ExactSetCollapse.Adaptive): DataFrame = {
+    def blocked(all: DataFrame, delta: DataFrame): DataFrame =
+      deltaPairsBlocked(simhashPieces(all, 64), simhashPieces(delta, 64), Seq("pc", "pv"))
+    ExactSetCollapse.run(mode, gateKey, sig, col("simhash"),
+      sig.select(col("simhash"), col("doc_id")), Seq("simhash"))(
+      blocked(sig, sig.where(col("doc_id") > cutoff))) { g =>
+      val t = g.touching(cutoff)
+      val repSig = g.groups.select(col("gid").as("doc_id"), col("simhash"))
+      g.expand(blocked(repSig, repSig.join(t.reps, Seq("doc_id"), "left_semi")),
+        Nil, touching = Some(t))
     }
   }
 
@@ -1855,54 +1691,37 @@ object Dedup {
     * rep-frame's own), so the prefix machinery runs on one representative
     * per distinct set: intra-group pairs are containment 1 by definition
     * (inter = n_min = n), cross pairs lift the rep pair's (inter, n_min,
-    * containment) verbatim. Same fingerprint keys, pre-gate and shape rule
-    * as [[exactJaccardJoinOf]]; ContainmentJoinSpec pins collapsed ≡ flat.
+    * containment) verbatim. Same fingerprint keys as
+    * [[exactJaccardJoinOf]] ([[setJoinOf]]).
     * Precondition (callers enforce): rows have size(sh) > 0 — identical
     * EMPTY sets must not form intra pairs, matching the flat join, which
     * structurally emits nothing for them.
     */
-  private[operators] def containmentJoinOf(docs: DataFrame,
-                                           gateKey: Option[String] = None): DataFrame =
-    if (lowDupPreGateMemo(gateKey, docs, xxhash64(col("sh")))) containmentJoinFlat(docs)
-    else {
-      val keyed = fpKeyed(docs, col("sh"))
-      val groups = groupFrame(keyed, Seq("f1", "f2"))
-      val (n, maxg, intra) = groupShapeStats(groups)
-      if (!shouldCollapse(n, maxg, intra)) containmentJoinFlat(docs)
-      else containmentJoinCollapsedWith(docs, keyed, groups.localCheckpoint())
+  private[graft] def containmentJoinOf(docs: DataFrame,
+                                       gateKey: Option[String] = None,
+                                       mode: ExactSetCollapse.Mode = ExactSetCollapse.Adaptive): DataFrame =
+    setJoinOf(docs, gateKey, mode, Seq("inter", "n_min", "containment"))(containmentJoinFlat)
+
+  /** The exact-set collapse of a set-similarity join over `(doc_id, sh)`
+    * rows, grouped on the 128-bit fingerprint of the sorted set
+    * ([[fpKeyed]]): grouping and membership exchange 16-byte keys, so the
+    * corpus's shingle mass never travels as a shuffle key, and
+    * representatives recover their sh by a doc_id semi-join, so the only
+    * exchanges carrying shingle arrays are rep-sized. Identical sets pair
+    * at (n, n, 1.0) in the `payload` columns the flat join emits.
+    */
+  private def setJoinOf(docs: DataFrame, gateKey: Option[String], mode: ExactSetCollapse.Mode,
+                        payload: Seq[String])(flat: DataFrame => DataFrame): DataFrame =
+    ExactSetCollapse.run(mode, gateKey, docs, xxhash64(col("sh")),
+      fpKeyed(docs, col("sh")), Seq("f1", "f2"))(flat(docs)) { g =>
+      g.expand(flat(docs.join(g.reps, Seq("doc_id"), "left_semi")), payload,
+        _.join(docs.select(col("doc_id").as("doc_a"), size(col("sh")).cast("long").as("n")),
+          Seq("doc_a"))
+          .select(col("doc_a"), col("doc_b"), col("n").as(payload(0)), col("n").as(payload(1)),
+            lit(1.0).as(payload(2))))
     }
 
-  /** Forced collapse body (spec-pinnable below the adaptive threshold). */
-  private[operators] def containmentJoinCollapsed(docs: DataFrame): DataFrame = {
-    val keyed = fpKeyed(docs, col("sh"))
-    containmentJoinCollapsedWith(docs, keyed,
-      groupFrame(keyed, Seq("f1", "f2")).localCheckpoint())
-  }
-
-  private def containmentJoinCollapsedWith(docs: DataFrame, keyed: DataFrame,
-                                           groups: DataFrame): DataFrame = {
-    val membership = keyed.join(groups, Seq("f1", "f2"))
-      .select(col("gid"), col("doc_id"), col("gsize"))
-      .localCheckpoint()
-    val repPairs = containmentJoinFlat(
-      docs.join(groups.select(col("gid").as("doc_id")), Seq("doc_id"), "left_semi"))
-    val intraPairs = pairsFromBucketedRowsRaw(
-      membership.where(col("gsize") > 1).select(col("gid"), col("doc_id")),
-      Seq("gid"), bucketExpandCap)
-      .join(docs.select(col("doc_id").as("doc_a"), size(col("sh")).cast("long").as("n")),
-        Seq("doc_a"))
-      .select(col("doc_a"), col("doc_b"), col("n").as("inter"), col("n").as("n_min"),
-        lit(1.0).as("containment"))
-    val crossPairs = repPairs
-      .join(membership.select(col("gid").as("doc_a"), col("doc_id").as("da")), Seq("doc_a"))
-      .join(membership.select(col("gid").as("doc_b"), col("doc_id").as("db")), Seq("doc_b"))
-      .select(least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"),
-        col("inter"), col("n_min"), col("containment"))
-    intraPairs.unionAll(crossPairs)
-  }
-
-  private[operators] def containmentJoinFlat(docs: DataFrame): DataFrame = {
+  private def containmentJoinFlat(docs: DataFrame): DataFrame = {
     val cands = containmentCandidatesOf(docs)
     cands
       .join(docs.select(col("doc_id").as("doc_a"), col("sh").as("sa")), Seq("doc_a"))
@@ -1922,7 +1741,7 @@ object Dedup {
     * aggregated min-over-buckets. Exposed separately so ScaleProbe can
     * measure candidate growth.
     */
-  private[operators] def containmentCandidatesOf(docs: DataFrame): DataFrame = {
+  private[graft] def containmentCandidatesOf(docs: DataFrame): DataFrame = {
     // checkpointed: probe, index AND the occupancy counts all derive from
     // it — without this the freq-join-sort chain re-executes per consumer
     val sorted = sortedByRarity(docs).localCheckpoint()
@@ -2306,139 +2125,24 @@ object Dedup {
     * oracle: the collapse emits identical rows by construction.
     */
   def exactJaccardJoinCollapsedFace(s: SparkSession, d: String): DataFrame =
-    exactJaccardJoinCollapsed(
+    exactJaccardJoinOf(
       Tables.documents(s, d)
         .select(col("doc_id"), graft.functions.TextFunctions.shingleHashes(col("text")).as("sh"))
         .where(size(col("sh")) > 0)
-        .localCheckpoint())
+        .localCheckpoint(), mode = ExactSetCollapse.Forced)
 
   lazy val exactJaccardJoinCollapsedSql: String = exactJaccardJoinSql
 
   /** [[exactJaccardJoin]] over an arbitrary `(doc_id, sh: ARRAY<BIGINT>)`
-    * set frame (elements SORTED ASC and distinct per row — shingleHashes'
-    * canonical form; the fused merge-count verification relies on it) —
-    * split out so the property spec can sweep random corpora against an
-    * in-test brute force.
+    * set frame. Precondition: elements SORTED ASC and distinct per row —
+    * shingleHashes' canonical form; the fused merge-count verification
+    * relies on it. Exact-set collapse as [[containmentJoinOf]]
+    * ([[setJoinOf]]); ExactJoinSpec pins both branches against brute force.
     */
-  // ----- EXACT-SET COLLAPSE (adaptive) ---------------------------------
-  /** Adaptive exact-set collapse ([[exactJaccardJoinCollapsed]], the
-    * production mitigation for dup-heavy corpora — exact dedup ahead of
-    * near-dup): group documents by IDENTICAL hashed shingle set, run the
-    * full prefix-filtered join on one REPRESENTATIVE per distinct set,
-    * then reconstruct the doc-level answer:
-    *
-    *  - intra-group pairs (identical sets ⇒ J = 1 ≥ τ always) expand
-    *    directly through the blocked kernel keyed on the group id — each
-    *    pair lives in exactly ONE group, so the stream is unique by
-    *    construction and skips the dedup exchange entirely (pure
-    *    streaming: a 10⁴-copy clique's C(10⁴,2) pairs never touch an
-    *    aggregation);
-    *  - cross-group rep pairs carry set-level (inter, uni, jaccard) that
-    *    every member pair shares verbatim; two streaming membership joins
-    *    expand them (never an |A|·|B| array in one row).
-    *
-    * Group state is row-shaped throughout: metadata is one `(f1, f2,
-    * gid = min doc_id, gsize)` row per DISTINCT set — the group key is a
-    * 128-bit xxhash FINGERPRINT of the canonical sorted sh array (round-11
-    * wrong #1: grouping on the raw array shuffled the corpus's full
-    * shingle mass as the key; now the group/membership exchanges carry
-    * 16 bytes and sh lives only on the representative rows the rep join
-    * reads; collision probability ~10⁻¹⁹ at 10¹⁰ documents) — and
-    * membership is one `(gid, doc_id)` row per document: no row ever
-    * holds a whole group, so a 10⁸-copy boilerplate page costs 10⁸ skinny
-    * rows, not one 10⁸-element array in a single task (the hazard class
-    * the blocked kernels exist to avoid).
-    *
-    * Prefix/candidate/reduction work scales with DISTINCT sets, not
-    * documents — on a boilerplate-heavy crawl that is orders of
-    * magnitude — while the emitted rows are exactly the uncollapsed
-    * join's (ExactJoinSpec pins the collapse against brute force, and the
-    * oracle's all-pairs SQL is unchanged).
-    *
-    * [[lowDupPreGate]] (one cheap HLL aggregate — round-11 wrong #2)
-    * skips the group-stats exchange entirely on low-duplication corpora;
-    * past the gate, [[shouldCollapse]] decides the branch from the
-    * fingerprint-keyed group stats, on the statistic that actually
-    * predicts the win — duplication SHAPE, not duplicate mass:
-    *
-    *  - `maxGroup > bucketExpandCap`: one clique no longer fits a single
-    *    blocked slice, so the flat kernel would spend ⌈g/cap⌉² slices on
-    *    one page (the dup_heavy probe's 10⁴-copy clique: flat candidate
-    *    stage 772 s, collapsed join 26.5 s — PLANS.md round-11);
-    *  - `intraPairs > collapsePairBudgetPerDoc·n`: exact-dup pair mass
-    *    the flat join would individually verify, per document of linear
-    *    work. The sf1 replica corpus (90% dup MASS but only 4.5 intra
-    *    pairs/doc in 10-member groups) measured flat 5.8 s vs collapsed
-    *    10.5 s — dup mass alone is the wrong signal; the budget keeps
-    *    shallow replication on the flat path and fires only when
-    *    verification work on exact-dup cliques dwarfs corpus-linear cost.
-    *
-    * Either branch emits IDENTICAL rows (ExactJoinSpec pins both against
-    * brute force; `dedup_exact_jaccard_join_collapsed` pins the
-    * forced-collapse path against the unchanged all-pairs oracle), so the
-    * branch is a pure plan choice, like AQE's.
-    */
-  val collapsePairBudgetPerDoc = 32L
-
-  private[operators] def shouldCollapse(n: Long, maxGroup: Long, intraPairs: Long): Boolean =
-    maxGroup > bucketExpandCap || intraPairs > collapsePairBudgetPerDoc * n
-
-  private[operators] def exactJaccardJoinOf(docs: DataFrame,
-                                            gateKey: Option[String] = None): DataFrame = {
-    val d = docs.localCheckpoint()
-    // ONE cheap aggregate decides whether the exact group-stats exchange
-    // is worth running at all (round-11 wrong #2): on a low-duplication
-    // corpus the flat join starts immediately — no groupBy on any key
-    if (lowDupPreGateMemo(gateKey, d, xxhash64(col("sh")))) exactJaccardJoinFlat(d)
-    else {
-      // FINGERPRINT group key (round-11 wrong #1): grouping and membership
-      // exchange 16-byte (f1, f2) keys — see [[fpKeyed]] for the two-family
-      // construction — so the corpus's full shingle mass never travels as a
-      // shuffle key; sh stays only on the representative rows the rep join
-      // reads
-      val keyed = fpKeyed(d, col("sh"))
-      val groups = groupFrame(keyed, Seq("f1", "f2"))
-      val (n, maxg, intra) = groupShapeStats(groups)
-      if (!shouldCollapse(n, maxg, intra)) exactJaccardJoinFlat(d)
-      else exactJaccardJoinCollapsedWith(d, keyed, groups.localCheckpoint())
-    }
-  }
-
-  private[graft] def exactJaccardJoinCollapsed(docs: DataFrame): DataFrame = {
-    val d = docs.localCheckpoint()
-    val keyed = fpKeyed(d, col("sh"))
-    exactJaccardJoinCollapsedWith(d, keyed,
-      groupFrame(keyed, Seq("f1", "f2")).localCheckpoint())
-  }
-
-  /** The collapse body over a prebuilt fingerprint-keyed `(f1, f2, gid,
-    * gsize)` group frame — [[exactJaccardJoinOf]] reuses the frame its
-    * stats pass already materialized. Representatives recover their sh by
-    * a doc_id semi-join (gid IS a doc_id), so the only exchanges carrying
-    * shingle arrays are rep-sized.
-    */
-  private def exactJaccardJoinCollapsedWith(docs: DataFrame, keyed: DataFrame,
-                                            groups: DataFrame): DataFrame = {
-    val membership = keyed.join(groups, Seq("f1", "f2"))
-      .select(col("gid"), col("doc_id"), col("gsize"))
-      .localCheckpoint()
-    val repPairs = exactJaccardJoinFlat(
-      docs.join(groups.select(col("gid").as("doc_id")), Seq("doc_id"), "left_semi"))
-    val intraPairs = pairsFromBucketedRowsRaw(
-      membership.where(col("gsize") > 1).select(col("gid"), col("doc_id")),
-      Seq("gid"), bucketExpandCap)
-      .join(docs.select(col("doc_id").as("doc_a"), size(col("sh")).cast("long").as("n")),
-        Seq("doc_a"))
-      .select(col("doc_a"), col("doc_b"), col("n").as("inter"), col("n").as("uni"),
-        lit(1.0).as("jaccard"))
-    val crossPairs = repPairs
-      .join(membership.select(col("gid").as("doc_a"), col("doc_id").as("da")), Seq("doc_a"))
-      .join(membership.select(col("gid").as("doc_b"), col("doc_id").as("db")), Seq("doc_b"))
-      .select(least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"),
-        col("inter"), col("uni"), col("jaccard"))
-    intraPairs.unionAll(crossPairs)
-  }
+  private[graft] def exactJaccardJoinOf(docs: DataFrame,
+                                        gateKey: Option[String] = None,
+                                        mode: ExactSetCollapse.Mode = ExactSetCollapse.Adaptive): DataFrame =
+    setJoinOf(docs.localCheckpoint(), gateKey, mode, Seq("inter", "uni", "jaccard"))(exactJaccardJoinFlat)
 
   /** The flat (doc-level) prefix-filtered join — the body the adaptive
     * entry runs directly below the collapse threshold, and the collapse
@@ -2481,13 +2185,13 @@ object Dedup {
     * shuffle, one extra min. Exposed with the filters switchable so
     * ScaleProbe can report the measured candidate-count drop.
     */
-  private[operators] def exactJaccardCandidatesOf(docs: DataFrame,
-                                                  ppFilters: Boolean): DataFrame =
+  private[graft] def exactJaccardCandidatesOf(docs: DataFrame,
+                                              ppFilters: Boolean): DataFrame =
     exactJaccardCandidatesOf(docs, ppFilters, bucketExpandCap)
 
-  private[operators] def exactJaccardCandidatesOf(docs: DataFrame,
-                                                  ppFilters: Boolean,
-                                                  cap: Int): DataFrame = {
+  private[graft] def exactJaccardCandidatesOf(docs: DataFrame,
+                                              ppFilters: Boolean,
+                                              cap: Int): DataFrame = {
     val freq = docs.select(explode(col("sh")).as("g"))
       .groupBy("g").agg(count(lit(1)).as("cnt"))
     val sorted = docs.select(col("doc_id"), explode(col("sh")).as("g"))
@@ -2578,65 +2282,8 @@ object Dedup {
     }
   }
 
-  /** ScaleProbe entry for the containment join: (candidates, qualifying
-    * pairs) over an arbitrary `(doc_id, sh)` set frame — the measured
-    * evidence that the asymmetric prefix filter's candidate set grows
-    * near-linearly with corpus size.
-    */
-  def containmentJoinProbe(docs: DataFrame): (Long, Long) = (
-    containmentCandidatesOf(docs).count(),
-    containmentJoinOf(docs).count())
-
-  /** ScaleProbe entry: (unfiltered candidates, length-filtered candidates,
-    * qualifying pairs) over an arbitrary `(doc_id, sh)` set frame — the
-    * measured evidence that prefix-bucket occupancy (and the length
-    * filter's bite) grows near-linearly with corpus size.
-    */
-  def exactJoinProbe(docs: DataFrame): (Long, Long, Long) = (
-    exactJaccardCandidatesOf(docs, ppFilters = false).count(),
-    exactJaccardCandidatesOf(docs, ppFilters = true).count(),
-    exactJaccardJoinOf(docs).count())
-
-  /** Dup-heavy hot-bucket probe entries (ScaleProbe `dup_heavy` section):
-    * the band-row stream over an arbitrary (doc_id, text) frame, and pair
-    * counts through the MinHash band / PPJoin prefix paths at an EXPLICIT
-    * occupancy cap — `Int.MaxValue` replays the unconditional in-row form
-    * so its degradation under copy-heavy skew is measurable against the
-    * hybrid default.
-    */
+  /** The band-row stream over an arbitrary (doc_id, text) frame. */
   def bandRowsOf(docs: DataFrame): DataFrame = bandsOf(signaturesOf(docs))
-  def bandPairsCount(bands: DataFrame, cap: Int): Long =
-    pairsFromBands(bands, cap).count()
-  def ppjoinCandidatesCount(docs: DataFrame, cap: Int): Long =
-    exactJaccardCandidatesOf(docs, ppFilters = true, cap = cap).count()
-  def simhashPairsCount(docs: DataFrame, bits: Int, cap: Int): Long = {
-    val sigCol =
-      if (bits == 16) graft.functions.TextFunctions.simhash16(col("text"))
-      else graft.functions.TextFunctions.simhash64(col("text"))
-    val sig = docs.select(col("doc_id"), sigCol.as("simhash"))
-    pairsFromBucketedRows(simhashPieces(sig, bits), Seq("pc", "pv"), cap).count()
-  }
-  def deltaFromBandsCount(bands: DataFrame, cutoff: Long): Long =
-    deltaCandidatesFromBands(bands, cutoff).count()
-  def containmentCandidatesCount(docs: DataFrame): Long =
-    containmentCandidatesOf(docs).count()
-  def exactJaccardJoinCount(docs: DataFrame): Long =
-    exactJaccardJoinOf(docs).count()
-  // round-12 adaptive-path probe entries: the production faces the
-  // collapse now routes, measured at the clique next to the raw kernels
-  def lshAdaptiveCount(docs: DataFrame): Long =
-    bandedPairsAdaptive(signaturesOf(docs), bandsOf, Seq("band", "h1", "h2")).count()
-  def simhashAdaptiveCount(docs: DataFrame): Long =
-    simhashNearDupPairsWith(
-      docs.select(col("doc_id"),
-        graft.functions.TextFunctions.simhash64(col("text")).as("simhash")), 64).count()
-  def containmentJoinCount(docs: DataFrame): Long =
-    containmentJoinOf(docs).count()
-  def deltaSimhashCandidatesCount(docs: DataFrame, cutoff: Long): Long =
-    deltaSimhashCandidates(
-      docs.select(col("doc_id"),
-        graft.functions.TextFunctions.simhash64(col("text")).as("simhash"))
-        .localCheckpoint(), cutoff).count()
 
   /** The candidate pair frame itself, for probes asserting structural
     * properties (ScaleCorpusSpec: no cross-replica pairs).
@@ -2997,20 +2644,6 @@ object Dedup {
   private[graft] def simhashCandidatesWith(sig: DataFrame, bits: Int): DataFrame =
     pairsFromBucketedRows(simhashPieces(sig, bits), Seq("pc", "pv"), bucketExpandCap)
 
-  /** ScaleProbe entry: (candidates, qualifying pairs) for the pigeonhole
-    * join over an arbitrary (doc_id, text) frame at an explicit signature
-    * width — the measured evidence that the 64-bit pieces keep candidate
-    * growth linear where 16-bit buckets saturate.
-    */
-  def simhashJoinProbe(docs: DataFrame, bits: Int): (Long, Long) = {
-    val sigCol =
-      if (bits == 16) graft.functions.TextFunctions.simhash16(col("text"))
-      else graft.functions.TextFunctions.simhash64(col("text"))
-    val sig = docs.select(col("doc_id"), sigCol.as("simhash")).localCheckpoint()
-    (simhashCandidatesWith(sig, bits).count(),
-      simhashNearDupPairsWith(sig, bits).count())
-  }
-
   /** Adaptive entry: identical documents have identical signatures, so a
     * boilerplate clique (every copy in the same (pc, pv) buckets, every
     * pair at hamming 0) takes the EXACT-SET COLLAPSE keyed on the
@@ -3020,48 +2653,22 @@ object Dedup {
     * hamming = 0, cross pairs lift the rep pair's hamming verbatim
     * (hamming(a, b) is a function of the two signatures alone, so
     * collapsed ≡ flat PAIR-FOR-PAIR — CollapseEquivalenceSpec pins it).
-    * The branch rule is the shared [[lowDupPreGate]] → [[shouldCollapse]]
-    * pair; the signature frame is localCheckpoint'd so the map-only
+    * The branch is [[ExactSetCollapse.run]]'s; the signature frame is
+    * localCheckpoint'd so the map-only
     * kernel executes once for the gate and all downstream consumers.
     */
   private[graft] def simhashNearDupPairsWith(sigIn: DataFrame, bits: Int,
-                                             gateKey: Option[String] = None): DataFrame = {
+                                             gateKey: Option[String] = None,
+                                             mode: ExactSetCollapse.Mode = ExactSetCollapse.Adaptive): DataFrame = {
     val sig = sigIn.localCheckpoint()
-    if (lowDupPreGateMemo(gateKey, sig, col("simhash"))) simhashNearDupPairsFlat(sig, bits)
-    else {
-      val groups = groupFrame(sig.select(col("simhash"), col("doc_id")), Seq("simhash"))
-      val (n, maxg, intra) = groupShapeStats(groups)
-      if (!shouldCollapse(n, maxg, intra)) simhashNearDupPairsFlat(sig, bits)
-      else simhashPairsCollapsedBody(sig, groups, bits)
+    ExactSetCollapse.run(mode, gateKey, sig, col("simhash"),
+      sig.select(col("simhash"), col("doc_id")), Seq("simhash"))(simhashNearDupPairsFlat(sig, bits)) { g =>
+      g.expand(simhashNearDupPairsFlat(g.groups.select(col("gid").as("doc_id"), col("simhash")), bits),
+        Seq("hamming"), _.select(col("doc_a"), col("doc_b"), lit(0).as("hamming")))
     }
   }
 
-  /** Forced collapse body (spec-pinnable below the adaptive threshold). */
-  private[operators] def simhashPairsCollapsed(sigIn: DataFrame, bits: Int): DataFrame = {
-    val sig = sigIn.localCheckpoint()
-    simhashPairsCollapsedBody(sig,
-      groupFrame(sig.select(col("simhash"), col("doc_id")), Seq("simhash")), bits)
-  }
-
-  private def simhashPairsCollapsedBody(sig: DataFrame, groups: DataFrame,
-                                        bits: Int): DataFrame = {
-    val g = groups.localCheckpoint()
-    val membership = sig.join(g, Seq("simhash"))
-      .select(col("gid"), col("doc_id"), col("gsize")).localCheckpoint()
-    val repPairs = simhashNearDupPairsFlat(g.select(col("gid").as("doc_id"), col("simhash")), bits)
-    val intraPairs = pairsFromBucketedRowsRaw(
-      membership.where(col("gsize") > 1).select(col("gid"), col("doc_id")),
-      Seq("gid"), bucketExpandCap)
-      .select(col("doc_a"), col("doc_b"), lit(0).as("hamming"))
-    val cross = repPairs
-      .join(membership.select(col("gid").as("doc_a"), col("doc_id").as("da")), Seq("doc_a"))
-      .join(membership.select(col("gid").as("doc_b"), col("doc_id").as("db")), Seq("doc_b"))
-      .select(least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"), col("hamming"))
-    intraPairs.unionAll(cross)
-  }
-
-  private[operators] def simhashNearDupPairsFlat(sig: DataFrame, bits: Int): DataFrame = {
+  private def simhashNearDupPairsFlat(sig: DataFrame, bits: Int): DataFrame = {
     val cands = simhashCandidatesWith(sig, bits)
     cands
       .join(sig.select(col("doc_id").as("doc_a"), col("simhash").as("ha")), Seq("doc_a"))

@@ -917,8 +917,8 @@ object Similarity {
     * cell with pairwise cosine exactly 1, and the flat pipeline pays
     * C(g,2) cosine evaluations plus a C(g,2)-edge component pass per
     * clique. Identical vectors have identical verdict relationships, so
-    * above the shared shape threshold ([[Dedup.shouldCollapse]] on the
-    * same [[Dedup.fpKeyed]] two-family fingerprint of the embedding array)
+    * when [[ExactSetCollapse.run]] takes the collapse branch (keyed on the
+    * [[Dedup.fpKeyed]] two-family fingerprint of the embedding array)
     * the pipeline runs on ONE representative per distinct vector and
     * members inherit the rep's component label — the expanded component's
     * min member id IS the rep-level label (gid = min doc_id of its group),
@@ -929,73 +929,34 @@ object Similarity {
     * must not merge them — zero-norm rows bypass grouping and are emitted
     * as singleton verdicts directly (the spec pins this too).
     */
-  private def semanticVerdictsWith(assignIn: DataFrame, embIn: DataFrame,
-                                   gateKey: Option[String] = None): DataFrame = {
+  private[graft] def semanticVerdictsWith(assignIn: DataFrame, embIn: DataFrame,
+                                          gateKey: Option[String] = None,
+                                          mode: ExactSetCollapse.Mode = ExactSetCollapse.Adaptive): DataFrame = {
     val assign = assignIn.select(col("vec_id"), col("cell")).localCheckpoint()
     val emb = embIn.select(col("vec_id"), col("embedding"))
-    if (Dedup.lowDupPreGateMemo(gateKey, emb, xxhash64(col("embedding"))))
-      semanticVerdictsFlat(assign, emb)
-    else {
-      val nz = emb.where(norm2Col > lit(0.0))
-      val keyed = Dedup.fpKeyed(
-        nz.select(col("vec_id").as("doc_id"), col("embedding")), col("embedding"))
-      val groups = Dedup.groupFrame(keyed, Seq("f1", "f2"))
-      val (n, maxg, intra) = Dedup.groupShapeStats(groups)
-      if (!Dedup.shouldCollapse(n, maxg, intra)) semanticVerdictsFlat(assign, emb)
-      else semanticVerdictsCollapsedWith(assign, emb, keyed, groups.localCheckpoint())
+    ExactSetCollapse.run(mode, gateKey, emb, xxhash64(col("embedding")),
+      Dedup.fpKeyed(emb.where(norm2Col > lit(0.0))
+        .select(col("vec_id").as("doc_id"), col("embedding")), col("embedding")), Seq("f1", "f2"))(
+      semanticVerdictsFlat(assign, emb)) { g =>
+      val repIds = g.groups.select(col("gid").as("vec_id"))
+      val repVerdicts = semanticVerdictsFlat(
+        assign.join(repIds, Seq("vec_id"), "left_semi"),
+        emb.join(repIds, Seq("vec_id"), "left_semi"))
+      val expanded = g.membership
+        .join(repVerdicts.select(col("vec_id").as("gid"), col("cell"), col("cluster_id")),
+          Seq("gid"))
+        .select(col("doc_id").as("vec_id"), col("cell"), col("cluster_id"))
+      // zero-norm rows never pair (NaN cosine): singleton verdicts, own label
+      val zeros = assign.join(emb.where(norm2Col <= lit(0.0)).select("vec_id"), Seq("vec_id"))
+        .select(col("vec_id"), col("cell"), col("vec_id").as("cluster_id"))
+      expanded.unionAll(zeros)
+        .withColumn("keep", col("cluster_id") === col("vec_id"))
     }
   }
 
   /** Σx² of the embedding — 0 exactly when the vector is all-zero. */
   private def norm2Col: Column =
     expr("aggregate(embedding, 0.0D, (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")
-
-  /** Forced collapse entry (spec-pinnable below the adaptive threshold). */
-  private[operators] def semanticVerdictsCollapsed(assignIn: DataFrame,
-                                                   embIn: DataFrame): DataFrame = {
-    val assign = assignIn.select(col("vec_id"), col("cell")).localCheckpoint()
-    val emb = embIn.select(col("vec_id"), col("embedding"))
-    val nz = emb.where(norm2Col > lit(0.0))
-    val keyed = Dedup.fpKeyed(
-      nz.select(col("vec_id").as("doc_id"), col("embedding")), col("embedding"))
-    semanticVerdictsCollapsedWith(assign, emb, keyed,
-      Dedup.groupFrame(keyed, Seq("f1", "f2")).localCheckpoint())
-  }
-
-  private def semanticVerdictsCollapsedWith(assign: DataFrame, emb: DataFrame,
-                                            keyed: DataFrame, groups: DataFrame): DataFrame = {
-    val membership = keyed.join(groups, Seq("f1", "f2"))
-      .select(col("gid"), col("doc_id")).localCheckpoint()
-    val repIds = groups.select(col("gid").as("vec_id"))
-    val repVerdicts = semanticVerdictsFlat(
-      assign.join(repIds, Seq("vec_id"), "left_semi"),
-      emb.join(repIds, Seq("vec_id"), "left_semi"))
-    val expanded = membership
-      .join(repVerdicts.select(col("vec_id").as("gid"), col("cell"), col("cluster_id")),
-        Seq("gid"))
-      .select(col("doc_id").as("vec_id"), col("cell"), col("cluster_id"))
-    // zero-norm rows never pair (NaN cosine): singleton verdicts, own label
-    val zeros = assign.join(emb.where(norm2Col <= lit(0.0)).select("vec_id"), Seq("vec_id"))
-      .select(col("vec_id"), col("cell"), col("vec_id").as("cluster_id"))
-    expanded.unionAll(zeros)
-      .withColumn("keep", col("cluster_id") === col("vec_id"))
-  }
-
-  /** Spec hook: the flat body over an arbitrary (assign, emb) fixture. */
-  private[operators] def semanticVerdictsFlatForTest(assign: DataFrame,
-                                                     emb: DataFrame): DataFrame =
-    semanticVerdictsFlat(assign.select(col("vec_id"), col("cell")).localCheckpoint(),
-      emb.select(col("vec_id"), col("embedding")))
-
-  /** ScaleProbe hooks: dropped-count through the adaptive entry vs the
-    * forced flat body over an arbitrary (assign, emb) corpus — the
-    * embedding-clique twin of the text family's dup-heavy probe legs.
-    */
-  private[graft] def semanticAdaptiveProbe(assign: DataFrame, emb: DataFrame): Long =
-    semanticVerdictsWith(assign, emb).where(!col("keep")).count()
-
-  private[graft] def semanticFlatProbe(assign: DataFrame, emb: DataFrame): Long =
-    semanticVerdictsFlatForTest(assign, emb).where(!col("keep")).count()
 
   /** The flat verdict body — candidates from cell buckets (blocked), one
     * cosine per candidate pair, components, left-join verdicts.
@@ -1144,9 +1105,22 @@ object Similarity {
     */
   val recallSampleTarget = 5000L
 
-  /** permille of vec_ids the recall face keeps at corpus size n. */
-  private[operators] def recallSamplePermille(n: Long): Long =
+  /** Corpus size above which the recall face refuses to run: the sample
+    * floors at 1‰, so past 1000 × [[recallSampleTarget]] the panel grows as
+    * n/1000; at twice that it would hold 2 × [[recallSampleTarget]] rows.
+    */
+  val recallCorpusCeiling: Long = 2L * recallSampleTarget * 1000L
+
+  /** permille of vec_ids the recall face keeps at corpus size n; fails
+    * above [[recallCorpusCeiling]], before the panel is collected.
+    */
+  private[operators] def recallSamplePermille(n: Long): Long = {
+    require(n <= recallCorpusCeiling,
+      s"semantic recall: $n vectors exceed the panel ceiling of $recallCorpusCeiling " +
+        s"(2 x recallSampleTarget $recallSampleTarget x 1000); a 1 permille sample " +
+        s"would collect ${n / 1000} rows to the driver")
     math.min(1000L, math.max(1L, recallSampleTarget * 1000L / math.max(1L, n)))
+  }
 
   private def recallSamplePred(p: Long): Column =
     expr(s"pmod(CAST(conv(substr(md5(CAST(vec_id AS STRING)), 1, 13), 16, 10) AS BIGINT), 1000) < $p")
@@ -1199,9 +1173,11 @@ object Similarity {
     // ONE bounded driver panel replaces the former four broadcast-join
     // attachments (two embedding sides, two metadata sides) AND the pair
     // respread exchange: collect the sampled (vec_id, cell, c1, c2,
-    // embedding) universe — ≤ recallSampleTarget rows × dim floats
-    // ≈ 1.3 MB BY CONSTRUCTION (the sample cap, never the corpus, bounds
-    // it; the centroid-panel class) — and score each truth pair with the
+    // embedding) universe — about recallSampleTarget rows × dim floats
+    // ≈ 1.3 MB, at most twice that: the sample floors at 1 permille, so
+    // the panel grows as n/1000 past 1000 × recallSampleTarget, and
+    // recallSamplePermille fails above recallCorpusCeiling before this
+    // collect (the centroid-panel class) — and score each truth pair with the
     // fused RecallPanelScore kernel INSIDE the pair-generation stage.
     // The quadratic pair stream now flows generate → score → filter →
     // aggregate with no Exchange and no per-pair copying of 2×dim float

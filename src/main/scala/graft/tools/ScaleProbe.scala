@@ -1,6 +1,7 @@
 package graft.tools
 
 import java.nio.file.Files
+import graft.operators.{Dedup, ExactSetCollapse, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -170,7 +171,9 @@ object ScaleProbe {
           expr(s"transform(sh, x -> x + ${r}L * 9007199254740992L)").as("sh"))
       }.reduce(_ unionAll _)
       val t0 = System.nanoTime()
-      val (cand, candLf, pairs) = graft.operators.Dedup.exactJoinProbe(corpus)
+      val cand = Dedup.exactJaccardCandidatesOf(corpus, ppFilters = false).count()
+      val candLf = Dedup.exactJaccardCandidatesOf(corpus, ppFilters = true).count()
+      val pairs = Dedup.exactJaccardJoinOf(corpus).count()
       val dt = (System.nanoTime() - t0) / 1e9
       if (k == 1) t1exact = dt
       val label = s"rep${k}x"
@@ -194,7 +197,12 @@ object ScaleProbe {
           expr(s"array_join(transform(split(text, ' '), t -> concat('r$r', t)), ' ')").as("text"))
       }.reduce(_ unionAll _)
       val t0 = System.nanoTime()
-      val (cand, pairs) = graft.operators.Dedup.simhashJoinProbe(corpus, bits)
+      val sigCol =
+        if (bits == 16) graft.functions.TextFunctions.simhash16(col("text"))
+        else graft.functions.TextFunctions.simhash64(col("text"))
+      val sig = corpus.select(col("doc_id"), sigCol.as("simhash")).localCheckpoint()
+      val cand = Dedup.simhashCandidatesWith(sig, bits).count()
+      val pairs = Dedup.simhashNearDupPairsWith(sig, bits).count()
       val dt = (System.nanoTime() - t0) / 1e9
       val label = s"rep${k}x"
       println(f"$label%-13s ${k * nAllDocs}%7d $bits%5d $cand%9d $pairs%7d  $dt%.2f")
@@ -236,10 +244,12 @@ object ScaleProbe {
           ("in_row", Int.MaxValue))
           if pathOn("minhash_bands") && !(form == "in_row" && c > 2500 && !inRowAll)) {
         val t0 = System.nanoTime()
-        val n = graft.operators.Dedup.bandPairsCount(bands, cap)
+        val n = Dedup.pairsFromBands(bands, cap).count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"minhash_bands  $c%7d $form%8s $n%9d  $dt%.2f")
       }
+      lazy val sig64 = corpus
+        .select(col("doc_id"), graft.functions.TextFunctions.simhash64(col("text")).as("simhash"))
       lazy val shingled = corpus
         .select(col("doc_id"), graft.functions.TextFunctions.shingleHashes(col("text")).as("sh"))
         .where(size(col("sh")) > 0)
@@ -249,7 +259,7 @@ object ScaleProbe {
           ("in_row", Int.MaxValue))
           if pathOn("ppjoin_prefix") && !(form == "in_row" && c > 2500 && !inRowAll)) {
         val t0 = System.nanoTime()
-        val n = graft.operators.Dedup.ppjoinCandidatesCount(shingled, cap)
+        val n = Dedup.exactJaccardCandidatesOf(shingled, ppFilters = true, cap = cap).count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"ppjoin_prefix  $c%7d $form%8s $n%9d  $dt%.2f")
       }
@@ -263,19 +273,19 @@ object ScaleProbe {
           ("in_row", Int.MaxValue))
           if pathOn("simhash_pieces") && !(form == "in_row" && c > 2500 && !inRowAll)) {
         val t0 = System.nanoTime()
-        val n = graft.operators.Dedup.simhashPairsCount(corpus, 64, cap)
+        val n = Dedup.pairsFromBucketedRows(Dedup.simhashPieces(sig64, 64), Seq("pc", "pv"), cap).count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"simhash_pieces $c%7d $form%8s $n%9d  $dt%.2f")
       }
       if (pathOn("delta_banding")) {
         val t0 = System.nanoTime()
-        val n = graft.operators.Dedup.deltaFromBandsCount(bands, 50000000L + c / 2)
+        val n = Dedup.deltaCandidatesFromBands(bands, 50000000L + c / 2).count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"delta_banding  $c%7d ${"blocked"}%8s $n%9d  $dt%.2f")
       }
       if (pathOn("contain_probe")) {
         val t0 = System.nanoTime()
-        val n = graft.operators.Dedup.containmentCandidatesCount(shingled)
+        val n = Dedup.containmentCandidatesOf(shingled).count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"contain_probe  $c%7d ${"blocked"}%8s $n%9d  $dt%.2f")
       }
@@ -284,7 +294,7 @@ object ScaleProbe {
       // answer streams through the dedup-free intra expansion
       if (pathOn("ppjoin_join")) {
         val t0 = System.nanoTime()
-        val n = graft.operators.Dedup.exactJaccardJoinCount(shingled)
+        val n = Dedup.exactJaccardJoinOf(shingled).count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"ppjoin_join    $c%7d ${"collapse"}%8s $n%9d  $dt%.2f")
       }
@@ -295,25 +305,26 @@ object ScaleProbe {
       // number IS the collapsed one)
       if (pathOn("minhash_adapt")) {
         val t0 = System.nanoTime()
-        val n = graft.operators.Dedup.lshAdaptiveCount(corpus)
+        val n = Dedup.bandedPairsAdaptive(Dedup.signaturesOf(corpus), Dedup.bandsOf,
+          Seq("band", "h1", "h2")).count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"minhash_adapt  $c%7d ${"collapse"}%8s $n%9d  $dt%.2f")
       }
       if (pathOn("simhash_adapt")) {
         val t0 = System.nanoTime()
-        val n = graft.operators.Dedup.simhashAdaptiveCount(corpus)
+        val n = Dedup.simhashNearDupPairsWith(sig64, 64).count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"simhash_adapt  $c%7d ${"collapse"}%8s $n%9d  $dt%.2f")
       }
       if (pathOn("contain_join")) {
         val t0 = System.nanoTime()
-        val n = graft.operators.Dedup.containmentJoinCount(shingled)
+        val n = Dedup.containmentJoinOf(shingled).count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"contain_join   $c%7d ${"collapse"}%8s $n%9d  $dt%.2f")
       }
       if (pathOn("delta_simhash")) {
         val t0 = System.nanoTime()
-        val n = graft.operators.Dedup.deltaSimhashCandidatesCount(corpus, 50000000L + c / 2)
+        val n = Dedup.deltaSimhashCandidates(sig64.localCheckpoint(), 50000000L + c / 2).count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"delta_simhash  $c%7d ${"collapse"}%8s $n%9d  $dt%.2f")
       }
@@ -343,9 +354,9 @@ object ScaleProbe {
       for (form <- Seq("flat", "adaptive")
            if !(form == "flat" && c > 2500 && !sys.env.contains("GRAFT_EMBCLIQUE_FLAT"))) {
         val t0 = System.nanoTime()
-        val n =
-          if (form == "flat") graft.operators.Similarity.semanticFlatProbe(assign, corpus)
-          else graft.operators.Similarity.semanticAdaptiveProbe(assign, corpus)
+        val mode = if (form == "flat") ExactSetCollapse.Flat else ExactSetCollapse.Adaptive
+        val n = Similarity.semanticVerdictsWith(assign, corpus, mode = mode)
+          .where(!col("keep")).count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"emb_clique     $c%7d $form%8s $n%9d  $dt%.2f")
       }
@@ -410,7 +421,8 @@ object ScaleProbe {
           expr(s"transform(sh, x -> x + ${r}L * 9007199254740992L)").as("sh"))
       }.reduce(_ unionAll _)
       val t0 = System.nanoTime()
-      val (cand, pairs) = graft.operators.Dedup.containmentJoinProbe(corpus)
+      val cand = Dedup.containmentCandidatesOf(corpus).count()
+      val pairs = Dedup.containmentJoinOf(corpus).count()
       val dt = (System.nanoTime() - t0) / 1e9
       if (k == 1) t1contain = dt
       val label = s"rep${k}x"

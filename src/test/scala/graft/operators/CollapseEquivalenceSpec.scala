@@ -1,35 +1,31 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import graft.operators.ExactSetCollapse.{Adaptive, Flat, Forced, Mode}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
 
-/** Round-12: the exact-set collapse extended beyond the exact Jaccard join
-  * to the other candidate paths (round-11 verdict #1). Candidate-ness in
-  * every one of these paths is a function of CONTENT-DERIVED state alone
-  * (MinHash signature vector / SimHash value), so running the kernel on one
-  * representative per distinct signature and reconstructing doc-level
-  * pairs through membership joins must be PAIR-FOR-PAIR identical to the
-  * flat kernel — this spec pins that on a clique-shaped fixture that
-  * drives the ADAPTIVE entry into the collapse branch (maxGroup above
-  * bucketExpandCap, dup mass far above the HLL pre-gate), plus the forced
-  * body on a small below-threshold fixture, plus the flat branch on a
-  * clean corpus.
+/** The exact-set collapse ([[ExactSetCollapse]]) in every family that runs
+  * through it. Each family's output is a function of CONTENT-DERIVED state
+  * alone (shingle set, MinHash signature vector, stored band rows, SimHash
+  * value, embedding), so running the kernel on one representative per
+  * distinct key and rebuilding doc-level rows must be ROW-FOR-ROW the flat
+  * kernel's. One table, two checks per family: `Adaptive` on a clique
+  * fixture (maxGroup past bucketExpandCap, dup mass far above the HLL
+  * pre-gate, so the collapse branch fires) equals `Flat`, and `Forced` on a
+  * clean fixture (below every threshold) equals `Flat`.
   */
 class CollapseEquivalenceSpec extends SparkSpec {
 
-  private def pairSet(df: DataFrame): Set[(Long, Long)] =
-    df.select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-
-  private def pairMap(df: DataFrame): Map[(Long, Long), Int] =
-    df.select("doc_a", "doc_b", "hamming").collect()
-      .map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toMap
+  /** A fixture frame and the delta boundary the delta families split it at. */
+  private case class Fixture(rows: DataFrame, cutoff: Long)
 
   /** 300-copy boilerplate clique (past bucketExpandCap = 256) + a 40-copy
     * near-dup group of the same page + distinct background docs — the
-    * web-crawl pathology, small enough for an in-test flat reference.
+    * web-crawl pathology, small enough for an in-test flat reference. The
+    * cutoff splits the clique: 251 old copies, 49 new + the near group.
     */
-  private lazy val cliqueDocs: DataFrame = {
+  private lazy val cliqueDocs: Fixture = {
     import spark.implicits._
     val page = "the quick brown fox jumps over the lazy dog again and again"
     val near = "the quick brown fox jumps over the lazy dog again and AGAIN"
@@ -37,135 +33,156 @@ class CollapseEquivalenceSpec extends SparkSpec {
     val background = (0 until 60).map { i =>
       (1000L + i, (0 until 8).map(_ => s"w${rnd.nextInt(400)}").mkString(" "))
     }
-    ((0L until 300L).map(i => (i, page)) ++
+    Fixture(((0L until 300L).map(i => (i, page)) ++
       (500L until 540L).map(i => (i, near)) ++ background)
-      .toDF("doc_id", "text")
+      .toDF("doc_id", "text"), 250L)
   }
 
-  private lazy val cleanDocs: DataFrame = {
+  private lazy val cleanDocs: Fixture = {
     import spark.implicits._
     val rnd = new scala.util.Random(77)
-    (0L until 80L).map { i =>
+    Fixture((0L until 80L).map { i =>
       (i, (0 until 10).map(_ => s"t${rnd.nextInt(300)}").mkString(" "))
-    }.toDF("doc_id", "text")
+    }.toDF("doc_id", "text"), 40L)
   }
 
-  test("MinHash banding: adaptive (collapse branch on the clique fixture) ≡ flat kernel") {
-    val sig = Dedup.signaturesOf(cliqueDocs).localCheckpoint()
-    val flat = pairSet(Dedup.pairsFromBucketedRows(
-      Dedup.bandsOf(sig), Seq("band", "h1", "h2"), Dedup.bucketExpandCap))
-    val adaptive = pairSet(Dedup.bandedPairsAdaptive(sig, Dedup.bandsOf, Seq("band", "h1", "h2")))
-    // fixture sanity: the clique's pairs dominate, so the collapse branch fired
-    assert(flat.size >= 300 * 299 / 2, s"fixture lost its clique: ${flat.size} pairs")
-    assert(adaptive == flat,
-      s"collapse diverges: extra=${(adaptive -- flat).take(5)} missing=${(flat -- adaptive).take(5)}")
+  private def vec(seed: Int): Array[Float] = {
+    val r = new scala.util.Random(seed)
+    Array.fill(8)(r.nextFloat() * 2f - 1f)
   }
 
-  test("MinHash banding: forced collapse body ≡ flat on a below-threshold fixture") {
-    val sig = Dedup.signaturesOf(cleanDocs).localCheckpoint()
-    val flat = pairSet(Dedup.pairsFromBucketedRows(
-      Dedup.bandsOf(sig), Seq("band", "h1", "h2"), Dedup.bucketExpandCap))
-    val forced = pairSet(Dedup.bandedPairsCollapsedBody(sig, Dedup.bandsOf, Seq("band", "h1", "h2")))
-    assert(forced == flat,
-      s"forced collapse diverges on clean corpus: extra=${(forced -- flat).take(5)} " +
-        s"missing=${(flat -- forced).take(5)}")
+  /** 300-copy vector clique, small dup groups, singletons and identical
+    * ZERO vectors (which must stay singletons: their cosine is NaN).
+    */
+  private lazy val cliqueEmb: Fixture = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    Fixture(((0L until 300L).map(i => (i, vec(1))) ++
+      (300L until 340L).map(i => (i, vec(rnd.nextInt(20) + 2))) ++
+      (400L until 420L).map(i => (i, vec(i.toInt + 1000))) ++
+      (500L until 503L).map(i => (i, Array.fill(8)(0f))))
+      .toDF("vec_id", "embedding"), 0L)
   }
 
-  test("MinHash banding at (k=12, 4, 3): adaptive ≡ flat on the clique fixture") {
-    val sig = Dedup.signaturesOfK(cliqueDocs, 12).localCheckpoint()
-    val flat = pairSet(Dedup.pairsFromBucketedRows(
-      Dedup.bandsOfK(sig, 4, 3), Seq("band", "bkey"), Dedup.bucketExpandCap))
-    val adaptive = pairSet(
-      Dedup.bandedPairsAdaptive(sig, Dedup.bandsOfK(_, 4, 3), Seq("band", "bkey")))
-    assert(adaptive == flat)
+  private lazy val cleanEmb: Fixture = {
+    import spark.implicits._
+    Fixture((0L until 80L).map(i => (i, vec(i.toInt + 5000))).toDF("vec_id", "embedding"), 0L)
   }
 
-  test("SimHash (64-bit): adaptive (collapse branch) ≡ flat, hamming carried verbatim") {
-    val sig = cliqueDocs
-      .select(col("doc_id"), graft.functions.TextFunctions.simhash64(col("text")).as("simhash"))
-      .localCheckpoint()
-    val flat = pairMap(Dedup.simhashNearDupPairsFlat(sig, 64))
-    val adaptive = pairMap(Dedup.simhashNearDupPairsWith(sig, 64))
-    assert(flat.count(_._2 == 0) >= 300 * 299 / 2, "fixture lost its hamming-0 clique")
-    assert(adaptive == flat,
-      s"simhash collapse diverges: extra=${(adaptive.keySet -- flat.keySet).take(5)} " +
-        s"missing=${(flat.keySet -- adaptive.keySet).take(5)}")
-  }
+  private def signatures(f: Fixture, k: Int): DataFrame =
+    Dedup.signaturesOfK(f.rows, k).localCheckpoint()
 
-  test("SimHash: forced collapse body ≡ flat on a below-threshold fixture") {
-    val sig = cleanDocs
-      .select(col("doc_id"), graft.functions.TextFunctions.simhash64(col("text")).as("simhash"))
-      .localCheckpoint()
-    assert(pairMap(Dedup.simhashPairsCollapsed(sig, 64)) ==
-      pairMap(Dedup.simhashNearDupPairsFlat(sig, 64)))
-  }
-
-  private def shFrame(docs: DataFrame): DataFrame = docs
+  private def shFrame(f: Fixture): DataFrame = f.rows
     .select(col("doc_id"), graft.functions.TextFunctions.shingleHashes(col("text")).as("sh"))
     .where(org.apache.spark.sql.functions.size(col("sh")) > 0)
     .localCheckpoint()
 
-  private def contMap(df: DataFrame): Map[(Long, Long), (Long, Long)] =
-    df.select("doc_a", "doc_b", "inter", "n_min").collect()
-      .map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getLong(3)))).toMap
+  private def simhash64(f: Fixture): DataFrame = f.rows
+    .select(col("doc_id"), graft.functions.TextFunctions.simhash64(col("text")).as("simhash"))
+    .localCheckpoint()
 
-  test("containment join: adaptive (collapse branch on the clique fixture) ≡ flat") {
-    val docs = shFrame(cliqueDocs)
-    val flat = contMap(Dedup.containmentJoinFlat(docs))
-    val adaptive = contMap(Dedup.containmentJoinOf(docs))
-    assert(flat.count(_._2 match { case (i, m) => i == m }) >= 300 * 299 / 2,
-      "fixture lost its containment-1 clique")
-    assert(adaptive == flat,
-      s"containment collapse diverges: extra=${(adaptive.keySet -- flat.keySet).take(5)} " +
-        s"missing=${(flat.keySet -- adaptive.keySet).take(5)}")
+  private val cliquePairs = 300 * 299 / 2
+
+  private def touchingOnly(rows: Seq[Row], cutoff: Long): Unit = {
+    assert(rows.nonEmpty && rows.forall(r => r.getLong(0) > cutoff || r.getLong(1) > cutoff))
+    // the old-old clique half must NOT appear (delta discipline): old
+    // copies pair with the new ones but never with each other
+    assert(!rows.exists(r => r.getLong(0) <= cutoff && r.getLong(1) <= cutoff))
   }
 
-  test("containment join: forced collapse body ≡ flat on a below-threshold fixture") {
-    val docs = shFrame(cleanDocs)
-    assert(contMap(Dedup.containmentJoinCollapsed(docs)) ==
-      contMap(Dedup.containmentJoinFlat(docs)))
-  }
+  /** One family: its entry under a mode, a check that the clique fixture
+    * kept its structure (run on the flat rows), and its fixtures.
+    */
+  private case class Family(adaptiveTest: String, forcedTest: String,
+                            entry: (Fixture, Mode) => DataFrame,
+                            cliqueShape: (Seq[Row], Fixture) => Unit,
+                            clique: () => Fixture = () => cliqueDocs,
+                            clean: () => Fixture = () => cleanDocs)
 
-  test("delta banding: adaptive (collapse branch) ≡ flat, delta-touching contract kept") {
-    val bands = Dedup.bandRowsOf(cliqueDocs).localCheckpoint()
-    val cutoff = 250L // splits the 300-clique: 250 old copies, 50 new + the near group
-    val flat = pairSet(Dedup.deltaCandidatesFromBandsFlat(bands, cutoff))
-    val adaptive = pairSet(Dedup.deltaCandidatesFromBands(bands, cutoff))
-    assert(flat.nonEmpty && flat.forall { case (a, b) => a > cutoff || b > cutoff })
-    // the old-old clique half must NOT appear (delta discipline): 250 old
-    // copies pair with the 50 new ones but never with each other
-    assert(!flat.exists { case (a, b) => a <= cutoff && b <= cutoff })
-    assert(adaptive == flat,
-      s"delta collapse diverges: extra=${(adaptive -- flat).take(5)} " +
-        s"missing=${(flat -- adaptive).take(5)}")
-  }
+  private val families = Seq(
+    Family("MinHash banding: adaptive (collapse branch on the clique fixture) ≡ flat kernel",
+      "MinHash banding: forced collapse body ≡ flat on a below-threshold fixture",
+      (f, m) => Dedup.bandedPairsAdaptive(signatures(f, Dedup.numHashes), Dedup.bandsOf,
+        Seq("band", "h1", "h2"), mode = m),
+      (rows, _) => assert(rows.size >= cliquePairs, s"fixture lost its clique: ${rows.size} pairs")),
+    Family("MinHash banding at (k=12, 4, 3): adaptive ≡ flat on the clique fixture",
+      "MinHash banding at (k=12, 4, 3): forced collapse ≡ flat on a below-threshold fixture",
+      (f, m) => Dedup.bandedPairsAdaptive(signatures(f, 12), Dedup.bandsOfK(_, 4, 3),
+        Seq("band", "bkey"), mode = m),
+      (rows, _) => assert(rows.size >= cliquePairs)),
+    Family("delta banding: adaptive (collapse branch) ≡ flat, delta-touching contract kept",
+      "delta banding: forced collapse ≡ flat on a below-threshold fixture",
+      (f, m) => Dedup.deltaCandidatesFromBands(Dedup.bandRowsOf(f.rows).localCheckpoint(),
+        f.cutoff, mode = m),
+      (rows, f) => touchingOnly(rows, f.cutoff)),
+    Family("SimHash (64-bit): adaptive (collapse branch) ≡ flat, hamming carried verbatim",
+      "SimHash: forced collapse body ≡ flat on a below-threshold fixture",
+      (f, m) => Dedup.simhashNearDupPairsWith(simhash64(f), 64, mode = m),
+      (rows, _) => assert(rows.count(_.getInt(2) == 0) >= cliquePairs,
+        "fixture lost its hamming-0 clique")),
+    Family("delta SimHash: adaptive (collapse branch) ≡ flat, delta-touching contract kept",
+      "delta SimHash: forced collapse ≡ flat on a below-threshold fixture",
+      (f, m) => Dedup.deltaSimhashCandidates(simhash64(f), f.cutoff, mode = m),
+      (rows, f) => {
+        touchingOnly(rows, f.cutoff)
+        // every old copy (0..250) pairs with every new one (251..299)
+        assert(rows.size >= 251 * 49, "fixture lost its delta-clique structure")
+      }),
+    Family("containment join: adaptive (collapse branch on the clique fixture) ≡ flat",
+      "containment join: forced collapse body ≡ flat on a below-threshold fixture",
+      (f, m) => Dedup.containmentJoinOf(shFrame(f), mode = m),
+      (rows, _) => assert(rows.count(r => r.getLong(2) == r.getLong(3)) >= cliquePairs,
+        "fixture lost its containment-1 clique")),
+    Family("exact Jaccard join: fingerprint-keyed adaptive entry ≡ flat on the clique fixture",
+      "exact Jaccard join: forced collapse ≡ flat on a below-threshold fixture",
+      (f, m) => Dedup.exactJaccardJoinOf(shFrame(f), mode = m),
+      (rows, _) => assert(rows.count(_.getDouble(4) == 1.0) >= cliquePairs, "clique pairs missing")),
+    Family("semantic verdicts: adaptive (collapse branch on the clique fixture) ≡ flat",
+      "semantic verdicts: forced collapse ≡ flat on a below-threshold fixture",
+      // a 4-cell assignment that is a pure function of the vector
+      // (identical vectors land together, like any centroid assignment)
+      (f, m) => Similarity.semanticVerdictsWith(
+        f.rows.select(col("vec_id"), pmod(xxhash64(col("embedding")), lit(4L)).cast("int").as("cell")),
+        f.rows, mode = m),
+      (rows, _) => {
+        assert(rows.count(!_.getBoolean(3)) >= 299, "fixture lost its clique structure")
+        // zero vectors: NaN cosine pairs with nothing — all three stay kept singletons
+        Seq(500L, 501L, 502L).foreach { z =>
+          assert(rows.exists(r => r.getLong(0) == z && r.getLong(2) == z && r.getBoolean(3)))
+        }
+      },
+      clique = () => cliqueEmb, clean = () => cleanEmb))
 
-  test("exact Jaccard join: fingerprint-keyed adaptive entry ≡ flat on the clique fixture") {
-    val docs = shFrame(cliqueDocs)
-    val flatPairs = Dedup.exactJoinProbeCandidates(docs) // candidates, then compare joins
-    assert(flatPairs.count() > 0)
-    val adaptive = contMapJ(Dedup.exactJaccardJoinOf(docs))
-    val forced = contMapJ(Dedup.exactJaccardJoinCollapsed(docs))
-    assert(adaptive == forced,
-      s"adaptive (collapse fires on this fixture) != forced collapse: " +
-        s"${(adaptive.keySet -- forced.keySet).take(5)} / ${(forced.keySet -- adaptive.keySet).take(5)}")
-    assert(adaptive.count(_._2 == 1.0) >= 300 * 299 / 2, "clique pairs missing")
-  }
+  /** Rows as a sorted multiset, so a duplicated row is a difference too. */
+  private def rows(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
 
-  private def contMapJ(df: DataFrame): Map[(Long, Long), Double] =
-    df.select("doc_a", "doc_b", "jaccard").collect()
-      .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+  private def assertSameRows(got: Seq[Row], flat: Seq[Row], what: String): Unit =
+    assert(got == flat,
+      s"$what diverges from flat: extra=${got.diff(flat).take(5)} missing=${flat.diff(got).take(5)}")
+
+  families.foreach { fam =>
+    test(fam.adaptiveTest) {
+      val f = fam.clique()
+      val flat = rows(fam.entry(f, Flat))
+      fam.cliqueShape(flat, f)
+      assertSameRows(rows(fam.entry(f, Adaptive)), flat, "adaptive collapse")
+    }
+    test(fam.forcedTest) {
+      val f = fam.clean()
+      val flat = rows(fam.entry(f, Flat))
+      assertSameRows(rows(fam.entry(f, Forced)), flat, "forced collapse")
+    }
+  }
 
   test("pre-gate: clean corpus skips stats (flat), dup-heavy corpus does not") {
-    import org.apache.spark.sql.functions.xxhash64
-    val cleanSig = Dedup.signaturesOf(cleanDocs).localCheckpoint()
-    assert(Dedup.lowDupPreGate(cleanSig,
+    val cleanSig = signatures(cleanDocs, Dedup.numHashes)
+    assert(ExactSetCollapse.lowDupPreGate(cleanSig,
       xxhash64(cleanSig.columns.filter(_ != "doc_id").map(col): _*)))
-    val dupSig = Dedup.signaturesOf(cliqueDocs).localCheckpoint()
-    assert(!Dedup.lowDupPreGate(dupSig,
+    val dupSig = signatures(cliqueDocs, Dedup.numHashes)
+    assert(!ExactSetCollapse.lowDupPreGate(dupSig,
       xxhash64(dupSig.columns.filter(_ != "doc_id").map(col): _*)))
     // empty frame: gate says flat instead of throwing
-    assert(Dedup.lowDupPreGate(cleanSig.where(col("doc_id") < 0),
+    assert(ExactSetCollapse.lowDupPreGate(cleanSig.where(col("doc_id") < 0),
       xxhash64(col("doc_id"))))
   }
 }

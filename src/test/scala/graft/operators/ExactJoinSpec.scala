@@ -86,10 +86,9 @@ class ExactJoinSpec extends SparkSpec {
     // forced collapse: the fixture's max group (40) sits below
     // bucketExpandCap and its intra-pair budget (≈12.3/doc) below the
     // collapsePairBudgetPerDoc, so the adaptive entry would take the flat
-    // branch — calling the collapse body directly keeps the equivalence
-    // proof on the path the decision rule reserves for clique-shaped
-    // corpora
-    val got = Dedup.exactJaccardJoinCollapsed(corpus.toDF("doc_id", "sh"))
+    // branch — forcing the collapse keeps the equivalence proof on the
+    // path the decision rule reserves for clique-shaped corpora
+    val got = Dedup.exactJaccardJoinOf(corpus.toDF("doc_id", "sh"), mode = ExactSetCollapse.Forced)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getLong(3)))).toMap
     val want = (for {
       (a, sa) <- corpus; (b, sb) <- corpus if a < b
@@ -111,15 +110,15 @@ class ExactJoinSpec extends SparkSpec {
 
   test("collapse decision keys on duplication SHAPE, not duplicate mass") {
     // clique past the blocked-slice cap: collapse regardless of mass
-    assert(Dedup.shouldCollapse(n = 15000L, maxGroup = 10000L, intraPairs = 49995000L))
+    assert(ExactSetCollapse.shouldCollapse(n = 15000L, maxGroup = 10000L, intraPairs = 49995000L))
     // the sf1 replica corpus shape: 90% dup mass, 10-member groups,
     // 4.5 intra pairs/doc — measured flat 5.8 s vs collapsed 10.5 s
-    assert(!Dedup.shouldCollapse(n = 61220L, maxGroup = 10L, intraPairs = 275490L))
+    assert(!ExactSetCollapse.shouldCollapse(n = 61220L, maxGroup = 10L, intraPairs = 275490L))
     // deep but sub-cap groups whose pair mass dwarfs linear work: a
     // corpus of 100-member boilerplate groups (49.5 intra pairs/doc)
-    assert(Dedup.shouldCollapse(n = 100000L, maxGroup = 100L, intraPairs = 4950000L))
+    assert(ExactSetCollapse.shouldCollapse(n = 100000L, maxGroup = 100L, intraPairs = 4950000L))
     // clean corpora: nothing to collapse
-    assert(!Dedup.shouldCollapse(n = 5000L, maxGroup = 2L, intraPairs = 8L))
+    assert(!ExactSetCollapse.shouldCollapse(n = 5000L, maxGroup = 2L, intraPairs = 8L))
   }
 }
 

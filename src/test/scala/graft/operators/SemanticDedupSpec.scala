@@ -127,8 +127,8 @@ class SemanticDedupSpec extends SparkSpec {
       pmod(xxhash64(col("embedding")), lit(4L)).cast("int").as("cell"))
     def verdicts(df: org.apache.spark.sql.DataFrame): Set[(Long, Int, Long, Boolean)] =
       df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getBoolean(3))).toSet
-    val flat = verdicts(Similarity.semanticVerdictsFlatForTest(assign, emb))
-    val collapsed = verdicts(Similarity.semanticVerdictsCollapsed(assign, emb))
+    val flat = verdicts(Similarity.semanticVerdictsWith(assign, emb, mode = ExactSetCollapse.Flat))
+    val collapsed = verdicts(Similarity.semanticVerdictsWith(assign, emb, mode = ExactSetCollapse.Forced))
     assert(flat.count(!_._4) >= 299, "fixture lost its clique structure")
     // zero vectors: NaN cosine pairs with nothing — all three stay kept singletons
     Seq(500L, 501L, 502L).foreach { z =>

@@ -130,6 +130,14 @@ class SemanticRecallSpec extends SparkSpec {
     }
   }
 
+  test("recall panel ceiling: a corpus past 2 x recallSampleTarget x 1000 fails before any collect") {
+    // the 1 permille floor keeps the panel at n/1000 rows past 5M vectors;
+    // the face refuses once that would pass twice the sample target
+    assert(Similarity.recallSamplePermille(Similarity.recallCorpusCeiling) == 1L)
+    val e = intercept[IllegalArgumentException](Similarity.recallSamplePermille(10000001L))
+    assert(e.getMessage.contains("10000001") && e.getMessage.contains("10000000"), e.getMessage)
+  }
+
   test("multiprobe only merges: single-cell dropped set is preserved") {
     val single = Similarity.semanticDedup(spark, sf())
       .where(!col("keep")).select("vec_id")

@@ -11,6 +11,9 @@ array cells crash pandas sort_values — which fetchall() silently papered
 over in round 1 (3 hash FAILs + 1 ERR the local gate missed).
 
 Usage: oracle_check.py <sfDir> <verifyOutDir> [query ...]
+
+The last line of output is one JSON object, {"n_pass", "n_fail",
+"failed": [names]}; the exit code is 1 when any query failed.
 """
 import sys, json, math, glob, os
 import duckdb
@@ -61,7 +64,8 @@ def main():
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    n_pass = n_fail = 0
+    n_pass = 0
+    failed = []
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
             continue
@@ -69,25 +73,25 @@ def main():
         files = glob.glob(os.path.join(res_dir, "*.parquet"))
         if not files:
             print(f"FAIL {name}: no spark result")
-            n_fail += 1
+            failed.append(name)
             continue
         try:
             spark_df = con.sql(f"SELECT * FROM read_parquet({files!r})").df()
             duck_df = con.sql(sql).df()
         except Exception as e:
             print(f"FAIL {name}: {type(e).__name__}: {e}")
-            n_fail += 1
+            failed.append(name)
             continue
         if sorted(spark_df.columns) != sorted(duck_df.columns):
             print(f"FAIL {name}: cols spark={sorted(spark_df.columns)} "
                   f"duck={sorted(duck_df.columns)}")
-            n_fail += 1
+            failed.append(name)
             continue
         try:
             a, b = frame_key(spark_df), frame_key(duck_df)
         except Exception as e:
             print(f"FAIL {name}: comparator: {type(e).__name__}: {e}")
-            n_fail += 1
+            failed.append(name)
             continue
         if a == b:
             print(f"PASS {name} ({len(a)} rows)")
@@ -103,9 +107,10 @@ def main():
                     print(f"   only-spark: {x}")
                 for y in list(sb - sa)[:2]:
                     print(f"   only-duck : {y}")
-            n_fail += 1
-    print(f"== {n_pass} pass / {n_fail} fail ==")
-    sys.exit(1 if n_fail else 0)
+            failed.append(name)
+    print(f"== {n_pass} pass / {len(failed)} fail ==")
+    print(json.dumps({"n_pass": n_pass, "n_fail": len(failed), "failed": failed}))
+    sys.exit(1 if failed else 0)
 
 
 if __name__ == "__main__":
