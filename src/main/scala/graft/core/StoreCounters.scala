@@ -14,6 +14,10 @@ import scala.collection.immutable.TreeMap
   *  - `parts.listings`: batch-directory listings for part files;
   *  - `footer.hits` / `footer.misses`: [[DirectParquetRead]] cached
   *    footers and readers vs footer reads;
+  *  - `decoded.hits` / `decoded.misses`: point reads served from a
+  *    [[DirectParquetRead]] cached decoded unit vs decoded from the file;
+  *  - `decoded.evictions`: cached decoded units dropped, by the cache's
+  *    bound, by `vacuum` or by `invalidate`;
   *  - `open.hits` / `open.misses`: [[VectorTable]] opened-DataFrame cache.
   *
   * The `ReadCachedStore` LRU keeps its own per-instance `stats`.
@@ -26,6 +30,9 @@ object StoreCounters {
   private[core] val partsListings = new LongAdder
   private[core] val footerHits = new LongAdder
   private[core] val footerMisses = new LongAdder
+  private[core] val decodedHits = new LongAdder
+  private[core] val decodedMisses = new LongAdder
+  private[core] val decodedEvictions = new LongAdder
   private[core] val openHits = new LongAdder
   private[core] val openMisses = new LongAdder
 
@@ -38,6 +45,9 @@ object StoreCounters {
     "parts.listings" -> partsListings.sum(),
     "footer.hits" -> footerHits.sum(),
     "footer.misses" -> footerMisses.sum(),
+    "decoded.hits" -> decodedHits.sum(),
+    "decoded.misses" -> decodedMisses.sum(),
+    "decoded.evictions" -> decodedEvictions.sum(),
     "open.hits" -> openHits.sum(),
     "open.misses" -> openMisses.sum())
 }

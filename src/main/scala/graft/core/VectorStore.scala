@@ -95,9 +95,12 @@ final class VectorStore[T: Encoder](val table: VectorTable) {
       throw new IndexOutOfBoundsException(s"pullx($index,$count) on store of length $len"))
 
   /** Bounds-checked point read — reference `get` (src/vector_engine.rs:33-39).
-    * Serves from the direct-parquet path (no Spark job, ~ms/key) when the
-    * schema and layout allow, matching the reference's serving-read class
-    * (readable_cache.rs:68-80); otherwise falls back to a pruned Spark read.
+    * Serves from the direct-parquet path (no Spark job) when the schema
+    * and layout allow: ~40 µs a key from a cached decoded page; a page's
+    * first miss reads its one row (~0.5 ms) and its second decodes the
+    * page (~3 ms for 500 rows) (store_serving, 4 cpus), matching the
+    * reference's serving-read class (readable_cache.rs:68-80); otherwise
+    * falls back to a pruned Spark read.
     */
   def get(index: Long): Option[T] = get(table.snapshot, index)
 
@@ -108,7 +111,7 @@ final class VectorStore[T: Encoder](val table: VectorTable) {
 
   private def directGet(s: VectorTable.Snapshot, index: Long): Option[T] =
     directDecoder.flatMap { dec =>
-      try table.pointLocal(s, index).map(dec)
+      try table.pointRow(s, index).map(dec)
       catch { case scala.util.control.NonFatal(_) => None }
     }
 
@@ -123,16 +126,15 @@ final class VectorStore[T: Encoder](val table: VectorTable) {
       if (rows.size == indices.size) Some(rows) else None
     }
 
-  /** Column-name-keyed raw values → T, built once per store if every field
-    * is a flat supported type; None disables the fast path (the Spark
-    * decode handles everything).
+  /** A direct-read row → T, built once per store if every field is a flat
+    * supported type; None disables the fast path (the Spark decode handles
+    * everything). Strings wrap the row's cached UTF-8 bytes, no copy.
     */
-  private lazy val directDecoder: Option[Map[String, Any] => T] =
+  private lazy val directDecoder: Option[DirectParquetRead.Row => T] =
     try {
       import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder, ExpressionEncoder}
       import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
       import org.apache.spark.sql.types._
-      import org.apache.spark.unsafe.types.UTF8String
       val exprEncOpt = enc match {
         case e: ExpressionEncoder[T @unchecked] => Some(e)
         case a: AgnosticEncoder[T @unchecked]   => Some(ExpressionEncoder(a))
@@ -150,19 +152,20 @@ final class VectorStore[T: Encoder](val table: VectorTable) {
         val resolved = exprEnc.resolveAndBind()
         // deserializers carry mutable projection state → one per thread
         val deser = ThreadLocal.withInitial(() => resolved.createDeserializer())
-        Some { values =>
+        Some { r =>
           val row = new GenericInternalRow(fields.length)
           var i = 0
           while (i < fields.length) {
             val f = fields(i)
-            val v = values.getOrElse(f.name, null)
-            row.update(i, (f.dataType, v) match {
-              case (_, null)            => null
-              case (StringType, s)      => UTF8String.fromString(s.asInstanceOf[String])
-              case (ShortType, n: Int)  => n.toShort
-              case (ByteType, n: Int)   => n.toByte
-              case (_, other)           => other
-            })
+            val c = r.column(f.name)
+            row.update(i,
+              if (c < 0 || r.isNull(c)) null
+              else f.dataType match {
+                case StringType => r.utf8(c)
+                case ShortType  => r.value(c).asInstanceOf[Int].toShort
+                case ByteType   => r.value(c).asInstanceOf[Int].toByte
+                case _          => r.value(c)
+              })
             i += 1
           }
           deser.get()(row)
@@ -173,7 +176,8 @@ final class VectorStore[T: Encoder](val table: VectorTable) {
 
   /** Bounds-checked range read — reference `getx` (src/vector_engine.rs:40-46).
     * Ranges of at most `directBatchLimit` rows read every row through the
-    * direct-parquet path on one snapshot (no Spark job, ~0.3 ms/row warm);
+    * direct-parquet path on one snapshot (no Spark job; a 16-row range of
+    * cached pages takes ~0.4-0.5 ms);
     * longer ranges, and any short one with a row the direct path can't
     * serve, run one pruned Spark read.
     */
@@ -189,8 +193,8 @@ final class VectorStore[T: Encoder](val table: VectorTable) {
   /** Batched point reads — amortizes lookup cost across a batch;
     * out-of-range ids are simply absent from the result (total, like
     * `get`). Small batches (≤ `directBatchLimit`) serve from the
-    * direct-parquet path when every key resolves there (~1 ms/key warm, no
-    * job); larger batches — or any direct miss — fall back to ONE Spark job
+    * direct-parquet path when every key resolves there (no job; per key as
+    * in [[get]]); larger batches — or any direct miss — fall back to ONE Spark job
     * with the IN-filter pushed to the scan, which amortizes better as the
     * batch grows and row groups get revisited.
     */
@@ -261,9 +265,11 @@ final class VectorStore[T: Encoder](val table: VectorTable) {
 
 object VectorStore {
   /** getMany batches and getx ranges up to this size try the direct path
-    * first; beyond it one Spark job amortizes better. Measured
-    * crossover at ~5 ms/key direct vs ~130 ms flat for the batched job
-    * (local[32], warm footers) → the job wins from ~25 keys up.
+    * first; beyond it one Spark job amortizes better once pages are cold.
+    * Measured on store_serving (4 cpus): ~40 µs a key from a cached
+    * decoded page, ~0.5 ms for an uncached single-row read and ~3 ms for
+    * a read that decodes a 500-row page, vs ~130 ms flat for the batched
+    * job (local[32], warm footers).
     */
   val directBatchLimit = 16
 

@@ -985,16 +985,16 @@ final class VectorTable(val spark: SparkSession, val root: String) {
     * serve directly" (remote filesystem, nested schema, foreign file) and
     * the caller should use the Spark path — never a correctness signal.
     */
-  def pointLocal(index: Long): Option[Map[String, Any]] = pointLocal(snapshot, index)
+  def pointLocal(index: Long): Option[Map[String, Any]] = pointRow(snapshot, index).map(_.toMap)
 
-  /** [[pointLocal]] against snapshot `s`: the batch from its manifest, the
-    * part file from its per-batch span table.
+  /** [[pointLocal]]'s row against snapshot `s`: the batch from its
+    * manifest, the part file from its per-batch span table.
     */
-  private[core] def pointLocal(s: VectorTable.Snapshot, index: Long): Option[Map[String, Any]] =
+  private[core] def pointRow(s: VectorTable.Snapshot, index: Long): Option[DirectParquetRead.Row] =
     s.manifest.batches.find(b => index >= b.start && index < b.end).flatMap { b =>
       s.parts(s"$root/${b.relPath}")
         .collectFirst { case (f, lo, hi) if index >= lo && index <= hi => f }
-        .flatMap(DirectParquetRead.readByRowid(_, index))
+        .flatMap(DirectParquetRead.rowByRowid(_, index))
     }
 
   /** Batched point reads: one Spark job for all `indices` (manifest-pruned

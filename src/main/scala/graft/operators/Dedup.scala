@@ -2128,8 +2128,7 @@ object Dedup {
     exactJaccardJoinOf(
       Tables.documents(s, d)
         .select(col("doc_id"), graft.functions.TextFunctions.shingleHashes(col("text")).as("sh"))
-        .where(size(col("sh")) > 0)
-        .localCheckpoint(), mode = ExactSetCollapse.Forced)
+        .where(size(col("sh")) > 0), mode = ExactSetCollapse.Forced)
 
   lazy val exactJaccardJoinCollapsedSql: String = exactJaccardJoinSql
 

@@ -8,12 +8,17 @@ import org.apache.spark.sql.graft.Bridge
 case class DRec(name: String, n: Long, score: Double, tag: String)
 case class DNull(name: String, opt: Option[Long])
 case class DNested(name: String, xs: Seq[Long])
+case class DPage(name: String, n: Long, score: Double, tag: Option[String], k: Option[Int], flag: Boolean)
 
 /** The direct-parquet point-read path: manifest → footer → one page → one
   * row, no Spark job (the reference's hottest path, readable_cache.rs:68-80
   * misses). Must agree exactly with the Spark read, serve from every batch
   * and row group, handle NULLs, refuse what it can't prove (nested schema),
-  * and actually skip the job scheduler (latency class check).
+  * and actually skip the job scheduler (latency class check). Rows come
+  * from the decoded-unit cache: a page's first miss reads its one row, the
+  * second decodes and caches the page, a unit above the cache's bound is
+  * read row by row and never cached, and vacuum drops the units of the
+  * files it deletes.
   */
 class DirectReadSpec extends SparkSpec {
   import spark.implicits._
@@ -142,5 +147,121 @@ class DirectReadSpec extends SparkSpec {
     val version = DirectParquetRead.writerVersion(file)
     assert(version.exists(_ != null) && version.get.toString == org.apache.parquet.VersionParser.parse(createdBy).toString)
     assert(store.get(7L).contains(DRec("name-7", 7L, 3.5, "t7")))
+  }
+
+  private def delta(before: Map[String, Long]): Map[String, Long] =
+    StoreCounters.read.map { case (k, v) => k -> (v - before(k)) }
+
+  private def partFilesOf(store: VectorStore[_]): Seq[String] =
+    store.table.manifest.batches.flatMap(b => DirectParquetRead.partFiles(s"${store.table.root}/${b.relPath}"))
+
+  /** The decode units of `file`: its `_rowid` offset-index pages, one per
+    * row group without an offset index.
+    */
+  private def unitCount(file: String): Int = {
+    import scala.jdk.CollectionConverters._
+    val reader = DirectParquetRead.openFile(file)
+    try reader.getFooter.getBlocks.asScala.map { b =>
+      val rowid = b.getColumns.asScala.find(_.getPath.toDotString == VectorTable.ROWID).get
+      Option(reader.readOffsetIndex(rowid)).fold(1)(_.getPageCount)
+    }.sum
+    finally reader.close()
+  }
+
+  test("every ordinal of a multi-page part reads the Spark path's row, cold and cached") {
+    def rec(i: Int) = DPage(s"name-$i", i.toLong, i * 0.5,
+      if (i % 7 == 3) None else Some(s"tag-${"x" * (i % 5)}$i"), if (i % 4 == 1) None else Some(i), i % 2 == 0)
+    val n = 600
+    val store = VectorStore.create[DPage](spark, tmpDir("direct-pages"))
+    val key = "parquet.page.row.count.limit"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "100")
+    try store.pushx((0 until n).map(rec))
+    finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val units = partFilesOf(store).map(unitCount).sum
+    assert(units > partFilesOf(store).size, s"$units units: the part must span several pages")
+    val viaSpark = store.table.range(0L, n.toLong).orderBy("_rowid").drop("_rowid").as[DPage].collect().toSeq
+    assert(viaSpark == (0 until n).map(rec))
+
+    // cold: each read is its unit's first, which reads just its row
+    (0 until n).foreach { i =>
+      DirectParquetRead.invalidate()
+      val before = StoreCounters.read
+      assert(store.get(i.toLong).contains(viaSpark(i)), s"cold read of $i")
+      assert(delta(before)("decoded.misses") == 1L)
+    }
+    // in order: a unit's first read reads its row, the second decodes and
+    // caches the unit, every later one is an array lookup
+    DirectParquetRead.invalidate()
+    val before = StoreCounters.read
+    (0 until n).foreach(i => assert(store.get(i.toLong).contains(viaSpark(i)), s"read of $i"))
+    val d = delta(before)
+    assert(d("decoded.misses") == 2L * units && d("decoded.hits") == n - 2L * units, d)
+    // cached: every row of every decoded unit
+    val again = StoreCounters.read
+    (0 until n).foreach(i => assert(store.get(i.toLong).contains(viaSpark(i)), s"cached read of $i"))
+    val d2 = delta(again)
+    assert(d2("decoded.misses") == 0L && d2("decoded.hits") == n.toLong, d2)
+    // the public map view of a cached row, NULLs included
+    assert(store.table.pointLocal(3L).contains(
+      Map("_rowid" -> 3L, "name" -> "name-3", "n" -> 3L, "score" -> 1.5, "tag" -> null, "k" -> 3, "flag" -> false)))
+    assert(store.table.pointLocal(5L).exists(m => m("k") == null && m("tag") == "tag-5"))
+  }
+
+  test("a page decodes on its second miss; a read in a decoded page is a hit with no footer read") {
+    def rec(i: Int) = DRec(s"name-$i", i.toLong, i * 0.5, s"t$i")
+    val store = VectorStore.create[DRec](spark, tmpDir("direct-hit"))
+    store.pushx((0 until 100).map(rec))
+    DirectParquetRead.invalidate()
+    for (i <- Seq(10, 12)) {
+      val before = StoreCounters.read
+      assert(store.get(i.toLong).contains(rec(i)))
+      val d = delta(before)
+      assert(d("decoded.hits") == 0L && d("decoded.misses") == 1L, d)
+    }
+    val before = StoreCounters.read
+    assert(store.get(11L).contains(rec(11)))
+    val d = delta(before)
+    assert(d("decoded.hits") == 1L && d("decoded.misses") == 0L && d("footer.misses") == 0L, d)
+  }
+
+  test("a unit above the cache bound is served row by row and not cached") {
+    val big = (DirectParquetRead.DecodedCacheBytes / 16).toInt
+    def rec(i: Int) = DRec(s"name-$i", i.toLong, i * 0.5, s"$i-" + "y" * big)
+    val store = VectorStore.create[DRec](spark, tmpDir("direct-oversized"))
+    store.pushx((0 until 24).map(rec)) // one page of 24 rows: 1.5x the bound
+    val file = partFilesOf(store).head
+    assert(unitCount(file) == 1)
+    DirectParquetRead.invalidate()
+    for (i <- Seq(0, 11, 23, 11)) {
+      val before = StoreCounters.read
+      assert(store.get(i.toLong).contains(rec(i)), s"oversized read of $i")
+      val d = delta(before)
+      assert(d("decoded.misses") == 1L && d("decoded.hits") == 0L, d)
+    }
+  }
+
+  test("vacuum drops the decoded units of the files it deletes") {
+    val store = VectorStore.create[DRec](spark, tmpDir("direct-vacuum"))
+    def rec(i: Int) = DRec(s"name-$i", i.toLong, i * 0.5, s"t$i")
+    store.pushx((0 until 50).map(rec))
+    store.pushx((50 until 100).map(rec))
+    DirectParquetRead.invalidate()
+    (0 until 100).foreach(i => assert(store.get(i.toLong).contains(rec(i))))
+    val files = partFilesOf(store)
+    assert(files.size == 2 && files.map(unitCount) == Seq(1, 1))
+    val before = StoreCounters.read
+    assert(store.table.deleteWhere(org.apache.spark.sql.functions.col("n") < 10L) == 10L)
+    assert(store.table.purge() == 10L)
+    store.table.vacuum(1)
+    // the first batch was rewritten and its old file deleted, with its one
+    // unit; the second file and its unit were kept
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(files.head)))
+    assert(delta(before)("decoded.evictions") == 1L, delta(before))
+    val kept = StoreCounters.read
+    assert((50 until 100).forall(i => store.get(i.toLong).contains(rec(i))))
+    val d = delta(kept)
+    assert(d("decoded.hits") == 50L && d("decoded.misses") == 0L, d)
+    assert(store.get(5L).isEmpty && (10 until 50).forall(i => store.get(i.toLong).contains(rec(i))))
   }
 }

@@ -12,7 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    unless the allow-list names it as write or maintenance code;
   *  - every parquet footer opens through [[DirectParquetRead.openFile]],
   *    on its one loaded Hadoop conf: an open elsewhere would build and load
-  *    a fresh `Configuration` per call.
+  *    a fresh `Configuration` per call;
+  *  - parquet pages are read and decoded for point reads only in
+  *    [[DirectParquetRead]]'s one decode function, whose units its
+  *    decoded cache holds: a second decode path would bypass the cache.
   */
 class ReadPathGuardSpec extends AnyFunSuite {
 
@@ -62,6 +65,17 @@ class ReadPathGuardSpec extends AnyFunSuite {
       Seq("ParquetFileReader.open("),
       Map(("DirectParquetRead.scala", "ParquetFileReader.open(") -> 1)) // the helper
     assert(unexpected.isEmpty, s"open footers with DirectParquetRead.openFile: $unexpected")
+    assert(stale.isEmpty, s"shrink the allow-list to what remains: $stale")
+  }
+
+  test("parquet pages decode only in DirectParquetRead's one decode function") {
+    val (unexpected, stale) = scan(
+      Seq("readFilteredRowGroup(", "readNextFilteredRowGroup(", "readRowGroup(", "readNextRowGroup(",
+        "new ColumnReaderImpl("),
+      Map(
+        ("DirectParquetRead.scala", "readFilteredRowGroup(") -> 1,
+        ("DirectParquetRead.scala", "new ColumnReaderImpl(") -> 1))
+    assert(unexpected.isEmpty, s"read point rows through DirectParquetRead's decoded cache: $unexpected")
     assert(stale.isEmpty, s"shrink the allow-list to what remains: $stale")
   }
 }
